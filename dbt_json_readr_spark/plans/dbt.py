@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import lineage
-from ..session import prep
+from ..session import prep, release_iter_handle
 from ..sources import artifacts as A
 
 FIXTURE_TARGET = str(Path(__file__).resolve().parents[2] / "tests" / "fixtures" / "dbt" / "target")
@@ -138,15 +138,26 @@ def dbt_source_freshness(spark: SparkSession, sf_dir: str, target: str = FIXTURE
     return A.source_freshness(spark, f"{target}/sources.json").drop("artifact_path")
 
 
-def _data_edges(spark: SparkSession, target: str) -> DataFrame:
-    return A.manifest_edges(spark, _manifest(target)).filter(
-        F.col("dep_type") == "nodes"
+# The lineage keys read the DAG through one A.manifest_graph decode; a key
+# whose plan reads the graph more than once materializes it first.
+
+
+def _edges(graph: DataFrame) -> DataFrame:
+    """Node-to-node dependency edges; nodes and macros both contribute."""
+    return graph.select(
+        F.col("unique_id").alias("child_unique_id"),
+        F.explode("parents").alias("parent_unique_id"),
     )
+
+
+def _nodes(graph: DataFrame, *cols: str) -> DataFrame:
+    """DAG nodes: manifest nodes and sources, not macros."""
+    return graph.filter(F.col("manifest_group") != "macros").select("unique_id", *cols)
 
 
 def dbt_lineage_closure(spark: SparkSession, sf_dir: str, target: str = FIXTURE_TARGET) -> DataFrame:
     prep(spark)
-    return lineage.lineage_closure(_data_edges(spark, target))
+    return lineage.lineage_closure(_edges(A.manifest_graph(spark, _manifest(target))))
 
 
 def dbt_lineage_closure_rcte(
@@ -164,15 +175,18 @@ def dbt_lineage_closure_rcte(
 
     Same capability surface the reference's edge list enables
     (parse_depends_on, explore.R:98-128); UNION ALL + final min()
-    terminates on a DAG because path depth is bounded by graph depth."""
+    terminates on a DAG because path depth is bounded by graph depth.
+    Every recursion level reads the edge view, so the edges are
+    materialized once and the result keeps reading them."""
     prep(spark)
     edges = (
-        _data_edges(spark, target)
+        _edges(A.manifest_graph(spark, _manifest(target)))
         .select(
             F.col("child_unique_id").alias("descendant"),
             F.col("parent_unique_id").alias("ancestor"),
         )
         .distinct()
+        .localCheckpoint()
     )
     edges.createOrReplaceTempView("dbt_edges_rcte")
     return spark.sql(
@@ -192,10 +206,10 @@ def dbt_lineage_closure_rcte(
 
 def dbt_lineage_depth(spark: SparkSession, sf_dir: str, target: str = FIXTURE_TARGET) -> DataFrame:
     prep(spark)
-    nodes = A.manifest_nodes(spark, _manifest(target)).select("unique_id").unionByName(
-        A.manifest_sources(spark, _manifest(target)).select("unique_id")
-    )
-    return lineage.lineage_depth(nodes, _data_edges(spark, target))
+    # the closure reads the edges, and the result joins the node ids
+    # lazily, so the graph stays materialized for the result
+    graph = A.manifest_graph(spark, _manifest(target)).localCheckpoint()
+    return lineage.lineage_depth(_nodes(graph), _edges(graph))
 
 
 def dbt_pagerank(spark: SparkSession, sf_dir: str, target: str = FIXTURE_TARGET) -> DataFrame:
@@ -205,10 +219,10 @@ def dbt_pagerank(spark: SparkSession, sf_dir: str, target: str = FIXTURE_TARGET)
     A query surface the reference's flat edge list (explore.R:105-138)
     enables but never computes."""
     prep(spark)
-    nodes = A.manifest_nodes(spark, _manifest(target)).select("unique_id").unionByName(
-        A.manifest_sources(spark, _manifest(target)).select("unique_id")
-    )
-    return lineage.pagerank(nodes, _data_edges(spark, target))
+    graph = A.manifest_graph(spark, _manifest(target)).localCheckpoint()
+    out = lineage.pagerank(_nodes(graph), _edges(graph))
+    release_iter_handle(graph)
+    return out
 
 
 def dbt_critical_path(spark: SparkSession, sf_dir: str, target: str = FIXTURE_TARGET) -> DataFrame:
@@ -220,19 +234,29 @@ def dbt_critical_path(spark: SparkSession, sf_dir: str, target: str = FIXTURE_TA
     fixed-point microseconds (floor(t·1e6); 0 for sources and unrun
     nodes), so the costs are byte-exact.  A scheduling query the
     reference's edge list (explore.R:98-128) + run_results load
-    (explore.R:252-256) jointly enable but never compute."""
+    (explore.R:252-256) jointly enable but never compute.
+
+    The graph joined to its weights is materialized once; the node
+    weights and the edges both read it."""
     prep(spark)
-    nodes = A.manifest_nodes(spark, _manifest(target)).select("unique_id").unionByName(
-        A.manifest_sources(spark, _manifest(target)).select("unique_id")
-    )
     rr = A.run_results(spark, f"{target}/run_results.json").select(
         "unique_id",
         F.floor(F.col("execution_time") * 1_000_000).cast("long").alias("wt_fp"),
     )
-    nodes_w = nodes.join(rr, "unique_id", "left").select(
-        "unique_id", F.coalesce("wt_fp", F.lit(0).cast("long")).alias("wt_fp")
+    graph = (
+        A.manifest_graph(spark, _manifest(target))
+        .join(rr, "unique_id", "left")
+        .select(
+            "unique_id",
+            "manifest_group",
+            "parents",
+            F.coalesce("wt_fp", F.lit(0).cast("long")).alias("wt_fp"),
+        )
+        .localCheckpoint()
     )
-    return lineage.critical_path(nodes_w, _data_edges(spark, target))
+    out = lineage.critical_path(_nodes(graph, "wt_fp"), _edges(graph))
+    release_iter_handle(graph)
+    return out
 
 
 def dbt_run_summary(spark: SparkSession, sf_dir: str, target: str = FIXTURE_TARGET) -> DataFrame:
@@ -256,9 +280,9 @@ def dbt_model_fanout(spark: SparkSession, sf_dir: str, target: str = FIXTURE_TAR
     """Blast-radius ranking: direct downstream dependents per node —
     the impact-analysis primitive on the depends_on edge list."""
     prep(spark)
-    edges = _data_edges(spark, target)
     return (
-        edges.groupBy("parent_unique_id")
+        _edges(A.manifest_graph(spark, _manifest(target)))
+        .groupBy("parent_unique_id")
         .agg(F.count(F.lit(1)).alias("n_children"))
         .orderBy(F.desc("n_children"), "parent_unique_id")
     )

@@ -157,10 +157,14 @@ def rotate_cached(slot: str, frames: list) -> None:
     keys that all start from one minhash sketch) therefore hit a warm
     cache instead of rebuilding it, while a changed input plan still
     rotates the stale cache out.  Deterministic plans make the reuse
-    value-safe; the handle bound per slot is unchanged."""
-    if not frames:
+    value-safe; the handle bound per slot is unchanged.
+
+    An empty ``frames`` clears the slot of the active session: a sweep
+    that raised before its first pin still releases what the previous
+    sweep pinned."""
+    session = frames[0].sparkSession if frames else SparkSession.getActiveSession()
+    if session is None:
         return
-    session = frames[0].sparkSession
     slots = _CACHE_SLOTS.setdefault(session, {})
     for old in slots.get(slot, []):
         try:
@@ -178,7 +182,10 @@ def rotate_cached(slot: str, frames: list) -> None:
             # unreachable checkpointed frame is safe; plain persisted
             # frames see the identical unpersist they always did.
             release_iter_handle(old)
-    slots[slot] = list(frames)
+    if frames:
+        slots[slot] = list(frames)
+    else:
+        slots.pop(slot, None)
 
 
 def evict_cached(slot: str, frame) -> None:

@@ -111,6 +111,25 @@ LAKE_MANIFEST_SCHEMA = T.StructType(
     ]
 )
 
+# Narrow projection of MANIFEST_SCHEMA for the DAG queries: only the
+# identity and node-dependency fields of nodes, sources and macros.
+_GRAPH_NODE = T.StructType(
+    [
+        T.StructField("unique_id", T.StringType()),
+        T.StructField(
+            "depends_on",
+            T.StructType([T.StructField("nodes", T.ArrayType(T.StringType()))]),
+        ),
+    ]
+)
+
+GRAPH_MANIFEST_SCHEMA = T.StructType(
+    [
+        T.StructField(group, T.MapType(T.StringType(), _GRAPH_NODE))
+        for group in ("nodes", "sources", "macros")
+    ]
+)
+
 _CATALOG_COLUMN = T.StructType(
     [
         T.StructField("name", T.StringType()),
@@ -387,6 +406,38 @@ def manifest_edges(spark: SparkSession, manifest_path: str) -> DataFrame:
         "child_unique_id",
         F.col("dep.type").alias("dep_type"),
         F.col("dep.unique_id").alias("parent_unique_id"),
+    )
+
+
+def manifest_graph(spark: SparkSession, manifest_path: str) -> DataFrame:
+    """The dependency DAG of a manifest in one decode: one row per node,
+    source and macro → (artifact_path, unique_id, manifest_group,
+    parents), where ``parents`` is depends_on.nodes.  Sources carry no
+    parents; macros carry their node parents but are not DAG nodes, so
+    callers filter them out of the node set.  One ``from_json`` over
+    GRAPH_MANIFEST_SCHEMA, where manifest_nodes + manifest_sources +
+    manifest_edges would decode the full schema three times."""
+    doc = read_artifact(spark, manifest_path, GRAPH_MANIFEST_SCHEMA)
+    no_parents = F.array().cast("array<string>")
+
+    def entries(group: str) -> Column:
+        def entry(n: Column) -> Column:
+            parents = (
+                no_parents
+                if group == "sources"
+                else F.coalesce(n["depends_on"]["nodes"], no_parents)
+            )
+            return F.struct(
+                n["unique_id"].alias("unique_id"),
+                F.lit(group).alias("manifest_group"),
+                parents.alias("parents"),
+            )
+
+        return F.transform(F.coalesce(F.map_values(F.col(f"doc.{group}")), F.array()), entry)
+
+    return doc.select(
+        "artifact_path",
+        F.inline(F.concat(*[entries(g) for g in ("nodes", "sources", "macros")])),
     )
 
 

@@ -361,21 +361,38 @@ def test_multimodal_decode_pipeline(spark):
 # ------------------------------------------------------------ lineage
 
 
-def test_transitive_closure_unpersists_superseded_handles(spark):
-    """Iterative closure must not accumulate cached RDDs: exactly the
-    returned result may stay pinned (VERDICT r1 #6)."""
-    from dbt_json_readr_spark.operators.lineage import transitive_closure
+@pytest.mark.parametrize("op", ["transitive_closure", "critical_path", "pagerank"])
+def test_lineage_operators_release_superseded_handles(spark, op):
+    """Iterative lineage operators must not accumulate cached RDDs:
+    exactly the returned result may stay pinned — superseded rounds and
+    the loop invariants materialized on entry are released (VERDICT r1
+    #6)."""
+    from dbt_json_readr_spark.operators import lineage as L
 
     edges = spark.createDataFrame(
         [("b", "a"), ("c", "b"), ("d", "c"), ("e", "d")],
         "child_unique_id string, parent_unique_id string",
     )
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
-    out = transitive_closure(edges)
-    got = {(r.descendant, r.ancestor, r.depth) for r in out.collect()}
-    assert ("e", "a", 4) in got and ("b", "a", 1) in got
-    after = spark.sparkContext._jsc.getPersistentRDDs().size()
-    assert after - before <= 1, f"cache leak: {after - before} pinned handles"
+    nodes = spark.createDataFrame(
+        [(n, 1) for n in "abcde"], "unique_id string, wt_fp long"
+    )
+    def pinned() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    # ids, not a count: the cleaner may free earlier tests' RDDs mid-call
+    before = pinned()
+    if op == "transitive_closure":
+        out = L.transitive_closure(edges)
+        got = {(r.descendant, r.ancestor, r.depth) for r in out.collect()}
+        assert ("e", "a", 4) in got and ("b", "a", 1) in got
+    elif op == "critical_path":
+        out = L.critical_path(nodes, edges)
+        assert {r.unique_id: r.critical_cost_fp for r in out.collect()}["e"] == 5
+    else:
+        out = L.pagerank(nodes, edges)
+        assert len(out.collect()) == 5
+    leaked = pinned() - before
+    assert len(leaked) <= 1, f"cache leak: {len(leaked)} pinned handles"
     out.unpersist()
 
 

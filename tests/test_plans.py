@@ -464,3 +464,83 @@ def test_r13_release_iter_handle_frees_checkpoint_blocks(spark):
 
     _CACHE_SLOTS.get(spark, {}).pop("r13_pin_slot", None)
     assert jsc.getPersistentRDDs().size() == base
+
+
+# the lineage keys that read the manifest's dependency DAG, and the
+# run_results scans each makes besides
+_LINEAGE_KEYS = {
+    "dbt_lineage_closure": 0,
+    "dbt_lineage_closure_rcte": 0,
+    "dbt_lineage_depth": 0,
+    "dbt_pagerank": 0,
+    "dbt_critical_path": 1,
+    "dbt_model_fanout": 0,
+}
+
+
+@pytest.mark.parametrize("key", sorted(_LINEAGE_KEYS))
+def test_lineage_key_decodes_each_artifact_once(spark, key):
+    """Over the whole query — every round of the iterative operators
+    and the final collect — the manifest is scanned exactly once, and
+    run_results once for the critical path.  Lazy inputs re-scanned the
+    manifest in every round."""
+    from collections import Counter
+    from pathlib import PurePosixPath
+
+    from dbt_json_readr_spark.plans import dbt
+
+    mark = explain.sql_execution_mark(spark)
+    getattr(dbt, key)(spark, SF).collect()
+    scans = explain.file_scans(explain.sql_executions_since(spark, mark))
+    by_file: Counter = Counter()
+    for location, n in scans.items():
+        by_file[PurePosixPath(location).name] += n
+    assert by_file == Counter(
+        {"manifest.json": 1, "run_results.json": _LINEAGE_KEYS[key]}
+    ) - Counter(), f"{key}: text scans {dict(scans)}"
+
+
+def test_critical_path_runs_one_checkpoint_per_round(spark):
+    """critical_path's only jobs are its edge checkpoint and one
+    checkpoint per relaxation round; the change count rides in the
+    round's own job, so there is no probe job.  A depth-3 chain needs
+    3 relaxing rounds plus 1 that sees no change."""
+    from dbt_json_readr_spark.operators.lineage import critical_path
+
+    nodes = spark.createDataFrame(
+        [("a", 1), ("b", 2), ("c", 3), ("d", 4), ("e", 0)], "unique_id string, wt_fp long"
+    )
+    edges = spark.createDataFrame(
+        [("b", "a"), ("c", "b"), ("d", "c")], "child_unique_id string, parent_unique_id string"
+    )
+    sc = spark.sparkContext
+    group = "critical_path_round_pin"
+    mark = explain.sql_execution_mark(spark)
+    # the group alone: a job description would replace the executions'
+    # "localCheckpoint at ..." call-site descriptions
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = critical_path(nodes, edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    ran = [e for e in explain.sql_executions_since(spark, mark) if e.job_ids & jobs]
+    assert {r.unique_id: r.critical_cost_fp for r in out.collect()} == {
+        "a": 1, "b": 3, "c": 6, "d": 10, "e": 0,
+    }
+    assert [e.description.split(" at ")[0] for e in ran] == ["localCheckpoint"] * (1 + 4)
+    assert jobs == set().union(*(e.job_ids for e in ran)), "a job ran outside the checkpoints"
+
+
+def test_rotate_cached_empty_frames_release_the_slot(spark):
+    """A sweep that raises before its first pin hands ``[]`` to its slot;
+    that must release the previous sweep's frames, not keep them."""
+    from dbt_json_readr_spark.session import live_cached, rotate_cached
+
+    jsc = spark.sparkContext._jsc
+    base = jsc.getPersistentRDDs().size()
+    rotate_cached("empty_sweep_slot", [spark.range(10).localCheckpoint()])
+    assert jsc.getPersistentRDDs().size() == base + 1
+    rotate_cached("empty_sweep_slot", [])
+    assert jsc.getPersistentRDDs().size() == base, "previous sweep still pinned"
+    assert live_cached("empty_sweep_slot", spark) == []

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from dbt_json_readr_spark.operators.asof import asof_join
 from dbt_json_readr_spark.operators.sessionize import sessionize
@@ -1082,3 +1082,93 @@ def test_snappy_all_literal_roundtrip(chunks):
             stream += ln.to_bytes(2, "little")
         stream += c
     assert _snappy_decompress(bytes(stream)) == data
+
+
+# ------------------------------------------------------------ lineage
+
+
+@st.composite
+def dags(draw):
+    """(nodes [(id, wt)], edges [(child, parent)]): up to 40 nodes on up
+    to 9 levels, each edge pointing to a strictly lower level, so the
+    graph is acyclic with depth ≤ 8.  Weights include 0; nodes may have
+    no edges; edges may repeat or point to a parent that is not a node."""
+    n = draw(st.integers(0, 40))
+    levels = draw(st.lists(st.integers(0, 8), min_size=n, max_size=n))
+    nodes = [(f"n{i}", draw(st.integers(0, 3))) for i in range(n)]
+    edges = []
+    for i, lv in enumerate(levels):
+        lower = [j for j in range(n) if levels[j] < lv]
+        if lower:
+            for j in draw(st.lists(st.sampled_from(lower), max_size=3)):
+                edges.append((f"n{i}", f"n{j}"))
+        if draw(st.integers(0, 9)) == 0:
+            edges.append((f"n{i}", f"ghost{i}"))
+    return nodes, edges
+
+
+def _parents(edges):
+    out: dict = {}
+    for c, p in set(edges):
+        out.setdefault(c, set()).add(p)
+    return out
+
+
+def _naive_critical_path(nodes, edges):
+    wt, par, memo = dict(nodes), _parents(edges), {}
+
+    def cost(v):
+        if v not in memo:
+            memo[v] = wt[v] + max((cost(p) for p in par.get(v, ()) if p in wt), default=0)
+        return memo[v]
+
+    return {v: (wt[v], cost(v)) for v in wt}
+
+
+def _naive_depth(nodes, edges):
+    par, memo = _parents(edges), {}
+
+    def depth(v):
+        if v not in memo:
+            memo[v] = max((1 + depth(p) for p in par.get(v, ())), default=0)
+        return memo[v]
+
+    return {v: depth(v) for v, _ in nodes}
+
+
+def _naive_pagerank(nodes, edges, iters=10):
+    from dbt_json_readr_spark.operators.lineage import PR_BASE, PR_SCALE
+
+    uniq = set(edges)
+    outdeg: dict = {}
+    for c, _ in uniq:
+        outdeg[c] = outdeg.get(c, 0) + 1
+    rank = {v: PR_SCALE for v, _ in nodes}
+    for _ in range(iters):
+        contrib: dict = {}
+        for c, p in uniq:
+            if c in rank:
+                contrib[p] = contrib.get(p, 0) + rank[c] // outdeg[c]
+        rank = {v: PR_BASE + contrib.get(v, 0) * 17 // 20 for v in rank}
+    return rank
+
+
+@settings(**SETTINGS)
+@given(dag=dags())
+@example(dag=([], []))
+@example(dag=([("a", 0), ("b", 2), ("c", 0), ("lone", 5)], [("b", "a"), ("c", "b"), ("c", "ghost")]))
+def test_lineage_operators_match_stdlib_on_random_dags(spark, dag):
+    """critical_path, lineage_depth and pagerank equal stdlib
+    recomputations; the critical path's observed early exit stops at
+    the fixed point."""
+    from dbt_json_readr_spark.operators.lineage import critical_path, lineage_depth, pagerank
+
+    nodes, edges = dag
+    ndf = spark.createDataFrame(nodes, "unique_id string, wt_fp long")
+    edf = spark.createDataFrame(edges, "child_unique_id string, parent_unique_id string")
+    got_cp = {r.unique_id: (r.wt_fp, r.critical_cost_fp) for r in critical_path(ndf, edf).collect()}
+    assert got_cp == _naive_critical_path(nodes, edges)
+    got_depth = {r.unique_id: r.depth for r in lineage_depth(ndf, edf).collect()}
+    assert got_depth == _naive_depth(nodes, edges)
+    got_pr = {r.unique_id: r.rank_fp for r in pagerank(ndf, edf).collect()}
+    assert got_pr == _naive_pagerank(nodes, edges)
