@@ -71,36 +71,49 @@ def cosine_prenormed(a: Column, b: Column, na: Column, nb: Column) -> Column:
 
 # ------------------------------------------ codegen'd unrolled folds
 
-# (session → {(input-files-key, col): width}) — the probe is a one-row
-# job; caching per (session, scan file set) keeps a bench's repeated
-# plan builds from re-running it, while a changed input path re-probes.
-# WeakKeyDictionary: a stopped session's entries vanish with it.
-_WIDTH_CACHE: WeakKeyDictionary = WeakKeyDictionary()
+# session → {(probe, input files, semanticHash): [(JVM Dataset, value)]}.
+# A hit needs the same input files AND a sameSemantics plan, so a
+# filtered frame over the same files is probed on its own while a bench's
+# repeated plan builds of the same frame reuse the one-row job; the
+# 32-bit hash only buckets the candidates.  WeakKeyDictionary: a stopped
+# session's entries vanish with it (the values hold JVM handles only, not
+# the Python session).
+_PROBE_CACHE: WeakKeyDictionary = WeakKeyDictionary()
+
+
+def _cached_probe(df: DataFrame, probe: str, run):
+    """``run(df)`` once per (session, input files, plan).  Only
+    file-backed frames are cached; computed frames are probed per call,
+    so only pass cheap-to-scan inputs."""
+    try:
+        files = tuple(sorted(df.inputFiles()))
+    except Exception:
+        files = ()
+    if not files:
+        return run(df)
+    entries = _PROBE_CACHE.setdefault(df.sparkSession, {}).setdefault(
+        (probe, files, df.semanticHash()), []
+    )
+    for jdf, value in entries:
+        if jdf.sameSemantics(df._jdf):
+            return value
+    value = run(df)
+    entries.append((df._jdf, value))
+    return value
 
 
 def probe_width(df: DataFrame, col: str = "embedding") -> int | None:
     """Array width of ``col`` from ONE row of ``df`` — a plan-build
     metadata probe (the same class of driver round-trip as the dedup
-    auto-gate's candidate count).  Returns None on an empty frame, in
-    which case the ``*_w`` builders degrade to the interpreted fold.
-    Only file-backed frames are cached; computed frames are probed per
-    call, so only pass cheap-to-scan inputs."""
-    session = df.sparkSession
-    try:
-        key = tuple(sorted(df.inputFiles()))
-    except Exception:
-        key = ()
-    cache = _WIDTH_CACHE.setdefault(session, {})
-    ck = (key, col)
-    if key and ck in cache:
-        return cache[ck]
-    rows = df.select(F.size(F.col(col)).alias("w")).limit(1).collect()
-    width = rows[0]["w"] if rows else None
-    if width is not None and width <= 0:
-        width = None
-    if key:
-        cache[ck] = width
-    return width
+    verify gate).  Returns None on an empty frame, in which case the
+    ``*_w`` builders degrade to the interpreted fold."""
+
+    def run(d: DataFrame) -> int | None:
+        rows = d.select(F.size(F.col(col)).alias("w")).limit(1).collect()
+        width = rows[0]["w"] if rows else None
+        return width if width is not None and width > 0 else None
+
+    return _cached_probe(df, f"width:{col}", run)
 
 
 # (kind, names..., width) → parsed Column; Columns are immutable
@@ -142,22 +155,9 @@ def _cached_expr(key: tuple, sql_fn) -> Column:
 
 def probe_count(df: DataFrame) -> int:
     """Row count of a (file-backed) frame as a plan-build probe, cached
-    per (session, input files) like ``probe_width`` — parquet count(*)
-    is footer-metadata fast, and the cache makes a bench loop's
-    repeated plan builds free."""
-    session = df.sparkSession
-    try:
-        key = tuple(sorted(df.inputFiles()))
-    except Exception:
-        key = ()
-    cache = _WIDTH_CACHE.setdefault(session, {})
-    ck = (key, "__count__")
-    if key and ck in cache:
-        return cache[ck]
-    n = df.count()
-    if key:
-        cache[ck] = n
-    return n
+    like ``probe_width`` — parquet count(*) is footer-metadata fast, and
+    the cache makes a bench loop's repeated plan builds free."""
+    return _cached_probe(df, "count", DataFrame.count)
 
 
 def dot_w(a: str, b: str, width: int | None) -> Column:

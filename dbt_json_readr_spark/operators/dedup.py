@@ -12,11 +12,22 @@ bucket-local join —
 Oversized buckets (degenerate content) are capped with an explicit
 count filter so one hot bucket cannot quadratic-blow a 100 TB run;
 the cap is a visible parameter, not a silent drop.
+
+Set-overlap verify: every shingle/token-set measure is computed the
+same way.  ``overlap`` projects ``na, nb, inter`` (|A|, |B|, |A∩B|)
+with the intersect evaluated once per pair; ``jaccard`` and
+``containment`` are column expressions over those three columns.
+``verify_gate`` is the one data-driven shape choice: one job measures
+the candidate count and the per-doc set bytes and picks set-broadcast,
+candidate-broadcast or the narrow all-shuffle shape; ``set_overlap``
+runs the chosen shape.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..functions import hashing as H
@@ -24,43 +35,47 @@ from ..functions import vectors as V
 from ..session import evict_cached, rotate_cached, spread
 
 DEFAULT_BUCKET_CAP = 2000
-# Per-doc candidate degree cap (r6, VERDICT r5 item 3): the bucket cap
-# bounds any ONE bucket, but a dup CLIQUE of m docs still yields
-# ~C(m,2) candidate pairs across its buckets — clique-quadratic; sf10's
-# adversarial 100-dup cliques drove a 205.9M-pair verify past
-# single-node scratch.  Capping each doc to its ``cap`` SMALLEST
-# partner ids bounds candidates at n·cap and guarantees the MIN-EDGE
-# KERNEL: each doc keeps the edge toward its smallest partner, so a
-# CLIQUE's members still reach the clique minimum by monotone-
-# descending chains.  On general graphs the guarantee is weaker — a
-# bridge edge between two dense clusters is dropped when both
-# endpoints rank it beyond the cap, so components CAN split (r6 advice
-# finding); pair-level recall inside giant cliques and cross-cluster
-# bridges are the documented trade, and every drop is loud
-# (per-doc ``capped_doc`` evidence rows).
+# Per-doc candidate degree cap: the bucket cap bounds any ONE bucket,
+# but a dup CLIQUE of m docs still yields ~C(m,2) candidate pairs
+# across its buckets — clique-quadratic; sf10's adversarial 100-dup
+# cliques drove a 205.9M-pair verify past single-node scratch.
+# Capping each doc to its ``cap`` SMALLEST partner ids bounds
+# candidates at n·cap and guarantees the MIN-EDGE KERNEL: each doc
+# keeps the edge toward its smallest partner, so a CLIQUE's members
+# still reach the clique minimum by monotone-descending chains.  On
+# general graphs the guarantee is weaker — a bridge edge between two
+# dense clusters is dropped when both endpoints rank it beyond the
+# cap, so components CAN split; pair-level recall inside giant cliques
+# and cross-cluster bridges are the documented trade, and every drop
+# is loud (per-doc ``capped_doc`` evidence rows).
 DEFAULT_DEGREE_CAP = 16
-# auto-gate bound for the broadcast-candidates verify shape: 5M pairs
-# ≈ 80 MB on the driver / per executor copy — comfortably inside a
-# default 1-4 GiB driver, far under spark.sql.autoBroadcastJoinThreshold
-# ambitions for explicit broadcasts of this width.
+# verify_gate bound on the candidate count for the broadcast shapes:
+# 5M pairs ≈ 80 MB on the driver / per executor copy — comfortably
+# inside a default 1-4 GiB driver.  Past it the narrow all-shuffle
+# shape runs.
 DEFAULT_BROADCAST_CAND_CAP = 5_000_000
-# r13: auto-gate bound for broadcasting the per-doc SET side of the
-# verify joins instead of the candidate side.  At sf1 the unhinted set
-# join degraded to a SortMergeJoin that sorted 4.1M candidate rows
-# carrying ~2 KB shingle arrays through an exchange (measured 307
-# CPU·s; with both set sides broadcast every join is a BroadcastHash-
-# Join and no array ever crosses an exchange — 212 CPU·s, and 107 with
-# the eval_once barrier).  The estimate is raw set bytes from a cheap
-# aggregate over the CACHED sketch; past the cap the candidate side
-# broadcasts as before (r12 posture: the planner handles set joins).
+# verify_gate bound on the estimated per-doc set bytes for
+# broadcasting the SET sides of the verify joins (the candidates then
+# stream and no shingle array crosses an exchange).  At sf1 an
+# unhinted set join degraded to a SortMergeJoin that sorted 4.1M
+# candidate rows carrying ~2 KB shingle arrays through an exchange
+# (307 CPU·s); with both set sides broadcast every join is a
+# BroadcastHashJoin — 212 CPU·s, and 107 with the eval_once barrier.
+# Past the cap the candidate side broadcasts and the planner picks the
+# set joins.
 DEFAULT_SET_BCAST_BYTES_CAP = 256 * 1024 * 1024
+
+# verify shapes, as chosen by verify_gate
+SET_BROADCAST = "set_broadcast"
+CAND_BROADCAST = "cand_broadcast"
+NARROW = "narrow"
 
 
 def eval_once(expr, alias: str):
     """Generate-node barrier around an expensive per-row expression
-    (r13, guide §4.4's duplicate-evaluation problem at the expression
+    (guide §4.4's duplicate-evaluation problem at the expression
     level): a threshold filter over a projected column gets pushed into
-    the join condition below it, so the expression (array_intersect
+    the join condition below it, so the expression (a set intersect
     over ~240-element sets; the unrolled dot) is evaluated TWICE per
     surviving row — once in the condition, once in the projection.
     Exploding a one-element array turns the projection into a Generate
@@ -102,28 +117,15 @@ def _shingle_rows(docs: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _minhash_candidates(
-    rows: DataFrame, n_hashes: int, bands: int, bucket_cap: int
-) -> DataFrame:
-    """(doc_a, doc_b) LSH candidate pairs (pre-verification) from
-    (doc_id, sh) shingle rows: flat lane mins → band keys → doc_id-only
-    buckets → in-bucket pair explode → cross-band dedup."""
-    lanes = rows.select("doc_id", *H.minhash_lane_cols(F.col("sh"), n_hashes))
-    mins = lanes.groupBy("doc_id").agg(
-        *[F.min(f"mh{i}").alias(f"mh{i}") for i in range(n_hashes)]
-    )
-    return _cand_from_mins(mins, n_hashes, bands, bucket_cap)
-
-
 def _per_doc_sketch(rows: DataFrame, n_hashes: int, rotate: bool = True) -> DataFrame:
     """One combined pass: per-doc minhash lanes AND the distinct shingle
     set from a single scan + single aggregation.  The sketch and verify
     stages both consume this frame; without the cache each would re-run
     the exploded md5 scan (measured ~1 s of the operator's ~3 s steady
     state at sf0.1).  MEMORY_AND_DISK: per-doc sketch+set is the
-    dedup'd shingle corpus — it spills rather than OOMs at scale, and
-    corpora past executor-storage comfort should set
-    ``broadcast_verify=False``, which never builds sets at all."""
+    dedup'd shingle corpus — it spills rather than OOMs at scale; past
+    the candidate cap ``verify_gate`` releases it and the narrow verify
+    reads only (doc_id, sh) rows."""
     from pyspark import StorageLevel
 
     lanes = rows.select(
@@ -136,30 +138,14 @@ def _per_doc_sketch(rows: DataFrame, n_hashes: int, rotate: bool = True) -> Data
     # latest-wins rotation keyed per SparkSession (session.rotate_cached):
     # repeated invocations pin at most ONE cached frame per session —
     # same discipline as operators/kmeans.py, regression-tested in
-    # tests/test_plans.py.  rotate=False is for sweeps that must hold
-    # SEVERAL k-levels' sketches live until their one action runs
-    # (dedup_k_sweep) — the caller then rotates the whole pinned list
-    # into its own slot, same posture as kmeans' pin_lloyd_handles.
+    # tests/test_plans.py.  rotate=False is for callers that rotate
+    # into their own slot: sweeps that must hold SEVERAL k-levels'
+    # sketches live until their one action runs (dedup_k_sweep, same
+    # posture as kmeans' pin_lloyd_handles), and inputs whose plan never
+    # matches the plain corpus sketch (minhash_incremental_pairs).
     if rotate:
         rotate_cached("minhash_sketch", [per_doc])
     return per_doc
-
-
-def set_side_broadcastable(
-    per_doc: DataFrame, cap_bytes: int = DEFAULT_SET_BCAST_BYTES_CAP
-) -> bool:
-    """True when the per-doc shingle-set frame is small enough to ship
-    as the BUILD side of the two verify hash joins (raw bytes ≈ 8 per
-    shingle + 24 per doc row, estimated by one aggregate over the
-    already-cached sketch — a plan-build probe of the same class as the
-    auto-gate's candidate count).  Scale posture: sets grow with the
-    corpus while candidates are cap-bounded, so past this gate the r12
-    broadcast-candidates shape runs unchanged."""
-    row = per_doc.agg(
-        F.count(F.lit(1)).alias("n"), F.sum(F.size("sh")).alias("tot")
-    ).first()
-    est = (row["tot"] or 0) * 8 + (row["n"] or 0) * 24
-    return est <= cap_bytes
 
 
 def _cand_from_mins(
@@ -230,8 +216,16 @@ def minhash_candidate_pairs(
     bucket_cap: int = DEFAULT_BUCKET_CAP,
 ) -> DataFrame:
     """Public pre-verification candidate pairs — the measurable half of
-    the LSH recall/cost tradeoff (see plans/llm.py dedup_lsh_recall)."""
-    return _minhash_candidates(_shingle_rows(docs, k), n_hashes, bands, bucket_cap)
+    the LSH recall/cost tradeoff (see plans/llm.py dedup_lsh_recall):
+    flat lane mins → band keys → doc_id-only buckets → in-bucket pair
+    explode → cross-band dedup."""
+    lanes = _shingle_rows(docs, k).select(
+        "doc_id", *H.minhash_lane_cols(F.col("sh"), n_hashes)
+    )
+    mins = lanes.groupBy("doc_id").agg(
+        *[F.min(f"mh{i}").alias(f"mh{i}") for i in range(n_hashes)]
+    )
+    return _cand_from_mins(mins, n_hashes, bands, bucket_cap)
 
 
 def shingle_sets(docs: DataFrame, k: int = 5) -> DataFrame:
@@ -241,75 +235,136 @@ def shingle_sets(docs: DataFrame, k: int = 5) -> DataFrame:
     )
 
 
-def _gate_stats(per_doc: DataFrame, cand: DataFrame) -> "tuple[int, bool]":
-    """Both auto-gate inputs — the candidate count (broadcast-verify
-    gate) and the per-doc set-bytes estimate (verify side gate) — from
-    ONE action (r13): the two stats live on different frames, so
-    separate ``.count()`` / ``.first()`` calls cost two driver job
-    round-trips per invocation; a crossJoin of the two one-row
-    aggregates folds them into one job over the same cached data."""
-    row = (
-        cand.agg(F.count(F.lit(1)).alias("n_cand"))
-        .crossJoin(
-            per_doc.agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum(F.size("sh")).alias("tot_sh"),
-            )
+class VerifyShape(NamedTuple):
+    """What ``verify_gate`` measured and the verify shape it chose."""
+
+    n_cand: int | None  # candidate count; None when no candidates were gated
+    set_bytes: int | None  # estimated set-side bytes; None when unknown
+    cap_bytes: int
+    shape: str  # SET_BROADCAST, CAND_BROADCAST or NARROW
+
+
+def verify_gate(
+    sets: DataFrame | int | None,
+    cand: DataFrame | None = None,
+    cand_cap: int = DEFAULT_BROADCAST_CAND_CAP,
+    cap_bytes: int = DEFAULT_SET_BCAST_BYTES_CAP,
+) -> VerifyShape:
+    """The verify-shape gate, chosen from data rather than from the
+    caller.  ``sets`` is the per-doc set frame (``doc_id, sh``) — its
+    bytes are estimated as 8 per shingle + 24 per doc row — or an
+    already-known byte estimate (None: unknown).  A frame is measured
+    by ONE job, together with the count of ``cand`` when given (a
+    crossJoin of the two one-row aggregates over already-cached data).
+
+    - ``NARROW`` when the candidate count exceeds ``cand_cap``: the
+      candidates would not fit a broadcast, so the per-doc sets will
+      not be read and their ``minhash_sketch`` cache is released here.
+    - ``SET_BROADCAST`` when the sets fit ``cap_bytes``: the two set
+      sides are the broadcast build sides and the candidates stream,
+      so no set array crosses an exchange at any candidate volume.
+    - ``CAND_BROADCAST`` otherwise: the candidates broadcast and the
+      planner picks the set joins (sets grow with the corpus while
+      candidates are cap-bounded)."""
+    n_cand = None
+    set_bytes = sets
+    if isinstance(sets, DataFrame):
+        stats = sets.agg(
+            F.count(F.lit(1)).alias("n_docs"), F.sum(F.size("sh")).alias("tot_sh")
         )
-        .first()
-    )
-    est = (row["tot_sh"] or 0) * 8 + (row["n_docs"] or 0) * 24
-    return row["n_cand"], est <= DEFAULT_SET_BCAST_BYTES_CAP
-
-
-def _verify_jaccard_pairs(
-    per_doc: DataFrame,
-    cand: DataFrame,
-    threshold: float,
-    set_bcast: "bool | None" = None,
-) -> DataFrame:
-    """Exact-jaccard verification of ``cand`` against the fused cached
-    sketch — the broadcast verify shape shared by ``minhash_lsh_pairs``
-    and the per-k sweep (plans/llm.py dedup_k_sweep).  Side choice is
-    auto-gated (r13): a small per-doc SET frame becomes the broadcast
-    BUILD side of both hash joins and the (bigger, cap-bounded)
-    candidate pairs stream — no shingle array ever crosses an exchange
-    at ANY candidate volume.  Past the set cap, the r12 shape runs:
-    candidates broadcast, set joins left to the planner.  The sf1
-    evidence for the gate: unhinted, AQE elected a SortMergeJoin that
-    sorted 4.1M pair rows carrying ~2 KB arrays (19.7 s / 307 CPU·s);
-    set-broadcast + eval_once runs 4.6 s / 107 CPU·s, identical
-    250,224 output rows."""
-    if set_bcast is None:
-        set_bcast = set_side_broadcastable(per_doc)
-    sets = per_doc.select("doc_id", "sh")
-    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    if set_bcast:
-        joined = cand.join(F.broadcast(sa), "doc_a").join(F.broadcast(sb), "doc_b")
+        if cand is not None:
+            stats = cand.agg(F.count(F.lit(1)).alias("n_cand")).crossJoin(stats)
+        row = stats.first().asDict()
+        set_bytes = (row["tot_sh"] or 0) * 8 + row["n_docs"] * 24
+        n_cand = row.get("n_cand")
+    if n_cand is not None and n_cand > cand_cap:
+        shape = NARROW
+        evict_cached("minhash_sketch", sets)
+    elif set_bytes is not None and set_bytes <= cap_bytes:
+        shape = SET_BROADCAST
     else:
-        joined = F.broadcast(cand).join(sa, "doc_a").join(sb, "doc_b")
-    # |A∪B| = |A|+|B|−|A∩B| over the (distinct) shingle sets —
-    # numerically identical to size(array_union(...)); the eval_once
-    # barrier keeps the threshold filter from re-evaluating the
-    # intersect inside the join condition.
+        shape = CAND_BROADCAST
+    return VerifyShape(n_cand, set_bytes, cap_bytes, shape)
+
+
+def _gated_join(
+    cand: DataFrame,
+    side_a: DataFrame,
+    side_b: DataFrame,
+    keys: tuple[str, str],
+    shape: VerifyShape,
+) -> DataFrame:
+    """``cand ⋈ side_a ⋈ side_b`` on ``keys`` with the broadcast side
+    the gate picked: the two per-item sides under SET_BROADCAST, else
+    the candidates."""
+    ka, kb = keys
+    if shape.shape == SET_BROADCAST:
+        return cand.join(F.broadcast(side_a), ka).join(F.broadcast(side_b), kb)
+    return F.broadcast(cand).join(side_a, ka).join(side_b, kb)
+
+
+def overlap(a: Column, b: Column) -> list[Column]:
+    """``na, nb, inter``: the sizes of array columns ``a`` and ``b`` and
+    of their intersection.  The intersect sits under ``eval_once`` so a
+    threshold filter over a measure does not evaluate it a second time
+    inside the join condition below."""
+    return [
+        F.size(a).alias("na"),
+        F.size(b).alias("nb"),
+        eval_once(F.size(F.array_intersect(a, b)), "inter"),
+    ]
+
+
+def jaccard() -> Column:
+    """|A∩B| / |A∪B| over ``overlap``'s columns, with |A∪B| =
+    |A|+|B|−|A∩B| (exact on distinct sets; no union array is built)."""
+    inter = F.col("inter")
+    return inter.cast("double") / (F.col("na") + F.col("nb") - inter).cast("double")
+
+
+def containment(side: str) -> Column:
+    """|A∩B| / |side| over ``overlap``'s columns: ``containment("na")``
+    is A's containment in B, ``containment("nb")`` B's in A."""
+    return F.col("inter").cast("double") / F.col(side).cast("double")
+
+
+def set_overlap(
+    cand: DataFrame,
+    shape: VerifyShape,
+    per_doc: DataFrame | None = None,
+    rows: DataFrame | None = None,
+) -> DataFrame:
+    """``cand``'s columns plus ``na, nb, inter`` for each (doc_a, doc_b)
+    pair's shingle sets, in the shape ``verify_gate`` chose.
+
+    The broadcast shapes join the pairs to the cached per-doc sets
+    (``per_doc``, from ``_per_doc_sketch``) on the side the gate picked.
+    The NARROW shape counts intersections by joining the (doc_id, sh)
+    ``rows`` through the pairs — every shuffle carries hash-partitioned
+    24-byte rows, no arrays and no driver-side state, which is the only
+    shape that runs past the candidate cap.  A left join back onto the
+    pairs keeps zero-intersection candidates (inter = 0), as the
+    broadcast shapes do."""
+    if shape.shape != NARROW:
+        sets = per_doc.select("doc_id", "sh")
+        sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
+        sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
+        joined = _gated_join(cand, sa, sb, ("doc_a", "doc_b"), shape)
+        return joined.select(*cand.columns, *overlap(F.col("sh_a"), F.col("sh_b")))
+    counts = rows.groupBy("doc_id").agg(F.count("*").alias("n"))
+    ra = cand.select("doc_a", "doc_b").join(
+        rows.select(F.col("doc_id").alias("doc_a"), "sh"), "doc_a"
+    )
+    ri = ra.join(rows.select(F.col("doc_id").alias("doc_b"), "sh"), ["doc_b", "sh"])
     return (
-        joined.select(
-            "doc_a",
-            "doc_b",
-            F.size("sh_a").alias("_na"),
-            F.size("sh_b").alias("_nb"),
-            eval_once(F.size(F.array_intersect("sh_a", "sh_b")), "_inter"),
+        cand.join(
+            ri.groupBy("doc_a", "doc_b").agg(F.count("*").alias("inter")),
+            ["doc_a", "doc_b"],
+            "left",
         )
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("_inter").cast("double")
-                / (F.col("_na") + F.col("_nb") - F.col("_inter")).cast("double")
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+        .join(counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")), "doc_a")
+        .join(counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
+        .select(*cand.columns, "na", "nb", F.coalesce("inter", F.lit(0)).alias("inter"))
     )
 
 
@@ -320,7 +375,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     threshold: float = 0.8,
     bucket_cap: int = DEFAULT_BUCKET_CAP,
-    broadcast_verify: bool | None = None,
     broadcast_cand_cap: int = DEFAULT_BROADCAST_CAND_CAP,
 ) -> DataFrame:
     """Near-dup candidate pairs via minhash LSH, verified with exact
@@ -330,8 +384,7 @@ def minhash_lsh_pairs(
     candidate tail — plans/llm.py dedup_lsh_recall measures exactly
     this, and re-anchored the default from 0.25 (1.6% recall) to 0.8.
 
-    Scale shape (ONE cached corpus pass on the default path, codegen'd,
-    no fat buckets):
+    Scale shape (ONE cached corpus pass, codegen'd, no fat buckets):
     1. fused sketch pass — exploded shingle rows → flat 32-bit minhash
        lanes (functions/hashing.py) → a single groupBy(doc_id)
        computing the lane MINs AND collect_set(sh) together, persisted
@@ -340,90 +393,19 @@ def minhash_lsh_pairs(
     2. band buckets collect ONLY doc_ids (≤ bucket_cap × 8 bytes per
        bucket — a degenerate bucket buffers kilobytes, not the
        shingle-array megabytes of a struct-collecting formulation),
-       pairs are deduped across bands BEFORE verification.
-    3. verify — exact jaccard for the candidate pairs only, via one of
-       two shapes chosen by ``broadcast_verify``: broadcast-candidates
-       (zero array shuffles, reads the cached sets) or the all-shuffle
-       narrow-row intersection counting below, which keeps TWO uncached
-       corpus passes but never builds sets nor caches — for corpora
-       whose candidate set outgrows the driver or whose per-doc
-       sketch+set exceeds executor storage comfort.
-
-    ``broadcast_verify=None`` (default) AUTO-gates the shape from data
-    instead of trusting the caller (r3 advice): the candidate pairs are
-    computed from the cached sketch, persisted, and COUNTED — a cheap
-    band-aggregate action over already-cached data — and the broadcast
-    shape is taken only when the count fits ``broadcast_cand_cap``
-    (default 5M pairs ≈ 80 MB broadcast).  Over the cap, the sketch
-    cache is released immediately and the all-shuffle shape runs with
-    the persisted candidates reused.  Callers at scales where even the
-    cached sketch is unaffordable should pass ``broadcast_verify=False``
-    explicitly — that path still touches nothing but narrow rows."""
+       pairs are deduped across bands BEFORE verification, persisted.
+    3. ``verify_gate`` counts the candidates and sizes the sets in one
+       job; ``set_overlap`` then runs the chosen shape (set broadcast,
+       candidate broadcast, or — over ``broadcast_cand_cap`` — the
+       narrow all-shuffle shape) and ``jaccard`` scores each pair."""
     rows = _shingle_rows(docs, k)
-    per_doc = cand = None
-    set_bcast = None
-    if broadcast_verify is None:
-        per_doc = _per_doc_sketch(rows, n_hashes)
-        cand = _cand_from_mins(per_doc.drop("sh"), n_hashes, bands, bucket_cap).persist()
-        rotate_cached("minhash_cand", [cand])
-        n_cand, set_bcast = _gate_stats(per_doc, cand)
-        broadcast_verify = n_cand <= broadcast_cand_cap
-        if not broadcast_verify:
-            # bailing to the shuffle shape: the per-doc sets will not be
-            # read — release the fused sketch cache now AND clear its
-            # slot registration (evict_cached, ADVICE r12: a bare
-            # unpersist left a dead handle in 'minhash_sketch'), keep
-            # only the (narrow) candidate pairs.
-            evict_cached("minhash_sketch", per_doc)
-            per_doc = None
-    if broadcast_verify:
-        # Verify joins over the fused cached sketch (_per_doc_sketch).
-        # Side choice is auto-gated (r13): when the per-doc SET frame is
-        # small enough it becomes the broadcast BUILD side of both hash
-        # joins and the (bigger, cap-bounded) candidate pairs stream —
-        # no shingle array ever crosses an exchange at ANY candidate
-        # volume.  Past the set cap, the r12 shape runs: candidates
-        # broadcast, set joins left to the planner.  The sf1 evidence
-        # for the gate: unhinted, AQE elected a SortMergeJoin that
-        # sorted 4.1M pair rows carrying ~2 KB arrays (19.7 s / 307
-        # CPU·s); set-broadcast + eval_once runs 4.6 s / 107 CPU·s,
-        # identical 250,224 output rows.
-        if per_doc is None:
-            per_doc = _per_doc_sketch(rows, n_hashes)
-        if cand is None:
-            cand = _cand_from_mins(per_doc.drop("sh"), n_hashes, bands, bucket_cap)
-        return _verify_jaccard_pairs(per_doc, cand, threshold, set_bcast)
-    # All-shuffle fallback for corpora where the candidate set itself is
-    # too large to broadcast: intersection sizes come from joining the
-    # NARROW (doc_id, sh) shingle rows through the pairs — every shuffle
-    # is hash-partitioned 24-byte rows, no arrays, no driver-side state.
-    # No per-doc sets are built (and nothing is cached) on this path —
-    # unless auto-gating above already persisted the candidate pairs,
-    # which are then reused instead of recomputed.
-    if cand is None:
-        cand = _minhash_candidates(rows, n_hashes, bands, bucket_cap)
-    counts = rows.groupBy("doc_id").agg(F.count("*").alias("n"))
-    ra = cand.join(rows.select(F.col("doc_id").alias("doc_a"), "sh"), "doc_a")
-    ri = ra.join(rows.select(F.col("doc_id").alias("doc_b"), "sh"), ["doc_b", "sh"])
-    # left-join back onto cand so zero-intersection candidates keep a
-    # jaccard=0.0 row — without it the two verify shapes diverge for
-    # threshold <= 0 (broadcast emits those rows, inner-join drops them)
-    ic = cand.join(
-        ri.groupBy("doc_a", "doc_b").agg(F.count("*").alias("inter")),
-        ["doc_a", "doc_b"],
-        "left",
-    ).select("doc_a", "doc_b", F.coalesce("inter", F.lit(0)).alias("inter"))
+    per_doc = _per_doc_sketch(rows, n_hashes)
+    cand = _cand_from_mins(per_doc.drop("sh"), n_hashes, bands, bucket_cap).persist()
+    rotate_cached("minhash_cand", [cand])
+    shape = verify_gate(per_doc, cand, broadcast_cand_cap)
     return (
-        ic.join(counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")), "doc_a")
-        .join(counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("inter").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("inter")).cast("double")
-            ).alias("jaccard"),
-        )
+        set_overlap(cand, shape, per_doc, rows)
+        .select("doc_a", "doc_b", jaccard().alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -445,29 +427,24 @@ def minhash_incremental_pairs(
     the in-bucket pair explode keeps only pairs with ≥1 incoming
     member.
 
-    Same banding, caps, and jaccard verify as minhash_lsh_pairs, so the
-    full-pipeline oracle filtered to incoming-touching pairs is the
-    correctness contract (plans/llm.py dedup_incremental).  Buckets
-    collect (doc_id, is_inc) — 16 B per member, still cap-bounded.
-    Returns (doc_a, doc_b, jaccard, pair_type) with pair_type
-    'cross' (base↔incoming) or 'new' (incoming↔incoming)."""
-    from pyspark import StorageLevel
-
+    Same sketch, banding, caps, gate and jaccard verify as
+    minhash_lsh_pairs, so the full-pipeline oracle filtered to
+    incoming-touching pairs is the correctness contract (plans/llm.py
+    dedup_incremental).  Buckets collect (doc_id, is_inc) — 16 B per
+    member, still cap-bounded.  Returns (doc_a, doc_b, jaccard,
+    pair_type) with pair_type 'cross' (base↔incoming) or 'new'
+    (incoming↔incoming)."""
     tagged = base.select("doc_id", "text").withColumn(
         "is_inc", F.lit(False)
     ).unionByName(incoming.select("doc_id", "text").withColumn("is_inc", F.lit(True)))
     rows = _shingle_rows(tagged, k)
     flags = tagged.select("doc_id", "is_inc")
-    lanes = rows.select("doc_id", "sh", *H.minhash_lane_cols(F.col("sh"), n_hashes))
-    # persisted (r13): the sketch feeds the band stage AND both verify
-    # set sides — one scan+agg instead of three.  Its OWN rotation slot:
-    # the tagged-union input plan is never sameSemantics with the plain
-    # corpus sketch, so sharing 'minhash_sketch' would evict the entry
-    # every other dedup key in the session reads.
-    per_doc = lanes.groupBy("doc_id").agg(
-        *[F.min(f"mh{i}").alias(f"mh{i}") for i in range(n_hashes)],
-        F.collect_set("sh").alias("sh"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # the sketch feeds the band stage AND both verify set sides.  Its
+    # OWN rotation slot: the tagged-union input plan is never
+    # sameSemantics with the plain corpus sketch, so sharing
+    # 'minhash_sketch' would evict the entry every other dedup key in
+    # the session reads.
+    per_doc = _per_doc_sketch(rows, n_hashes, rotate=False)
     rotate_cached("minhash_sketch_inc", [per_doc])
     mins = per_doc.drop("sh").join(flags, "doc_id")
     r = n_hashes // bands
@@ -519,30 +496,12 @@ def minhash_incremental_pairs(
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    sets = per_doc.select("doc_id", "sh")
-    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    # same r13 side gate + eval_once barrier as the full-LSH verify
-    if set_side_broadcastable(per_doc):
-        joined = cand.join(F.broadcast(sa), "doc_a").join(F.broadcast(sb), "doc_b")
-    else:
-        joined = F.broadcast(cand).join(sa, "doc_a").join(sb, "doc_b")
     return (
-        joined.select(
-            "doc_a",
-            "doc_b",
-            "both_inc",
-            F.size("sh_a").alias("_na"),
-            F.size("sh_b").alias("_nb"),
-            eval_once(F.size(F.array_intersect("sh_a", "sh_b")), "_inter"),
-        )
+        set_overlap(cand, verify_gate(per_doc), per_doc)
         .select(
             "doc_a",
             "doc_b",
-            (
-                F.col("_inter").cast("double")
-                / (F.col("_na") + F.col("_nb") - F.col("_inter")).cast("double")
-            ).alias("jaccard"),
+            jaccard().alias("jaccard"),
             F.when(F.col("both_inc"), F.lit("new")).otherwise(F.lit("cross")).alias("pair_type"),
         )
         .filter(F.col("jaccard") >= threshold)
@@ -590,7 +549,7 @@ def simhash_band_pairs(
     """All same-band candidate pairs with their exact hamming distance
     (pre-threshold) — the measurable half of the banding guarantee.
 
-    ``max_hamming`` (r13, guide §2.2 — shuffle fewer bytes): when the
+    ``max_hamming`` (guide §2.2 — shuffle fewer bytes): when the
     caller will threshold anyway (simhash_pairs), the filter is applied
     BEFORE the cross-band dropDuplicates.  hamming is functionally
     determined by the pair (same two simhashes wherever the pair
@@ -674,9 +633,9 @@ def token_jaccard_pairs(
         "doc_id", F.col(block_col).alias("block"), F.array_distinct(H.tokens(F.col("text"))).alias("tok")
     )
     # block-size cap as a window count (one pass), then the TILED pair
-    # explode (r13, _tiled_member_pairs): the old per-block flatten ran
-    # each block's C(m,2) pairs — full token arrays attached — in ONE
-    # task (sf0.1 measured ~2 effective cores on 32)
+    # explode (_tiled_member_pairs): a per-block flatten would run each
+    # block's C(m,2) pairs — full token arrays attached — in ONE task
+    # (sf0.1 measured ~2 effective cores on 32)
     sized = t.withColumn(
         "bn", F.count(F.lit(1)).over(W.partitionBy("block"))
     ).filter((F.col("bn") >= 2) & (F.col("bn") <= block_cap))
@@ -687,27 +646,13 @@ def token_jaccard_pairs(
         F.struct("doc_id", "tok"),
         "token_block_tiles",
     )
-    # |A∪B| = |A|+|B|−|A∩B| (exact on the distinct token sets — r13,
-    # same identity as the minhash verify) and the eval_once barrier so
-    # the threshold filter does not re-evaluate the intersect below the
-    # projection (the pair Generate blocks pushdown of the predicate
-    # but not the duplicate evaluation in a pushed-through filter)
     return (
         pairs.select(
             F.least("a.doc_id", "b.doc_id").alias("doc_a"),
             F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-            F.size("a.tok").alias("_na"),
-            F.size("b.tok").alias("_nb"),
-            eval_once(F.size(F.array_intersect("a.tok", "b.tok")), "_inter"),
+            *overlap(F.col("a.tok"), F.col("b.tok")),
         )
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("_inter").cast("double")
-                / (F.col("_na") + F.col("_nb") - F.col("_inter")).cast("double")
-            ).alias("jaccard"),
-        )
+        .select("doc_a", "doc_b", jaccard().alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -717,7 +662,7 @@ EMB_BUCKET_DIMS = [0, 7, 19, 31]
 # Banded sign-LSH for the dedup path: 4 independent 4-bit bucket tables
 # (disjoint fixed dims, no RNG — byte-reproducible across engines).  One
 # 4-bit table measures 0.18 candidate recall at cos≥0.4 on this corpus
-# (dedup_lsh_recall r2); OR-ing B tables lifts recall to 1-(1-p)^B at
+# (dedup_lsh_recall); OR-ing B tables lifts recall to 1-(1-p)^B at
 # B× the bucket-join volume — the same curve logic as minhash banding.
 EMB_BANDS = [
     EMB_BUCKET_DIMS,
@@ -851,33 +796,24 @@ def embedding_cosine_pairs(
     embs: DataFrame,
     threshold: float = 0.4,
     bucket_cap: int = DEFAULT_BUCKET_CAP,
-    broadcast_verify: "bool | None" = None,
 ) -> DataFrame:
     """Near-dup embedding pairs with cosine ≥ threshold, candidates from
     banded sign-LSH (see embedding_candidate_pairs), verified by exact
     cosine.
 
-    Verify side choice (r13, the same auto-gate as the minhash verify):
-    when the per-vector frame estimates under
-    ``DEFAULT_SET_BCAST_BYTES_CAP`` (bytes ≈ rows · (8·width + 24),
-    from the cached plan-build probes — no extra job), BOTH vector
-    sides broadcast as hash-join BUILD sides and the candidate pairs
-    STREAM — candidates are clique-quadratic (the 10× replica set
-    measured 45.7M, a ~0.7 GB broadcast under the r12 posture) while
-    the vectors grow only linearly.  Past the vector cap,
-    ``broadcast_verify`` keeps its old meaning: None/True broadcasts
-    the candidate side (right while candidates fit the driver), False
-    runs plain shuffles (vectors hash-partitioned on vec_id — the
-    shape that survives when neither side fits)."""
+    Verify side choice: ``verify_gate`` over the per-vector byte
+    estimate rows · (8·width + 24), from the cached plan-build probes
+    (no extra job).  Under the byte cap BOTH vector sides broadcast as
+    hash-join BUILD sides and the candidate pairs STREAM — candidates
+    are clique-quadratic (the 10× replica set measured 45.7M, a ~0.7 GB
+    candidate broadcast) while the vectors grow only linearly.  Past
+    the cap the candidate side broadcasts.  The dot is the
+    width-unrolled codegen fold (bit-identical left fold) under
+    ``eval_once``, so the threshold filter does not re-evaluate it in
+    the join condition."""
     cand = embedding_candidate_pairs(embs, bucket_cap)
-    # r13: width-unrolled codegen dot (bit-identical left fold) and the
-    # eval_once barrier so the threshold filter does not re-evaluate the
-    # dot in the join condition — same rows, one fold per pair
     width = V.probe_width(embs)
-    vecs_bytes = V.probe_count(embs) * (8 * (width or 0) + 24)
-    vec_bcast = width is not None and vecs_bytes <= DEFAULT_SET_BCAST_BYTES_CAP
-    if not vec_bcast and broadcast_verify is not False:
-        cand = F.broadcast(cand)
+    shape = verify_gate(V.probe_count(embs) * (8 * width + 24) if width else None)
     vecs = spread(embs).select(
         "vec_id", V.to_double(F.col("embedding")).alias("v")
     ).withColumn("n", V.norm_w("v", width))
@@ -887,12 +823,8 @@ def embedding_cosine_pairs(
     vb = vecs.select(
         F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("n").alias("nb")
     )
-    if vec_bcast:
-        va, vb = F.broadcast(va), F.broadcast(vb)
     return (
-        cand
-        .join(va, "vec_a")
-        .join(vb, "vec_b")
+        _gated_join(cand, va, vb, ("vec_a", "vec_b"), shape)
         .select(
             "vec_a",
             "vec_b",
@@ -930,9 +862,9 @@ def candidate_degree_cap(
     so a SQL oracle replays it with a row_number window.
 
     Nomination is a TWO-STAGE top-k aggregate, not a window sort
-    (r6 VERDICT item 5: the row_number formulation totally sorted
-    the full 2×-pair directed set per doc partition and cost 479.9 s
-    of sf10's 658.7 s verify).  Stage 1 keys on (doc, input-partition)
+    (a row_number formulation totally sorts the full 2×-pair
+    directed set per doc partition; measured 479.9 s of sf10's
+    658.7 s verify).  Stage 1 keys on (doc, input-partition)
     and slices each group to its ``cap`` smallest partners; stage 2
     merges the per-partition top-ks — any globally-top-cap partner is
     within the top cap of its own partition, so the merge is lossless
@@ -948,11 +880,11 @@ def candidate_degree_cap(
     # overlap-count joins after that — without a pin each one replays
     # the whole LSH bucket join upstream.  Rows are two longs (~16 B);
     # even sf10's 159M pre-cap candidates fit MEMORY_AND_DISK
-    # comfortably (same pattern as the auto-gated verify path above).
+    # comfortably (same pattern as the gated verify candidates).
     # rotate_cached bounds live handles to one per session slot — a
-    # bare persist leaked one pinned entry per distinct input (caught
-    # by the r7 close review: the hypothesis property test alone calls
-    # this with dozens of distinct graphs in one session).
+    # bare persist would leak one pinned entry per distinct input (the
+    # hypothesis property test alone calls this with dozens of
+    # distinct graphs in one session).
     from pyspark import StorageLevel
 
     cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
@@ -992,7 +924,7 @@ def candidate_degree_cap(
     ).dropDuplicates(["doc_a", "doc_b"])
     # nom_pairs feeds BOTH the kept semi-join and the dropped anti-join
     # (plus the evidence rollup behind it) — without a pin each consumer
-    # replays the full two-stage nomination aggregate (r12; ~6 shuffle
+    # replays the full two-stage nomination aggregate (~6 shuffle
     # stages per replay).  Bounded at n·cap 16-byte rows by
     # construction, so MEMORY_AND_DISK is safe at any scale.
     nom_pairs = nom_pairs.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1000,10 +932,10 @@ def candidate_degree_cap(
     kept = cand.join(nom_pairs, ["doc_a", "doc_b"], "left_semi")
     degrees = directed.groupBy("doc").agg(F.count(F.lit(1)).alias("degree"))
     # per-doc drop accounting WITHOUT materializing the dropped pair
-    # set (r12): a doc's lost-partner count is exactly its candidate
-    # degree minus its kept degree — two narrow aggregates and a join
-    # instead of the anti-join + 2×-union rollup the r11 shape ran
-    # (same rows, ~4 fewer shuffle stages on the evidence path)
+    # set: a doc's lost-partner count is exactly its candidate degree
+    # minus its kept degree — two narrow aggregates and a join instead
+    # of an anti-join + 2×-union rollup (same rows, ~4 fewer shuffle
+    # stages on the evidence path)
     kept_degrees = (
         kept.select(F.col("doc_a").alias("doc"))
         .unionAll(kept.select(F.col("doc_b")))
@@ -1033,129 +965,50 @@ def minhash_containment_pairs(
     bucket_cap: int = DEFAULT_BUCKET_CAP,
     degree_cap: int | None = DEFAULT_DEGREE_CAP,
     evidence: bool = False,
-    broadcast_verify: bool | None = None,
     broadcast_cand_cap: int = DEFAULT_BROADCAST_CAND_CAP,
 ) -> DataFrame:
     """Directed shingle containment over minhash-LSH band candidates —
     the asymmetric-overlap generalization of ``minhash_lsh_pairs``,
-    with the SAME auto-gated verify-shape choice (r12):
+    with the same fused cached sketch (one corpus pass supplies lanes
+    AND shingle sets, shared with ``minhash_lsh_pairs`` through the
+    session's sketch cache), the same ``verify_gate`` and the same
+    ``set_overlap``; ``containment`` scores each direction.
 
-    - broadcast shape (candidate count ≤ ``broadcast_cand_cap``): the
-      fused ``_per_doc_sketch`` scan+agg supplies lanes AND shingle
-      sets from ONE cached corpus pass; the only HINT is on the
-      (degree-capped) candidate pairs — the per-doc set sides are
-      left to the planner, which may elect a runtime broadcast of the
-      cached sets at small SF and falls back to shuffle joins at
-      scale (the same posture as the jaccard verify since r3).  The
-      r11 narrow-only shape re-ran the exploded md5 scan four times
-      and AQE broadcast the full multi-million-row EXPLODED shingle
-      frame twice (measured 7.1 s wall / 92 CPU·s at sf0.1 vs the
-      jaccard path's 7.7 CPU·s on the same sketch); this shape is the
-      fix.
-    - narrow all-shuffle fallback (over the cap, or forced with
-      ``broadcast_verify=False``): intersection sizes from joining
-      (doc_id, sh) 24-byte rows through the pairs, set sizes from a
-      per-doc count — nothing broadcasts, nothing wide moves; the
-      shape that survives corpora whose post-cap candidate set
-      outgrows the driver.
-
-    ``broadcast_verify=None`` (default) counts the post-cap candidates
-    (persisted, rotate_cached-bounded) and picks the shape from data —
-    never from the caller's guess.  With the default degree cap the
-    candidate count is ≤ n·cap, so the gate bound is reached only past
-    ~300M docs; the fallback stays regression-pinned either way.
+    The post-degree-cap candidates are persisted (rotate_cached-
+    bounded) and counted by the gate.  With the default degree cap the
+    candidate count is ≤ n·cap, so ``broadcast_cand_cap`` is reached
+    only past ~300M docs; the narrow shape stays regression-pinned by
+    forcing the cap to 0.
 
     Returns (doc_a, doc_b, inter_n, cont_a_in_b, cont_b_in_a) for
     pairs with max containment ≥ τ, plus loud ``capped_doc`` evidence
     rows when ``evidence`` and a degree cap are set — identical values
-    from both shapes (the parity test pins it)."""
+    from every shape (the parity test pins it)."""
     from pyspark import StorageLevel
 
     rows = _shingle_rows(docs, k)
-    per_doc = None
-    if broadcast_verify is None or broadcast_verify:
-        # fused lanes+sets pass, cached; canonical plan shared with
-        # minhash_lsh_pairs so a session computing both (the bench
-        # sequence; the calibration key) hits ONE cache entry
-        per_doc = _per_doc_sketch(rows, n_hashes)
-        cand = _cand_from_mins(per_doc.drop("sh"), n_hashes, bands, bucket_cap)
-    else:
-        # _minhash_candidates already returns cross-band-deduped pairs
-        cand = _minhash_candidates(rows, n_hashes, bands, bucket_cap)
+    per_doc = _per_doc_sketch(rows, n_hashes)
+    cand = _cand_from_mins(per_doc.drop("sh"), n_hashes, bands, bucket_cap)
     capped_docs = None
     if degree_cap is not None:
         cand, capped_docs = candidate_degree_cap(cand, degree_cap)
-    set_bcast = None
-    if broadcast_verify is None:
-        # the post-cap pairs feed the gate count AND the verify joins
-        # (and the evidence union when requested) — pin them so the
-        # count action does not replay the nomination pipeline
-        cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
-        rotate_cached("containment_kept", [cand])
-        n_cand, set_bcast = _gate_stats(per_doc, cand)
-        broadcast_verify = n_cand <= broadcast_cand_cap
-        if not broadcast_verify:
-            # bailing to the shuffle shape: the per-doc sets will not
-            # be read — release the fused sketch cache and clear its
-            # slot registration (evict_cached, ADVICE r12)
-            evict_cached("minhash_sketch", per_doc)
-            per_doc = None
-    if broadcast_verify:
-        # same r13 side gate + eval_once barrier as the jaccard verify:
-        # small set frames broadcast (pairs stream, no array exchanges),
-        # big ones fall back to the r12 broadcast-candidates shape; the
-        # intersect is computed once per pair either way
-        if set_bcast is None:
-            set_bcast = set_side_broadcastable(per_doc)
-        sets = per_doc.select("doc_id", "sh")
-        sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-        sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-        if set_bcast:
-            joined = cand.join(F.broadcast(sa), "doc_a").join(F.broadcast(sb), "doc_b")
-        else:
-            joined = F.broadcast(cand).join(sa, "doc_a").join(sb, "doc_b")
-        pairs = (
-            joined.select(
-                "doc_a",
-                "doc_b",
-                F.size("sh_a").alias("_na"),
-                F.size("sh_b").alias("_nb"),
-                eval_once(F.size(F.array_intersect("sh_a", "sh_b")), "_inter"),
-            )
-            .select(
-                "doc_a",
-                "doc_b",
-                F.col("_inter").cast("int").alias("inter_n"),
-                (F.col("_inter").cast("double") / F.col("_na").cast("double")).alias("cont_a_in_b"),
-                (F.col("_inter").cast("double") / F.col("_nb").cast("double")).alias("cont_b_in_a"),
-            )
-            .filter(
-                F.greatest(F.col("cont_a_in_b"), F.col("cont_b_in_a")) >= threshold
-            )
+    # the post-cap pairs feed the gate count AND the verify joins (and
+    # the evidence union when requested) — pin them so the count action
+    # does not replay the nomination pipeline
+    cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
+    rotate_cached("containment_kept", [cand])
+    shape = verify_gate(per_doc, cand, broadcast_cand_cap)
+    pairs = (
+        set_overlap(cand, shape, per_doc, rows)
+        .select(
+            "doc_a",
+            "doc_b",
+            F.col("inter").cast("int").alias("inter_n"),
+            containment("na").alias("cont_a_in_b"),
+            containment("nb").alias("cont_b_in_a"),
         )
-    else:
-        counts = rows.groupBy("doc_id").agg(F.count("*").alias("n"))
-        ra = cand.join(rows.select(F.col("doc_id").alias("doc_a"), "sh"), "doc_a")
-        ri = ra.join(rows.select(F.col("doc_id").alias("doc_b"), "sh"), ["doc_b", "sh"])
-        ic = cand.join(
-            ri.groupBy("doc_a", "doc_b").agg(F.count("*").alias("inter")),
-            ["doc_a", "doc_b"],
-            "left",
-        ).select("doc_a", "doc_b", F.coalesce("inter", F.lit(0)).alias("inter"))
-        pairs = (
-            ic.join(counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")), "doc_a")
-            .join(counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
-            .select(
-                "doc_a",
-                "doc_b",
-                F.col("inter").cast("int").alias("inter_n"),
-                (F.col("inter").cast("double") / F.col("na").cast("double")).alias("cont_a_in_b"),
-                (F.col("inter").cast("double") / F.col("nb").cast("double")).alias("cont_b_in_a"),
-            )
-            .filter(
-                F.greatest(F.col("cont_a_in_b"), F.col("cont_b_in_a")) >= threshold
-            )
-        )
+        .filter(F.greatest(F.col("cont_a_in_b"), F.col("cont_b_in_a")) >= threshold)
+    )
     if not evidence:
         return pairs
     tagged = pairs.select(

@@ -3121,21 +3121,8 @@ def dedup_band_utility(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.min("band").alias("min_band"))
     )
-    sets = per_doc.select("doc_id", "sh")
-    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    # r13 side gate (operators/dedup.py): small set frames broadcast so
-    # the pair rows stream and no shingle array crosses an exchange;
-    # past the cap the candidate side broadcasts as in r12
-    if D.set_side_broadcastable(per_doc):
-        joined = pairs.join(F.broadcast(sa), "doc_a").join(F.broadcast(sb), "doc_b")
-    else:
-        joined = F.broadcast(pairs).join(sa, "doc_a").join(sb, "doc_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    # |A∪B| = |A|+|B|−|A∩B|: same value, no union array built per pair
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = joined.select(
-        "min_band", (inter.cast("double") / union.cast("double")).alias("j")
+    jac = D.set_overlap(pairs, D.verify_gate(per_doc), per_doc).select(
+        "min_band", D.jaccard().alias("j")
     )
     levels = spark.range(1, _MH_BANDS + 1).select(
         F.col("id").cast("int").alias("n_bands")
@@ -3611,35 +3598,20 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = keep.select(
         F.col("doc_id").alias("doc_b"), "lang", F.col("sh").alias("sh_b")
     )
-    # eval_once barrier (r13): without it the containment filter is
-    # pushed into the block join's condition and the array_intersect
-    # over full shingle-string arrays evaluates twice per pair
     pairs = (
         a.join(b, "lang")
         .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            F.col("lang"),
-            "block_n",
-            "doc_a",
-            "doc_b",
-            F.size("sh_a").alias("_na"),
-            F.size("sh_b").alias("_nb"),
-            D.eval_once(F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))), "_inter"),
-        )
+        .select("lang", "block_n", "doc_a", "doc_b", *D.overlap(F.col("sh_a"), F.col("sh_b")))
         .select(
             F.lit("pair").alias("status"),
             F.col("lang").alias("block_lang"),
             "block_n",
             "doc_a",
             "doc_b",
-            F.col("_inter").alias("inter_n"),
-            (F.col("_inter").cast("double") / F.col("_na").cast("double")).alias("cont_a_in_b"),
-            (F.col("_inter").cast("double") / F.col("_nb").cast("double")).alias("cont_b_in_a"),
-            (
-                # |A∪B| = |A|+|B|−|A∩B|: same value, no union array
-                F.col("_inter").cast("double")
-                / (F.col("_na") + F.col("_nb") - F.col("_inter")).cast("double")
-            ).alias("jaccard"),
+            F.col("inter").alias("inter_n"),
+            D.containment("na").alias("cont_a_in_b"),
+            D.containment("nb").alias("cont_b_in_a"),
+            D.jaccard().alias("jaccard"),
         )
         .filter(F.greatest(F.col("cont_a_in_b"), F.col("cont_b_in_a")) >= _CONT_TAU)
     )
@@ -3869,14 +3841,12 @@ def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     harness that would measure it.  The oracle replays band generation
     + verify exactly, so the gate pins candidates AND ratios.
 
-    Verify shape (r12): auto-gated in operators/dedup.py
-    minhash_containment_pairs — the post-degree-cap candidate count
-    picks between the broadcast-candidates shape (fused cached
-    sketch+sets, no shingle array crosses an exchange; fixes the r11
-    narrow-only shape's 4× md5 corpus re-scan and AQE's full-shingle-
-    frame broadcasts — 7.1 s → ~1.3 s steady at sf0.1) and the narrow
-    all-shuffle fallback that survives candidate sets too big for the
-    driver (the sf1 AQE-broadcast-OOM lesson; still regression-pinned).
+    Verify shape: ``verify_gate`` in operators/dedup.py counts the
+    post-degree-cap candidates and sizes the cached per-doc sets in one
+    job, then ``set_overlap`` broadcasts the sets (or, past the byte
+    cap, the candidates) — no shingle array crosses an exchange — or,
+    past the candidate cap, runs the narrow all-shuffle intersection
+    that survives candidate sets too big for the driver.
 
     r6 (VERDICT r5 item 3): candidate volume is clique-quadratic —
     sf10's 100-dup cliques produced 205.9M verify pairs and overflowed
@@ -4468,18 +4438,15 @@ def dedup_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load(spark, sf_dir, "documents"))
     out = None
     pinned = []
-    # r13 (VERDICT r12 item 4): ONE fused scan+agg per k.  The old
-    # shape built the candidate count and the verified pairs through
-    # SEPARATE operator calls, and each k's sketch rotation evicted the
-    # previous k's cache before the key's single action ran — at action
-    # time k=3 and k=5 replayed the exploded md5 scan for every verify
-    # consumer (four scans per k, 38.7 s sf0.1 cold).  Now each k
-    # builds the fused sketch once with rotate=False, derives BOTH the
-    # candidate count and the auto-gated broadcast verify from it, and
-    # every sketch stays pinned until the sweep's action runs; the
-    # whole pinned list then rotates latest-wins in its own slot (the
-    # kmeans pin_lloyd_handles posture).  try/finally: an exception
-    # mid-sweep must still hand already-pinned handles to the slot.
+    # ONE fused scan+agg per k: each k builds the fused sketch once with
+    # rotate=False and derives BOTH the candidate count and the gated
+    # set-overlap verify from it, and every sketch stays pinned until
+    # the sweep's action runs (a per-k rotation would evict the earlier
+    # k's cache before that action and replay the exploded md5 scan for
+    # every verify consumer).  The whole pinned list then rotates
+    # latest-wins in its own slot (the kmeans pin_lloyd_handles
+    # posture).  try/finally: an exception mid-sweep must still hand
+    # already-pinned handles to the slot.
     try:
         for k in _KSWEEP:
             per_doc = D._per_doc_sketch(
@@ -4489,7 +4456,9 @@ def dedup_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 per_doc.drop("sh"), _MH_N, _MH_BANDS, D.DEFAULT_BUCKET_CAP
             ).persist()
             pinned += [per_doc, cand]
-            verified = D._verify_jaccard_pairs(per_doc, cand, _MH_TAU)
+            verified = D.set_overlap(cand, D.verify_gate(per_doc), per_doc).filter(
+                D.jaccard() >= _MH_TAU
+            )
             row = (
                 cand.agg(F.count(F.lit(1)).alias("n_candidates"))
                 .crossJoin(

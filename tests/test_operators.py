@@ -90,30 +90,45 @@ def test_minhash_degenerate_bucket_stress(spark):
 
 
 def test_minhash_verify_paths_agree(spark):
-    """broadcast-candidates and all-shuffle verify must be value-equal:
-    inter/(na+nb-inter) on narrow rows is the same jaccard as
-    |∩|/|∪| on collected sets."""
+    """The default verify (set broadcast at this size) and the narrow
+    all-shuffle verify (forced with broadcast_cand_cap=0) must be
+    value-equal: inter/(na+nb-inter) on narrow rows is the same jaccard
+    as |∩|/|∪| on collected sets.  set_overlap's third shape, candidate
+    broadcast, must give the same (na, nb, inter) as the other two."""
     base = "the quick brown fox jumps over the lazy dog and runs far away " * 4
     rows = [(1, base, "en"), (2, base.replace("lazy", "very lazy", 1), "en"),
             (3, base + " tail", "en"), (4, "totally unrelated text here", "en")]
-    a = D.minhash_lsh_pairs(docs(spark, rows), broadcast_verify=True)
-    b = D.minhash_lsh_pairs(docs(spark, rows), broadcast_verify=False)
+    a = D.minhash_lsh_pairs(docs(spark, rows))
+    b = D.minhash_lsh_pairs(docs(spark, rows), broadcast_cand_cap=0)
     sa = {(r.doc_a, r.doc_b, r.jaccard) for r in a.collect()}
     sb = {(r.doc_a, r.doc_b, r.jaccard) for r in b.collect()}
     assert sa == sb and sa
 
+    shingles = D.shingle_rows(docs(spark, rows))
+    per_doc = D._per_doc_sketch(shingles, 16)
+    cand = D._cand_from_mins(per_doc.drop("sh"), 16, 4, D.DEFAULT_BUCKET_CAP)
+    by_shape = {
+        shape: sorted(
+            map(tuple, D.set_overlap(cand, D.VerifyShape(None, None, 0, shape), per_doc, shingles)
+                .select("doc_a", "doc_b", "na", "nb", "inter").collect())
+        )
+        for shape in (D.SET_BROADCAST, D.CAND_BROADCAST, D.NARROW)
+    }
+    assert by_shape[D.SET_BROADCAST] == by_shape[D.CAND_BROADCAST] == by_shape[D.NARROW]
+    assert by_shape[D.NARROW]
+
 
 def test_minhash_auto_gate_picks_shuffle_over_cand_cap(spark):
-    """broadcast_verify=None must flip to the all-shuffle verify when the
+    """The verify gate must flip to the all-shuffle verify when the
     candidate-pair count exceeds broadcast_cand_cap: the resulting plan
-    may not broadcast the candidate set (no broadcast hint on the verify
-    join) and must still produce the exact pair set (r3 advice item 5)."""
+    may not broadcast anything (no broadcast hint on the verify joins)
+    and must still produce the exact pair set."""
     base = "the quick brown fox jumps over the lazy dog and runs far away " * 4
     rows = [(i, base + f" tail {i % 2}", "en") for i in range(1, 31)]
     over = D.minhash_lsh_pairs(docs(spark, rows), broadcast_cand_cap=10)
     # all 30 docs near-dup → C(30,2)=435 candidates > 10 → shuffle shape:
-    # the broadcast shape wraps the candidate set in an explicit
-    # broadcast hint; the shuffle shape must not.
+    # the broadcast shapes carry an explicit broadcast hint; the
+    # shuffle shape must not.
     assert "ResolvedHint" not in over._jdf.queryExecution().analyzed().toString()
     under = D.minhash_lsh_pairs(docs(spark, rows), broadcast_cand_cap=5_000_000)
     assert "ResolvedHint" in under._jdf.queryExecution().analyzed().toString()
@@ -1011,13 +1026,12 @@ def test_degree_cap_bounds_clique_and_keeps_min_id_connectivity(spark):
 
 
 def test_containment_verify_shapes_agree_and_auto_gate_switches(spark):
-    """r12: minhash_containment_pairs gained the same auto-gated verify
-    shape as minhash_lsh_pairs.  Contract: (a) the broadcast shape and
-    the narrow all-shuffle shape return IDENTICAL rows (pairs and
-    capped_doc evidence alike), (b) the auto gate actually switches —
-    cap 0 must take the narrow shape (no broadcast-hinted candidate
-    join in the analyzed plan), the default must take the broadcast
-    shape on a small corpus — and both still match."""
+    """minhash_containment_pairs shares minhash_lsh_pairs' verify gate.
+    Contract: (a) the default shape (set broadcast on a small corpus)
+    and the narrow all-shuffle shape (forced with broadcast_cand_cap=0)
+    return IDENTICAL rows, pairs and capped_doc evidence alike; (b) the
+    gate actually switches — the default carries broadcast hints in the
+    analyzed plan, cap 0 carries none."""
     from dbt_json_readr_spark.operators import dedup as D
     from dbt_json_readr_spark.plans import explain
 
@@ -1032,18 +1046,15 @@ def test_containment_verify_shapes_agree_and_auto_gate_switches(spark):
         )
         return out, sorted(map(tuple, out.collect()))
 
-    bcast_df, bcast = run(broadcast_verify=True)
-    narrow_df, narrow = run(broadcast_verify=False)
-    auto_b_df, auto_b = run()                        # gate: small → broadcast
-    auto_n_df, auto_n = run(broadcast_cand_cap=0)    # gate: forced narrow
+    bcast_df, bcast = run()                        # gate: small → broadcast
+    narrow_df, narrow = run(broadcast_cand_cap=0)  # gate: forced narrow
     assert bcast, "fixture produced no pairs — test is vacuous"
-    assert bcast == narrow == auto_b == auto_n
-    # the gate's shape choice is visible as the broadcast hint on the
-    # candidate side: present on the broadcast shape, absent on narrow
+    assert {r[0] for r in bcast} == {"pair", "capped_doc"}, "no evidence rows"
+    assert bcast == narrow
+    # the gate's shape choice is visible as broadcast hints: present on
+    # the broadcast shape, absent on narrow
     assert explain.broadcast_hint_subtrees(bcast_df)
-    assert explain.broadcast_hint_subtrees(auto_b_df)
     assert not explain.broadcast_hint_subtrees(narrow_df)
-    assert not explain.broadcast_hint_subtrees(auto_n_df)
 
 
 def test_triangle_stats_matches_bruteforce_on_known_graphs(spark):
@@ -1148,6 +1159,24 @@ def test_probe_width_reads_table_and_handles_empty(spark, sf_dir):
     embs = load(spark, sf_dir, "embeddings")
     assert V.probe_width(embs) == 64
     empty = embs.filter(F.lit(False))
-    assert V.probe_width(empty) in (None, 64)  # files key may cache 64
+    assert V.probe_width(empty) is None
     truly_empty = spark.createDataFrame([], "embedding: array<float>")
     assert V.probe_width(truly_empty) is None
+
+
+def test_probe_count_keys_on_the_frame_not_its_files(spark, sf_dir):
+    """A filtered frame over the same files probes its own count (the
+    vector-broadcast byte gate in embedding_cosine_pairs reads it), and
+    a second probe of the same raw table, loaded again, runs no SQL
+    execution."""
+    from dbt_json_readr_spark.functions import vectors as V
+    from dbt_json_readr_spark.plans import explain
+    from dbt_json_readr_spark.sources.tables import load
+
+    embs = load(spark, sf_dir, "embeddings")
+    n = V.probe_count(embs)
+    some = embs.filter(F.col("vec_id") % 2 == 0)
+    assert V.probe_count(some) == some.count() < n
+    mark = explain.sql_execution_mark(spark)
+    assert V.probe_count(load(spark, sf_dir, "embeddings")) == n
+    assert explain.sql_executions_since(spark, mark) == []

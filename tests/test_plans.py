@@ -544,3 +544,53 @@ def test_rotate_cached_empty_frames_release_the_slot(spark):
     rotate_cached("empty_sweep_slot", [])
     assert jsc.getPersistentRDDs().size() == base, "previous sweep still pinned"
     assert live_cached("empty_sweep_slot", spark) == []
+
+
+# dedup keys: (array_intersect in the plan, broadcast set-side pairs, SQL
+# executions building the frame runs).  The gate is the only build-time
+# job — one per verify; the other keys gate on cached probes or not at all.
+_VERIFY_PINS = {
+    "dedup_minhash_lsh": (1, 1, 1),
+    "dedup_containment_lsh": (1, 1, 1),
+    "dedup_incremental": (1, 1, 1),
+    "dedup_band_utility": (1, 1, 1),
+    "dedup_k_sweep": (3, 3, 3),
+    "dedup_embedding_cosine": (0, 1, 0),
+    "dedup_ngram_jaccard": (1, 0, 0),
+    "dedup_containment": (1, 0, 0),
+}
+_SET_SIDES = [("doc_a", "sh_a"), ("doc_b", "sh_b"), ("vec_a", "va", "na"), ("vec_b", "vb", "nb")]
+
+
+def _broadcast_inputs(plan: str) -> list:
+    """Column names (expression ids dropped) of each BroadcastExchange."""
+    import re
+
+    return [
+        tuple(re.sub(r"#\d+L?$", "", c) for c in cols.split(", "))
+        for cols in re.findall(r"^\(\d+\) BroadcastExchange\nInput \[\d+\]: \[(.*)\]$", plan, re.M)
+    ]
+
+
+@pytest.mark.parametrize("key", sorted(_VERIFY_PINS))
+def test_dedup_verify_plan_and_build_jobs_pinned(spark, key):
+    """Each set verify evaluates array_intersect ONCE per pair: without
+    the eval_once Generate barrier the threshold filter is pushed into
+    the join condition and the intersect shows (and runs) twice.  At
+    sf0.001 the gate picks set broadcast, so both per-doc set sides (or
+    both vector sides) are BroadcastExchanges.  Building the frame — the
+    second build, once the probe caches are warm — runs only the gate's
+    job per verify."""
+    from dbt_json_readr_spark.plans import llm
+
+    n_intersect, n_side_pairs, n_jobs = _VERIFY_PINS[key]
+    fn = getattr(llm, key)
+    fn(spark, SF)
+    mark = explain.sql_execution_mark(spark)
+    df = fn(spark, SF)
+    ran = explain.sql_executions_since(spark, mark)
+    plan = explain.formatted_plan(df)
+    assert plan.count("array_intersect") == n_intersect
+    sides = [s for s in _broadcast_inputs(plan) if s in _SET_SIDES]
+    assert len(sides) == 2 * n_side_pairs, f"{key}: broadcast sides {sides}"
+    assert len(ran) == n_jobs, f"{key}: build ran {[e.description for e in ran]}"
