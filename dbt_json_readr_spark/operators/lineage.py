@@ -18,22 +18,56 @@ with the same shape:
 
 One materialized round result is alive at a time: the previous one is
 released as soon as its successor exists.  Iteration count is the DAG
-depth (dbt graphs: < 30), and each step is a hash join on the parent
-key; AQE picks broadcast when the frontier is small.
+depth (dbt graphs: < 30).
+
+Each round's joins broadcast one side on purpose: the current costs
+or ranks (one row per node), PageRank's per-node contributions (at
+most one row per edge), in the closure the distinct edges joined to
+the paths, and in the critical path's first round, before any node
+count is known, the edges.  The planner cannot pick the broadcast
+itself: a checkpoint keeps the row estimate of the plan it
+materialized, and a join's estimate is the product of its inputs', so
+from the second round on every estimate is far past the threshold and
+the planner shuffles both sides.  AQE would switch to a broadcast only
+after running those shuffles, a job each.  The checkpoints already observe metrics, so
+they also observe the row count and string bytes of the frame they
+hold (``_footprint``), and the hint is applied only while that size
+fits under the session's ``spark.sql.autoBroadcastJoinThreshold``.
+Above it, or with the threshold at -1, the join is left to the planner.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..session import observed, release_iter_handle
 
 
-def _parent_edges(edges: DataFrame) -> DataFrame:
-    return edges.select(
-        F.col("child_unique_id").alias("c"), F.col("parent_unique_id").alias("p")
-    ).distinct()
+# bytes a broadcast row costs besides its strings: the row's null bitset
+# and fixed-width fields plus the hashed relation's entry for it
+_ROW_BYTES = 64
+
+
+def _footprint(*strings: str | Column, rows: Column | None = None):
+    """Observed metrics sizing a frame as a broadcast side: its row
+    count (or the sum of ``rows``, rows a row stands for) and the bytes
+    of its ``strings`` columns."""
+    total = sum((F.octet_length(c) for c in strings[1:]), F.octet_length(strings[0]))
+    return (
+        F.coalesce(F.sum(F.lit(1) if rows is None else rows), F.lit(0)).alias("rows"),
+        F.coalesce(F.sum(total), F.lit(0)).alias("string_bytes"),
+    )
+
+
+def _broadcast_if_fits(df: DataFrame, bound) -> DataFrame:
+    """``df`` hinted for broadcast when ``bound`` fits under the
+    session's autoBroadcastJoinThreshold; ``df`` unchanged otherwise.
+    ``bound`` is the observed ``_footprint`` of ``df`` or of a frame
+    with at least as many rows and string bytes."""
+    cap = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    est = bound["rows"] * _ROW_BYTES + bound["string_bytes"]
+    return F.broadcast(df) if 0 <= est <= cap else df
 
 
 def transitive_closure(edges: DataFrame, max_iters: int = 30) -> DataFrame:
@@ -41,22 +75,29 @@ def transitive_closure(edges: DataFrame, max_iters: int = 30) -> DataFrame:
     depth) for every path, depth = path length.
 
     The distinct depth-1 edges (``base``) are materialized once and held
-    until exit.  Round d extends the depth-d paths by one base edge and
-    checkpoints the closure with the new depth-d+1 rows; the observed
-    count of those rows is the exit test.  New rows all carry a depth
-    the closure does not hold yet, so they never duplicate an existing
-    triple and the iteration stays finite on DAGs."""
-    base = edges.select(
-        F.col("child_unique_id").alias("descendant"),
-        F.col("parent_unique_id").alias("ancestor"),
-        F.lit(1).alias("depth"),
-    ).distinct().localCheckpoint()
+    until exit; they are the broadcast side of every round.  Round d
+    extends the depth-d paths by one base edge and checkpoints the
+    closure with the new depth-d+1 rows; the observed count of those
+    rows is the exit test.  New rows all carry a depth the closure does
+    not hold yet, so they never duplicate an existing triple and the
+    iteration stays finite on DAGs."""
+    base, base_size = observed(
+        edges.select(
+            F.col("child_unique_id").alias("descendant"),
+            F.col("parent_unique_id").alias("ancestor"),
+            F.lit(1).alias("depth"),
+        ).distinct(),
+        "edge_footprint",
+        *_footprint("descendant", "ancestor"),
+    )
+    base = base.localCheckpoint()
+    step = _broadcast_if_fits(base, base_size.get)
     closure = base
     for depth in range(1, max_iters + 1):
         grown = (
             closure.filter(F.col("depth") == depth)
             .alias("f")
-            .join(base.alias("e"), F.col("f.ancestor") == F.col("e.descendant"))
+            .join(step.alias("e"), F.col("f.ancestor") == F.col("e.descendant"))
             .select(
                 F.col("f.descendant").alias("descendant"),
                 F.col("e.ancestor").alias("ancestor"),
@@ -91,20 +132,35 @@ def pagerank(all_nodes: DataFrame, edges: DataFrame, iters: int = 10) -> DataFra
     partitionings, where float accumulation would drift with shuffle
     order.  Fixed ``iters`` (not convergence-tested) keeps the result a
     pure function of the graph.  The node ids and the out-degree-weighted
-    edges are materialized once; each round is one checkpoint."""
-    ids = all_nodes.select(F.col("unique_id").alias("id")).localCheckpoint()
-    e = _parent_edges(edges)
-    ew = e.join(e.groupBy("c").agg(F.count(F.lit(1)).alias("outdeg")), "c").localCheckpoint()
+    edges are materialized once; each round is one checkpoint.  The
+    ranks (node-sized) are broadcast into the edge join and the
+    per-parent contributions (at most one row per edge) into the join
+    back onto the ids."""
+    ids, ids_size = observed(
+        all_nodes.select(F.col("unique_id").alias("id")), "node_footprint", *_footprint("id")
+    )
+    ids = ids.localCheckpoint()
+    e = edges.select(
+        F.col("child_unique_id").alias("c"), F.col("parent_unique_id").alias("p")
+    ).distinct()
+    ew, ew_size = observed(
+        e.join(e.groupBy("c").agg(F.count(F.lit(1)).alias("outdeg")), "c"),
+        "edge_footprint",
+        *_footprint("p"),
+    )
+    ew = ew.localCheckpoint()
+    ids_size, ew_size = ids_size.get, ew_size.get
     ranks = ids.select("id", F.lit(PR_SCALE).cast("long").alias("rank"))
     for i in range(iters):
+        side = _broadcast_if_fits(ranks, ids_size)
         contribs = (
-            ew.join(ranks, ew.c == ranks.id)
+            ew.join(side, ew.c == side.id)
             .select(F.col("p").alias("id"), F.expr("rank div outdeg").alias("contrib"))
             .groupBy("id")
             .agg(F.sum("contrib").alias("contrib_sum"))
         )
         nxt = (
-            ids.join(contribs, "id", "left")
+            ids.join(_broadcast_if_fits(contribs, ew_size), "id", "left")
             .select(
                 "id",
                 (
@@ -127,49 +183,104 @@ def pagerank(all_nodes: DataFrame, edges: DataFrame, iters: int = 10) -> DataFra
 
 
 def critical_path(nodes_w: DataFrame, edges: DataFrame, max_iters: int = 30) -> DataFrame:
-    """nodes_w(unique_id, wt_fp) + edges(child_unique_id,
+    """nodes_w(unique_id, wt_fp), one row per node, + edges(child_unique_id,
     parent_unique_id) → (unique_id, wt_fp, critical_cost_fp): the
     longest node-weighted dependency chain ending at each node
     (inclusive of the node itself) — the dbt scheduling critical path
     when wt is execution time.
 
     Bellman-Ford-style relaxation: cost(child) = wt(child) +
-    max(cost(parent)).  The distinct edges are materialized once; a
-    round is one join + max-agg (edges ⋈ cost) and one join back onto
-    ``cost``, which carries wt_fp, checkpointed in one job that also
-    counts the rows whose cost changed.  The loop exits on the first
-    round with no change, after at most DAG-depth + 1 rounds; the fixed
+    max(cost(parent)).  The edges are materialized once, one row per
+    parent with its distinct children.  A round offers each parent's
+    cost to its children and pools the offers with the node rows of
+    ``cost``; one aggregate per node then takes the max offer
+    (``pmax``), so there is no join back onto ``cost``.  The round is
+    checkpointed in one job.  ``cost`` carries wt_fp and a
+    ``has_children`` flag.  The first round reads the lazy ``nodes_w``,
+    of unknown size, so it left-joins the nodes to the broadcast edges,
+    which also sets the flag; later rounds broadcast ``cost``, sized by
+    the previous round, into the edges.
+
+    The round's job also counts the nodes whose cost changed and that
+    have children.  The loop exits on the first round where that count
+    is 0: a node's next cost reads only its parents' costs, so when no
+    parent's cost moved the next round would reproduce this one, which
+    is therefore the fixed point.  Costs at the end of a chain of d
+    edges are final after round d, so in a DAG of depth D the nodes with
+    children (depth at most D - 1) stop moving after round D - 1, and
+    round D is the last one: there is no confirming round.  The fixed
     point is unique on a DAG, so the early exit cannot change the
     result.  All integer arithmetic — byte-stable across engines."""
-    e = _parent_edges(edges).localCheckpoint()
-    cost = nodes_w.select(
+    e, e_size = observed(
+        edges.groupBy(F.col("parent_unique_id").alias("p")).agg(
+            F.collect_set("child_unique_id").alias("cs")
+        ),
+        "edge_footprint",
+        # a row per parent and per child in its array
+        *_footprint("p", F.concat_ws("", "cs"), rows=F.size("cs") + 1),
+    )
+    e = e.localCheckpoint()
+    e_size = e_size.get
+    wt = F.col("wt_fp").cast("long")
+    cost = nodes_w.join(_broadcast_if_fits(e, e_size), nodes_w.unique_id == e.p, "left").select(
         "unique_id",
-        F.col("wt_fp").cast("long").alias("wt_fp"),
-        F.col("wt_fp").cast("long").alias("critical_cost_fp"),
+        wt.alias("wt_fp"),
+        F.col("cs").isNotNull().alias("has_children"),
+        wt.alias("critical_cost_fp"),
+        "cs",
     )
     for i in range(max_iters):
-        pmax = (
-            e.join(cost, e.p == cost.unique_id)
-            .groupBy("c")
-            .agg(F.max("critical_cost_fp").alias("pmax"))
+        if i:
+            side = _broadcast_if_fits(cost, cost_size)
+            fed = e.join(side, e.p == side.unique_id)
+        else:  # the lazy first cost already holds each node's children
+            fed = cost
+        # each parent's cost, offered to its children, pooled with the
+        # node rows: one aggregate per node gives the max offer, so no
+        # join back onto ``cost``.  explode_outer, not explode: with
+        # explode the optimizer makes the first round's read of ``cost``
+        # an inner join, so it no longer matches the read of the node
+        # rows and the edges are broadcast twice.  The filter drops the
+        # rows explode_outer adds for nodes without children.
+        offers = fed.select(
+            F.explode_outer("cs").alias("unique_id"), F.col("critical_cost_fp").alias("offer")
+        ).where(F.col("unique_id").isNotNull())
+        pooled = (
+            cost.select(
+                "unique_id", "wt_fp", "has_children", "critical_cost_fp", F.lit(True).alias("node")
+            )
+            .unionByName(offers, allowMissingColumns=True)
+            .groupBy("unique_id")
+            .agg(
+                F.max("node").alias("node"),
+                F.max("wt_fp").alias("wt_fp"),
+                F.max("has_children").alias("has_children"),
+                F.max("critical_cost_fp").alias("critical_cost_fp"),
+                F.max("offer").alias("pmax"),
+            )
+            .where("node")
         )
         relaxed = F.col("wt_fp") + F.coalesce("pmax", F.lit(0).cast("long"))
-        joined, changed = observed(
-            cost.join(pmax, cost.unique_id == pmax.c, "left"),
-            "changed_costs",
+        joined, stats = observed(
+            pooled,
+            "round_costs",
             # NULL on an empty graph
-            F.sum((relaxed != F.col("critical_cost_fp")).cast("long")).alias("n"),
+            F.sum(
+                ((relaxed != F.col("critical_cost_fp")) & F.col("has_children")).cast("long")
+            ).alias("changed"),
+            *_footprint("unique_id"),
         )
         nxt = joined.select(
-            "unique_id", "wt_fp", relaxed.alias("critical_cost_fp")
+            "unique_id", "wt_fp", "has_children", relaxed.alias("critical_cost_fp")
         ).localCheckpoint()
-        if i:  # round 0 read the lazy nodes_w projection, which holds no blocks
+        if i:  # round 0 read the lazy nodes_w join, which holds no blocks
             release_iter_handle(cost)
         cost = nxt
-        if not changed.get["n"]:
+        cost_size = stats.get
+        if not cost_size["changed"]:
             break
     release_iter_handle(e)
-    return cost
+    return cost.drop("has_children")
 
 
 def lineage_closure(edges: DataFrame) -> DataFrame:

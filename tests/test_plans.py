@@ -500,11 +500,85 @@ def test_lineage_key_decodes_each_artifact_once(spark, key):
     ) - Counter(), f"{key}: text scans {dict(scans)}"
 
 
+# Spark jobs each lineage key runs at the fixture, warm: the iterative
+# operators' rounds broadcast their node-sized side, so a round costs at
+# most 4 jobs and the critical path stops after DAG-depth rounds
+_LINEAGE_JOBS = {
+    "dbt_lineage_closure": 13,
+    "dbt_lineage_closure_rcte": 22,
+    "dbt_lineage_depth": 18,
+    "dbt_pagerank": 47,
+    "dbt_critical_path": 11,
+    "dbt_model_fanout": 4,
+}
+# plan-graph nodes that only wrap others
+_WRAPPERS = ("WholeStageCodegen", "InputAdapter")
+
+
+def _jobs_and_executions(spark, group: str, fn):
+    """Run ``fn`` under job group ``group``: (its result, the ids of the
+    jobs it ran, the SQL executions it started).  The group alone: a job
+    description would replace the executions' call-site descriptions."""
+    sc = spark.sparkContext
+    mark = explain.sql_execution_mark(spark)
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    return out, jobs, explain.sql_executions_since(spark, mark)
+
+
+def _op_names(execution) -> list:
+    return [n.strip() for n, _ in execution.nodes if not n.strip().startswith(_WRAPPERS)]
+
+
+@pytest.mark.parametrize("key", sorted(_LINEAGE_JOBS))
+def test_lineage_key_job_counts_pinned(spark, key):
+    """Each lineage key's whole query, collect included, runs the pinned
+    number of Spark jobs.  At this scale the jobs are most of the cost,
+    so a regression here is a regression in time."""
+    from dbt_json_readr_spark.plans import dbt
+
+    fn = getattr(dbt, key)
+    fn(spark, SF).collect()
+    _, jobs, _ = _jobs_and_executions(spark, f"lineage_jobs_{key}", lambda: fn(spark, SF).collect())
+    assert len(jobs) == _LINEAGE_JOBS[key], f"{key}: {len(jobs)} jobs"
+
+
+@pytest.mark.parametrize("key", ["dbt_critical_path", "dbt_lineage_depth", "dbt_pagerank"])
+def test_lineage_rounds_broadcast_without_shuffling_first(spark, key):
+    """Every round checkpoint of the iterative operators runs at most 4
+    jobs, with no sort-merge join and no broadcast built from a shuffle
+    read.  A shuffle read straight under a BroadcastExchange is AQE
+    turning a planned sort-merge join into a broadcast only after both
+    shuffles ran, which is what a checkpoint's multiplied row estimate
+    causes without the hint."""
+    from dbt_json_readr_spark.plans import dbt
+
+    _, _, ran = _jobs_and_executions(
+        spark, f"lineage_rounds_{key}", lambda: getattr(dbt, key)(spark, SF).collect()
+    )
+    rounds = [e for e in ran if e.description.startswith("localCheckpoint")]
+    assert rounds
+    for e in rounds:
+        ops = _op_names(e)
+        assert len(e.job_ids) <= 4, f"{key}: a round ran {len(e.job_ids)} jobs: {ops}"
+        assert "SortMergeJoin" not in ops, f"{key}: {ops}"
+        shuffled = [
+            below for op, below in zip(ops, ops[1:])
+            if op == "BroadcastExchange" and below in ("AQEShuffleRead", "Exchange")
+        ]
+        assert not shuffled, f"{key}: broadcast built from a shuffle: {ops}"
+
+
 def test_critical_path_runs_one_checkpoint_per_round(spark):
     """critical_path's only jobs are its edge checkpoint and one
     checkpoint per relaxation round; the change count rides in the
     round's own job, so there is no probe job.  A depth-3 chain needs
-    3 relaxing rounds plus 1 that sees no change."""
+    3 relaxing rounds and no confirming one: after round 3 only the
+    leaf changed, and it feeds no other node."""
     from dbt_json_readr_spark.operators.lineage import critical_path
 
     nodes = spark.createDataFrame(
@@ -513,23 +587,50 @@ def test_critical_path_runs_one_checkpoint_per_round(spark):
     edges = spark.createDataFrame(
         [("b", "a"), ("c", "b"), ("d", "c")], "child_unique_id string, parent_unique_id string"
     )
-    sc = spark.sparkContext
-    group = "critical_path_round_pin"
-    mark = explain.sql_execution_mark(spark)
-    # the group alone: a job description would replace the executions'
-    # "localCheckpoint at ..." call-site descriptions
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        out = critical_path(nodes, edges)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
-    ran = [e for e in explain.sql_executions_since(spark, mark) if e.job_ids & jobs]
+    out, jobs, ran = _jobs_and_executions(
+        spark, "critical_path_round_pin", lambda: critical_path(nodes, edges)
+    )
+    ran = [e for e in ran if e.job_ids & jobs]
     assert {r.unique_id: r.critical_cost_fp for r in out.collect()} == {
         "a": 1, "b": 3, "c": 6, "d": 10, "e": 0,
     }
-    assert [e.description.split(" at ")[0] for e in ran] == ["localCheckpoint"] * (1 + 4)
+    assert [e.description.split(" at ")[0] for e in ran] == ["localCheckpoint"] * (1 + 3)
     assert jobs == set().union(*(e.job_ids for e in ran)), "a job ran outside the checkpoints"
+
+
+def test_lineage_rounds_fall_back_to_the_planner_without_a_threshold(spark):
+    """With spark.sql.autoBroadcastJoinThreshold=-1 no observed size fits,
+    so no lineage round carries a broadcast hint (and the planner adds
+    none): every join is left to the planner, and the results are the
+    same as with the broadcasts."""
+    from dbt_json_readr_spark.operators import lineage as L
+
+    nodes = spark.createDataFrame(
+        [(n, w) for n, w in zip("abcdef", (1, 2, 3, 4, 0, 5))], "unique_id string, wt_fp long"
+    )
+    edges = spark.createDataFrame(
+        [("b", "a"), ("c", "b"), ("d", "c"), ("d", "a"), ("f", "e"), ("f", "ghost")],
+        "child_unique_id string, parent_unique_id string",
+    )
+    runs = {
+        "critical_path": lambda: sorted(map(tuple, L.critical_path(nodes, edges).collect())),
+        "pagerank": lambda: sorted(map(tuple, L.pagerank(nodes, edges).collect())),
+        "transitive_closure": lambda: sorted(map(tuple, L.transitive_closure(edges).collect())),
+    }
+    hinted = {}
+    for name, run in runs.items():
+        hinted[name], _, ran = _jobs_and_executions(spark, f"lineage_hinted_{name}", run)
+        assert any("BroadcastExchange" in _op_names(e) for e in ran), name
+    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for name, run in runs.items():
+            got, _, ran = _jobs_and_executions(spark, f"lineage_fallback_{name}", run)
+            assert got == hinted[name], name
+            for e in ran:
+                assert "BroadcastExchange" not in _op_names(e), f"{name}: {_op_names(e)}"
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
 
 
 def test_rotate_cached_empty_frames_release_the_slot(spark):

@@ -1157,17 +1157,35 @@ def _naive_pagerank(nodes, edges, iters=10):
 @given(dag=dags())
 @example(dag=([], []))
 @example(dag=([("a", 0), ("b", 2), ("c", 0), ("lone", 5)], [("b", "a"), ("c", "b"), ("c", "ghost")]))
+# a depth-8 chain: the deepest the strategy draws, one round per level
+@example(dag=([(f"n{i}", i % 3 + 1) for i in range(9)], [(f"n{i + 1}", f"n{i}") for i in range(8)]))
+# the last node to change has children, but only one that is not a node
+# (a macro-like child): the exit counts it, and the extra round is idle
+@example(dag=([("a", 1), ("b", 2)], [("b", "a"), ("macro", "b")]))
+# a ghost parent feeding the deepest node of a chain
+@example(dag=([("a", 1), ("b", 1), ("c", 1)], [("b", "a"), ("c", "b"), ("c", "ghost")]))
+# duplicate edges
+@example(dag=([("a", 3), ("b", 1), ("c", 2)], [("b", "a"), ("b", "a"), ("c", "b"), ("c", "b"), ("c", "a")]))
 def test_lineage_operators_match_stdlib_on_random_dags(spark, dag):
     """critical_path, lineage_depth and pagerank equal stdlib
     recomputations; the critical path's observed early exit stops at
-    the fixed point."""
+    the fixed point, with its rounds broadcast and, under
+    autoBroadcastJoinThreshold=-1, left to the planner."""
     from dbt_json_readr_spark.operators.lineage import critical_path, lineage_depth, pagerank
 
     nodes, edges = dag
     ndf = spark.createDataFrame(nodes, "unique_id string, wt_fp long")
     edf = spark.createDataFrame(edges, "child_unique_id string, parent_unique_id string")
+    want_cp = _naive_critical_path(nodes, edges)
     got_cp = {r.unique_id: (r.wt_fp, r.critical_cost_fp) for r in critical_path(ndf, edf).collect()}
-    assert got_cp == _naive_critical_path(nodes, edges)
+    assert got_cp == want_cp
+    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        got_cp = {r.unique_id: (r.wt_fp, r.critical_cost_fp) for r in critical_path(ndf, edf).collect()}
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    assert got_cp == want_cp
     got_depth = {r.unique_id: r.depth for r in lineage_depth(ndf, edf).collect()}
     assert got_depth == _naive_depth(nodes, edges)
     got_pr = {r.unique_id: r.rank_fp for r in pagerank(ndf, edf).collect()}
