@@ -110,40 +110,6 @@ def minhash_lane_cols(sh: Column, n_hashes: int, prefix: str = "mh") -> list[Col
     return out
 
 
-def minhash_array(shingles: Column, n_hashes: int) -> Column:
-    """Array-input twin of ``minhash_lane_cols`` (same values, same
-    digest/lane layout) for callers that already hold a shingle array.
-    Interpreted-HOF path — prefer the flat columns in hot operators."""
-    assert n_hashes % 4 == 0
-
-    def _digests(p: int):
-        # closure factory: F.transform inspects lambda arity, so a
-        # default-arg trick would bind the array-index column instead
-        return lambda s: F.md5(F.concat(F.lit(f"mhp{p}:"), s.cast("string")))
-
-    # one F.aggregate pass per digest so each md5 is evaluated exactly
-    # once: referencing a transform result in four array_min expressions
-    # would duplicate the md5 subtree (no CSE inside interpreted HOFs)
-    init = F.array(*[F.lit(2**62).cast("long") for _ in range(4)])
-
-    def _lane_min(acc, d):
-        return F.array(
-            *[
-                F.least(
-                    acc.getItem(lane),
-                    F.conv(F.substring(d, 1 + 8 * lane, 8), 16, 10).cast("long"),
-                )
-                for lane in range(4)
-            ]
-        )
-
-    quads = [
-        F.aggregate(F.transform(shingles, _digests(p)), init, _lane_min)
-        for p in range(n_hashes // 4)
-    ]
-    return F.concat(*quads)
-
-
 def sql_minhash_array(shingles_expr: str, n_hashes: int) -> str:
     assert n_hashes % 4 == 0
     mins = []

@@ -183,18 +183,6 @@ def norm_w(a: str, width: int | None) -> Column:
     )
 
 
-def cosine_w(a: str, b: str, width: int | None) -> Column:
-    if not width:
-        return cosine(F.col(a), F.col(b))
-    return _cached_expr(
-        ("cos", a, b, width),
-        lambda: (
-            f"(({_sql_dot_w(a, b, width)}) / "
-            f"(SQRT({_sql_dot_w(a, a, width)}) * SQRT({_sql_dot_w(b, b, width)})))"
-        ),
-    )
-
-
 def cosine_prenormed_w(
     a: str, b: str, na: str, nb: str, width: int | None
 ) -> Column:

@@ -2,7 +2,8 @@
 parquet without a table-format dependency (SURVEY.md §2 E; VERDICT r3
 item 8).
 
-The image ships no Delta/Iceberg jars (sinks.write_delta gates loudly),
+Spark runs here without Delta/Iceberg jars (the table formats are
+written natively by ``sources/deltawriter`` and ``sources/icebergwriter``),
 but the property those formats buy — readers NEVER see a partially
 written batch — is a protocol, not a jar.  This module implements the
 protocol the way Iceberg's spec describes it (snapshot manifests +

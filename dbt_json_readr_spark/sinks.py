@@ -76,20 +76,6 @@ def write_training_shards(
     sharded.drop("_h").write.mode(mode).partitionBy("shard").parquet(path)
 
 
-def write_delta(df: DataFrame, path: str, mode: str = "append") -> None:
-    """Delta Lake sink — requires delta-spark jars, which this image does
-    not ship.  Gated behind import so the engine degrades loudly, not
-    silently."""
-    try:
-        import delta  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "delta-spark is not installed in this environment; use "
-            "write_partitioned/write_bucketed, or add the Delta jars"
-        ) from e
-    df.write.format("delta").mode(mode).save(path)
-
-
 def write_range_sorted(
     df: DataFrame,
     path: str,

@@ -222,14 +222,6 @@ def _generation_exprs(schema: T.StructType) -> dict[str, str]:
     return out
 
 
-def _enforce_generated(df: DataFrame, gen: dict[str, str], op: str) -> None:
-    """Provided values for generated columns must EQUAL the expression
-    result exactly (null-safe) — the protocol's generated-columns
-    invariant; a writer that stores a drifted value breaks every
-    reader that prunes on the generation expression."""
-    _enforce_write_checks(df, None, gen, op)
-
-
 def _commit_info(operation: str, params: dict | None = None) -> dict:
     return {
         "commitInfo": {

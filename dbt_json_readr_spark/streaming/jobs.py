@@ -191,53 +191,13 @@ SELECT event_id, user_id, event_type, value FROM events
 # ---------------------------------------------------------------- D4
 
 
-def _stateful_counts_func(key, pdfs, state):
-    """Per-user running totals in explicit state.  Everything integer
-    (count + floor-quantized value sum) so the result is independent of
-    batch/row order — a float accumulator would drift with batching."""
-    import numpy as np
-    import pandas as pd
-
-    n, vsum = state.get if state.exists else (0, 0)
-    for pdf in pdfs:
-        n += len(pdf)
-        vsum += int(np.floor(pdf["value"].to_numpy() * 1_000_000).sum())
-    state.update((n, vsum))
-    yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "value_micros": [vsum]})
-
-
-def stateful_counts(ev: DataFrame) -> DataFrame:
-    """Wire any events stream through the stateful-counts operator
-    (exposed separately so tests can drive it with a multi-file source
-    and prove state survives across micro-batches)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return ev.groupBy("user_id").applyInPandasWithState(
-        _stateful_counts_func,
-        outputStructType="user_id long, n_events long, value_micros long",
-        stateStructType="n long, vsum long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def streaming_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful operator — since r5 through Spark 4's NATIVE
-    ``transformWithStateInPandas`` (typed ValueState in the JVM/RocksDB
-    state server; the vendored protobuf runtime in
-    ``dbt_json_readr_spark/_vendor`` carries the state protocol, see
-    VERDICT r4 item 3): per-user event count + fixed-point value sum
-    across micro-batches WITHOUT round-tripping Python-pickled state
-    every batch.  Falls back to the applyInPandasWithState form only if
-    ``google.protobuf`` is somehow unavailable; the equality test pins
-    both paths row-identical."""
+    """Custom stateful operator: per-user event count + fixed-point
+    value sum across micro-batches, kept in keyed state by
+    ``stateful_counts`` (see the keyed-state operators section)."""
     prep(spark)
     ev = events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
-    try:
-        out = stateful_counts_tws(ev)
-    except NotImplementedError:
-        out = stateful_counts(ev)
-    return _run_to_memory(out, "stream_stateful_counts", "update")
+    return _run_to_memory(stateful_counts(ev), "stream_stateful_counts", "update")
 
 
 STREAMING_STATEFUL_COUNTS_SQL = """
@@ -293,40 +253,25 @@ ORDER BY 1, 2
 """
 
 
-# ---------------------------------------- transformWithState migration
+# ------------------------------------------------- keyed-state operators
+# Every custom keyed-state operator runs on Spark 4's
+# ``transformWithStateInPandas``: typed ValueState lives in the JVM
+# state server (RocksDB provider, selected by ``prep``) instead of being
+# pickled through the Python worker on every batch.  The Python side of
+# the state protocol speaks protobuf; ``session`` puts the vendored
+# runtime in ``_vendor/`` on the driver's and the workers' path when no
+# protobuf is installed, and without it the query fails on import.
+# Each operator is a public function of an events stream so tests can
+# drive it with a multi-file source and prove state survives across
+# micro-batches.
 
 
-def _require_tws(ev: DataFrame) -> None:
-    """Gate + session prep shared by every transformWithState operator:
-    the Python state protocol speaks protobuf (vendored runtime in
-    ``_vendor/`` since r5 — a real install wins), and TWS keyed state
-    needs the RocksDB provider (multiple column families)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(streaming state-server protocol); install protobuf or use "
-            "the applyInPandasWithState twin"
-        ) from e
+def stateful_counts(ev: DataFrame) -> DataFrame:
+    """Per-user running totals in a typed ValueState: event count +
+    floor-quantized value sum.  Everything is integer, so the result is
+    independent of micro-batch boundaries and row order — a float
+    accumulator would drift with batching."""
     prep(ev.sparkSession)
-
-
-def stateful_counts_tws(ev: DataFrame) -> DataFrame:
-    """The Spark-4 native form of ``stateful_counts``:
-    ``transformWithStateInPandas`` with a typed ValueState — the
-    operator VERDICT r3 item 7 targets.  Identical semantics (per-user
-    count + fixed-point value sum, micro-batch-order independent), but
-    state lives in the JVM/RocksDB state server instead of being
-    round-tripped through the Python worker on every batch.
-
-    Environment gate: the transformWithState Python state protocol
-    speaks protobuf, which this image does not ship — degrade loudly
-    (same policy as sinks.write_delta).  tests/test_streaming.py pins
-    BOTH behaviors: the gate fires without protobuf, and when the
-    dependency is present the op must match ``stateful_counts``.
-    """
-    _require_tws(ev)
     import math
 
     import pandas as pd
@@ -365,12 +310,13 @@ def stateful_counts_tws(ev: DataFrame) -> DataFrame:
     )
 
 
-def funnel_stages_tws(ev: DataFrame) -> DataFrame:
-    """``funnel_stages`` on native transformWithState (r5 migration):
-    per-user min event-time per stage in a typed ValueState — same
-    commutative min-merge, so equality with the applyInPandasWithState
-    twin is exact (pinned by test)."""
-    _require_tws(ev)
+def funnel_stages(ev: DataFrame) -> DataFrame:
+    """Per-user funnel state: the min event-time of each stage, carried
+    as int64 nanos (-1 = unseen) in a typed ValueState.  Mins are
+    commutative, so the emitted stage is independent of micro-batch
+    boundaries and row order: a 'click' in batch 2 upgrades a 'view'
+    state from batch 1."""
+    prep(ev.sparkSession)
     import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
@@ -423,12 +369,13 @@ def funnel_stages_tws(ev: DataFrame) -> DataFrame:
     )
 
 
-def topk_per_type_tws(ev: DataFrame) -> DataFrame:
-    """``topk_per_type`` on native transformWithState (r5 migration):
-    the retained top-k set lives in a ValueState with array columns —
-    O(k) state per key in the JVM state server; same deterministic
-    (value desc, event_id asc) selection as the twin."""
-    _require_tws(ev)
+def topk_per_type(ev: DataFrame) -> DataFrame:
+    """Per-type top-k: the retained set lives in a ValueState with
+    array columns, O(k) per key.  Selection, not accumulation: values
+    pass through exactly, and the (value desc, event_id asc) order makes
+    the retained set independent of micro-batch boundaries and row
+    order."""
+    prep(ev.sparkSession)
     import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
@@ -477,11 +424,12 @@ def topk_per_type_tws(ev: DataFrame) -> DataFrame:
     )
 
 
-def cdc_latest_tws(ev: DataFrame) -> DataFrame:
-    """``cdc_latest`` on native transformWithState (r5 migration):
-    last-write-wins by exact integer (ts_micros, event_id) max in a
-    typed ValueState — identical upsert invariant as the twin."""
-    _require_tws(ev)
+def cdc_latest(ev: DataFrame) -> DataFrame:
+    """Last-write-wins per user: the retained row is the max
+    (ts_micros, event_id) in a typed ValueState, an exact integer
+    comparison, so the materialized view is independent of micro-batch
+    boundaries and arrival order (the CDC upsert invariant)."""
+    prep(ev.sparkSession)
     import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
@@ -538,9 +486,9 @@ def run_to_parquet(df: DataFrame, path: str, name: str, mode: str = "update") ->
     """Durable streaming sink via ``foreachBatch``: each micro-batch
     lands as parquet under an epoch-keyed subdirectory, so a replayed
     epoch overwrites its own output instead of duplicating it — the
-    exactly-once recipe for sinks without transactional append.  (With
-    Delta/Iceberg on the classpath, replace with a direct
-    ``toTable``/``MERGE`` — see sinks.write_delta.)"""
+    exactly-once recipe for sinks without transactional append.  (The
+    table-format sinks commit natively instead: D25 appends through
+    ``deltawriter.write_delta`` with an idempotent txn marker.)"""
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(f"{path}/epoch={epoch_id}")
@@ -559,59 +507,10 @@ def run_to_parquet(df: DataFrame, path: str, name: str, mode: str = "update") ->
 # ---------------------------------------------------------------- D5
 
 
-def _funnel_state_func(key, pdfs, state):
-    """Per-user funnel state: the min event-time of each stage, carried
-    as int64 nanos (-1 = unseen).  Mins are commutative/associative, so
-    the final state — and therefore the emitted stage — is independent
-    of micro-batch boundaries and row order."""
-    import pandas as pd
-
-    t_view, t_click, t_purchase = state.get if state.exists else (-1, -1, -1)
-
-    def _merge(cur, series):
-        if series.empty:
-            return cur
-        m = int(series.min())
-        return m if cur < 0 else min(cur, m)
-
-    for pdf in pdfs:
-        ns = pd.Series(pdf["ts"].to_numpy().astype("datetime64[ns]").astype("int64"))
-        et = pdf["event_type"]
-        t_view = _merge(t_view, ns[et == "view"])
-        t_click = _merge(t_click, ns[et == "click"])
-        t_purchase = _merge(t_purchase, ns[et == "purchase"])
-    state.update((t_view, t_click, t_purchase))
-
-    if t_view >= 0 and t_click > t_view and t_purchase > t_click:
-        stage = "purchase"
-    elif t_view >= 0 and t_click > t_view:
-        stage = "click"
-    elif t_view >= 0:
-        stage = "view"
-    else:
-        stage = "none"
-    yield pd.DataFrame({"user_id": [key[0]], "funnel_stage": [stage]})
-
-
-def funnel_stages(ev: DataFrame) -> DataFrame:
-    """Wire any events stream through the stateful funnel operator
-    (separate so tests can drive it with a multi-file source and prove
-    a 'click' in batch 2 upgrades a 'view' state from batch 1)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return ev.groupBy("user_id").applyInPandasWithState(
-        _funnel_state_func,
-        outputStructType="user_id long, funnel_stage string",
-        stateStructType="t_view long, t_click long, t_purchase long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming view→click→purchase funnel (the multi-level streaming
     aggregation Spark's built-in ops can't chain): per-user ordered-stage
-    detection runs as unbounded keyed state via ``applyInPandasWithState``;
+    detection runs as unbounded keyed state in ``funnel_stages``;
     the tiny stage histogram is a downstream batch rollup over the sink
     (production: the per-user stage upserts into a KV/Delta sink keyed by
     user_id, and the histogram is a view over it — chaining a second
@@ -621,11 +520,7 @@ def streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-ts semantics, so the batch oracle is the correctness gate."""
     prep(spark)
     ev = events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
-    try:
-        staged = funnel_stages_tws(ev)  # r5: native TWS, JVM-side state
-    except NotImplementedError:
-        staged = funnel_stages(ev)
-    per_user = _run_to_memory(staged, "stream_funnel", "update")
+    per_user = _run_to_memory(funnel_stages(ev), "stream_funnel", "update")
     return (
         per_user.groupBy("funnel_stage")
         .agg(F.count(F.lit(1)).alias("n_users"))
@@ -888,65 +783,18 @@ def streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TOPK_K = 5
 
 
-def _topk_state_func(key, pdfs, state):
-    """Per-type top-k in explicit state.  Selection, not accumulation:
-    float values pass through exactly (no summation drift), and the
-    (value desc, event_id asc) order makes the retained set — and
-    therefore the emitted rows — independent of micro-batch boundaries
-    and row order."""
-    import pandas as pd
-
-    if state.exists:
-        vals, ids = list(state.get[0]), list(state.get[1])
-    else:
-        vals, ids = [], []
-    for pdf in pdfs:
-        vals.extend(float(v) for v in pdf["value"])
-        ids.extend(int(i) for i in pdf["event_id"])
-    order = sorted(range(len(vals)), key=lambda i: (-vals[i], ids[i]))[:_TOPK_K]
-    vals = [vals[i] for i in order]
-    ids = [ids[i] for i in order]
-    state.update((vals, ids))
-    yield pd.DataFrame(
-        {
-            "event_type": key[0],
-            "rank": pd.Series(range(1, len(ids) + 1), dtype="int32"),
-            "event_id": ids,
-            "value": vals,
-        }
-    )
-
-
-def topk_per_type(ev: DataFrame) -> DataFrame:
-    """Wire any events stream through the stateful top-k operator
-    (separate so tests can drive it with a multi-file source and prove
-    the retained set merges across micro-batches)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return ev.groupBy("event_type").applyInPandasWithState(
-        _topk_state_func,
-        outputStructType="event_type string, rank integer, event_id long, value double",
-        stateStructType="vals array<double>, ids array<long>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming leaderboard: per event_type, the running top-5 events
-    by value held in keyed state — the continuous-top-k shape (alert on
-    new extremes, live rankings) that Spark's built-in streaming aggs
+    by value held in keyed state by ``topk_per_type`` — the
+    continuous-top-k shape (alert on new extremes, live rankings) that
+    Spark's built-in streaming aggs
     can't express because rank/row_number aren't supported on streams.
     State per key is O(k): each batch folds into the retained k-set and
     the rest of the batch is forgotten — constant state regardless of
     stream length, no watermark needed."""
     prep(spark)
     ev = events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
-    try:
-        ranked = topk_per_type_tws(ev)  # r5: native TWS, JVM-side state
-    except NotImplementedError:
-        ranked = topk_per_type(ev)
-    return _run_to_memory(ranked, "stream_topk", "update")
+    return _run_to_memory(topk_per_type(ev), "stream_topk", "update")
 
 
 STREAMING_TOPK_SQL = f"""
@@ -1040,62 +888,14 @@ GROUP BY e.event_type
 # ---------------------------------------------------------------- D11
 
 
-def _cdc_latest_func(key, pdfs, state):
-    """Last-write-wins per user in explicit state.  The retained row is
-    the max (ts_micros, event_id) — an exact integer comparison, so the
-    materialized view is independent of micro-batch boundaries and
-    arrival order (the CDC upsert invariant)."""
-    import pandas as pd
-
-    ts_us, eid, val, n = state.get if state.exists else (-1, -1, 0.0, 0)
-    for pdf in pdfs:
-        n += len(pdf)
-        for t, e, v in zip(
-            pdf["ts_us"].astype("int64"),
-            pdf["event_id"].astype("int64"),
-            pdf["value"].astype("float64"),
-        ):
-            if (int(t), int(e)) > (ts_us, eid):
-                ts_us, eid, val = int(t), int(e), float(v)
-    state.update((ts_us, eid, val, n))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n_updates": [n],
-            "last_event_id": [eid],
-            "last_value": [val],
-        }
-    )
-
-
-def cdc_latest(ev: DataFrame) -> DataFrame:
-    """Wire any events stream through the last-write-wins operator
-    (separate so tests can drive it across micro-batches)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    keyed = ev.select(
-        "user_id", F.unix_micros("ts").alias("ts_us"), "event_id", "value"
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        _cdc_latest_func,
-        outputStructType="user_id long, n_updates long, last_event_id long, last_value double",
-        stateStructType="ts_us long, event_id long, value double, n long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def streaming_cdc_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC-style materialized latest-state view: the canonical
-    last-write-wins upsert consumer, built on applyInPandasWithState
-    with integer (ts, event_id) ordering in state.  Update mode means
+    last-write-wins upsert consumer, built on ``cdc_latest``'s keyed
+    state with integer (ts, event_id) ordering.  Update mode means
     only touched keys re-emit per micro-batch; the memory sink's final
     table is the converged view the oracle checks."""
     prep(spark)
-    try:
-        out = cdc_latest_tws(events_stream(spark, sf_dir))  # r5: native TWS
-    except NotImplementedError:
-        out = cdc_latest(events_stream(spark, sf_dir))
+    out = cdc_latest(events_stream(spark, sf_dir))
     return _run_to_memory(out, "stream_cdc_latest", "update")
 
 
@@ -1520,9 +1320,9 @@ STREAMING_PYSOURCE_SQL = _streaming_pysource_sql()
 
 
 # ---------------------------------------------------------------- D20
-# Event-time TIMERS — the transformWithState capability the vendored
-# protobuf runtime unblocked that applyInPandasWithState fundamentally
-# lacks: state that acts WITHOUT new input for its key.
+# Event-time TIMERS — the transformWithState capability a per-group
+# state function fundamentally lacks: state that acts WITHOUT new input
+# for its key.
 
 _SESS_GAP_US = 1_800_000_000  # 30 min
 _SESS_GAP_MS = 1_800_000
@@ -1534,8 +1334,8 @@ def session_timeout_sessions(ev: DataFrame) -> DataFrame:
     watermark passes it, ``handleExpiredTimer`` emits the closed
     session and clears state — no poll, no per-batch rescan, and a
     user who simply stops producing events still gets their session
-    closed (the op applyInPandasWithState cannot express: it only runs
-    on keys present in a batch; its timeout API is processing-time).
+    closed (what a per-group state function cannot express: it only
+    runs on keys present in a batch).
 
     Determinism contract: in-batch gap splits emit sessions closed by
     a successor event; the per-user LAST session emits only when the
@@ -1553,7 +1353,7 @@ def session_timeout_sessions(ev: DataFrame) -> DataFrame:
     time-ordered batch sequences; `session_window` (D2/D16) is the
     native op when arbitrary cross-batch disorder must merge exactly.
     """
-    _require_tws(ev)
+    prep(ev.sparkSession)
     import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
@@ -1697,11 +1497,11 @@ ORDER BY a.user_id, a.session_start_us
 
 
 # ---------------------------------------------------------------- D21
-# Initial state — the third transformWithState capability the vendored
-# protobuf unblocked (after JVM-side ValueState and event-time timers):
-# keyed streaming state BOOTSTRAPPED from a batch snapshot, the
-# migration path every "start streaming against an existing table"
-# deployment needs (applyInPandasWithState starts empty, always).
+# Initial state — the third transformWithState capability (after
+# JVM-side ValueState and event-time timers): keyed streaming state
+# BOOTSTRAPPED from a batch snapshot, the migration path every "start
+# streaming against an existing table" deployment needs (a per-group
+# state function starts empty, always).
 
 
 def streaming_cdc_warmstart(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1750,10 +1550,10 @@ def _load_events_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cdc_latest_warmstart(ev: DataFrame, snapshot: DataFrame) -> DataFrame:
-    """``cdc_latest_tws`` with ``initialState``: ``snapshot`` must have
+    """``cdc_latest`` with ``initialState``: ``snapshot`` must have
     columns (user_id, ts_us, event_id, value, n) — one row per user —
     and is loaded into each key's ValueState before the first batch."""
-    _require_tws(ev)
+    prep(ev.sparkSession)
     import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,

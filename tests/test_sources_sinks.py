@@ -97,14 +97,6 @@ def test_write_bucketed_join_is_exchange_free(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
 
 
-def test_write_delta_raises_without_delta_jars(spark):
-    import pytest as _pytest
-
-    df = spark.range(3)
-    with _pytest.raises(NotImplementedError):
-        sinks.write_delta(df, "/tmp/never-written")
-
-
 def test_artifact_reader_scales_over_many_files(spark, tmp_path):
     """The 100 TB posture: a glob of N manifest files parses as N rows
     ×nodes in ONE distributed scan (reference reads exactly one file)."""

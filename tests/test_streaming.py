@@ -90,7 +90,7 @@ def test_streaming_foreachbatch_parquet_sink(spark, tmp_path):
 def test_stateful_counts_state_survives_micro_batches(spark, tmp_path):
     """Split the events into two parquet files and force one file per
     micro-batch: the second batch must ACCUMULATE onto state from the
-    first, proving applyInPandasWithState really carries state across
+    first, proving the keyed ValueState really carries state across
     batches (the single-batch oracle run can't distinguish that)."""
     import glob
     import shutil
@@ -418,65 +418,6 @@ def test_streaming_state_store_is_rocksdb(spark):
     )
 
 
-def test_stateful_counts_tws_gates_or_matches(spark):
-    """transformWithStateInPandas migration contract: without protobuf
-    the op must gate loudly; with it, it must equal the
-    applyInPandasWithState implementation row-for-row."""
-    import pytest
-
-    from dbt_json_readr_spark.streaming.jobs import (
-        _run_to_memory,
-        events_stream,
-        stateful_counts,
-        stateful_counts_tws,
-    )
-
-    ev = events_stream(spark, SF).withWatermark("ts", "1 hour")
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            stateful_counts_tws(ev)
-        return
-    new = _run_to_memory(stateful_counts_tws(ev), "tws_counts", "update")
-    old = _run_to_memory(stateful_counts(ev), "aip_counts", "update")
-    assert sorted(map(tuple, new.collect())) == sorted(map(tuple, old.collect()))
-
-
-def test_tws_twins_match_applyinpandas_ops(spark):
-    """r5 migration breadth: funnel, top-k, and CDC-latest on native
-    transformWithState must each equal their applyInPandasWithState
-    twins row-for-row (same folds, state moved into the JVM/RocksDB
-    state server).  Skips only if protobuf is genuinely absent —
-    the vendored runtime makes that the exceptional case."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from dbt_json_readr_spark.streaming.jobs import (
-        _run_to_memory,
-        cdc_latest,
-        cdc_latest_tws,
-        events_stream,
-        funnel_stages,
-        funnel_stages_tws,
-        topk_per_type,
-        topk_per_type_tws,
-    )
-
-    pairs = [
-        (funnel_stages, funnel_stages_tws, "funnel"),
-        (topk_per_type, topk_per_type_tws, "topk"),
-        (cdc_latest, cdc_latest_tws, "cdc"),
-    ]
-    for old_fn, new_fn, tag in pairs:
-        ev = events_stream(spark, SF).withWatermark("ts", "1 hour")
-        new = _run_to_memory(new_fn(ev), f"tws_{tag}", "update")
-        old = _run_to_memory(old_fn(ev), f"aip_{tag}", "update")
-        assert sorted(map(tuple, new.collect())) == sorted(
-            map(tuple, old.collect())
-        ), tag
-
-
 def test_left_outer_join_state_and_eviction_across_micro_batches(spark, tmp_path):
     """Two forced micro-batches: user 1's purchase arrives a batch AFTER
     its click (must match via buffered join state), user 2's click never
@@ -583,52 +524,6 @@ def test_cdc_merge_sink_converges_across_forced_micro_batches(spark, tmp_path):
     assert got == want
 
 
-def test_tws_state_survives_micro_batches(spark, tmp_path):
-    """Native transformWithState across two forced micro-batches: the
-    second batch must accumulate onto ValueState written by the first —
-    proving the vendored-protobuf state protocol round-trips JVM state
-    between batches, not just within one."""
-    import glob
-    import shutil
-
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    ev = load(spark, SF, "events")
-    for i, pred in enumerate(["event_id % 2 = 0", "event_id % 2 = 1"]):
-        part_dir = str(tmp_path / f"w{i}")
-        ev.filter(pred).coalesce(1).write.parquet(part_dir)
-        [f] = glob.glob(f"{part_dir}/part-*.parquet")
-        shutil.move(f, tmp_path / f"events_{i}.parquet")
-        shutil.rmtree(part_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "events_*.parquet")
-        .parquet(str(tmp_path))
-        .withWatermark("ts", "1 hour")
-    )
-    out = jobs._run_to_memory(
-        jobs.stateful_counts_tws(stream), "tws_multibatch", "update"
-    )
-    rows = out.collect()
-    assert len(rows) > out.select("user_id").distinct().count()  # 2 batches ran
-    final = {}
-    for r in rows:
-        if r.user_id not in final or r.n_events > final[r.user_id][0]:
-            final[r.user_id] = (r.n_events, r.value_micros)
-    want = {
-        r.user_id: (r.n, r.v)
-        for r in ev.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.floor(F.col("value") * 1_000_000).cast("long")).alias("v"),
-        )
-        .collect()
-    }
-    assert final == want
-
-
 def test_session_timeout_timer_fires_without_new_events_for_key(spark, tmp_path):
     """THE event-time-timer capability claim: user 1's session must be
     emitted by handleExpiredTimer when a LATER batch advances the
@@ -640,9 +535,6 @@ def test_session_timeout_timer_fires_without_new_events_for_key(spark, tmp_path)
     import glob
     import shutil
 
-    import pytest
-
-    pytest.importorskip("google.protobuf")
     schema = load(spark, SF, "events").schema
     t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
     t1 = dt.datetime(2024, 1, 1, 10, 2, 0)
@@ -687,9 +579,6 @@ def test_session_timeout_merges_in_window_stragglers_across_batches(spark, tmp_p
     import glob
     import shutil
 
-    import pytest
-
-    pytest.importorskip("google.protobuf")
     schema = load(spark, SF, "events").schema
     t = lambda h, m: dt.datetime(2024, 1, 1, h, m, 0)  # noqa: E731
     batches = [
@@ -742,10 +631,8 @@ def test_cdc_warmstart_snapshot_state_survives_older_live_events(spark, tmp_path
     import glob
     import shutil
 
-    import pytest
     from pyspark.sql import functions as F
 
-    pytest.importorskip("google.protobuf")
     schema = load(spark, SF, "events").schema
     t = lambda h: dt.datetime(2024, 1, 1, h, 0, 0)  # noqa: E731
     # snapshot (batch): user 1 has 3 rows, latest at 12:00 value 9.0
@@ -859,6 +746,40 @@ def test_state_metrics_growth_bounded_across_forced_micro_batches(spark, tmp_pat
     assert n_groups <= upd <= n_events
 
 
+def test_streaming_import_makes_protobuf_importable_for_workers():
+    """The keyed-state operators have no fallback: the transformWithState
+    state protocol needs ``google.protobuf`` in the driver AND in every
+    Python worker.  A fresh interpreter with no PYTHONPATH that imports
+    the module holding the operators must import the protobuf
+    descriptor module; when that is the vendored runtime, its directory
+    must be on PYTHONPATH too, which is what the spawned workers
+    inherit."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    vendor = str(root / "dbt_json_readr_spark" / "_vendor")
+    code = (
+        "import json, os\n"
+        "import dbt_json_readr_spark.streaming.jobs\n"
+        "import google.protobuf.descriptor as d\n"
+        "print(json.dumps([os.path.abspath(d.__file__), "
+        "os.environ.get('PYTHONPATH', '')]))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=root, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    module_file, pythonpath = json.loads(out.stdout.strip().splitlines()[-1])
+    if module_file.startswith(vendor + os.sep):
+        assert vendor in pythonpath.split(os.pathsep)
+
+
 def test_vendored_protobuf_submessage_writes_through():
     """ADVICE r5: `msg.sub.field = x` on an unset message field must
     write through (real protobuf auto-vivifies), while an untouched
@@ -936,9 +857,6 @@ def test_session_timeout_two_stragglers_across_three_batches_split(spark, tmp_pa
     import glob
     import shutil
 
-    import pytest
-
-    pytest.importorskip("google.protobuf")
     schema = load(spark, SF, "events").schema
     t = lambda h, m: dt.datetime(2024, 1, 1, h, m, 0)  # noqa: E731
     batches = [
