@@ -2,44 +2,66 @@
 
 The reference exposes the raw edge list (parse_depends_on,
 explore.R:98-128); the queries you run on it are closure, depth,
-PageRank and critical-path ones.  All four are iterative self-joins
-with the same shape:
+PageRank and critical-path ones.  All four are round loops: a round
+reads the previous round's result and the edges, and the loop stops at
+a cap or at the first round whose result no later round would change.
+The inputs are decoded once: the dbt keys (plans/dbt.py) read the
+manifest through one narrow ``manifest_graph`` scan.  The loop comes
+in two shapes:
 
-- Inputs are decoded once.  The plan keys (plans/dbt.py) read the
-  manifest through one narrow ``manifest_graph`` scan.
-- Loop invariants are materialized once.  Each operator
-  ``localCheckpoint``s the inputs every round reads (edges, node ids),
-  so a round never re-runs the input plan, and releases them on exit.
-- One Spark action per round.  A round's result is ``localCheckpoint``ed
-  (eager, and plan-truncating, so round N's plan does not embed round
-  N-1's).  Where the loop tests convergence (closure, critical path),
-  it reads a ``DataFrame.observe`` metric that the same checkpoint job
-  fills, so there is no separate probe job; PageRank runs fixed rounds.
+- **Spark rounds** (``transitive_closure``, ``pagerank``,
+  ``critical_path``): iterative self-joins.
+  - Loop invariants are materialized once.  Each operator
+    ``localCheckpoint``s the inputs every round reads (edges, node
+    ids), so a round never re-runs the input plan, and releases them
+    on exit.
+  - One Spark action per round.  A round's result is
+    ``localCheckpoint``ed (eager, and plan-truncating, so round N's
+    plan does not embed round N-1's).  The loop's exit test reads a
+    ``DataFrame.observe`` metric that the same checkpoint job fills
+    (new paths, changed costs, changed ranks), so there is no separate
+    probe job.  One materialized round result is alive at a time.
+  - Each round's joins broadcast one side on purpose: the current
+    costs or ranks (one row per node), PageRank's per-node
+    contributions (at most one row per edge), in the closure the
+    distinct edges joined to the paths, and in the critical path's
+    first round, before any node count is known, the edges.  The
+    planner cannot pick the broadcast itself: a checkpoint keeps the
+    row estimate of the plan it materialized, and a join's estimate is
+    the product of its inputs', so from the second round on every
+    estimate is far past the threshold and the planner shuffles both
+    sides.  AQE would switch to a broadcast only after running those
+    shuffles, a job each.  So the checkpoints also observe the row
+    count and string bytes of the frame they hold (``_footprint``),
+    and the hint is applied only while that size ``_fits`` under the
+    session's ``spark.sql.autoBroadcastJoinThreshold``.  Above it, or
+    with the threshold at -1, the join is left to the planner.
+- **In memory** (``critical_path_local``, ``pagerank_local``): pure
+  functions over collected rows that repeat the Spark rounds exactly:
+  the same caps, exits and integer arithmetic, and the same handling
+  of ghost parents, non-node children, duplicate edges and duplicate
+  node rows, so the two shapes agree on any graph, cyclic ones
+  included.  ``local_frame`` returns their rows as a local relation,
+  whose collect runs no job.
 
-One materialized round result is alive at a time: the previous one is
-released as soon as its successor exists.  Iteration count is the DAG
-depth (dbt graphs: < 30).
-
-Each round's joins broadcast one side on purpose: the current costs
-or ranks (one row per node), PageRank's per-node contributions (at
-most one row per edge), in the closure the distinct edges joined to
-the paths, and in the critical path's first round, before any node
-count is known, the edges.  The planner cannot pick the broadcast
-itself: a checkpoint keeps the row estimate of the plan it
-materialized, and a join's estimate is the product of its inputs', so
-from the second round on every estimate is far past the threshold and
-the planner shuffles both sides.  AQE would switch to a broadcast only
-after running those shuffles, a job each.  The checkpoints already observe metrics, so
-they also observe the row count and string bytes of the frame they
-hold (``_footprint``), and the hint is applied only while that size
-fits under the session's ``spark.sql.autoBroadcastJoinThreshold``.
-Above it, or with the threshold at -1, the join is left to the planner.
+The critical path and PageRank keys pick the shape.  They materialize
+the graph once, with a checkpoint that observes its ``_footprint``.
+While that ``_fits`` the same bound, a broadcast of the graph would
+have collected it to the driver anyway, so they collect it and relax
+it in memory: at dbt scale a round is mostly job overhead, and the
+in-memory loop runs no job at all.  Above the bound, or with the
+threshold at -1, the Spark rounds run.  Closure and depth stay on Spark
+rounds: their output can grow with the square of the node count.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from collections import Counter
+from typing import Iterable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..session import observed, release_iter_handle
 
@@ -60,14 +82,30 @@ def _footprint(*strings: str | Column, rows: Column | None = None):
     )
 
 
+def _fits(spark: SparkSession, bound) -> bool:
+    """Whether a frame of observed ``_footprint`` ``bound`` fits under
+    the session's autoBroadcastJoinThreshold (never at -1)."""
+    cap = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return 0 <= bound["rows"] * _ROW_BYTES + bound["string_bytes"] <= cap
+
+
 def _broadcast_if_fits(df: DataFrame, bound) -> DataFrame:
-    """``df`` hinted for broadcast when ``bound`` fits under the
-    session's autoBroadcastJoinThreshold; ``df`` unchanged otherwise.
-    ``bound`` is the observed ``_footprint`` of ``df`` or of a frame
-    with at least as many rows and string bytes."""
-    cap = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    est = bound["rows"] * _ROW_BYTES + bound["string_bytes"]
-    return F.broadcast(df) if 0 <= est <= cap else df
+    """``df`` hinted for broadcast when ``bound`` fits; ``df`` unchanged
+    otherwise.  ``bound`` is the observed ``_footprint`` of ``df`` or of
+    a frame with at least as many rows and string bytes."""
+    return F.broadcast(df) if _fits(df.sparkSession, bound) else df
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """``rows`` of DDL ``schema`` as a frame over a local relation,
+    built from an Arrow table: collecting it runs no Spark job.  A list
+    of tuples would be parallelized instead, and read back through a
+    Python worker."""
+    import pyarrow as pa
+
+    struct = StructType.fromDDL(schema)
+    cols = list(zip(*rows)) or [()] * len(struct.names)
+    return spark.createDataFrame(pa.table(dict(zip(struct.names, cols))), struct)
 
 
 def transitive_closure(edges: DataFrame, max_iters: int = 30) -> DataFrame:
@@ -120,6 +158,7 @@ def transitive_closure(edges: DataFrame, max_iters: int = 30) -> DataFrame:
 
 PR_SCALE = 1_000_000_000
 PR_BASE = 150_000_000  # 0.15 · SCALE
+PAGERANK_SCHEMA = "unique_id string, rank_fp bigint"
 
 
 def pagerank(all_nodes: DataFrame, edges: DataFrame, iters: int = 10) -> DataFrame:
@@ -130,12 +169,20 @@ def pagerank(all_nodes: DataFrame, edges: DataFrame, iters: int = 10) -> DataFra
     All arithmetic is 60-bit-safe integer (rank div outdeg per edge,
     ·17 div 20 for the 0.85 damping): byte-identical across engines and
     partitionings, where float accumulation would drift with shuffle
-    order.  Fixed ``iters`` (not convergence-tested) keeps the result a
-    pure function of the graph.  The node ids and the out-degree-weighted
-    edges are materialized once; each round is one checkpoint.  The
-    ranks (node-sized) are broadcast into the edge join and the
-    per-parent contributions (at most one row per edge) into the join
-    back onto the ids."""
+    order.  At most ``iters`` rounds (not a tolerance test) keep the
+    result a pure function of the graph.  The node ids and the
+    out-degree-weighted edges are materialized once; each round is one
+    checkpoint.  The ranks (node-sized) are broadcast into the edge join
+    and the per-parent contributions (at most one row per edge) into
+    the join back onto the ranks.  A node row listed twice passes its
+    rank twice and is listed twice in the result.
+
+    The round's job also counts the ranks that changed, and the loop
+    exits on the first round where that count is 0: a round reads only
+    the previous ranks, so a round that reproduces its input would be
+    repeated by every later one.  On a DAG the ranks stop moving after
+    height + 1 rounds, so the exit is one round later; the result is
+    the one ``iters`` rounds give."""
     ids, ids_size = observed(
         all_nodes.select(F.col("unique_id").alias("id")), "node_footprint", *_footprint("id")
     )
@@ -151,6 +198,9 @@ def pagerank(all_nodes: DataFrame, edges: DataFrame, iters: int = 10) -> DataFra
     ew = ew.localCheckpoint()
     ids_size, ew_size = ids_size.get, ew_size.get
     ranks = ids.select("id", F.lit(PR_SCALE).cast("long").alias("rank"))
+    stepped = F.lit(PR_BASE).cast("long") + F.expr(
+        "(coalesce(contrib_sum, CAST(0 AS BIGINT)) * 17) div 20"
+    )
     for i in range(iters):
         side = _broadcast_if_fits(ranks, ids_size)
         contribs = (
@@ -159,27 +209,49 @@ def pagerank(all_nodes: DataFrame, edges: DataFrame, iters: int = 10) -> DataFra
             .groupBy("id")
             .agg(F.sum("contrib").alias("contrib_sum"))
         )
-        nxt = (
-            ids.join(_broadcast_if_fits(contribs, ew_size), "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(PR_BASE).cast("long")
-                    + F.expr(
-                        "(coalesce(contrib_sum, CAST(0 AS BIGINT)) * 17) div 20"
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint()
+        joined, moved = observed(
+            ranks.join(_broadcast_if_fits(contribs, ew_size), "id", "left"),
+            "moved_ranks",
+            F.sum((stepped != F.col("rank")).cast("long")).alias("n"),  # NULL with no nodes
         )
+        nxt = joined.select("id", stepped.alias("rank")).localCheckpoint()
         if i:  # round 0 read the lazy initial ranks, which hold no blocks
             release_iter_handle(ranks)
         ranks = nxt
+        if not moved.get["n"]:
+            break
     out = ranks.select(F.col("id").alias("unique_id"), F.col("rank").alias("rank_fp"))
     if iters:  # with no rounds, ``out`` still reads ids
         release_iter_handle(ids)
     release_iter_handle(ew)
     return out
+
+
+def pagerank_local(
+    all_nodes: Iterable[str], edges: Iterable[tuple[str, str]], iters: int = 10
+) -> list[tuple]:
+    """``pagerank`` on the driver, over the node ids and the (child,
+    parent) edges: [(unique_id, rank_fp)], the same rows."""
+    ids = list(all_nodes)
+    rows_of = Counter(ids)
+    e = {(c, p) for c, p in edges if c is not None}
+    outdeg = Counter(c for c, _ in e)
+    # SQL joins match no NULL key: a NULL id neither passes nor gets rank
+    flows = [(c, p, outdeg[c]) for c, p in e if c in rows_of and p in rows_of and p is not None]
+    rank = dict.fromkeys(rows_of, PR_SCALE)
+    for _ in range(iters):
+        got = dict.fromkeys(rows_of, 0)
+        for c, p, d in flows:
+            got[p] += rows_of[c] * (rank[c] // d)
+        nxt = {n: PR_BASE + got[n] * 17 // 20 for n in rows_of}
+        moved = nxt != rank
+        rank = nxt
+        if not moved:
+            break
+    return [(n, rank[n]) for n in ids]
+
+
+CRITICAL_PATH_SCHEMA = "unique_id string, wt_fp bigint, critical_cost_fp bigint"
 
 
 def critical_path(nodes_w: DataFrame, edges: DataFrame, max_iters: int = 30) -> DataFrame:
@@ -280,7 +352,39 @@ def critical_path(nodes_w: DataFrame, edges: DataFrame, max_iters: int = 30) -> 
         if not cost_size["changed"]:
             break
     release_iter_handle(e)
-    return cost.drop("has_children")
+    return cost.select("unique_id", "wt_fp", "critical_cost_fp")
+
+
+def critical_path_local(
+    nodes_w: Iterable[tuple[str, int]], edges: Iterable[tuple[str, str]], max_iters: int = 30
+) -> list[tuple]:
+    """``critical_path`` on the driver, over the (unique_id, wt_fp) node
+    rows and the (child, parent) edges: [(unique_id, wt_fp,
+    critical_cost_fp)], the same rows.  A node listed twice keeps its
+    largest weight, as the Spark rounds' per-node aggregate does."""
+    wt: dict = {}
+    for n, w in nodes_w:
+        wt[n] = max(w, wt.get(n, w))
+    children: dict = {}
+    for c, p in edges:
+        if p is not None:  # a NULL parent joins no node
+            kids = children.setdefault(p, set())
+            if c is not None:
+                kids.add(c)
+    cost = dict(wt)
+    for _ in range(max_iters):
+        offer: dict = {}
+        for p, kids in children.items():
+            if p in cost:
+                for c in kids:
+                    offer[c] = max(cost[p], offer.get(c, cost[p]))
+        nxt = {n: w + offer.get(n, 0) for n, w in wt.items()}
+        changed = any(nxt[n] != cost[n] for n in wt if n in children)
+        cost = nxt
+        if not changed:
+            break
+    return [(n, w, cost[n]) for n, w in wt.items()]
+
 
 
 def lineage_closure(edges: DataFrame) -> DataFrame:

@@ -10,11 +10,11 @@ from __future__ import annotations
 
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import lineage
-from ..session import prep, release_iter_handle
+from ..session import observed, prep, release_iter_handle
 from ..sources import artifacts as A
 
 FIXTURE_TARGET = str(Path(__file__).resolve().parents[2] / "tests" / "fixtures" / "dbt" / "target")
@@ -155,6 +155,43 @@ def _nodes(graph: DataFrame, *cols: str) -> DataFrame:
     return graph.filter(F.col("manifest_group") != "macros").select("unique_id", *cols)
 
 
+def _graph_footprint():
+    """Observed size of manifest_graph rows as a broadcast would hold
+    them: a row per node and per parent, and their strings."""
+    return lineage._footprint(
+        "unique_id", "manifest_group", F.concat_ws("", "parents"), rows=F.size("parents") + 1
+    )
+
+
+def _relax(graph: DataFrame, schema: str, in_memory, rounds) -> DataFrame:
+    """The lineage result of ``graph`` (manifest_graph rows, maybe with
+    weights) in the shape its size picks.  The graph is materialized
+    once, by a checkpoint that observes its ``_graph_footprint``.  While
+    that fits the broadcast bound the rows are collected, and
+    ``in_memory(rows)`` gives the result's rows, of ``schema``;
+    otherwise ``rounds(graph)`` runs the Spark rounds.  The checkpoint
+    is released on return, so ``rounds`` must not read it lazily."""
+    graph, size = observed(graph, "graph_footprint", *_graph_footprint())
+    graph = graph.localCheckpoint()
+    spark = graph.sparkSession
+    if lineage._fits(spark, size.get):
+        out = lineage.local_frame(spark, in_memory(graph.collect()), schema)
+    else:
+        out = rounds(graph)
+    release_iter_handle(graph)
+    return out
+
+
+def _edge_rows(rows: list[Row]) -> list[tuple]:
+    """``_edges`` of collected graph rows."""
+    return [(r.unique_id, p) for r in rows for p in r.parents or ()]
+
+
+def _node_rows(rows: list[Row]) -> list[Row]:
+    """``_nodes`` of collected graph rows."""
+    return [r for r in rows if r.manifest_group != "macros"]
+
+
 def dbt_lineage_closure(spark: SparkSession, sf_dir: str, target: str = FIXTURE_TARGET) -> DataFrame:
     prep(spark)
     return lineage.lineage_closure(_edges(A.manifest_graph(spark, _manifest(target))))
@@ -219,10 +256,12 @@ def dbt_pagerank(spark: SparkSession, sf_dir: str, target: str = FIXTURE_TARGET)
     A query surface the reference's flat edge list (explore.R:105-138)
     enables but never computes."""
     prep(spark)
-    graph = A.manifest_graph(spark, _manifest(target)).localCheckpoint()
-    out = lineage.pagerank(_nodes(graph), _edges(graph))
-    release_iter_handle(graph)
-    return out
+    return _relax(
+        A.manifest_graph(spark, _manifest(target)).select("unique_id", "manifest_group", "parents"),
+        lineage.PAGERANK_SCHEMA,
+        lambda rows: lineage.pagerank_local([r.unique_id for r in _node_rows(rows)], _edge_rows(rows)),
+        lambda graph: lineage.pagerank(_nodes(graph), _edges(graph)),
+    )
 
 
 def dbt_critical_path(spark: SparkSession, sf_dir: str, target: str = FIXTURE_TARGET) -> DataFrame:
@@ -237,7 +276,7 @@ def dbt_critical_path(spark: SparkSession, sf_dir: str, target: str = FIXTURE_TA
     (explore.R:252-256) jointly enable but never compute.
 
     The graph joined to its weights is materialized once; the node
-    weights and the edges both read it."""
+    weights and the edges both read it (``_relax``)."""
     prep(spark)
     rr = A.run_results(spark, f"{target}/run_results.json").select(
         "unique_id",
@@ -252,11 +291,15 @@ def dbt_critical_path(spark: SparkSession, sf_dir: str, target: str = FIXTURE_TA
             "parents",
             F.coalesce("wt_fp", F.lit(0).cast("long")).alias("wt_fp"),
         )
-        .localCheckpoint()
     )
-    out = lineage.critical_path(_nodes(graph, "wt_fp"), _edges(graph))
-    release_iter_handle(graph)
-    return out
+    return _relax(
+        graph,
+        lineage.CRITICAL_PATH_SCHEMA,
+        lambda rows: lineage.critical_path_local(
+            [(r.unique_id, r.wt_fp) for r in _node_rows(rows)], _edge_rows(rows)
+        ),
+        lambda graph: lineage.critical_path(_nodes(graph, "wt_fp"), _edges(graph)),
+    )
 
 
 def dbt_run_summary(spark: SparkSession, sf_dir: str, target: str = FIXTURE_TARGET) -> DataFrame:

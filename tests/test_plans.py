@@ -500,17 +500,23 @@ def test_lineage_key_decodes_each_artifact_once(spark, key):
     ) - Counter(), f"{key}: text scans {dict(scans)}"
 
 
-# Spark jobs each lineage key runs at the fixture, warm: the iterative
-# operators' rounds broadcast their node-sized side, so a round costs at
-# most 4 jobs and the critical path stops after DAG-depth rounds
+# Spark jobs each lineage key runs at the fixture, warm.  Critical path
+# and PageRank relax their graph in memory: its checkpoint and collect,
+# plus the run_results broadcast for the critical path.  The other
+# keys' rounds broadcast their node-sized side, so a round costs at
+# most 4 jobs
 _LINEAGE_JOBS = {
     "dbt_lineage_closure": 13,
     "dbt_lineage_closure_rcte": 22,
     "dbt_lineage_depth": 18,
-    "dbt_pagerank": 47,
-    "dbt_critical_path": 11,
+    "dbt_pagerank": 2,
+    "dbt_critical_path": 3,
     "dbt_model_fanout": 4,
 }
+# ... and the two in-memory keys' Spark rounds, under
+# autoBroadcastJoinThreshold=-1; PageRank exits on its first round that
+# moves no rank, the critical path after DAG-depth rounds
+_ROUNDS_JOBS = {"dbt_critical_path": 14, "dbt_pagerank": 32}
 # plan-graph nodes that only wrap others
 _WRAPPERS = ("WholeStageCodegen", "InputAdapter")
 
@@ -547,6 +553,26 @@ def test_lineage_key_job_counts_pinned(spark, key):
     assert len(jobs) == _LINEAGE_JOBS[key], f"{key}: {len(jobs)} jobs"
 
 
+# Spark jobs each corpus key runs at the fixture, warm, collect included,
+# with more than one shuffle partition and with one (AQE then runs fewer
+# stages as jobs of their own)
+_CORPUS_JOBS = {"dedup_minhash_lsh": (7, 5), "ann_bruteforce_topk": (4, 3)}
+
+
+@pytest.mark.parametrize("key", sorted(_CORPUS_JOBS))
+def test_corpus_key_job_counts_pinned(spark, key):
+    """The dedup and top-k keys' whole query runs the pinned number of
+    Spark jobs.  At the benchmark's scale their cost follows the job
+    count, as the lineage keys' does."""
+    from dbt_json_readr_spark.plans import llm
+
+    fn = getattr(llm, key)
+    fn(spark, SF).collect()
+    _, jobs, _ = _jobs_and_executions(spark, f"corpus_jobs_{key}", lambda: fn(spark, SF).collect())
+    single = int(spark.conf.get("spark.sql.shuffle.partitions")) == 1
+    assert len(jobs) == _CORPUS_JOBS[key][single], f"{key}: {len(jobs)} jobs"
+
+
 @pytest.mark.parametrize("key", ["dbt_critical_path", "dbt_lineage_depth", "dbt_pagerank"])
 def test_lineage_rounds_broadcast_without_shuffling_first(spark, key):
     """Every round checkpoint of the iterative operators runs at most 4
@@ -554,14 +580,27 @@ def test_lineage_rounds_broadcast_without_shuffling_first(spark, key):
     read.  A shuffle read straight under a BroadcastExchange is AQE
     turning a planned sort-merge join into a broadcast only after both
     shuffles ran, which is what a checkpoint's multiplied row estimate
-    causes without the hint."""
+    causes without the hint.  The threshold sits just under the whole
+    graph's footprint: the keys that relax a graph under the bound in
+    memory run their Spark rounds, whose node and edge sides still fit."""
+    from dbt_json_readr_spark.operators.lineage import _ROW_BYTES
     from dbt_json_readr_spark.plans import dbt
+    from dbt_json_readr_spark.sources.artifacts import manifest_graph
 
-    _, _, ran = _jobs_and_executions(
-        spark, f"lineage_rounds_{key}", lambda: getattr(dbt, key)(spark, SF).collect()
+    graph = manifest_graph(spark, dbt._manifest(dbt.FIXTURE_TARGET))
+    size = graph.agg(*dbt._graph_footprint()).first()
+    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set(
+        "spark.sql.autoBroadcastJoinThreshold", str(size["rows"] * _ROW_BYTES + size["string_bytes"] - 1)
     )
+    try:
+        _, _, ran = _jobs_and_executions(
+            spark, f"lineage_rounds_{key}", lambda: getattr(dbt, key)(spark, SF).collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
     rounds = [e for e in ran if e.description.startswith("localCheckpoint")]
-    assert rounds
+    assert len(rounds) > 1, f"{key}: no rounds ran"
     for e in rounds:
         ops = _op_names(e)
         assert len(e.job_ids) <= 4, f"{key}: a round ran {len(e.job_ids)} jobs: {ops}"
@@ -571,6 +610,21 @@ def test_lineage_rounds_broadcast_without_shuffling_first(spark, key):
             if op == "BroadcastExchange" and below in ("AQEShuffleRead", "Exchange")
         ]
         assert not shuffled, f"{key}: broadcast built from a shuffle: {ops}"
+
+
+@pytest.mark.parametrize("key", sorted(_ROUNDS_JOBS))
+def test_lineage_in_memory_result_is_a_local_relation(spark, key):
+    """Under the broadcast bound, the critical path and PageRank keys
+    return a local relation: collecting it runs no Spark job, so no task
+    and no Python worker.  Rows handed to createDataFrame as a list
+    would be parallelized and read back through a Python worker."""
+    from dbt_json_readr_spark.plans import dbt
+
+    df = getattr(dbt, key)(spark, SF)
+    assert df._jdf.queryExecution().executedPlan().nodeName() == "LocalTableScan"
+    rows, jobs, ran = _jobs_and_executions(spark, f"lineage_local_{key}", df.collect)
+    assert rows and not jobs, f"{key}: collect ran jobs {sorted(jobs)}"
+    assert [_op_names(e) for e in ran] == [["LocalTableScan"]]
 
 
 def test_critical_path_runs_one_checkpoint_per_round(spark):
@@ -602,8 +656,11 @@ def test_lineage_rounds_fall_back_to_the_planner_without_a_threshold(spark):
     """With spark.sql.autoBroadcastJoinThreshold=-1 no observed size fits,
     so no lineage round carries a broadcast hint (and the planner adds
     none): every join is left to the planner, and the results are the
-    same as with the broadcasts."""
+    same as with the broadcasts.  The critical path and PageRank keys
+    then run their Spark rounds, in the pinned number of jobs, and give
+    the rows they relax in memory under the default threshold."""
     from dbt_json_readr_spark.operators import lineage as L
+    from dbt_json_readr_spark.plans import dbt
 
     nodes = spark.createDataFrame(
         [(n, w) for n, w in zip("abcdef", (1, 2, 3, 4, 0, 5))], "unique_id string, wt_fp long"
@@ -621,14 +678,23 @@ def test_lineage_rounds_fall_back_to_the_planner_without_a_threshold(spark):
     for name, run in runs.items():
         hinted[name], _, ran = _jobs_and_executions(spark, f"lineage_hinted_{name}", run)
         assert any("BroadcastExchange" in _op_names(e) for e in ran), name
+    keys = {
+        key: lambda key=key: sorted(map(tuple, getattr(dbt, key)(spark, SF).collect()))
+        for key in _ROUNDS_JOBS
+    }
+    for key, run in keys.items():
+        hinted[key] = run()
     saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        for name, run in runs.items():
-            got, _, ran = _jobs_and_executions(spark, f"lineage_fallback_{name}", run)
+        for name, run in {**runs, **keys}.items():
+            got, jobs, ran = _jobs_and_executions(spark, f"lineage_fallback_{name}", run)
             assert got == hinted[name], name
             for e in ran:
                 assert "BroadcastExchange" not in _op_names(e), f"{name}: {_op_names(e)}"
+            if name in keys:
+                assert len(jobs) == _ROUNDS_JOBS[name], f"{name}: {len(jobs)} jobs"
+                assert sum(e.description.startswith("localCheckpoint") for e in ran) > 2, name
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
 

@@ -1115,7 +1115,12 @@ def _parents(edges):
 
 
 def _naive_critical_path(nodes, edges):
-    wt, par, memo = dict(nodes), _parents(edges), {}
+    """Memoized DFS over an acyclic graph; a node listed twice keeps its
+    largest weight."""
+    wt: dict = {}
+    for v, w in nodes:
+        wt[v] = max(w, wt.get(v, w))
+    par, memo = _parents(edges), {}
 
     def cost(v):
         if v not in memo:
@@ -1137,18 +1142,23 @@ def _naive_depth(nodes, edges):
 
 
 def _naive_pagerank(nodes, edges, iters=10):
+    """Exactly ``iters`` rounds, no early exit; a node listed twice
+    passes its rank twice."""
+    from collections import Counter
+
     from dbt_json_readr_spark.operators.lineage import PR_BASE, PR_SCALE
 
     uniq = set(edges)
     outdeg: dict = {}
     for c, _ in uniq:
         outdeg[c] = outdeg.get(c, 0) + 1
-    rank = {v: PR_SCALE for v, _ in nodes}
+    listed = Counter(v for v, _ in nodes)
+    rank = {v: PR_SCALE for v in listed}
     for _ in range(iters):
         contrib: dict = {}
         for c, p in uniq:
             if c in rank:
-                contrib[p] = contrib.get(p, 0) + rank[c] // outdeg[c]
+                contrib[p] = contrib.get(p, 0) + listed[c] * (rank[c] // outdeg[c])
         rank = {v: PR_BASE + contrib.get(v, 0) * 17 // 20 for v in rank}
     return rank
 
@@ -1167,11 +1177,18 @@ def _naive_pagerank(nodes, edges, iters=10):
 # duplicate edges
 @example(dag=([("a", 3), ("b", 1), ("c", 2)], [("b", "a"), ("b", "a"), ("c", "b"), ("c", "b"), ("c", "a")]))
 def test_lineage_operators_match_stdlib_on_random_dags(spark, dag):
-    """critical_path, lineage_depth and pagerank equal stdlib
-    recomputations; the critical path's observed early exit stops at
-    the fixed point, with its rounds broadcast and, under
-    autoBroadcastJoinThreshold=-1, left to the planner."""
-    from dbt_json_readr_spark.operators.lineage import critical_path, lineage_depth, pagerank
+    """critical_path, lineage_depth and pagerank, and the in-memory
+    critical path and PageRank, equal stdlib recomputations; the
+    observed early exits stop at the fixed point, with the rounds
+    broadcast and, under autoBroadcastJoinThreshold=-1, left to the
+    planner."""
+    from dbt_json_readr_spark.operators.lineage import (
+        critical_path,
+        critical_path_local,
+        lineage_depth,
+        pagerank,
+        pagerank_local,
+    )
 
     nodes, edges = dag
     ndf = spark.createDataFrame(nodes, "unique_id string, wt_fp long")
@@ -1190,3 +1207,82 @@ def test_lineage_operators_match_stdlib_on_random_dags(spark, dag):
     assert got_depth == _naive_depth(nodes, edges)
     got_pr = {r.unique_id: r.rank_fp for r in pagerank(ndf, edf).collect()}
     assert got_pr == _naive_pagerank(nodes, edges)
+    assert {v: (w, c) for v, w, c in critical_path_local(nodes, edges)} == want_cp
+    assert dict(pagerank_local([v for v, _ in nodes], edges)) == got_pr
+
+
+@st.composite
+def graphs(draw):
+    """(nodes [(id, wt)], edges [(child, parent)], round cap): up to 10
+    node ids, each listed once or more (a repeat may carry another
+    weight); edges between any of them, so cycles and self-loops occur,
+    plus edges to a parent that is not a node (a ghost) and from a
+    child that is not one (a macro); weights include 0."""
+    n = draw(st.integers(0, 10))
+    ids = [f"n{i}" for i in range(n)]
+    wt = st.integers(0, 3)
+    nodes = [(v, draw(wt)) for v in ids]
+    if ids:
+        nodes += draw(st.lists(st.tuples(st.sampled_from(ids), wt), max_size=3))
+        edges = draw(
+            st.lists(
+                st.tuples(st.sampled_from(ids + ["macro"]), st.sampled_from(ids + ["ghost"])),
+                max_size=2 * n,
+            )
+        )
+    else:
+        edges = []
+    return nodes, edges, draw(st.integers(1, 5))
+
+
+def _acyclic(nodes, edges) -> bool:
+    """No cycle through node ids (Kahn's algorithm)."""
+    ids = {v for v, _ in nodes}
+    uniq = {(c, p) for c, p in edges if c in ids and p in ids}
+    indeg = {v: 0 for v in ids}
+    for c, _ in uniq:
+        indeg[c] += 1
+    ready = [v for v, d in indeg.items() if not d]
+    seen = 0
+    while ready:
+        p = ready.pop()
+        seen += 1
+        for c, q in uniq:
+            if q == p:
+                indeg[c] -= 1
+                if not indeg[c]:
+                    ready.append(c)
+    return seen == len(ids)
+
+
+@settings(**{**SETTINGS, "max_examples": 8})
+@given(graph=graphs())
+@example(graph=([], [], 3))
+# a weighted 2-cycle: every round raises both costs, so the loop runs to the cap
+@example(graph=([("a", 1), ("b", 2), ("c", 0)], [("a", "b"), ("b", "a"), ("c", "b")], 4))
+# a zero-weight cycle settles at once; a self-loop on a weighted node does not
+@example(graph=([("a", 0), ("b", 0), ("s", 1)], [("a", "b"), ("b", "a"), ("s", "s")], 3))
+# duplicate node rows with other weights, duplicate edges, a ghost parent
+@example(graph=([("a", 1), ("a", 3), ("b", 0), ("b", 2)], [("b", "a"), ("b", "a"), ("b", "ghost")], 5))
+def test_lineage_shapes_agree_on_random_graphs(spark, graph):
+    """On any graph, cyclic or not, the in-memory critical path and
+    PageRank return the rows their Spark-rounds operators return, to
+    the same round cap; on acyclic graphs both also equal the stdlib
+    recomputations."""
+    from dbt_json_readr_spark.operators.lineage import (
+        critical_path,
+        critical_path_local,
+        pagerank,
+        pagerank_local,
+    )
+
+    nodes, edges, cap = graph
+    ndf = spark.createDataFrame(nodes, "unique_id string, wt_fp long")
+    edf = spark.createDataFrame(edges, "child_unique_id string, parent_unique_id string")
+    got_cp = sorted(critical_path_local(nodes, edges, max_iters=cap))
+    assert got_cp == sorted(map(tuple, critical_path(ndf, edf, max_iters=cap).collect()))
+    got_pr = sorted(pagerank_local([v for v, _ in nodes], edges, iters=cap))
+    assert got_pr == sorted(map(tuple, pagerank(ndf, edf, iters=cap).collect()))
+    assert dict(got_pr) == _naive_pagerank(nodes, edges, iters=cap)
+    if _acyclic(nodes, edges) and cap > len(nodes):
+        assert {v: (w, c) for v, w, c in got_cp} == _naive_critical_path(nodes, edges)
