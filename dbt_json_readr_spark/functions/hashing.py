@@ -125,16 +125,9 @@ def sql_minhash_array(shingles_expr: str, n_hashes: int) -> str:
 
 def band_key_flat(lane_cols: list[Column], band: int) -> Column:
     """Band key from flat minhash lane columns — identical string
-    contract to ``band_key``/``sql_band_key`` (comma-joined decimal
-    lanes, salted per band), but codegen-friendly (no array HOF)."""
+    contract to ``sql_band_key`` (comma-joined decimal lanes, salted
+    per band), codegen-friendly (no array HOF)."""
     joined = F.concat_ws(",", *[c.cast("string") for c in lane_cols])
-    return hash64(joined, f"band{band}")
-
-
-def band_key(mh: Column, band: int, rows_per_band: int) -> Column:
-    """Hash of one LSH band (slice of the minhash signature)."""
-    sl = F.slice(mh, band * rows_per_band + 1, rows_per_band)
-    joined = F.array_join(F.transform(sl, lambda x: x.cast("string")), ",")
     return hash64(joined, f"band{band}")
 
 
@@ -146,26 +139,6 @@ def sql_band_key(mh_expr: str, band: int, rows_per_band: int) -> str:
 
 
 # ------------------------------------------------------------ simhash
-
-
-def simhash32(token_col: Column) -> Column:
-    """32-bit simhash over (non-distinct) tokens: per bit, sign of the
-    sum of ±1 votes from each token's hash."""
-    hs = F.transform(token_col, lambda t: hash64(t, "sim"))
-
-    def _vote(j: int):
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    bits = []
-    for j in range(32):
-        vote = F.aggregate(hs, F.lit(0).cast("long"), _vote(j))
-        bits.append(F.when(vote > 0, F.lit(2**j).cast("long")).otherwise(F.lit(0).cast("long")))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
 
 
 def sql_simhash32(tokens_expr: str) -> str:

@@ -68,9 +68,8 @@ class SchemaEvolutionError(RuntimeError):
 def _merge_schemas(parent: T.StructType, batch: T.StructType) -> T.StructType:
     """mergeSchema semantics at the manifest level: parent columns keep
     their order, batch-only columns append; a name collision with a
-    different type fails loudly (same contract as
-    sources/files.py read_parquet_evolving, whose null-fill the reader
-    relies on for old files missing new columns)."""
+    different type fails loudly (``read`` scans with the published
+    union schema, which null-fills old files missing new columns)."""
     by_name = {f.name: f for f in parent.fields}
     out = list(parent.fields)
     for f in batch.fields:

@@ -511,9 +511,8 @@ def minhash_incremental_pairs(
 def simhash_values(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash): flat simhash — explode (non-distinct) tokens,
     hash each once in whole-stage codegen, then 32 conditional-sum vote
-    columns with map-side partial aggregation.  The array-HOF
-    formulation (functions/hashing.py simhash32) is 32 interpreted
-    F.aggregate passes per doc and benches ~5× slower."""
+    columns with map-side partial aggregation, instead of 32 interpreted
+    array folds per doc."""
     tok = spread(docs).select(
         "doc_id", F.explode(H.tokens(F.col("text"))).alias("t")
     )
@@ -575,8 +574,7 @@ def simhash_band_pairs(
     ).select("doc_id", "simhash", F.col("bb.band").alias("band"), F.col("bb.bval").alias("bval"))
     # groupBy + in-bucket explode: one sketch computation and one
     # shuffle instead of a per-side recompute self-join (see
-    # minhash_lsh_pairs) — simhash32 is 32 F.aggregate passes per doc,
-    # so computing it once matters even more here
+    # minhash_lsh_pairs)
     members = (
         banded.groupBy("band", "bval")
         .agg(F.collect_list(F.struct("doc_id", "simhash")).alias("ms"))
@@ -1030,13 +1028,6 @@ def minhash_containment_pairs(
         F.col("n_dropped_partners").cast("long").alias("n_dropped_partners"),
     )
     return tagged.unionByName(ev)
-
-
-def shingle_rows(docs: DataFrame, k: int = 5) -> DataFrame:
-    """Public (doc_id, sh) hashed-shingle rows — the narrow corpus
-    representation every sketch op builds on (estimator-calibration
-    evidence key consumes it directly)."""
-    return _shingle_rows(docs, k)
 
 
 def per_doc_sketch(docs: DataFrame, k: int = 5, n_hashes: int = 16) -> DataFrame:

@@ -73,16 +73,6 @@ FEATURE_SCHEMA = T.StructType(
 _MODALITIES = ["image", "audio", "video"]
 
 
-def decode_media(payload: bytes, modality: str, meta: dict) -> object:
-    """Real decoder entry point — requires PIL / soundfile / av, which
-    are not installed here.  Swap this in for ``fake_decode`` on a
-    cluster with codec images."""
-    raise NotImplementedError(
-        f"no codec available for modality={modality}; install media libs "
-        "and replace fake_decode with decode_media"
-    )
-
-
 def fake_decode(payload: bytes) -> list[float]:
     """Deterministic decode stand-in: 4 'features' from the payload's
     md5 — stable across runs, partitionings, and engines."""
@@ -510,17 +500,6 @@ def jpeg_block_value(doc_id: int, bx: int, by: int, frame: int = 0) -> int:
     ``frame`` varies the content per MJPEG frame; frame 0 reproduces
     the still-jpeg formula exactly."""
     return (doc_id * 7 + frame * 29 + bx * 11 + by * 23) % 256
-
-
-def jpeg_decoded_shade(v: int) -> int:
-    """Closed-form lossy round-trip of a solid 8×8 block of shade v:
-    F00 = 8·(v−128); dc_q = round_away(F00/Q₀₀); pixel =
-    clamp(round_away(dc_q·Q₀₀/8)+128).  With Q₀₀=16 the second round
-    is exact (2·dc_q)."""
-    q00 = _JPEG_QTBL[0]
-    dc_q = _iround_away(8 * (v - 128), q00)
-    rec = _iround_away(dc_q * q00, 8) + 128
-    return max(0, min(255, rec))
 
 
 def synth_jpeg(doc_id: int, blocks: int = 2, frame: int = 0) -> bytes:

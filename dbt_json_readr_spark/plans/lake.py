@@ -2394,20 +2394,13 @@ ORDER BY source, pred
 # ------------------------------------------------------- F10 key
 
 
-def delta_cdf_mapped_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CHANGE DATA FEED over a COLUMN-MAPPED Delta table (VERDICT r7
-    item 4): cdc and data parquet carry PHYSICAL column names and
-    physically-keyed partitionValues per PROTOCOL.md, and commit 2
-    RENAMES the logical qty column mid-range — a metadata-only change
-    the physical-fingerprint gate must wave through (the old full
-    schema comparison wrongly gated it).  Output uses the END-of-range
-    logical names (id, qty_r, region); the update commit contributes
-    ONLY its _change_data rows, inserts/deletes derive as in F8.  A
-    reader that scanned by logical name would null-fill every column
-    and fail the hash."""
+def _cdf_region_rollup(spark: SparkSession, root: Path) -> DataFrame:
+    """The change feed of the column-mapped CDF fixture at ``root``,
+    from version 0, rolled up per (commit, change type, region) under
+    the end-of-range logical names (id, qty_r, region)."""
     prep(spark)
     ensure_lake_fixtures()
-    df = LF.read_delta_changes(spark, str(DELTA_CDFM_DIR), 0)
+    df = LF.read_delta_changes(spark, str(root), 0)
     return (
         df.groupBy(
             F.col("_commit_version").alias("commit_version"),
@@ -2421,6 +2414,38 @@ def delta_cdf_mapped_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("commit_version", "change_type", "region")
     )
+
+
+def _cdf_region_rollup_sql(parts: list[str]) -> str:
+    """The oracle twin of ``_cdf_region_rollup`` over ``parts``: one
+    SELECT per fixture file, each yielding (commit_version, change_type,
+    region, id, qty)."""
+    return f"""
+WITH changes(commit_version, change_type, region, id, qty) AS (
+{" UNION ALL ".join(parts)}
+)
+SELECT CAST(commit_version AS BIGINT) AS commit_version, change_type, region,
+       count(*) AS n_rows,
+       CAST(sum(id) AS BIGINT) AS sum_id,
+       CAST(sum(qty) AS BIGINT) AS sum_qty
+FROM changes
+GROUP BY commit_version, change_type, region
+ORDER BY commit_version, change_type, region
+"""
+
+
+def delta_cdf_mapped_read(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CHANGE DATA FEED over a COLUMN-MAPPED Delta table: cdc and data
+    parquet carry PHYSICAL column names and physically-keyed
+    partitionValues per PROTOCOL.md, and commit 2 RENAMES the logical
+    qty column mid-range — a metadata-only change the
+    physical-fingerprint gate must wave through (a full schema
+    comparison would gate it).  Output uses the END-of-range
+    logical names (id, qty_r, region); the update commit contributes
+    ONLY its _change_data rows, inserts/deletes derive as in F8.  A
+    reader that scanned by logical name would null-fill every column
+    and fail the hash."""
+    return _cdf_region_rollup(spark, DELTA_CDFM_DIR)
 
 
 def _delta_cdf_mapped_oracle_sql() -> str:
@@ -2446,50 +2471,24 @@ def _delta_cdf_mapped_oracle_sql() -> str:
     sel(1, None, "_change_data/c1.parquet", "west")
     sel(2, "insert", "m3.parquet", "east")
     sel(3, "delete", "m0.parquet", "east")
-    return f"""
-WITH changes(commit_version, change_type, region, id, qty) AS (
-{" UNION ALL ".join(parts)}
-)
-SELECT CAST(commit_version AS BIGINT) AS commit_version, change_type, region,
-       count(*) AS n_rows,
-       CAST(sum(id) AS BIGINT) AS sum_id,
-       CAST(sum(qty) AS BIGINT) AS sum_qty
-FROM changes
-GROUP BY commit_version, change_type, region
-ORDER BY commit_version, change_type, region
-"""
+    return _cdf_region_rollup_sql(parts)
 
 
 # ------------------------------------------------------- F36 key
 
 
 def delta_cdf_mapid_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CHANGE DATA FEED over a mode-'id' COLUMN-MAPPED table (r9,
-    VERDICT r8 item 3): cdc and data parquet resolve by FOOTER FIELD ID
-    against delta.columnMapping.id — per file, through the same cached
-    footer probe the snapshot reader grew in r8 — so files written by
+    """CHANGE DATA FEED over a mode-'id' COLUMN-MAPPED table: cdc and
+    data parquet resolve by FOOTER FIELD ID against
+    delta.columnMapping.id — per file, through the same cached footer
+    probe the snapshot reader uses — so files written by
     DIFFERENT physical writers (arbitrary names + ids; physicalName
     fallback with no ids at all) union into one change stream.  The
     fixture plants three naming schemes across the range plus a
     mid-range logical rename (ids unchanged — the id-keyed physical
     fingerprint waves it through); a reader resolving by physicalName
     alone would null-fill the footer-named files and fail the hash."""
-    prep(spark)
-    ensure_lake_fixtures()
-    df = LF.read_delta_changes(spark, str(DELTA_CDFID_DIR), 0)
-    return (
-        df.groupBy(
-            F.col("_commit_version").alias("commit_version"),
-            F.col("_change_type").alias("change_type"),
-            F.col("region"),
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum("id").cast("long").alias("sum_id"),
-            F.sum("qty_r").cast("long").alias("sum_qty"),
-        )
-        .orderBy("commit_version", "change_type", "region")
-    )
+    return _cdf_region_rollup(spark, DELTA_CDFID_DIR)
 
 
 def _delta_cdf_mapid_oracle_sql() -> str:
@@ -2515,18 +2514,7 @@ def _delta_cdf_mapid_oracle_sql() -> str:
     sel(1, None, "_change_data/c1.parquet", "west", "footer_a")
     sel(2, "insert", "i3.parquet", "east", "footer_b")
     sel(3, "delete", "i0.parquet", "east", "footer_a")
-    return f"""
-WITH changes(commit_version, change_type, region, id, qty) AS (
-{" UNION ALL ".join(parts)}
-)
-SELECT CAST(commit_version AS BIGINT) AS commit_version, change_type, region,
-       count(*) AS n_rows,
-       CAST(sum(id) AS BIGINT) AS sum_id,
-       CAST(sum(qty) AS BIGINT) AS sum_qty
-FROM changes
-GROUP BY commit_version, change_type, region
-ORDER BY commit_version, change_type, region
-"""
+    return _cdf_region_rollup_sql(parts)
 
 
 # ------------------------------------------------------- F11 key

@@ -7,7 +7,11 @@ oracle-parity checks.  Oracle value of ``None`` marks a rows-only check
 
 from __future__ import annotations
 
+import functools
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -21,7 +25,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # cached in place) on first oracle_sql() access — oracle builders that
 # materialize fixtures (the lake keys) or stdlib-parse fixture trees
 # (the dbt keys) must not run, or write to disk, merely because the
-# registry was imported (r6 code-review finding).
+# registry was imported.
 _REGISTRY: dict[str, tuple[QueryFn, "str | Callable[[], str] | None"]] = {}
 
 
@@ -333,7 +337,7 @@ register(
     streaming_jobs._streaming_lake_rollup_sql,
 )
 
-# E. external table-format bridges (r6)
+# E. external table-format bridges
 register("delta_snapshot_read", lake.delta_snapshot_read, lake._delta_oracle_sql)
 register("iceberg_metadata_audit", lake.iceberg_metadata_audit, lake._iceberg_oracle_sql)
 register("iceberg_snapshot_read", lake.iceberg_snapshot_read, lake._iceberg_read_oracle_sql)
@@ -370,7 +374,7 @@ register(
     lake.lake_time_travel_read,
     lake._lake_time_travel_oracle_sql,
 )
-# F13–F16: the native Delta WRITE path (r8) — transactional appends,
+# F13–F16: the native Delta WRITE path — transactional appends,
 # DV-backed DELETE, copy-on-write MERGE, OPTIMIZE compaction, each
 # proven through the independent read bridge with pure-SQL oracles
 register(
@@ -436,7 +440,7 @@ register(
 register(
     "delta_schema_evolution_read",
     lakewrite.delta_schema_evolution_read,
-    lakewrite._delta_schema_evolution_read_sql,
+    lakewrite._schema_evolution_read_sql,
 )
 # F26: OPTIMIZE ZORDER BY — multi-column clustering; the oracle
 # replays the bucket/interleave/slice layout end-to-end in SQL
@@ -450,7 +454,7 @@ register(
 register(
     "iceberg_schema_evolution_read",
     lakewrite.iceberg_schema_evolution_read,
-    lakewrite._iceberg_schema_evolution_read_sql,
+    lakewrite._schema_evolution_read_sql,
 )
 # F28: Iceberg equality-delete write — CDC-style no-scan deletes with
 # strict sequence scoping (re-appended keys survive, proven in-key)
@@ -519,8 +523,8 @@ register(
     lakewrite.delta_uniform_mapped_export,
     lakewrite._delta_uniform_mapped_export_sql,
 )
-# F39: Appendix-B decimal bucket hashing on the WRITE side (VERDICT r9
-# item 3) — point probes over a decimal-bucketed table open 1/N files
+# F39: Appendix-B decimal bucket hashing on the WRITE side — point
+# probes over a decimal-bucketed table open 1/N files
 register(
     "iceberg_decimal_bucket_prune",
     lakewrite.iceberg_decimal_bucket_prune,
@@ -533,9 +537,8 @@ register(
     lakewrite.iceberg_files_table,
     lakewrite._iceberg_files_table_sql,
 )
-# F41-F44: the rest of the Iceberg metadata-table family (VERDICT r10
-# item 2) — snapshots / history / partitions / manifests, all
-# O(metadata) at any data size
+# F41-F44: the rest of the Iceberg metadata-table family — snapshots /
+# history / partitions / manifests, all O(metadata) at any data size
 register(
     "iceberg_snapshots_table",
     lakewrite.iceberg_snapshots_table,
@@ -556,7 +559,7 @@ register(
     lakewrite.iceberg_manifests_table,
     lakewrite._iceberg_manifests_table_sql,
 )
-# F45: Appendix-B bucket hashing over BINARY keys (VERDICT r10 item 4)
+# F45: Appendix-B bucket hashing over BINARY keys
 register(
     "iceberg_binary_bucket_prune",
     lakewrite.iceberg_binary_bucket_prune,
@@ -635,132 +638,55 @@ register(
 
 # -------------------------------------------------------------------
 # Driver-gate ordering.  The driver records CORRECTNESS rows for only
-# the FIRST 50 keys in queries() insertion order, so registration order
-# IS the correctness gate.  Round-13 rotation (VERDICT r12 item 1):
-# lead with the 17 r12-rewritten keys that have no r11/r12 driver row
-# (the containment/minhash redesigns, the ann sweep family, the Lloyd
-# checkpoint rewrites, the probe-fold lake keys), then the never-gated
-# iceberg_wap_publish, then every key whose operator code this round
-# touches (the verify-shape gate + eval_once barrier + unrolled-fold
-# consumers), then the 6 r7-stale keys that missed the r12 window, and
-# fill the remainder with the oldest (r8) keys in CORRECTNESS_r08
-# recording order.  Rotated-out keys stay covered by
-# tests/test_oracle_parity.py (every key, sf0.01, exact values).
+# the first GATE_WINDOW keys in queries() insertion order, so that order
+# IS the correctness gate.  It rotates by itself: the keys whose newest
+# green driver row is oldest lead.  While the window's rows come back
+# green, every key gets a fresh driver row within ⌈keys / GATE_WINDOW⌉
+# rounds; a key whose row fails keeps its place at the front.  Keys
+# outside the window stay covered by tests/test_oracle_parity.py
+# (every key, sf0.01, exact values).
 GATE_WINDOW = 50
 
-# VERDICT r12 item 1: the 17 r12-rewritten keys with no r11/r12 driver
-# row — every key rewritten in r12 must get a fresh green driver row.
-_R13_REWRITTEN = [
-    "dedup_containment_lsh",
-    "dedup_minhash_lsh",
-    "dedup_minhash_est_calibration",
-    "ann_sweep_eval",
-    "ann_recall_eval",
-    "ann_dim_ablation",
-    "ann_pq_adc_topk",
-    "embedding_kmeans",
-    "embedding_power_iteration",
-    "dbt_lineage_closure",
-    "dedup_incremental",
-    "dedup_k_sweep",
-    "dedup_cluster_histogram",
-    "corpus_dedup_token_savings",
-    "dedup_containment",
-    "iceberg_bucket_write_prune",
-    "iceberg_decimal_bucket_prune",
-]
 
-# Never gated (registered after the r12 window was fixed).
-_R13_NEVER = ["iceberg_wap_publish"]
-
-# Keys whose operator code round 13 itself touches (verify side-gate +
-# eval_once barrier, simhash pre-dedup threshold, k-sweep sketch
-# sharing, unrolled folds) — a rewrite round's window should witness
-# its own rewrites.
-_R13_TOUCHED = [
-    "semdedup_prune",
-    "dedup_embedding_cosine",
-    "dedup_lsh_recall",
-    "dedup_ngram_jaccard",
-    "dedup_band_utility",
-    "dedup_method_agreement",
-    "dedup_simhash",
-    "dedup_clusters",
-    "corpus_dedup_summary",
-    "training_pipeline_funnel",
-]
-
-# The 6 r7-stale keys that did not fit the r12 window.
-_R13_STALE_R7 = [
-    "corpus_token_histogram",
-    "corpus_quality_funnel",
-    "doc_chunk_plan",
-    "doc_posting_lists",
-    "token_budget_pack",
-    "tokenizer_vocab_coverage",
-]
-
-# Oldest remaining (newest green row is r8), in CORRECTNESS_r08
-# recording order, truncated to the slots left.
-_R13_STALE_R8 = [
-    "embedding_quantize",
-    "embedding_pq_audit",
-    "ann_ivf_kmeans_topk",
-    "text_dup_spans",
-    "text_langid_confusion",
-    "bpe_pair_stats",
-    "events_skew_audit",
-    "events_lateness_audit",
-    "join_prefilter_audit",
-    "lineitem_zorder_layout",
-    "lineitem_runlength_audit",
-    "zone_map_skipping_audit",
-    "q16_supplier_part_types",
-    "delta_snapshot_read",
-    "iceberg_metadata_audit",
-    "iceberg_snapshot_read",
-]
-
-_R13_LISTS = (
-    _R13_REWRITTEN + _R13_NEVER + _R13_TOUCHED + _R13_STALE_R7 + _R13_STALE_R8
-)
-
-# every gate-list name must resolve - a typo is harmless until the
-# rotation pulls it into the window, where the _gate_ordered check
-# would crash queries() for the whole driver run (r7: a stale "_lite"
-# suffix sat one rotation away from exactly that).  Explicit raise,
-# not assert: python -O strips asserts and would resurrect the
-# crash-one-rotation-later failure mode.
-for _k in _R13_LISTS:
-    if _k not in _REGISTRY:
-        raise RuntimeError(f"gate list references unknown key: {_k}")
-if len(set(_R13_LISTS)) != len(_R13_LISTS):
-    raise RuntimeError("duplicate key in r13 gate lists")
-
-_GATE_PRIORITY = _R13_LISTS[:GATE_WINDOW]
-# VERDICT r12 item 1 requires every r12-rewritten key (and this
-# round's own touched keys) in the r13 window; pin.
-for _k in _R13_REWRITTEN + _R13_NEVER + _R13_TOUCHED:
-    if _k not in _GATE_PRIORITY:
-        raise RuntimeError(f"required r13 gate slot lost: {_k}")
+def gate_order(keys: list[str], rounds: dict[int, dict[str, dict]]) -> list[str]:
+    """``keys`` ordered by the newest round in which each has a green
+    driver row (rows, schema and hash match, no error), oldest first; a
+    key with no green row (a new key) sorts before all of them, and
+    ties keep registration order.  ``rounds`` maps a round number to
+    that round's CORRECTNESS rows; names not in ``keys`` are ignored."""
+    newest: dict[str, int] = {}
+    for rnd, rows in rounds.items():
+        for k, row in rows.items():
+            green = row.get("rows_match") and row.get("schema_match") and row.get("hash_match")
+            if green and row.get("err") is None:
+                newest[k] = max(newest.get(k, rnd), rnd)
+    pos = {k: i for i, k in enumerate(keys)}
+    return sorted(keys, key=lambda k: (newest.get(k, -1), pos[k]))
 
 
-def _gate_ordered() -> dict[str, tuple[QueryFn, str | None]]:
-    missing = [k for k in _GATE_PRIORITY if k not in _REGISTRY]
-    if missing:
-        raise RuntimeError(f"_GATE_PRIORITY references unknown keys: {missing}")
-    ordered = {k: _REGISTRY[k] for k in _GATE_PRIORITY}
-    ordered.update((k, v) for k, v in _REGISTRY.items() if k not in ordered)
-    return ordered
+def _correctness_rounds() -> dict[int, dict[str, dict]]:
+    """The committed ``CORRECTNESS_r<N>.json`` files at the repository
+    root, by round number (empty when there are none)."""
+    out = {}
+    for p in Path(__file__).resolve().parents[1].glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name)
+        if m:
+            out[int(m.group(1))] = json.loads(p.read_text())
+    return out
+
+
+@functools.cache
+def _gate_keys() -> tuple[str, ...]:
+    return tuple(gate_order(list(_REGISTRY), _correctness_rounds()))
 
 
 def queries() -> dict[str, QueryFn]:
-    return {k: fn for k, (fn, _) in _gate_ordered().items()}
+    return {k: _REGISTRY[k][0] for k in _gate_keys()}
 
 
 def oracle_sql() -> dict[str, str]:
     out = {}
-    for k in _gate_ordered():
+    for k in _gate_keys():
         sql = _resolved_oracle(k)
         if sql is not None:
             out[k] = sql

@@ -205,12 +205,6 @@ def evict_cached(slot: str, frame) -> None:
     frame.unpersist()
 
 
-def live_cached(slot: str, session) -> list:
-    """The frames currently pinned for (session, slot) — test hook for
-    the ≤N-live-handles regression contracts."""
-    return list(_CACHE_SLOTS.get(session, {}).get(slot, []))
-
-
 def release_iter_handle(df) -> None:
     """Free a superseded ITERATION intermediate's storage NOW, whether
     it was ``persist()``-ed or ``localCheckpoint()``-ed.  For

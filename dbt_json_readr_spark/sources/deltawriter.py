@@ -781,36 +781,6 @@ def add_check_constraint(
     return {"version": version, "name": name, "expr": expr}
 
 
-def drop_check_constraint(
-    spark: SparkSession, table_path: str, name: str
-) -> dict:
-    """ALTER TABLE DROP CONSTRAINT — removes the configuration key in
-    a metaData commit.  The protocol never downgrades."""
-    snap = LF.delta_snapshot(table_path)
-    key = f"delta.constraints.{name}"
-    if key not in snap["configuration"]:
-        raise LF.LakeFormatError(f"no constraint {name!r} on {table_path}")
-    cfg = {k: v for k, v in snap["configuration"].items() if k != key}
-    version = snap["version"] + 1
-    _commit(
-        table_path,
-        version,
-        [
-            _commit_info("DROP CONSTRAINT", {"name": name}),
-            {
-                "metaData": {
-                    "id": snap["meta_id"],
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": json.dumps(snap["schema"].jsonValue()),
-                    "partitionColumns": list(snap["partition_columns"]),
-                    "configuration": cfg,
-                }
-            },
-        ],
-    )
-    return {"version": version, "name": name}
-
-
 def _stage_cdc(
     spark: SparkSession,
     rows: DataFrame,
@@ -1568,21 +1538,6 @@ def delete_delta(
     return audit
 
 
-def _protocol_has_dv(table_path: str) -> bool:
-    log = LF._delta_log_dir(table_path)
-    json_versions, ck_version, _latest = LF._log_versions(log)
-    for v in reversed(json_versions):
-        with open(log / f"{v:020d}.json") as f:
-            for line in f:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                if "protocol" in a:
-                    feats = a["protocol"].get("readerFeatures") or []
-                    return "deletionVectors" in feats
-    return False
-
-
 def _physical_rows(table_path: str, f: dict) -> int | None:
     """numRecords from add.stats, else one footer read, else None."""
     stats = f.get("stats")
@@ -1961,8 +1916,8 @@ def convert_to_delta(
     file-skippable immediately.  ``schema`` is the TABLE schema
     including partition columns (their types drive the partition-value
     parse, exactly like a reader).  Refuses directories that already
-    hold a Delta log (same guard as manifest_to_delta_log: splicing a
-    commit 0 under survivors corrupts history)."""
+    hold a Delta log (splicing a commit 0 under survivors corrupts
+    history)."""
     partition_by = list(partition_by)
     _validate_partition_types(schema, partition_by)
     root = Path(directory)
@@ -1989,8 +1944,8 @@ def convert_to_delta(
             if col not in partition_by:
                 # silently cataloging a=1/b=2 files under partition_by
                 # =['a'] would make column b read NULL everywhere — the
-                # directory is partitioned DEEPER than declared (r8
-                # review finding: gate, never null-fill)
+                # directory is partitioned DEEPER than declared: gate,
+                # never null-fill
                 raise LF.LakeFormatError(
                     f"{rel} carries partition directory {seg!r} for a "
                     f"column not in partition_by={partition_by} — the "
@@ -2550,68 +2505,3 @@ def write_delta_checkpoint(
     lc_tmp.write_text(json.dumps({"version": version, "size": len(rows)}))
     os.replace(lc_tmp, log / "_last_checkpoint")
     return {"version": version, "actions": len(rows)}
-
-
-def cleanup_delta_log(
-    table_path: str,
-    retention_ms: int = 30 * 24 * 3600 * 1000,
-    now_ms: int | None = None,
-    dry_run: bool = False,
-) -> dict:
-    """LOG CLEANUP — the metadata third of the maintenance lifecycle
-    (vacuum owns data files, checkpoint owns the seed): JSON commits
-    STRICTLY BELOW the checkpoint version whose mtime is past the
-    retention horizon delete, along with superseded checkpoint files
-    below it.  Commits at-or-above the checkpoint never go (the
-    checkpoint seeds replay from there); without a checkpoint NOTHING
-    goes — deleting un-checkpointed history would corrupt the table,
-    not trim it.  Version travel below the horizon then gates loudly
-    at read, exactly like production's delta.logRetentionDuration."""
-    log = LF._delta_log_dir(table_path)
-    _json_versions, ck_version, _latest = LF._log_versions(log)
-    audit = {
-        "files_deleted": 0,
-        "files_retained_young": 0,
-        "checkpoint_version": ck_version,
-    }
-    if ck_version is None:
-        return audit
-    now = _now_ms() if now_ms is None else int(now_ms)
-    horizon = now - int(retention_ms)
-    # JSON commits delete as a CONTIGUOUS PREFIX only: retaining a
-    # young v0 while deleting v1..v2 leaves a hole the replay's
-    # contiguity check refuses for EVERY read, latest included (r8 s3
-    # review) — stop at the first retained commit
-    sub_ck = [v for v in _json_versions if v < ck_version]
-    deleting = True
-    for v in sub_ck:
-        p = log / f"{v:020d}.json"
-        if deleting and p.stat().st_mtime_ns // 1_000_000 < horizon:
-            audit["files_deleted"] += 1
-            if not dry_run:
-                p.unlink()
-        else:
-            deleting = False
-            audit["files_retained_young"] += 1
-    # superseded checkpoint files below the current one are standalone
-    # (no contiguity concern) — per-file mtime retention
-    for p in sorted(log.iterdir()):
-        name = p.name
-        # '.'-prefixed entries include a crashed checkpoint write's
-        # temp file, whose name int-parses to '' (r8 s3 review)
-        if (
-            not p.is_file()
-            or name.startswith(".")
-            or name == "_last_checkpoint"
-            or ".checkpoint." not in name
-        ):
-            continue
-        if int(name.split(".")[0]) >= ck_version:
-            continue
-        if p.stat().st_mtime_ns // 1_000_000 >= horizon:
-            audit["files_retained_young"] += 1
-            continue
-        audit["files_deleted"] += 1
-        if not dry_run:
-            p.unlink()
-    return audit

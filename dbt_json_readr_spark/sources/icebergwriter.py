@@ -2417,27 +2417,3 @@ def remove_iceberg_ref(metadata_path: str, name: str) -> dict:
         meta_dir, version, json.dumps(meta, sort_keys=True, indent=1)
     )
     return {"metadata_path": str(dest), "name": name}
-
-
-def cleanup_iceberg_metadata(
-    metadata_path: str, keep_versions: int = 10, dry_run: bool = False
-) -> dict:
-    """Prune old ``v*.metadata.json`` files, keeping the newest
-    ``keep_versions`` (the spec's write.metadata.previous-versions-max
-    behavior).  Metadata files are SUPERSEDED copies of the table
-    state — snapshots, manifests, and data files live elsewhere, so
-    this deletes no history, only old top-level pointers; readers
-    pinned on a pruned pointer re-resolve from any kept one.  The
-    LATEST version never goes; keep_versions < 1 refuses."""
-    if keep_versions < 1:
-        raise LF.LakeFormatError("keep_versions must be >= 1")
-    meta_dir = Path(os.path.dirname(os.path.abspath(metadata_path)))
-    versions = _metadata_versions(meta_dir)
-    victims = versions[:-keep_versions]
-    if not dry_run:
-        for p in victims:
-            p.unlink()
-    return {
-        "files_deleted": len(victims),
-        "versions_kept": len(versions) - len(victims),
-    }

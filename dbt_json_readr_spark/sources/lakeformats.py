@@ -1409,58 +1409,6 @@ def read_delta_changes(
     return out.select(*out_cols)
 
 
-def delta_to_manifest(table_path: str, version: int | None = None) -> dict:
-    """A Delta snapshot re-expressed as a ManifestTable manifest dict
-    (schema json + file list) — the shape ``ManifestTable._manifest``
-    returns, so downstream tooling written against the homegrown format
-    (incremental view maintenance, partition pruning audits) can run
-    over an imported Delta snapshot unchanged."""
-    snap = delta_snapshot(table_path, version)
-    pcols = snap["partition_columns"]
-    if len(pcols) > 1:
-        raise LakeFormatGatedError(
-            "ManifestTable models at most one partition column; "
-            f"Delta table has {pcols}"
-        )
-    if snap["column_mapping_mode"] != "none":
-        # the exported manifest's schema would carry LOGICAL names over
-        # data files that store PHYSICAL (col-uuid) parquet columns, so
-        # downstream ManifestTable reads silently null-fill every
-        # column — and partitionValues are keyed by physical name, so a
-        # partitioned export crashes on the logical lookup (r7 advice)
-        raise LakeFormatGatedError(
-            "snapshot uses column mapping mode "
-            f"{snap['column_mapping_mode']!r}; ManifestTable manifests "
-            "carry logical names only and cannot express the "
-            "physical-name remap — read via read_delta_snapshot instead"
-        )
-    dv_files = [f["path"] for f in snap["files"] if f.get("deletionVector")]
-    if dv_files:
-        # a manifest is a FILE list — exporting one would silently
-        # resurrect every DV-deleted row in downstream tooling
-        raise LakeFormatGatedError(
-            "snapshot carries deletion vectors on "
-            f"{len(dv_files)} file(s) (e.g. {dv_files[0]}); ManifestTable "
-            "cannot express row-level deletes — compact first"
-        )
-    return {
-        "version": snap["version"],
-        "schema": snap["schema"].jsonValue(),
-        "partition_by": pcols[0] if pcols else None,
-        "files": [
-            {
-                "path": f["path"],
-                **(
-                    {"partition": f["partitionValues"][pcols[0]]}
-                    if pcols
-                    else {}
-                ),
-            }
-            for f in snap["files"]
-        ],
-    }
-
-
 # ------------------------------------------------------------ Iceberg
 
 _ICEBERG_PRIMITIVES = {
@@ -1878,102 +1826,15 @@ def write_avro_records(
     spark: SparkSession, dest: str, schema_json: str, records: list[dict]
 ) -> None:
     """Counterpart writer (fixtures / manifest export): spec-true
-    container files any Iceberg reader can open.
-
-    r10: encodes in pure Python (sources/avrocore.py, zero py4j
-    traffic) — the r9 jsonDecoder bridge still made 3 py4j calls per
-    record plus per-call JVM setup (~0.15 s/manifest, 68 manifests/s
-    in the r10 walk probe's authoring phase).  Byte-level
-    compatibility is pinned by test BOTH ways: the JVM DataFileReader
-    reads Python-written files, and the retained JVM writer
-    (_write_avro_records_jvm) produces records the Python reader
-    decodes identically."""
+    container files any Iceberg reader can open, encoded in pure Python
+    (``sources/avrocore.py``, no py4j traffic).  Byte-level
+    compatibility is pinned by test both ways: the JVM DataFileReader
+    reads Python-written files, and a JVM-written file decodes
+    identically through the Python reader."""
     from . import avrocore
 
     tmp = f"{dest}.tmp-{os.getpid()}"
     avrocore.write_container(tmp, schema_json, records)
-    os.replace(tmp, dest)
-
-
-def _write_avro_records_jvm(
-    spark: SparkSession, dest: str, schema_json: str, records: list[dict]
-) -> None:
-    """The r9 JVM-bridge writer, retained for the cross-implementation
-    parity pin and as a fallback authoring path.
-
-    py4j auto-unboxes java.lang.Long returns to Python ints, so
-    hand-built GenericData.Record fields lose their Java types and fail
-    avro's union resolution; routing each record through avro's OWN
-    json decoder sidesteps the bridge (types come from the schema).
-    The record → avro-JSON conversion runs over the PYTHON-parsed
-    schema, not the JVM one — the earlier per-record JVM schema
-    traversal cost ~100k py4j round-trips for a 400-file manifest
-    (57 s measured, r9); this form makes 3 py4j calls per record."""
-    jvm = spark._jvm
-    schema = jvm.org.apache.avro.Schema.Parser().parse(schema_json)
-    parsed = json.loads(schema_json)
-    named: dict[str, dict] = {}
-    _register_avro_names(parsed, named)
-
-    def _branch_label(branch) -> str:
-        if isinstance(branch, str):
-            return branch  # primitive or a named-type reference
-        t = branch.get("type")
-        if t in ("record", "enum", "fixed"):
-            return branch["name"]  # no namespaces in this repo's schemas
-        return t  # array / map
-
-    def _avro_json(sch, v):
-        if isinstance(sch, list):  # union
-            if v is None:
-                return None
-            # pick the branch the VALUE's type names — first-non-null
-            # guessing mis-encodes legal >2-branch unions like
-            # ["null", "string", "bytes"] (write-side twin of the r9
-            # decode-by-label review finding).  ONE selection rule
-            # shared with the binary encoder (avrocore._union_branch)
-            # so the two writers can never pick differently.
-            from . import avrocore
-
-            branch = sch[avrocore._union_branch(sch, v, named)]
-            return {_branch_label(branch): _avro_json(branch, v)}
-        if isinstance(sch, str):
-            if sch in named:
-                return _avro_json(named[sch], v)
-            if sch == "bytes" and isinstance(v, (bytes, bytearray)):
-                return bytes(v).decode("latin-1")
-            return v
-        t = sch["type"]
-        if t == "record":
-            return {
-                f["name"]: _avro_json(f["type"], (v or {}).get(f["name"]))
-                for f in sch["fields"]
-            }
-        if t == "array":
-            return [_avro_json(sch["items"], x) for x in (v or [])]
-        if t == "map":
-            return {k: _avro_json(sch["values"], x) for k, x in (v or {}).items()}
-        if t in ("bytes", "fixed") and isinstance(v, (bytes, bytearray)):
-            return bytes(v).decode("latin-1")
-        if isinstance(t, (list, dict)):
-            return _avro_json(t, v)
-        if t in named:
-            return _avro_json(named[t], v)
-        return v
-
-    reader = jvm.org.apache.avro.generic.GenericDatumReader(schema)
-    factory = jvm.org.apache.avro.io.DecoderFactory.get()
-    writer = jvm.org.apache.avro.file.DataFileWriter(
-        jvm.org.apache.avro.generic.GenericDatumWriter(schema)
-    )
-    tmp = f"{dest}.tmp-{os.getpid()}"
-    writer.create(schema, jvm.java.io.File(tmp))
-    try:
-        for d in records:
-            dec = factory.jsonDecoder(schema, json.dumps(_avro_json(parsed, d)))
-            writer.append(reader.read(None, dec))
-    finally:
-        writer.close()
     os.replace(tmp, dest)
 
 
@@ -2608,63 +2469,3 @@ def read_iceberg_snapshot(
             data = data.join(dels, on=cond, how="left_anti")
     data = data.select(*cols)
     return data if row_filter is None else data.filter(row_filter)
-
-
-def manifest_to_delta_log(manifest: dict, table_path: str) -> None:
-    """EXPORT: write a ManifestTable manifest as a single-commit Delta
-    ``_delta_log`` next to the (already-present) data files — the
-    inverse of ``delta_to_manifest``.  The emitted log is reader
-    protocol 1 / writer 2 JSON any Delta reader replays; data files are
-    referenced in place (no copy).  One commit = the snapshot; history
-    does not round-trip (ManifestTable keeps its own versions).
-    Refuses to export into a directory that already holds a Delta log:
-    silently overwriting commit 0 while later commits survive would
-    splice the exported snapshot into a stale history (r6 advice
-    finding)."""
-    log = Path(table_path) / "_delta_log"
-    log.mkdir(parents=True, exist_ok=True)
-    # ANY prior log artifact counts, not just *.json commits: a
-    # retention-expired table can hold only N.checkpoint.parquet +
-    # _last_checkpoint, and splicing a new commit 0 under that
-    # checkpoint is exactly the corruption this guard exists to stop
-    # (r7 close review tightened the r6-advice *.json-only glob).
-    existing = sorted(
-        p.name for p in log.iterdir() if not p.name.endswith(".tmp")
-    )
-    if existing:
-        raise LakeFormatError(
-            f"{log} already contains Delta log artifacts ({existing[0]}..."
-            f"{existing[-1]}) — refusing to write commit 0 into an "
-            "existing table; export to a fresh directory"
-        )
-    pcol = manifest.get("partition_by")
-    schema_json = manifest["schema"]
-    actions = [
-        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-        {
-            "metaData": {
-                "id": "dbt-json-readr-spark-export",
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(schema_json),
-                "partitionColumns": [pcol] if pcol else [],
-                "configuration": {},
-            }
-        },
-    ]
-    for f in manifest["files"]:
-        actions.append(
-            {
-                "add": {
-                    "path": f["path"],
-                    "partitionValues": (
-                        {pcol: str(f["partition"])} if pcol else {}
-                    ),
-                    "size": 0,
-                    "modificationTime": 0,
-                    "dataChange": True,
-                }
-            }
-        )
-    tmp = log / f"_commit-{os.getpid()}.tmp"
-    tmp.write_text("\n".join(json.dumps(a, sort_keys=True) for a in actions) + "\n")
-    os.replace(tmp, log / f"{0:020d}.json")

@@ -424,11 +424,16 @@ def topk_per_type(ev: DataFrame) -> DataFrame:
     )
 
 
-def cdc_latest(ev: DataFrame) -> DataFrame:
+def cdc_latest(ev: DataFrame, snapshot: DataFrame | None = None) -> DataFrame:
     """Last-write-wins per user: the retained row is the max
     (ts_micros, event_id) in a typed ValueState, an exact integer
     comparison, so the materialized view is independent of micro-batch
-    boundaries and arrival order (the CDC upsert invariant)."""
+    boundaries and arrival order (the CDC upsert invariant).
+
+    ``snapshot``, when given, warm-starts the state: it must have
+    columns (user_id, ts_us, event_id, value, n), one row per user, and
+    is passed as ``initialState``, which loads each key's ValueState
+    before the first batch."""
     prep(ev.sparkSession)
     import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (
@@ -440,6 +445,16 @@ def cdc_latest(ev: DataFrame) -> DataFrame:
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._st = handle.getValueState(
                 "latest", "ts_us LONG, event_id LONG, value DOUBLE, n LONG"
+            )
+
+        def handleInitialState(self, key, initialState, timerValues):  # noqa: N803
+            self._st.update(
+                (
+                    int(initialState["ts_us"].iloc[0]),
+                    int(initialState["event_id"].iloc[0]),
+                    float(initialState["value"].iloc[0]),
+                    int(initialState["n"].iloc[0]),
+                )
             )
 
         def handleInputRows(self, key, rows, timer_values):
@@ -476,33 +491,9 @@ def cdc_latest(ev: DataFrame) -> DataFrame:
         outputStructType="user_id long, n_updates long, last_event_id long, last_value double",
         outputMode="Update",
         timeMode="None",
+        initialState=None if snapshot is None else snapshot.groupBy("user_id"),
     )
 
-
-# ------------------------------------------------------- durable sink
-
-
-def run_to_parquet(df: DataFrame, path: str, name: str, mode: str = "update") -> None:
-    """Durable streaming sink via ``foreachBatch``: each micro-batch
-    lands as parquet under an epoch-keyed subdirectory, so a replayed
-    epoch overwrites its own output instead of duplicating it — the
-    exactly-once recipe for sinks without transactional append.  (The
-    table-format sinks commit natively instead: D25 appends through
-    ``deltawriter.write_delta`` with an idempotent txn marker.)"""
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{path}/epoch={epoch_id}")
-
-    q = (
-        df.writeStream.foreachBatch(_sink)
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", f"{path}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
 
 # ---------------------------------------------------------------- D5
 
@@ -1539,7 +1530,7 @@ def streaming_cdc_warmstart(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "m.ts_us", "m.event_id", "m.value", "n")
     )
     live = events_stream(spark, sf_dir).filter(F.col("event_id") % 2 == 1)
-    out = cdc_latest_warmstart(live.withWatermark("ts", "1 hour"), snap)
+    out = cdc_latest(live.withWatermark("ts", "1 hour"), snap)
     return _run_to_memory(out, "stream_cdc_warmstart", "update")
 
 
@@ -1547,73 +1538,6 @@ def _load_events_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import load as _load
 
     return _load(spark, sf_dir, "events")
-
-
-def cdc_latest_warmstart(ev: DataFrame, snapshot: DataFrame) -> DataFrame:
-    """``cdc_latest`` with ``initialState``: ``snapshot`` must have
-    columns (user_id, ts_us, event_id, value, n) — one row per user —
-    and is loaded into each key's ValueState before the first batch."""
-    prep(ev.sparkSession)
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _Warm(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState(
-                "latest", "ts_us LONG, event_id LONG, value DOUBLE, n LONG"
-            )
-
-        def handleInitialState(self, key, initialState, timerValues):  # noqa: N803
-            self._st.update(
-                (
-                    int(initialState["ts_us"].iloc[0]),
-                    int(initialState["event_id"].iloc[0]),
-                    float(initialState["value"].iloc[0]),
-                    int(initialState["n"].iloc[0]),
-                )
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            ts_us, eid, val, n = (
-                self._st.get() if self._st.exists() else (-1, -1, 0.0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                for t, e, v in zip(
-                    pdf["ts_us"].astype("int64"),
-                    pdf["event_id"].astype("int64"),
-                    pdf["value"].astype("float64"),
-                ):
-                    if (int(t), int(e)) > (ts_us, eid):
-                        ts_us, eid, val = int(t), int(e), float(v)
-            self._st.update((ts_us, eid, float(val), n))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_updates": [n],
-                    "last_event_id": [eid],
-                    "last_value": [val],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    keyed = ev.select(
-        "user_id", F.unix_micros("ts").alias("ts_us"), "event_id", "value"
-    )
-    return keyed.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_Warm(),
-        outputStructType=(
-            "user_id long, n_updates long, last_event_id long, last_value double"
-        ),
-        outputMode="Update",
-        timeMode="None",
-        initialState=snapshot.groupBy("user_id"),
-    )
 
 
 STREAMING_CDC_WARMSTART_SQL = """

@@ -525,24 +525,6 @@ def test_refs_tag_read_and_expire_protection(spark, tmp_path):
         LF.read_iceberg_snapshot(spark, r["metadata_path"], ref="v1")
 
 
-def test_cleanup_iceberg_metadata(spark, tmp_path):
-    """Old v*.metadata.json pointers prune to keep_versions; the kept
-    latest still reads the full table and time-travels its snapshots."""
-    tbl = str(tmp_path / "t")
-    df = spark.createDataFrame([(i, float(i)) for i in range(8)], "id long, v double")
-    r = None
-    for k in range(4):
-        r = IW.write_iceberg(spark, df.filter(F.col("id") % 4 == k), tbl)
-    aud = IW.cleanup_iceberg_metadata(r["metadata_path"], keep_versions=2)
-    assert aud == {"files_deleted": 2, "versions_kept": 2}
-    latest = _latest_meta(tbl)
-    assert LF.read_iceberg_snapshot(spark, latest).count() == 8
-    # snapshots (history) are untouched — only old pointers died
-    assert LF.read_iceberg_snapshot(spark, latest, snapshot_id=1).count() == 2
-    with pytest.raises(LF.LakeFormatError, match=">= 1"):
-        IW.cleanup_iceberg_metadata(latest, keep_versions=0)
-
-
 def test_compact_preserves_required_columns(spark, tmp_path):
     """ADVICE r8 (medium): Spark file reads force every column nullable,
     so compacting a table created with a required (non-nullable) column

@@ -104,7 +104,7 @@ def test_minhash_verify_paths_agree(spark):
     sb = {(r.doc_a, r.doc_b, r.jaccard) for r in b.collect()}
     assert sa == sb and sa
 
-    shingles = D.shingle_rows(docs(spark, rows))
+    shingles = D._shingle_rows(docs(spark, rows), 5)
     per_doc = D._per_doc_sketch(shingles, 16)
     cand = D._cand_from_mins(per_doc.drop("sh"), 16, 4, D.DEFAULT_BUCKET_CAP)
     by_shape = {
@@ -275,11 +275,6 @@ def test_multimodal_feature_extraction_is_deterministic(spark):
 
 def _expected_modality(doc_id: int) -> str:
     return ["image", "audio", "video"][doc_id % 3]
-
-
-def test_multimodal_decode_stub_raises(spark):
-    with pytest.raises(NotImplementedError):
-        M.decode_media(b"bytes", "image", {})
 
 
 def test_png_synth_decode_roundtrip():
@@ -1033,7 +1028,7 @@ def test_containment_verify_shapes_agree_and_auto_gate_switches(spark):
     gate actually switches — the default carries broadcast hints in the
     analyzed plan, cap 0 carries none."""
     from dbt_json_readr_spark.operators import dedup as D
-    from dbt_json_readr_spark.plans import explain
+    from tests import plan_utils
 
     base = "the quick brown fox jumps over the lazy dog number"
     rows = [(i, f"{base} {i % 3} repeated tail segment") for i in range(1, 25)]
@@ -1053,8 +1048,8 @@ def test_containment_verify_shapes_agree_and_auto_gate_switches(spark):
     assert bcast == narrow
     # the gate's shape choice is visible as broadcast hints: present on
     # the broadcast shape, absent on narrow
-    assert explain.broadcast_hint_subtrees(bcast_df)
-    assert not explain.broadcast_hint_subtrees(narrow_df)
+    assert plan_utils.broadcast_hint_subtrees(bcast_df)
+    assert not plan_utils.broadcast_hint_subtrees(narrow_df)
 
 
 def test_triangle_stats_matches_bruteforce_on_known_graphs(spark):
@@ -1170,13 +1165,13 @@ def test_probe_count_keys_on_the_frame_not_its_files(spark, sf_dir):
     a second probe of the same raw table, loaded again, runs no SQL
     execution."""
     from dbt_json_readr_spark.functions import vectors as V
-    from dbt_json_readr_spark.plans import explain
     from dbt_json_readr_spark.sources.tables import load
+    from tests import plan_utils
 
     embs = load(spark, sf_dir, "embeddings")
     n = V.probe_count(embs)
     some = embs.filter(F.col("vec_id") % 2 == 0)
     assert V.probe_count(some) == some.count() < n
-    mark = explain.sql_execution_mark(spark)
+    mark = plan_utils.sql_execution_mark(spark)
     assert V.probe_count(load(spark, sf_dir, "embeddings")) == n
-    assert explain.sql_executions_since(spark, mark) == []
+    assert plan_utils.sql_executions_since(spark, mark) == []

@@ -7,8 +7,8 @@ from __future__ import annotations
 import pytest
 
 from dbt_json_readr_spark import registry
-from dbt_json_readr_spark.plans import explain
 from dbt_json_readr_spark.plans.tpch import q5_region_revenue, q6_forecast_revenue
+from tests import plan_utils
 
 SF = "/root/testdata/sf0.001"
 
@@ -22,12 +22,12 @@ SKIP_PLAN = {"streaming_windowed_agg", "streaming_sessionization", "streaming_de
 
 def test_q6_filters_pushed_to_scan(spark):
     df = q6_forecast_revenue(spark, SF)
-    assert explain.has_pushed_filters(df)
+    assert plan_utils.has_pushed_filters(df)
 
 
 def test_q6_scan_prunes_columns(spark):
     df = q6_forecast_revenue(spark, SF)
-    schema = explain.scan_read_schema(df, "lineitem")
+    schema = plan_utils.scan_read_schema(df, "lineitem")
     assert schema  # found the scan
     # only the 4 columns the query touches — not the 11-column table
     for col in ("l_shipdate", "l_discount", "l_quantity", "l_extendedprice"):
@@ -36,7 +36,7 @@ def test_q6_scan_prunes_columns(spark):
 
 
 def test_q5_broadcasts_dimension_tables(spark):
-    assert explain.has_broadcast_join(q5_region_revenue(spark, SF))
+    assert plan_utils.has_broadcast_join(q5_region_revenue(spark, SF))
 
 
 def test_no_forced_broadcast_of_scale_dependent_sides(spark):
@@ -59,7 +59,7 @@ def test_no_forced_broadcast_of_scale_dependent_sides(spark):
         tpch.q18_large_orders: 0,
     }
     for fn, cust_allowed in cases.items():
-        subs = explain.broadcast_hint_subtrees(fn(spark, SF))
+        subs = plan_utils.broadcast_hint_subtrees(fn(spark, SF))
         with_orders = [s for s in subs if "o_orderkey" in s or "o_custkey" in s]
         assert not with_orders, f"{fn.__name__}: forced broadcast hint over orders"
         with_cust = [s for s in subs if "c_custkey" in s]
@@ -67,7 +67,7 @@ def test_no_forced_broadcast_of_scale_dependent_sides(spark):
             f"{fn.__name__}: forced broadcast hint over customer-bearing side"
         )
     # q3's sanctioned hint really is the filtered customer dim, nothing more
-    q3_subs = explain.broadcast_hint_subtrees(tpch.q3_shipping_priority(spark, SF))
+    q3_subs = plan_utils.broadcast_hint_subtrees(tpch.q3_shipping_priority(spark, SF))
     cust_sub = [s for s in q3_subs if "c_custkey" in s]
     assert len(cust_sub) == 1 and "c_mktsegment" in cust_sub[0]
 
@@ -77,9 +77,9 @@ def test_no_forced_broadcast_of_scale_dependent_sides(spark):
 )
 def test_no_row_python_in_any_plan(spark, key):
     df = registry.queries()[key](spark, SF)
-    assert explain.python_eval_nodes(df) == []
+    assert plan_utils.python_eval_nodes(df) == []
     if key not in ARROW_ALLOWED:
-        assert explain.arrow_eval_nodes(df) == []
+        assert plan_utils.arrow_eval_nodes(df) == []
 
 
 def test_new_llm_ops_scan_and_bucket_contracts(spark):
@@ -159,7 +159,7 @@ def test_kmeans_single_scan_and_bounded_cache(spark):
     lineage re-derives everything from the scan (measured 9 scans / 60
     exchanges)."""
     from dbt_json_readr_spark.plans import llm
-    from dbt_json_readr_spark.plans.explain import live_parquet_scan_count
+    from tests.plan_utils import live_parquet_scan_count
 
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
     df = llm.embedding_kmeans(spark, SF)
@@ -213,7 +213,7 @@ def test_new_audit_ops_broadcast_their_small_sides(spark):
         llm.ann_ivf_kmeans_topk,           # centroids + probed queries broadcast
     ):
         df = fn(spark, SF)
-        assert explain.has_broadcast_join(df), fn.__name__
+        assert plan_utils.has_broadcast_join(df), fn.__name__
 
 
 def test_zone_map_and_skew_audits_are_single_scan(spark):
@@ -243,7 +243,7 @@ def test_r4_new_op_plan_contracts(spark):
     """
     from dbt_json_readr_spark.plans import events as ev
     from dbt_json_readr_spark.plans import llm, tpch
-    from dbt_json_readr_spark.plans.explain import formatted_plan, has_broadcast_join
+    from tests.plan_utils import formatted_plan, has_broadcast_join
 
     sparse = llm.doc_sparse_cosine_topk(spark, SF)
     p = formatted_plan(sparse)
@@ -252,7 +252,7 @@ def test_r4_new_op_plan_contracts(spark):
     # and it sits beneath the cached `weighted` frame — the pair join
     # itself is an equi-join on the term
     assert "CartesianProduct" not in p
-    from dbt_json_readr_spark.session import live_cached
+    from tests.plan_utils import live_cached
 
     assert len(live_cached("sparse_cosine", spark)) == 2
 
@@ -357,7 +357,7 @@ def test_largest_shuffles_are_adaptive_and_skew_eligible(spark, key):
     corpus columns)."""
     df = registry.queries()[key](spark, "/root/testdata/sf0.01")
     assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
-    for sub in explain.broadcast_hint_subtrees(df):
+    for sub in plan_utils.broadcast_hint_subtrees(df):
         assert "documents.parquet" not in sub and "embeddings.parquet" not in sub, (
             f"{key}: forced broadcast hint over a corpus-scale side"
         )
@@ -489,9 +489,9 @@ def test_lineage_key_decodes_each_artifact_once(spark, key):
 
     from dbt_json_readr_spark.plans import dbt
 
-    mark = explain.sql_execution_mark(spark)
+    mark = plan_utils.sql_execution_mark(spark)
     getattr(dbt, key)(spark, SF).collect()
-    scans = explain.file_scans(explain.sql_executions_since(spark, mark))
+    scans = plan_utils.file_scans(plan_utils.sql_executions_since(spark, mark))
     by_file: Counter = Counter()
     for location, n in scans.items():
         by_file[PurePosixPath(location).name] += n
@@ -526,14 +526,14 @@ def _jobs_and_executions(spark, group: str, fn):
     jobs it ran, the SQL executions it started).  The group alone: a job
     description would replace the executions' call-site descriptions."""
     sc = spark.sparkContext
-    mark = explain.sql_execution_mark(spark)
+    mark = plan_utils.sql_execution_mark(spark)
     sc.setLocalProperty("spark.jobGroup.id", group)
     try:
         out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = set(sc.statusTracker().getJobIdsForGroup(group))
-    return out, jobs, explain.sql_executions_since(spark, mark)
+    return out, jobs, plan_utils.sql_executions_since(spark, mark)
 
 
 def _op_names(execution) -> list:
@@ -702,7 +702,8 @@ def test_lineage_rounds_fall_back_to_the_planner_without_a_threshold(spark):
 def test_rotate_cached_empty_frames_release_the_slot(spark):
     """A sweep that raises before its first pin hands ``[]`` to its slot;
     that must release the previous sweep's frames, not keep them."""
-    from dbt_json_readr_spark.session import live_cached, rotate_cached
+    from dbt_json_readr_spark.session import rotate_cached
+    from tests.plan_utils import live_cached
 
     jsc = spark.sparkContext._jsc
     base = jsc.getPersistentRDDs().size()
@@ -753,10 +754,10 @@ def test_dedup_verify_plan_and_build_jobs_pinned(spark, key):
     n_intersect, n_side_pairs, n_jobs = _VERIFY_PINS[key]
     fn = getattr(llm, key)
     fn(spark, SF)
-    mark = explain.sql_execution_mark(spark)
+    mark = plan_utils.sql_execution_mark(spark)
     df = fn(spark, SF)
-    ran = explain.sql_executions_since(spark, mark)
-    plan = explain.formatted_plan(df)
+    ran = plan_utils.sql_executions_since(spark, mark)
+    plan = plan_utils.formatted_plan(df)
     assert plan.count("array_intersect") == n_intersect
     sides = [s for s in _broadcast_inputs(plan) if s in _SET_SIDES]
     assert len(sides) == 2 * n_side_pairs, f"{key}: broadcast sides {sides}"

@@ -165,6 +165,17 @@ import zlib as _zlib
 from dbt_json_readr_spark.operators import multimodal as MM
 
 
+def _jpeg_decoded_shade(v: int) -> int:
+    """Closed-form lossy round-trip of a solid 8×8 block of shade v:
+    F00 = 8·(v−128); dc_q = round_away(F00/Q₀₀); pixel =
+    clamp(round_away(dc_q·Q₀₀/8)+128).  With Q₀₀=16 the second round
+    is exact (2·dc_q)."""
+    q00 = MM._JPEG_QTBL[0]
+    dc_q = MM._iround_away(8 * (v - 128), q00)
+    rec = MM._iround_away(dc_q * q00, 8) + 128
+    return max(0, min(255, rec))
+
+
 def _encode_png_gray(pix: list[list[int]], ftypes: list[int]) -> bytes:
     """Reference grayscale PNG encoder applying a given filter type per
     scanline (the inverse of multimodal._unfilter_scanline)."""
@@ -364,7 +375,7 @@ def test_jpeg_decode_matches_closed_form_for_any_doc(doc_id):
 
     got = M.decode_jpeg(M.synth_jpeg(doc_id))
     shades = [
-        M.jpeg_decoded_shade(M.jpeg_block_value(doc_id, bx, by))
+        _jpeg_decoded_shade(M.jpeg_block_value(doc_id, bx, by))
         for by in range(2)
         for bx in range(2)
     ]
@@ -553,7 +564,7 @@ def test_avi_decode_matches_closed_form_for_any_doc(doc_id):
     got = M.decode_avi(M.synth_avi(doc_id))
     nf = M.avi_frame_count(doc_id)
     shades = [
-        M.jpeg_decoded_shade(M.jpeg_block_value(doc_id, bx, by, f))
+        _jpeg_decoded_shade(M.jpeg_block_value(doc_id, bx, by, f))
         for f in range(nf)
         for by in range(2)
         for bx in range(2)

@@ -1,10 +1,11 @@
 """Registry gate-window contract.
 
 The driver records CORRECTNESS rows for the first 50 keys of
-``queries()`` in insertion order (observed in round 1); registration
-order therefore IS the correctness gate.  These tests pin (a) that the
-keys needing a driver entry this round sit inside the window and
-(b) that every key has an oracle unless explicitly declared rows-only.
+``queries()`` in insertion order, so that order IS the correctness
+gate.  These tests pin (a) that the order is the one ``gate_order``
+computes from the committed CORRECTNESS files, and that it rotates
+every key through the window, and (b) that every key has an oracle
+unless explicitly declared rows-only.
 """
 
 from __future__ import annotations
@@ -14,16 +15,28 @@ from dbt_json_readr_spark import registry
 GATE_WINDOW = 50
 
 # Keys allowed to have no DuckDB oracle (rows-only driver check).
-# Empty since r4: multimodal_stub gained a digit-exact md5-replay oracle,
-# so every registered key is value-verified.
+# Empty: every registered key is value-verified.
 ROWS_ONLY: set[str] = set()
 
 
 def test_priority_keys_inside_gate_window():
+    """queries() leads with the keys whose newest green driver row is
+    oldest, as computed from the committed CORRECTNESS files."""
     keys = list(registry.queries())
-    window = set(keys[:GATE_WINDOW])
-    missing = [k for k in registry._GATE_PRIORITY if k not in window]
-    assert not missing, f"priority keys fell out of the 50-entry gate window: {missing}"
+    assert registry.GATE_WINDOW == GATE_WINDOW
+    assert keys == registry.gate_order(list(registry._REGISTRY), registry._correctness_rounds())
+    rounds = registry._correctness_rounds()
+
+    def green(row: dict) -> bool:
+        ok = row.get("rows_match") and row.get("schema_match") and row.get("hash_match")
+        return bool(ok) and row.get("err") is None
+
+    newest = {
+        k: max((r for r, rows in rounds.items() if green(rows.get(k, {}))), default=-1)
+        for k in keys
+    }
+    window, rest = keys[:GATE_WINDOW], keys[GATE_WINDOW:]
+    assert max(newest[k] for k in window) <= min(newest[k] for k in rest)
 
 
 def test_registry_complete_and_oracled():
@@ -41,22 +54,44 @@ def test_entry_module_exports_registry():
     assert set(entry.oracle_sql()) == set(registry.oracle_sql())
 
 
+def _row(green: bool = True, **kw) -> dict:
+    row = {"rows_match": green, "schema_match": True, "hash_match": True, "err": None}
+    row.update(kw)
+    return row
+
+
 def test_new_round_keys_are_registered_and_in_window():
-    """The r13 gate window must lead with the 17 r12-rewritten keys
-    that lack an r11/r12 driver row, the never-gated WAP key, and
-    every key this round's diff touches (VERDICT r12 item 1) — a key
-    listed but never registered would silently fall out of the window,
-    the exact 'landed after the window locked' failure VERDICT r5
-    flagged."""
-    keys = list(registry.queries())
-    window = set(keys[:GATE_WINDOW])
-    required = (
-        registry._R13_REWRITTEN + registry._R13_NEVER + registry._R13_TOUCHED
-    )
-    for k in required:
-        assert k in registry._REGISTRY, f"r13 gate key never registered: {k}"
-        assert k in window, f"required r13 gate key outside the window: {k}"
-    assert len(window) == GATE_WINDOW
+    """gate_order on synthetic rows: oldest green row first, a key with
+    no green row (new, or only ever failing) ahead of all of them, ties
+    in registration order, unknown names ignored, and registration
+    order when there are no rows at all.  Then a rotation: replaying
+    the driver round after round, every registered key gets a driver
+    row within ⌈keys / window⌉ rounds."""
+    keys = ["a", "b", "c", "d", "e", "f"]
+    rounds = {
+        3: {"a": _row(), "b": _row(), "c": _row(), "gone": _row()},
+        5: {"a": _row(), "c": _row(False), "d": _row(err="boom"), "e": _row()},
+        7: {"b": _row(), "e": _row(hash_match=False)},
+    }
+    # d and f were never green; c last green in 3, a and e in 5, b in 7
+    assert registry.gate_order(keys, rounds) == ["d", "f", "c", "a", "e", "b"]
+    assert registry.gate_order(keys, {}) == keys
+
+    import math
+
+    reg = list(registry._REGISTRY)
+    history: dict[int, dict[str, dict]] = {}
+    last_row = {k: None for k in reg}
+    budget = math.ceil(len(reg) / GATE_WINDOW)
+    for rnd in range(1, 4 * budget + 1):
+        window = registry.gate_order(reg, history)[:GATE_WINDOW]
+        assert len(window) == GATE_WINDOW
+        history[rnd] = {k: _row() for k in window}
+        for k in window:
+            last_row[k] = rnd
+        if rnd >= budget:
+            stale = [k for k, r in last_row.items() if r is None or rnd - r >= budget]
+            assert not stale, f"round {rnd}: no driver row for {budget} rounds: {stale[:5]}"
 
 
 def test_survey_section2_matches_registry():

@@ -1,6 +1,7 @@
-"""E-plumbing tests (SURVEY.md §2 E): generic readers quarantine corrupt
-records instead of failing; partitioned writes prune directories;
-bucketed writes make the key join exchange-free."""
+"""E-plumbing tests (SURVEY.md §2 E): partitioned writes prune
+directories, the artifact reader scales over many files, the manifest
+commit protocol, the Python data source, and the Delta/Iceberg read
+bridges."""
 
 from __future__ import annotations
 
@@ -11,42 +12,6 @@ from pyspark.sql import types as T
 
 from dbt_json_readr_spark import sinks
 from dbt_json_readr_spark.plans.explain import formatted_plan
-from dbt_json_readr_spark.sources import files
-
-SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("v", T.DoubleType()),
-    ]
-)
-
-
-def test_read_csv_quarantines_corrupt_rows(spark, tmp_path):
-    p = tmp_path / "data.csv"
-    p.write_text("id,name,v\n1,a,1.5\nnot_a_number,b,2.5\n3,c,3.5\n")
-    df = files.read_csv(spark, str(p), SCHEMA).cache()
-    ok = df.filter(F.col(files.CORRUPT_COL).isNull())
-    bad = df.filter(F.col(files.CORRUPT_COL).isNotNull())
-    assert {r.id for r in ok.collect()} == {1, 3}
-    assert bad.count() == 1
-
-
-def test_read_jsonl_explicit_schema(spark, tmp_path):
-    p = tmp_path / "data.jsonl"
-    p.write_text('{"id": 1, "name": "a", "v": 1.5}\n{"id": 2, "name": "b", "v": 2.5}\n')
-    df = files.read_jsonl(spark, str(p), SCHEMA)
-    assert [tuple(r)[:3] for r in df.orderBy("id").collect()] == [
-        (1, "a", 1.5),
-        (2, "b", 2.5),
-    ]
-
-
-def test_read_json_multiline_whole_file(spark, tmp_path):
-    p = tmp_path / "doc.json"
-    p.write_text('[\n  {"id": 1, "name": "a", "v": 1.0},\n  {"id": 2, "name": "b", "v": 2.0}\n]\n')
-    df = files.read_json_multiline(spark, str(p), SCHEMA)
-    assert df.count() == 2
 
 
 def test_write_partitioned_lays_out_pruneable_dirs(spark, tmp_path):
@@ -66,37 +31,6 @@ def test_write_partitioned_lays_out_pruneable_dirs(spark, tmp_path):
     assert back.count() == 1
 
 
-def test_write_bucketed_join_is_exchange_free(spark, tmp_path):
-    # in-memory catalog: a table dir can outlive the catalog entry (new
-    # session) — clear both so overwrite semantics start clean
-    import shutil
-
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for t in ("t_bl", "t_br"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
-    left = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("a")
-    )
-    right = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("b")
-    )
-    sinks.write_bucketed(left, "t_bl", ["k"], n_buckets=8, sort_cols=["k"])
-    sinks.write_bucketed(right, "t_br", ["k"], n_buckets=8, sort_cols=["k"])
-    # force the sort-merge path (tiny test tables would broadcast) to
-    # show the bucketing removes the shuffle exchanges
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("t_bl").join(spark.table("t_br"), "k")
-        plan = formatted_plan(joined)
-        assert "Exchange hashpartitioning" not in plan, plan
-        assert "SortMergeJoin" in plan, plan
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-
-
 def test_artifact_reader_scales_over_many_files(spark, tmp_path):
     """The 100 TB posture: a glob of N manifest files parses as N rows
     ×nodes in ONE distributed scan (reference reads exactly one file)."""
@@ -112,181 +46,6 @@ def test_artifact_reader_scales_over_many_files(spark, tmp_path):
     assert many.count() == 3 * one.count()
     # rows from different files are distinguished by artifact_path
     assert many.select("artifact_path").distinct().count() == 3
-
-
-def test_write_training_shards_layout_and_order(spark, tmp_path):
-    """Shard dirs must exist per shard value, every doc lands in the
-    shard its hash dictates, and rows inside a shard file are stored in
-    the deterministic shuffle-hash order (read back without sorting)."""
-    from pyspark.sql import functions as F
-
-    from dbt_json_readr_spark.functions.hashing import hash64
-    from dbt_json_readr_spark.sinks import write_training_shards
-
-    docs = spark.range(200).select(
-        F.col("id").alias("doc_id"), F.concat(F.lit("t"), F.col("id")).alias("text")
-    )
-    out = str(tmp_path / "shards")
-    write_training_shards(docs, out, n_shards=4)
-
-    back = spark.read.parquet(out)
-    assert back.count() == 200
-    assert back.select("shard").distinct().count() == 4
-    expect = docs.select(
-        "doc_id",
-        (hash64(F.col("doc_id").cast("string"), "shuffle") % 4).cast("int").alias("shard"),
-    )
-    mismatch = back.select("doc_id", "shard").exceptAll(expect).count()
-    assert mismatch == 0
-    # within one shard file, rows must already be in hash order
-    one = back.filter(F.col("shard") == back.select("shard").first().shard)
-    ids = [r.doc_id for r in one.select("doc_id").collect()]
-    hashes = {
-        r.doc_id: r.h
-        for r in docs.select(
-            "doc_id", hash64(F.col("doc_id").cast("string"), "shuffle").alias("h")
-        ).collect()
-    }
-    assert ids == sorted(ids, key=lambda d: (hashes[d], d))
-
-
-def test_read_orc_roundtrip_with_pushdown(spark, tmp_path):
-    """ORC roundtrip keeps values and the scan accepts pushed filters
-    (PushedFilters shows up in the formatted plan like parquet)."""
-    src = spark.range(100).select(
-        F.col("id"), (F.col("id") % 7).alias("k"), (F.col("id") * 2.5).alias("v")
-    )
-    path = str(tmp_path / "orc")
-    src.write.orc(path)
-    back = files.read_orc(spark, path, src.schema)
-    assert sorted(tuple(r) for r in back.collect()) == sorted(
-        tuple(r) for r in src.collect()
-    )
-    plan = formatted_plan(back.filter(F.col("k") == 3).select("id"))
-    assert "PushedFilters: [" in plan and "EqualTo(k,3)" in plan
-
-
-def test_read_text_lines_and_wholetext(spark, tmp_path):
-    (tmp_path / "a.txt").write_text("line one\nline two\n")
-    (tmp_path / "b.txt").write_text("solo doc\nsecond line\n")
-    lines = files.read_text(spark, str(tmp_path))
-    assert lines.count() == 4
-    assert set(lines.columns) == {"value", "file"}
-    whole = files.read_text(spark, str(tmp_path), wholetext=True)
-    rows = {r.file.rsplit("/", 1)[-1]: r.value for r in whole.collect()}
-    assert rows["b.txt"] == "solo doc\nsecond line\n"
-
-
-def test_sql_front_door_runs_pushdown_queries(spark, sf_dir):
-    """spark.sql over the registered views must behave exactly like the
-    DataFrame API (same scans underneath): a q6-shaped SQL query gets
-    the same answer as the B4 plan."""
-    from dbt_json_readr_spark import sql as Q
-    from dbt_json_readr_spark.plans.tpch import q6_forecast_revenue
-
-    views = Q.register_tables(spark, sf_dir)
-    assert "lineitem" in views and "documents" in views
-    got = Q.sql(
-        spark,
-        """
-        SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                        * CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-          AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-          AND l_discount BETWEEN 0.03 AND 0.05
-          AND l_quantity < 24
-        """,
-    ).collect()
-    ref = q6_forecast_revenue(spark, sf_dir).collect()
-    assert len(got) == len(ref) == 1
-
-
-def test_sql_front_door_pipe_syntax(spark, sf_dir):
-    """Spark 4's SQL pipe syntax (`|>`) works against the registered
-    views and produces the same rows as the classic formulation — the
-    front door supports both dialects over the identical scans."""
-    from dbt_json_readr_spark import sql as Q
-
-    Q.register_tables(spark, sf_dir)
-    piped = Q.sql(
-        spark,
-        """
-        FROM orders
-        |> WHERE o_orderstatus = 'F'
-        |> AGGREGATE count(*) AS n GROUP BY o_orderpriority
-        |> ORDER BY o_orderpriority
-        """,
-    ).collect()
-    classic = Q.sql(
-        spark,
-        """
-        SELECT o_orderpriority, count(*) AS n FROM orders
-        WHERE o_orderstatus = 'F'
-        GROUP BY o_orderpriority ORDER BY o_orderpriority
-        """,
-    ).collect()
-    assert [tuple(r) for r in piped] == [tuple(r) for r in classic] and len(piped) > 0
-
-
-def test_sql_front_door_artifact_views(spark):
-    from dbt_json_readr_spark import sql as Q
-    from dbt_json_readr_spark.plans.dbt import FIXTURE_TARGET
-
-    views = Q.register_artifacts(spark, FIXTURE_TARGET)
-    n = Q.sql(spark, "SELECT count(*) AS n FROM dbt_nodes").collect()[0].n
-    assert n == 16  # 10 models + 6 schema tests (r4 fixture)
-    joined = Q.sql(
-        spark,
-        """
-        SELECT r.status, count(*) AS n
-        FROM dbt_run_results r JOIN dbt_nodes n USING (unique_id)
-        GROUP BY r.status
-        """,
-    ).collect()
-    assert sum(r.n for r in joined) > 0
-
-
-def test_range_sorted_layout_has_disjoint_file_ranges(spark, sf_dir, tmp_path):
-    """write_range_sorted must produce files whose [min, max] spans on
-    the sort column do not overlap — the zone-map property that lets a
-    predicate skip whole files from footer statistics (the remedy for
-    a zone_map_skipping_audit showing skip_rate ≈ 0)."""
-    from pyspark.sql import functions as F
-
-    from dbt_json_readr_spark.sinks import write_range_sorted
-    from dbt_json_readr_spark.sources.tables import load
-
-    li = load(spark, sf_dir, "lineitem")
-    out = str(tmp_path / "li_sorted")
-    write_range_sorted(li, out, "l_shipdate", n_files=8)
-
-    back = spark.read.parquet(out)
-    assert back.count() == li.count()
-    spans = (
-        back.groupBy(F.input_file_name().alias("f"))
-        .agg(F.min("l_shipdate").alias("lo"), F.max("l_shipdate").alias("hi"))
-        .collect()
-    )
-    assert len(spans) >= 2
-    ordered = sorted(spans, key=lambda r: r.lo)
-    for a, b in zip(ordered, ordered[1:]):
-        assert a.hi <= b.lo, f"overlapping file ranges: {a} vs {b}"
-
-
-def test_parquet_schema_evolution_merges_columns(spark, tmp_path):
-    from dbt_json_readr_spark.sources.files import read_parquet_evolving
-
-    v1 = str(tmp_path / "v1")
-    v2 = str(tmp_path / "v2")
-    spark.createDataFrame([(1, "a")], "id long, name string").write.parquet(v1)
-    spark.createDataFrame(
-        [(2, "b", 9.5)], "id long, name string, score double"
-    ).write.parquet(v2)
-    df = read_parquet_evolving(spark, v1, v2)
-    assert set(df.columns) == {"id", "name", "score"}
-    rows = {r.id: r for r in df.collect()}
-    assert rows[1].score is None and rows[2].score == 9.5
 
 
 def test_observed_metrics_ride_along_with_the_action(spark, sf_dir):
@@ -468,18 +227,6 @@ def test_manifest_commit_partitioned_prune_and_replace(spark, tmp_path):
     day1_v1 = {f["path"] for f in m1["files"] if f["partition"] == "2024-01-01"}
     day1_v2 = {f["path"] for f in m2["files"] if f["partition"] == "2024-01-01"}
     assert day1_v1 == day1_v2 and day1_v1, "untouched partition was rewritten"
-
-
-def test_read_binary_dir_rows_and_content(spark, tmp_path):
-    """binaryFile ingestion: one row per matched file, exact bytes in
-    `content`, non-matching files pruned at listing time."""
-    (tmp_path / "a.png").write_bytes(b"\x89PNG-fake-a")
-    (tmp_path / "b.png").write_bytes(b"\x89PNG-fake-bb")
-    (tmp_path / "skip.txt").write_text("not media")
-    df = files.read_binary_dir(spark, str(tmp_path), glob="*.png")
-    rows = {r.path.split("/")[-1]: bytes(r.content) for r in df.collect()}
-    assert rows == {"a.png": b"\x89PNG-fake-a", "b.png": b"\x89PNG-fake-bb"}
-    assert df.filter("length > 11").count() == 1
 
 
 def test_manifest_commit_compact_reduces_files_atomically(spark, tmp_path):
@@ -707,8 +454,7 @@ def test_manifest_commit_rolls_forward_past_unswapped_pointer(spark, tmp_path):
 def test_manifest_commit_schema_evolution_null_fills_old_files(spark, tmp_path):
     """Appending a batch with an extra column publishes the union
     schema; files written before the evolution read back with the new
-    column null-filled (read_parquet_evolving's contract at the
-    manifest level)."""
+    column null-filled by the union read schema."""
     from pyspark.sql import functions as F
 
     from dbt_json_readr_spark.manifest_commit import ManifestTable
@@ -763,12 +509,6 @@ def test_delta_bridge_gates_and_time_travel(spark, tmp_path):
     v2 = {f["path"] for f in LF.delta_snapshot(str(LP.DELTA_DIR))["files"]}
     assert v1 == v0 | {"year=2025/part-1.parquet"}
     assert "year=2024/part-0.parquet" in v0 and "year=2024/part-0.parquet" not in v2
-
-    # ManifestTable-shaped export
-    m = LF.delta_to_manifest(str(LP.DELTA_DIR))
-    assert m["partition_by"] == "year"
-    assert {f["partition"] for f in m["files"]} == {"2024", "2025"}
-    assert m["schema"]["type"] == "struct"
 
     # reader-protocol 3 with an UNIMPLEMENTED feature gates loudly
     # (deletionVectors, columnMapping and — since r9 — v2Checkpoint are
@@ -998,34 +738,6 @@ def test_iceberg_data_walk_gates(spark, tmp_path, monkeypatch):
         LF.read_iceberg_snapshot(spark, str(LP.ICEBERG_META))
 
 
-def test_manifest_to_delta_round_trip(spark, tmp_path):
-    """Bridge closure: ManifestTable snapshot → exported _delta_log →
-    read back through the Delta bridge equals the original table (and
-    the exported manifest dict round-trips the other way too)."""
-    from pyspark.sql import functions as F
-
-    from dbt_json_readr_spark.manifest_commit import ManifestTable
-    from dbt_json_readr_spark.sources import lakeformats as LF
-
-    table = ManifestTable(spark, str(tmp_path / "mt"))
-    df = spark.range(100).select(
-        F.col("id"), (F.col("id") % 3).cast("string").alias("bucket")
-    )
-    table.commit(df, expected_rows=100, partition_by="bucket")
-    m = table._manifest(table.current_version())
-    LF.manifest_to_delta_log(m, str(tmp_path / "mt"))
-
-    back = LF.read_delta_snapshot(spark, str(tmp_path / "mt"))
-    orig = table.read()
-    assert sorted(tuple(r) for r in back.collect()) == sorted(
-        tuple(r) for r in orig.collect()
-    )
-    # and delta_to_manifest inverts the export
-    m2 = LF.delta_to_manifest(str(tmp_path / "mt"))
-    assert m2["partition_by"] == "bucket"
-    assert {f["path"] for f in m2["files"]} == {f["path"] for f in m["files"]}
-
-
 def test_delta_column_mapping_name_mode_read_and_rename(spark):
     """Column mapping 'name' (r7): both snapshots of the column-mapped
     fixture read the same physical parquet bytes; v1's metadata-only
@@ -1136,28 +848,6 @@ def test_delta_column_mapping_gates(spark, tmp_path):
     }
     with pytest.raises(LF.LakeFormatGatedError, match="timestampNtz"):
         LF.delta_snapshot(write_log([bad3, md3]))
-
-
-def test_manifest_to_delta_log_refuses_existing_history(spark, tmp_path):
-    """Exporting into a directory that already holds Delta commits must
-    refuse — overwriting commit 0 under surviving later commits would
-    splice histories (r6 advice finding)."""
-    import json
-
-    import pytest
-
-    from dbt_json_readr_spark.sources import lakeformats as LF
-
-    t = tmp_path / "t"
-    (t / "_delta_log").mkdir(parents=True)
-    (t / "_delta_log" / f"{1:020d}.json").write_text("{}\n")
-    manifest = {
-        "partition_by": None,
-        "schema": {"type": "struct", "fields": []},
-        "files": [],
-    }
-    with pytest.raises(LF.LakeFormatError, match="already contains"):
-        LF.manifest_to_delta_log(manifest, str(t))
 
 
 def test_iceberg_resolve_gates_foreign_uri_schemes():
@@ -1855,10 +1545,8 @@ def test_roaring_decode_spec_vectors():
 
 def test_delta_deletion_vectors_read_and_gates(spark, tmp_path):
     """The DV fixture reads correctly at both snapshots (u-storage and
-    inline DVs applied; v0 time-travels to the undeleted rows), a
-    cardinality that disagrees with the log gates, and the
-    ManifestTable export refuses a DV-bearing snapshot instead of
-    silently resurrecting deleted rows."""
+    inline DVs applied; v0 time-travels to the undeleted rows), and a
+    cardinality that disagrees with the log gates."""
     import json
 
     import pytest
@@ -1875,9 +1563,6 @@ def test_delta_deletion_vectors_read_and_gates(spark, tmp_path):
     assert ids == sorted(set(range(1, 31)) - gone)
     v0 = LF.read_delta_snapshot(spark, str(LP.DELTA_DV_DIR), 0)
     assert v0.count() == 30
-
-    with pytest.raises(LF.LakeFormatGatedError, match="deletion vectors"):
-        LF.delta_to_manifest(str(LP.DELTA_DV_DIR))
 
     # corrupt cardinality: copy the table, bump the descriptor
     import shutil
@@ -2217,22 +1902,6 @@ def test_delta_cdf_null_partition_groups(spark, tmp_path):
         for r in LF.read_delta_changes(spark, str(t), 0).collect()
     )
     assert rows == [(1, None, "insert"), (2, None, "insert"), (3, "x", "insert")]
-
-
-def test_delta_to_manifest_gates_column_mapping(spark):
-    """A column-mapped snapshot must not export to a ManifestTable
-    manifest: the manifest carries logical names over physical-named
-    parquet, so downstream reads silently null-fill (and a partitioned
-    mapped table crashed on the logical partitionValues lookup — r7
-    advice)."""
-    import pytest
-
-    from dbt_json_readr_spark.plans import lake as LP
-    from dbt_json_readr_spark.sources import lakeformats as LF
-
-    LP.ensure_lake_fixtures()
-    with pytest.raises(LF.LakeFormatGatedError, match="column mapping"):
-        LF.delta_to_manifest(str(LP.DELTA_CM_DIR))
 
 
 def test_dv_descriptor_missing_offset_is_loud(tmp_path):
@@ -3142,10 +2811,83 @@ def test_avro_python_binary_reader_matches_jvm_bridge(spark, tmp_path):
         assert got_py == got_jvm, f.name
 
 
+def _write_avro_records_jvm(spark, dest: str, schema_json: str, records: list[dict]) -> None:
+    """Reference writer through avro's own JVM ``DataFileWriter``, for
+    the byte-compatibility pin against the Python writer.
+
+    py4j auto-unboxes java.lang.Long returns to Python ints, so
+    hand-built GenericData.Record fields lose their Java types and fail
+    avro's union resolution; routing each record through avro's OWN
+    json decoder sidesteps the bridge (types come from the schema)."""
+    import json
+
+    from dbt_json_readr_spark.sources import avrocore
+    from dbt_json_readr_spark.sources import lakeformats as LF
+
+    jvm = spark._jvm
+    schema = jvm.org.apache.avro.Schema.Parser().parse(schema_json)
+    parsed = json.loads(schema_json)
+    named: dict[str, dict] = {}
+    LF._register_avro_names(parsed, named)
+
+    def _branch_label(branch) -> str:
+        if isinstance(branch, str):
+            return branch  # primitive or a named-type reference
+        t = branch.get("type")
+        if t in ("record", "enum", "fixed"):
+            return branch["name"]  # no namespaces in this repo's schemas
+        return t  # array / map
+
+    def _avro_json(sch, v):
+        if isinstance(sch, list):  # union
+            if v is None:
+                return None
+            # the branch the VALUE's type names, by the binary
+            # encoder's own rule, so the two writers cannot disagree
+            branch = sch[avrocore._union_branch(sch, v, named)]
+            return {_branch_label(branch): _avro_json(branch, v)}
+        if isinstance(sch, str):
+            if sch in named:
+                return _avro_json(named[sch], v)
+            if sch == "bytes" and isinstance(v, (bytes, bytearray)):
+                return bytes(v).decode("latin-1")
+            return v
+        t = sch["type"]
+        if t == "record":
+            return {
+                f["name"]: _avro_json(f["type"], (v or {}).get(f["name"]))
+                for f in sch["fields"]
+            }
+        if t == "array":
+            return [_avro_json(sch["items"], x) for x in (v or [])]
+        if t == "map":
+            return {k: _avro_json(sch["values"], x) for k, x in (v or {}).items()}
+        if t in ("bytes", "fixed") and isinstance(v, (bytes, bytearray)):
+            return bytes(v).decode("latin-1")
+        if isinstance(t, (list, dict)):
+            return _avro_json(t, v)
+        if t in named:
+            return _avro_json(named[t], v)
+        return v
+
+    reader = jvm.org.apache.avro.generic.GenericDatumReader(schema)
+    factory = jvm.org.apache.avro.io.DecoderFactory.get()
+    writer = jvm.org.apache.avro.file.DataFileWriter(
+        jvm.org.apache.avro.generic.GenericDatumWriter(schema)
+    )
+    writer.create(schema, jvm.java.io.File(dest))
+    try:
+        for d in records:
+            dec = factory.jsonDecoder(schema, json.dumps(_avro_json(parsed, d)))
+            writer.append(reader.read(None, dec))
+    finally:
+        writer.close()
+
+
 def test_avro_python_writer_jvm_reader_roundtrip(spark, tmp_path):
     """The r10 pure-Python avro WRITER must produce container bytes
     the JVM DataFileReader decodes to the same records (and the
-    retained JVM writer's bytes must decode identically through the
+    JVM reference writer's bytes must decode identically through the
     Python reader) — cross-implementation, both directions, over the
     manifest schemas' full shape vocabulary."""
     import json
@@ -3245,7 +2987,7 @@ def test_avro_python_writer_jvm_reader_roundtrip(spark, tmp_path):
 
     # JVM writer → Python reader
     p2 = tmp_path / "jvmwrite.avro"
-    LF._write_avro_records_jvm(spark, str(p2), schema, rows)
+    _write_avro_records_jvm(spark, str(p2), schema, rows)
     assert avrocore.read_container(str(p2)) == rows
 
     # null codec + multi-block chunking also round-trip
@@ -3469,103 +3211,6 @@ def test_avro_snappy_codec_matches_jvm_writer(spark, tmp_path):
         avrocore.read_container(str(bad))
 
 
-def test_register_lake_iceberg_sql_front_door(spark, tmp_path):
-    """r12 (VERDICT r11 item 5): spark.sql alone answers the F41-family
-    questions through register_lake's views — snapshots/partitions/
-    files/refs/history all agree with closed-form expectations, and
-    the data view equals the bridge read."""
-    from pyspark.sql import functions as F
-
-    from dbt_json_readr_spark import sql as Q
-    from dbt_json_readr_spark.sources import icebergwriter as IW
-
-    sup = spark.read.parquet("/root/testdata/sf0.001/supplier.parquet")
-    a = sup.filter(F.col("s_suppkey") % 3 == 0)
-    b = sup.filter(F.col("s_suppkey") % 3 != 0)
-    tbl = str(tmp_path / "ice")
-    IW.write_iceberg(spark, a, tbl, partition_by=["s_nationkey"])
-    IW.write_iceberg(spark, b, tbl, partition_by=["s_nationkey"])
-    IW.write_iceberg(spark, a.limit(2), tbl, partition_by=["s_nationkey"], ref="audit")
-
-    views = Q.register_lake(spark, tbl, "t")
-    assert set(views) == {
-        "t", "t__snapshots", "t__history", "t__partitions",
-        "t__manifests", "t__files", "t__refs",
-    }
-    # data view == full union (main does NOT see the staged branch)
-    assert Q.sql(spark, "SELECT count(*) AS n FROM t").collect()[0].n == sup.count()
-    # snapshots: 3 rows, exactly one current, data_rows cumulative
-    snaps = Q.sql(
-        spark,
-        "SELECT sequence_number, data_rows, is_current FROM t__snapshots "
-        "ORDER BY sequence_number",
-    ).collect()
-    assert [r.sequence_number for r in snaps] == [1, 2, 3]
-    assert [r.data_rows for r in snaps] == [a.count(), sup.count(), sup.count() + 2]
-    # the branch head is NOT current; main's head is
-    assert [r.is_current for r in snaps] == [0, 1, 0]
-    # partitions roll up to the table
-    part = Q.sql(
-        spark,
-        "SELECT sum(record_count) AS rows, sum(n_files) AS files FROM t__partitions",
-    ).collect()[0]
-    assert part.rows == sup.count()
-    assert part.files == Q.sql(spark, "SELECT count(*) AS n FROM t__files").collect()[0].n
-    # refs: implicit main + the audit branch
-    refs = {r.name: r.type for r in Q.sql(spark, "SELECT * FROM t__refs").collect()}
-    assert refs == {"main": "branch", "audit": "branch"}
-    # history: two made-current entries (branch commit never logged)
-    hist = Q.sql(
-        spark, "SELECT count(*) AS n, sum(is_current_ancestor) AS anc FROM t__history"
-    ).collect()[0]
-    assert (hist.n, hist.anc) == (2, 2)
-
-
-def test_register_lake_delta_sql_front_door(spark, tmp_path):
-    """Delta half: t__history carries the log-only rows_at arithmetic
-    (shared with F47 via laketables.delta_history_rows) and t__files
-    carries DV debt; the data view equals the bridge read."""
-    from pyspark.sql import functions as F
-
-    from dbt_json_readr_spark import sql as Q
-    from dbt_json_readr_spark.sources import deltawriter as DW
-    from dbt_json_readr_spark.sources import lakeformats as LF
-
-    cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
-    tbl = str(tmp_path / "dl")
-    DW.write_delta(spark, cust, tbl, partition_by=["c_mktsegment"])
-    DW.delete_delta(spark, tbl, [("c_acctbal", "<", 0.0)])
-
-    views = Q.register_lake(spark, tbl, "d")
-    assert set(views) == {"d", "d__history", "d__files"}
-    live = cust.filter(F.col("c_acctbal") >= 0.0).count()
-    assert Q.sql(spark, "SELECT count(*) AS n FROM d").collect()[0].n == live
-    hist = Q.sql(
-        spark, "SELECT version, operation, rows_at FROM d__history ORDER BY version"
-    ).collect()
-    assert [(r.version, r.rows_at) for r in hist] == [(0, cust.count()), (1, live)]
-    assert hist[1].operation == "DELETE"
-    files = Q.sql(
-        spark,
-        "SELECT sum(record_count) AS rc, sum(dv_deleted) AS dv, "
-        "sum(live_rows) AS lr FROM d__files",
-    ).collect()[0]
-    assert (files.rc, files.dv, files.lr) == (
-        cust.count(), cust.count() - live, live,
-    )
-
-    # UniForm-style double-log tables must be disambiguated explicitly
-    import pytest
-
-    from dbt_json_readr_spark.sources import icebergwriter as IW
-
-    IW.delta_to_iceberg(spark, tbl)
-    with pytest.raises(LF.LakeFormatError, match="BOTH"):
-        Q.register_lake(spark, tbl, "d2")
-    assert "d2" in Q.register_lake(spark, tbl, "d2", format="delta")
-    assert "d3__snapshots" in Q.register_lake(spark, tbl, "d3", format="iceberg")
-
-
 def test_avro_zstd_codec_bridge_parity(spark, tmp_path):
     """VERDICT r11 item 7: the LAST codec path gets a test instead of
     only a gate.  The same records are authored through the JVM
@@ -3637,19 +3282,16 @@ def test_avro_zstd_codec_bridge_parity(spark, tmp_path):
     assert via_bridge == rows
 
 
-def test_register_lake_tolerates_statsless_adds(spark, tmp_path):
-    """r12 review finding: add.stats is OPTIONAL in the Delta protocol
-    — a table whose adds carry no stats must still register (data view
-    reads fine; __history's rows_at degrades to null instead of the
-    whole view set failing), while the F47 gated key's strict replay
-    keeps refusing loudly."""
+def test_delta_history_refuses_statsless_adds(spark, tmp_path):
+    """add.stats is optional in the Delta protocol, but the F47 history
+    replay derives every row count from it: a stats-less add must
+    raise, not report a wrong count."""
     import json
     from pathlib import Path
 
     import pytest
 
-    from dbt_json_readr_spark import laketables as LT
-    from dbt_json_readr_spark import sql as Q
+    from dbt_json_readr_spark.plans import lakewrite
     from dbt_json_readr_spark.sources import deltawriter as DW
     from dbt_json_readr_spark.sources import lakeformats as LF
 
@@ -3657,6 +3299,7 @@ def test_register_lake_tolerates_statsless_adds(spark, tmp_path):
     tbl = str(tmp_path / "dl")
     DW.write_delta(spark, cust.limit(8), tbl)
     DW.write_delta(spark, cust.limit(4), tbl, mode="append")
+    assert [(v, n) for v, _op, n in lakewrite._delta_history_rows(tbl)] == [(0, 8), (1, 12)]
 
     # strip stats from version 1's adds — legal per the protocol
     log = Path(tbl) / "_delta_log" / f"{1:020d}.json"
@@ -3668,20 +3311,8 @@ def test_register_lake_tolerates_statsless_adds(spark, tmp_path):
         lines.append(json.dumps(a))
     log.write_text("\n".join(lines) + "\n")
 
-    views = Q.register_lake(spark, tbl, "nostat")
-    assert set(views) == {"nostat", "nostat__history", "nostat__files"}
-    assert Q.sql(spark, "SELECT count(*) AS n FROM nostat").collect()[0].n == 12
-    hist = Q.sql(
-        spark, "SELECT version, rows_at FROM nostat__history ORDER BY version"
-    ).collect()
-    # v0 is fully known; v1's total includes a stats-less add → null
-    assert [(r.version, r.rows_at) for r in hist] == [(0, 8), (1, None)]
-    files = Q.sql(
-        spark,
-        "SELECT count(*) AS n, count(record_count) AS known FROM nostat__files",
-    ).collect()[0]
-    assert files.n == 2 and files.known == 1
-
-    # the gated key's strict contract is unchanged
+    assert LF.read_delta_snapshot(spark, tbl).count() == 12
     with pytest.raises(LF.LakeFormatError, match="carries none"):
-        LT.delta_history_rows(tbl, strict=True)
+        lakewrite._delta_history_rows(tbl)
+
+

@@ -70,23 +70,6 @@ def test_streaming_stateful_counts_matches_batch(spark):
     assert got == want
 
 
-def test_streaming_foreachbatch_parquet_sink(spark, tmp_path):
-    out = str(tmp_path / "sink")
-    agg = (
-        jobs.events_stream(spark, SF)
-        .withWatermark("ts", "1 hour")
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    jobs.run_to_parquet(agg, out, "stream_to_parquet", mode="complete")
-    back = spark.read.parquet(f"{out}/epoch=*")
-    want = {
-        (r.event_type, r.n)
-        for r in load(spark, SF, "events").groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert {(r.event_type, r.n) for r in back.collect()} == want
-
-
 def test_stateful_counts_state_survives_micro_batches(spark, tmp_path):
     """Split the events into two parquet files and force one file per
     micro-batch: the second batch must ACCUMULATE onto state from the
@@ -361,51 +344,6 @@ def test_windowed_distinct_dedups_across_micro_batches(spark, tmp_path):
     assert got == want
 
 
-def test_parquet_sink_checkpoint_resume_is_exactly_once(spark, tmp_path):
-    """Durable-sink recovery contract: drain file 1 through the
-    checkpointed parquet sink, then add file 2 and RESTART the query on
-    the same checkpoint — only the new file may be processed (the
-    checkpoint remembers consumed sources), and the union of epoch
-    outputs must hold every event exactly once."""
-    import glob
-    import shutil
-
-    src = tmp_path / "src"
-    out = str(tmp_path / "out")
-    src.mkdir()
-    ev = load(spark, SF, "events")
-    halves = []
-    for i, pred in enumerate(["event_id % 2 = 0", "event_id % 2 = 1"]):
-        part_dir = str(tmp_path / f"w{i}")
-        half = ev.filter(pred)
-        halves.append({r.event_id for r in half.select("event_id").collect()})
-        half.coalesce(1).write.parquet(part_dir)
-        [f] = glob.glob(f"{part_dir}/part-*.parquet")
-        shutil.move(f, tmp_path / f"half_{i}.parquet")
-        shutil.rmtree(part_dir)
-
-    def run_once():
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("pathGlobFilter", "events_*.parquet")
-            .parquet(str(src))
-            .select("event_id", "event_type", "value")
-        )
-        jobs.run_to_parquet(stream, out, "stream_ckpt_resume", mode="append")
-
-    shutil.copy(tmp_path / "half_0.parquet", src / "events_0.parquet")
-    run_once()
-    first = {r.event_id for r in spark.read.parquet(f"{out}/epoch=*").collect()}
-    assert first == halves[0]
-
-    shutil.copy(tmp_path / "half_1.parquet", src / "events_1.parquet")
-    run_once()  # same checkpoint: must process ONLY the new file
-    rows = spark.read.parquet(f"{out}/epoch=*").collect()
-    ids = [r.event_id for r in rows]
-    assert len(ids) == len(set(ids)), "duplicate events after resume"
-    assert set(ids) == halves[0] | halves[1]
-
-
 def test_streaming_state_store_is_rocksdb(spark):
     """prep() must select the RocksDB provider — the disk-backed state
     store a large stateful job runs with; every streaming oracle green
@@ -663,7 +601,7 @@ def test_cdc_warmstart_snapshot_state_survives_older_live_events(spark, tmp_path
         .withWatermark("ts", "1 hour")
     )
     out = jobs._run_to_memory(
-        jobs.cdc_latest_warmstart(stream, snap), "cdc_warm_unit", "update"
+        jobs.cdc_latest(stream, snap), "cdc_warm_unit", "update"
     )
     got = {r.user_id: (r.n_updates, r.last_event_id, r.last_value) for r in out.collect()}
     # user 1: snapshot state (12:00, id 6, 9.0) survives the older live

@@ -1,6 +1,7 @@
-"""Regenerate PLANS.md: formatted physical plans for the headline
+"""Write PLANS.md on demand: formatted physical plans for the headline
 queries at sf0.1, with the properties the engine pins (pushdown,
-broadcast, codegen) visible for review."""
+broadcast, codegen) visible for review.  The output is not committed;
+the plan claims that matter are pinned by tests/test_plans.py."""
 import sys, os
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from dbt_json_readr_spark.session import get_spark
