@@ -1,5 +1,5 @@
-"""External-format bridge keys (SURVEY §2 E: Delta / Iceberg interop,
-VERDICT r5 item 6) over deterministic hand-built metadata fixtures.
+"""External-format bridge keys (SURVEY §2 E: Delta / Iceberg interop)
+over deterministic hand-built metadata fixtures.
 
 The fixtures are materialized on demand (same discipline as
 sources/lake_fixture.py — atomic build, version marker, nothing
@@ -83,7 +83,7 @@ _DELTA_COMMITS: list[list[dict]] = [
     ],
 ]
 
-# --- column-mapped Delta fixture (r7, VERDICT r6 item 2) ---
+# --- column-mapped Delta fixture ---
 # Physical parquet column names are uuid-ish and NEVER change; logical
 # names live only in schemaString metadata.  Commit 1 RENAMES logical
 # "quantity" → "qty_renamed" without touching any data file — the
@@ -174,7 +174,7 @@ _DELTA_CM_COMMITS: list[list[dict]] = [
     ],
 ]
 
-# --- deletion-vector Delta fixture (r7) ---
+# --- deletion-vector Delta fixture ---
 # Unpartitioned table, protocol 3 + deletionVectors.  Commit 1 puts a
 # 'u'-storage DV on fa (UUID-named bin file under a prefix dir, the
 # shape production writers emit); commit 2 puts an INLINE ('i') DV on
@@ -200,7 +200,7 @@ _DV_DELETES = {"fa.parquet": [0, 3], "fb.parquet": [5]}
 _DV_UUID_HEX = "8d7f31c4b2a6401e9f0c5b3d7a291e46"
 _DV_PREFIX = "dv"
 
-# --- change-data-feed Delta fixture (r7) ---
+# --- change-data-feed Delta fixture ---
 # Unpartitioned CDF-enabled table.  Commit 1 is an UPDATE that emits a
 # cdc action (_change_data file carrying update_preimage /
 # update_postimage rows) — per the protocol the cdc files are then
@@ -263,7 +263,7 @@ _CDF_COMMITS: list[list[dict]] = [
 _DELTA_COMMIT_TS = {0: 1735689600000, 1: 1735693200000, 2: 1735696800000}
 
 
-# --- column-mapped CDF Delta fixture (r8, VERDICT r7 item 4) ---
+# --- column-mapped CDF Delta fixture ---
 # Mode 'name' with CDF enabled, partitioned by region under its
 # PHYSICAL partitionValues key.  Commit 1 is a cdc update (physical
 # column names inside _change_data parquet); commit 2 RENAMES the
@@ -377,7 +377,7 @@ _CDFM_COMMITS: list[list[dict]] = [
 ]
 
 
-# --- mode-'id' CDF fixture (r9, VERDICT r8 item 3) ---
+# --- mode-'id' CDF fixture ---
 
 _CDFID_IDS = {"id": 1, "qty": 2, "region": 3}
 _CDFID_PHYS = {"id": "col-i", "qty": "col-q", "region": "col-r"}
@@ -496,7 +496,7 @@ _CDFID_COMMITS: list[list[dict]] = [
 ]
 
 
-# --- stats-skipping Delta fixture (r8, VERDICT r7 item 2) ---
+# --- stats-skipping Delta fixture ---
 # Every add carries the PROTOCOL.md per-file statistics JSON
 # (numRecords / minValues / maxValues / nullCount), computed from the
 # authoring rows at fixture-build time.  s4's v column is ALL NULL so
@@ -531,7 +531,7 @@ _DELTA_SKIP_PREDICATES = [
     ("d5_empty", [("id", ">", 1000)]),
 ]
 
-# --- bucket-partitioned Iceberg fixture (r8, VERDICT r7 items 2+6) ---
+# --- bucket-partitioned Iceberg fixture ---
 # ids 1..60 land in one file per (range half, bucket[2](id)) cell; the
 # bucket membership below is the murmur3_x86_32 split the Iceberg spec
 # mandates (Appendix B), authored here as LITERALS so the fixture and
@@ -1080,8 +1080,8 @@ def ensure_lake_fixtures(root: Path | str = FIXTURE_ROOT) -> Path:
             "\n".join(json.dumps(a, sort_keys=True) for a in skip_actions)
             + "\n"
         )
-        # bucket-partitioned Iceberg table: parquet + metadata.json here
-        # (stdlib/pyarrow); avro manifests need a JVM — see
+        # bucket-partitioned Iceberg table: parquet + metadata.json
+        # here; its avro manifests are written by
         # ensure_iceberg_bucket_manifests
         ib = tmp / ICEBERG_BUCKET_DIR.name
         (ib / "metadata").mkdir(parents=True)
@@ -1174,7 +1174,7 @@ ORDER BY snapshot_version, year
 
 def delta_column_mapping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-region rollup of the column-mapped Delta fixture at BOTH
-    snapshots (VERDICT r6 item 2).  v0's logical schema names the
+    snapshots.  v0's logical schema names the
     metric column ``quantity``; v1 renames it ``qty_renamed`` without
     rewriting a single data file — both versions must read the same
     physical parquet column (``col-1a2b3c4d``) and the partition
@@ -1502,9 +1502,8 @@ def _delta_active_files(log: Path, target: "int | None") -> dict[str, dict]:
     """Oracle-side stdlib replay of the active file set AS OF
     ``target``, with the protocol's SET semantics per commit (removes
     apply before adds, a same-commit re-add wins) — ONE replay rule
-    for every Delta oracle (r8 ninth review: per-oracle line-order
-    replays silently diverged from the bridge on same-commit
-    remove+add)."""
+    for every Delta oracle (a per-oracle line-order replay would
+    silently diverge from the bridge on same-commit remove+add)."""
     out: dict[str, dict] = {}
     versions = sorted(int(q.stem) for q in log.glob("*.json"))
     if target is None:
@@ -1535,7 +1534,7 @@ def _iceberg_live_where(sid: int) -> list:
     """(posix parquet path, WHERE clause or '', has_channel) for each
     LIVE data file at snapshot ``sid``, with the authored position /
     equality deletes applied — the delete-replay rule lives once for
-    every Iceberg oracle (r8 ninth review)."""
+    every Iceberg oracle."""
     out = []
     for status, path, seq in _ICEBERG_SNAP_FILES[sid]:
         if status == 2:
@@ -1562,11 +1561,10 @@ def _iceberg_live_where(sid: int) -> list:
     return out
 
 
-def ensure_iceberg_manifests(spark: SparkSession) -> None:
-    """Write the avro manifest list + manifest per snapshot via the
-    bundled avro-core container writer (lakeformats.write_avro_records
-    — needs a JVM, so it runs lazily from a session; the stdlib
-    ensure_lake_fixtures covers everything else).  Idempotent."""
+def ensure_iceberg_manifests() -> None:
+    """Write the avro manifest list + manifest per snapshot through the
+    pure-Python container writer (lakeformats.write_avro_records);
+    ensure_lake_fixtures covers everything else.  Idempotent."""
     import pyarrow.parquet as _pq
 
     ensure_lake_fixtures()
@@ -1577,7 +1575,7 @@ def ensure_iceberg_manifests(spark: SparkSession) -> None:
         # checkout; a moved/copied tree keeps the avro files (so mere
         # existence checks pass) while the URIs silently point at the
         # old location and the anti-join deletes nothing — verify the
-        # prefix against the CURRENT dir (r6 review finding)
+        # prefix against the CURRENT dir
         want = "file://" + str(ICEBERG_DIR)
         for del_file in _ICEBERG_POS_DELETE_FILES:
             f = ICEBERG_DIR / del_file
@@ -1662,7 +1660,6 @@ def ensure_iceberg_manifests(spark: SparkSession) -> None:
         )
     for sid, entries in _ICEBERG_SNAP_FILES.items():
         LF.write_avro_records(
-            spark,
             str(meta_dir / f"m-{sid}.avro"),
             manifest_schema,
             [
@@ -1718,7 +1715,7 @@ def ensure_iceberg_manifests(spark: SparkSession) -> None:
                     }
                 )
             LF.write_avro_records(
-                spark, str(meta_dir / f"dm-{sid}.avro"), manifest_schema, entries_pd
+                str(meta_dir / f"dm-{sid}.avro"), manifest_schema, entries_pd
             )
             mlist_rows.append(
                 {
@@ -1739,7 +1736,6 @@ def ensure_iceberg_manifests(spark: SparkSession) -> None:
                 ICEBERG_DIR / eq["file"],
             )
             LF.write_avro_records(
-                spark,
                 str(meta_dir / f"em-{sid}.avro"),
                 manifest_schema,
                 [
@@ -1766,7 +1762,6 @@ def ensure_iceberg_manifests(spark: SparkSession) -> None:
                 }
             )
         LF.write_avro_records(
-            spark,
             str(meta_dir / f"snap-{sid}.avro"),
             mlist_schema,
             mlist_rows,
@@ -1788,7 +1783,7 @@ def iceberg_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     Schema-0-era files surface channel=NULL under the evolved schema.
     Executors read the parquet; the driver touches only pointer rows."""
     prep(spark)
-    ensure_iceberg_manifests(spark)
+    ensure_iceberg_manifests()
     outs = []
     for sid in (1002, 1003, 1004, 1005):
         df = LF.read_iceberg_snapshot(spark, str(ICEBERG_META), sid)
@@ -1914,19 +1909,19 @@ def _delta_diff_oracle_sql() -> str:
 
 def iceberg_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental change feed between Iceberg snapshots from manifest
-    metadata alone — F4 ``delta_version_diff``'s twin (VERDICT r6 item
-    4).  Each manifest entry's ``status``/``snapshot_id`` name the
-    snapshot that ADDED (status 1) or DELETED (status 2) the file, so
-    the per-snapshot diff needs no file-set comparison at all: walk the
-    snapshot's manifests, keep entries owned by it, and read ONLY those
-    files for row-level change counts — O(delta), never a rescan.
-    Covers the overwrite snapshot (1003: adds + removes in one commit),
-    the position-delete snapshot (1004) and the equality-delete
-    snapshot (1005); 1005's carried-forward position-delete file is
-    EXISTING (status 0, owner 1004) and must NOT re-appear."""
+    metadata alone — F4 ``delta_version_diff``'s twin.  Each manifest
+    entry's ``status``/``snapshot_id`` name the snapshot that ADDED
+    (status 1) or DELETED (status 2) the file, so the per-snapshot diff
+    needs no file-set comparison at all: walk the snapshot's manifests,
+    keep entries owned by it, and read ONLY those files for row-level
+    change counts — O(delta), never a rescan. Covers the overwrite
+    snapshot (1003: adds + removes in one commit), the position-delete
+    snapshot (1004) and the equality-delete snapshot (1005); 1005's
+    carried-forward position-delete file is EXISTING (status 0, owner
+    1004) and must NOT re-appear."""
     prep(spark)
     ensure_lake_fixtures()
-    ensure_iceberg_manifests(spark)
+    ensure_iceberg_manifests()
     kinds = {
         (1, 0): "added",
         (2, 0): "removed",
@@ -1937,7 +1932,7 @@ def iceberg_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     meta = LF.iceberg_metadata(str(ICEBERG_META))
     for s in sorted(meta["snapshots"], key=lambda s: s["snapshot-id"]):
         sid = s["snapshot-id"]
-        for e in LF.iceberg_snapshot_entries(spark, str(ICEBERG_META), sid):
+        for e in LF.iceberg_snapshot_entries(str(ICEBERG_META), sid):
             if e["snapshot_id"] != sid:
                 continue  # EXISTING entry owned by an earlier snapshot
             kind = kinds.get((e["status"], e["content"]))
@@ -1955,9 +1950,9 @@ def iceberg_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not outs:
         # an empty feed over a table WITH snapshots means the entry
         # ownership metadata never matched any snapshot — gate loudly
-        # instead of returning a silently-empty diff (r7 close review;
-        # snapshot_id inheritance in iceberg_snapshot_entries is the
-        # usual missing piece for external writers).
+        # instead of returning a silently-empty diff (snapshot_id
+        # inheritance in iceberg_snapshot_entries is the usual missing
+        # piece for external writers).
         raise LF.LakeFormatGatedError(
             "iceberg_change_feed matched no manifest entries to any "
             "snapshot — entry snapshot_id/inheritance metadata absent?"
@@ -2126,16 +2121,15 @@ _IB_MLIST_SCHEMA = json.dumps(
 )
 
 
-def ensure_iceberg_bucket_manifests(spark: SparkSession) -> None:
+def ensure_iceberg_bucket_manifests() -> None:
     """Avro manifests for the bucket-partitioned fixture: ONE MANIFEST
     PER BUCKET (the layout a real writer clustering on the partition
-    produces), each entry carrying the partition tuple (bucket[2]
-    value) and id lower/upper bounds in the spec's key/value-array +
-    Appendix-D binary encoding; the manifest LIST carries per-manifest
-    partition field summaries so list-level pruning has teeth (F11).
-    Needs a JVM (avro-core writer); everything else is materialized by
-    ensure_lake_fixtures.  Idempotent — the fixture-version bump wipes
-    the tree, so existence is freshness."""
+    produces), each entry carrying the partition tuple (bucket[2] value)
+    and id lower/upper bounds in the spec's key/value-array + Appendix-D
+    binary encoding; the manifest LIST carries per-manifest partition
+    field summaries so list-level pruning has teeth (F11). Everything
+    else is materialized by ensure_lake_fixtures.  Idempotent — the
+    fixture-version bump wipes the tree, so existence is freshness."""
     import struct
 
     ensure_lake_fixtures()
@@ -2172,7 +2166,6 @@ def ensure_iceberg_bucket_manifests(spark: SparkSession) -> None:
                 }
             )
         LF.write_avro_records(
-            spark,
             str(meta_dir / f"m-9001-b{b}.avro"),
             _IB_MANIFEST_SCHEMA,
             entries,
@@ -2195,7 +2188,6 @@ def ensure_iceberg_bucket_manifests(spark: SparkSession) -> None:
             }
         )
     LF.write_avro_records(
-        spark,
         str(meta_dir / "snap-9001.avro"),
         _IB_MLIST_SCHEMA,
         mlist_rows,
@@ -2203,8 +2195,8 @@ def ensure_iceberg_bucket_manifests(spark: SparkSession) -> None:
 
 
 def lake_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stats-based file-skipping audit over BOTH bridges (VERDICT r7
-    items 2 and 6): for each predicate, one row with the scan-list size
+    """Stats-based file-skipping audit over BOTH bridges: for each
+    predicate, one row with the scan-list size
     the pruner actually handed Spark (``df.inputFiles()`` — the hard
     evidence that fewer parquet paths reach the scan) next to the
     row-level result, so a pruner that drops a LIVE file changes
@@ -2214,7 +2206,7 @@ def lake_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bucket[2] partition transform (murmur3, spec Appendix B)."""
     prep(spark)
     ensure_lake_fixtures()
-    ensure_iceberg_bucket_manifests(spark)
+    ensure_iceberg_bucket_manifests()
     outs = []
     jobs = [
         (
@@ -2521,7 +2513,7 @@ def _delta_cdf_mapid_oracle_sql() -> str:
 
 
 def iceberg_manifest_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MANIFEST-LIST-level pruning audit (r8): for each predicate, how
+    """MANIFEST-LIST-level pruning audit: for each predicate, how
     many data manifests the list's partition field summaries say must
     OPEN — the driver-metadata twin of F9's files_kept evidence.  On a
     100 TB table with thousands of manifests this is what keeps the
@@ -2532,11 +2524,11 @@ def iceberg_manifest_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     are never summary-skipped."""
     prep(spark)
     ensure_lake_fixtures()
-    ensure_iceberg_bucket_manifests(spark)
+    ensure_iceberg_bucket_manifests()
     rows = []
     for label, pred in [("i0_no_predicate", None)] + _ICEBERG_SKIP_PREDICATES:
         st = LF.iceberg_manifest_prune_stats(
-            spark, str(ICEBERG_BUCKET_META), predicate=pred
+            str(ICEBERG_BUCKET_META), predicate=pred
         )
         rows.append(
             (
@@ -2569,9 +2561,9 @@ def _iceberg_manifest_prune_oracle_sql() -> str:
         return None
 
     def could_match(b: int, pred) -> bool:
-        # intersect ALL conjunctive terms, mirroring the matcher (r8
-        # seventh review: a first-term-only replay diverges on
-        # multi-term predicates); unauthored literals keep (unknown
+        # intersect ALL conjunctive terms, mirroring the matcher (a
+        # first-term-only replay diverges on multi-term predicates);
+        # unauthored literals keep (unknown
         # bucket — the matcher would still prune them via the hash,
         # but the oracle must never run the hash under test)
         for _col, op, val in pred:
@@ -2587,8 +2579,7 @@ def _iceberg_manifest_prune_oracle_sql() -> str:
                 # the fixture authors contains_null=False on every
                 # summary (no authored id is null), and null→null
                 # holds for every transform — an is_null term prunes
-                # ALL manifests (kept in lockstep with the matcher,
-                # r8 eighth review)
+                # ALL manifests (kept in lockstep with the matcher)
                 return False
             # range / is_not_null terms: summaries never prune them
         return True
@@ -2624,7 +2615,7 @@ _TT_PROBES = [
 
 
 def lake_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AS OF TIMESTAMP time travel for BOTH bridges (r8): Delta
+    """AS OF TIMESTAMP time travel for BOTH bridges: Delta
     resolves the latest commit at-or-before the probe from the
     protocol's commit clock (inCommitTimestamp when present, else
     monotonic-adjusted log-file mtimes — the fixture pins
@@ -2636,10 +2627,10 @@ def lake_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     previous snapshot's rollup and fails the hash."""
     prep(spark)
     ensure_lake_fixtures()
-    ensure_iceberg_manifests(spark)
+    ensure_iceberg_manifests()
     outs = []
     # the commit clock derives ONCE for all probes (glob + stat +
-    # first-line open per retained commit, r8 tenth review)
+    # first-line open per retained commit)
     stamps = LF.delta_commit_timestamps(str(DELTA_DIR))
     for label, source, ts_ms in _TT_PROBES:
         if source == "delta":

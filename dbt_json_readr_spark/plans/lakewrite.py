@@ -1,4 +1,4 @@
-"""Write-path bridge keys (r8, SURVEY §2 F13–F21): the native Delta /
+"""Write-path bridge keys (SURVEY §2 F13–F21): the native Delta /
 Iceberg WRITERS (sources/deltawriter.py, sources/icebergwriter.py)
 proven end-to-end through the INDEPENDENT read bridges, with pure-SQL
 oracles over the source tables.
@@ -173,7 +173,7 @@ def _cust_del_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Customer partitioned by c_mktsegment + a DV DELETE of
     c_acctbal < 0 — ONE fixture shared by F14 (DV write/read) and F48
     (files-table rollup), so the runtime never authors the same table
-    twice (r11 third-review finding)."""
+    twice."""
     cust = load(spark, sf_dir, "customer")
 
     def build(tbl: str) -> None:
@@ -426,7 +426,7 @@ def iceberg_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         IW.write_iceberg(spark, b, tbl, partition_by=["s_nationkey"])
 
     root = _ensure("wrt_ice_supplier", sf_dir, build)
-    # numeric sort: lexicographic v-glob puts v9 after v10 (r8 review)
+    # numeric sort: lexicographic v-glob puts v9 after v10
     meta = max(
         (root / "table" / "metadata").glob("v*.metadata.json"),
         key=lambda p: int(p.name.split(".")[0][1:]),
@@ -878,7 +878,7 @@ def iceberg_expire_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             Path(tbl, "metadata").glob("v*.metadata.json"),
             key=lambda p: int(p.name.split(".")[0][1:]),
         )
-        aud = IW.expire_iceberg_snapshots(spark, str(meta), keep_last=1)
+        aud = IW.expire_iceberg_snapshots(str(meta), keep_last=1)
         (Path(root) / "_RT_EXPIRE_AUDIT").write_text(
             f"{aud['snapshots_expired']} {aud['files_deleted']}"
         )
@@ -1241,7 +1241,7 @@ def iceberg_equality_delete_write(spark: SparkSession, sf_dir: str) -> DataFrame
             .select("c_nationkey")
             .distinct()
         )
-        r2 = IW.delete_iceberg_equality(spark, r1["metadata_path"], keys)
+        r2 = IW.delete_iceberg_equality(r1["metadata_path"], keys)
         re_add = cust.filter(
             (F.col("c_nationkey") < 5) & (F.col("c_custkey") % 9 == 0)
         )
@@ -1575,7 +1575,7 @@ def iceberg_refs_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         IW.write_iceberg(spark, supp.filter(F.col("s_suppkey") % 3 == 1), tbl)
         r3 = IW.write_iceberg(spark, supp.filter(F.col("s_suppkey") % 3 == 2), tbl)
         aud = IW.expire_iceberg_snapshots(
-            spark, r3["metadata_path"], keep_last=1
+            r3["metadata_path"], keep_last=1
         )
         (Path(tbl) / "_RT_EXPIRED").write_text(str(aud["snapshots_expired"]))
 
@@ -1631,7 +1631,7 @@ GROUP BY ref_name
 
 
 def delta_generated_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GENERATED COLUMNS (r8 s3) in their classic role — a generated
+    """GENERATED COLUMNS in their classic role — a generated
     PARTITION column: the table is created with
     ``o_year = year(o_orderdate)`` stored as
     delta.generationExpression field metadata (protocol writer 4);
@@ -1729,7 +1729,7 @@ GROUP BY o_orderstatus
 
 
 def iceberg_bucket_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WRITE-side bucket partitioning (VERDICT r8 item 2): supplier
+    """WRITE-side bucket partitioning: supplier
     lands in ONE commit under ``bucket(8, s_suppkey)`` — the murmur3
     bucket computed executor-side as pure Column expressions
     (functions/icetransforms.py), one file per non-empty bucket by the
@@ -1782,9 +1782,9 @@ def iceberg_bucket_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     # One probe PLAN per key (the pruning evidence — inputFiles() is a
     # driver-side listing of what the pruner handed the scan), but ONE
-    # collect for all five probes (r12, guide §1/§2.6): the per-key
-    # collect loop paid five job round-trips ≈ 0.4 s of pure scheduling
-    # on a 5-row result; a tagged union answers identically in one.
+    # collect for all five probes: a per-key collect loop pays five
+    # job round-trips ≈ 0.4 s of pure scheduling on a 5-row result; a
+    # tagged union answers identically in one.
     evidence = {}
     probes = []
     for k in keys:
@@ -1978,8 +1978,8 @@ FROM g
 
 
 def delta_uniform_dv_export(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UniForm export over a LIVE-DV table (r9, VERDICT r8 item 4 —
-    the modern-default Delta shape F30 had to gate on): customer lands
+    """UniForm export over a LIVE-DV table (the modern-default Delta
+    shape): customer lands
     in Delta, a predicate slice DV-deletes (no rewrite), and
     ``delta_to_iceberg`` translates the deletion vectors into Iceberg
     POSITION DELETES committed with the export snapshot — the same
@@ -2057,12 +2057,11 @@ GROUP BY c_mktsegment
 
 
 def delta_uniform_mapped_export(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UniForm export over a COLUMN-MAPPED Delta table (r9 continuation
-    — with F37's DV support this closes the export gates VERDICT r8
-    listed): supplier lands as four deterministic physical-name parquet
-    slices (``s_suppkey % 4``; Spark writes the footer field ids via
-    ``spark.sql.parquet.fieldId.write.enabled`` from column metadata),
-    a hand-authored mode-'name' Delta log maps logical → physical, and
+    """UniForm export over a COLUMN-MAPPED Delta table: supplier lands
+    as four deterministic physical-name parquet slices (``s_suppkey %
+    4``; Spark writes the footer field ids via
+    ``spark.sql.parquet.fieldId.write.enabled`` from column metadata), a
+    hand-authored mode-'name' Delta log maps logical → physical, and
     ``delta_to_iceberg`` exports with Iceberg field ids = the mapping
     ids — so the bridge's footer-id resolution reads ``col-k`` as
     ``s_suppkey`` without a name in common.
@@ -2233,15 +2232,15 @@ GROUP BY s_nationkey
 
 
 def iceberg_decimal_bucket_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WRITE-side bucket partitioning over a DECIMAL key (VERDICT r9
-    item 3): supplier with ``s_bal = CAST(s_acctbal AS DECIMAL(12,2))``
-    lands under ``bucket(8, s_bal)`` — the Appendix-B decimal hash
-    (murmur3 over the MINIMAL big-endian two's-complement unscaled
-    bytes) computed executor-side as chain-bound Column projections
+    """WRITE-side bucket partitioning over a DECIMAL key: supplier with
+    ``s_bal = CAST(s_acctbal AS DECIMAL(12,2))`` lands under ``bucket(8,
+    s_bal)`` — the Appendix-B decimal hash (murmur3 over the MINIMAL
+    big-endian two's-complement unscaled bytes) computed executor-side
+    as chain-bound Column projections
     (functions/icetransforms.with_murmur3_decimal), the same codegen
     cost shape as the integer path.  Per-value equality probes answer
-    through the read bridge's transform pruning, opening ONLY the
-    probed value's bucket.
+    through the read bridge's transform pruning, opening ONLY the probed
+    value's bucket.
 
     Evidence per probed value (same structure as F34
     ``iceberg_bucket_write_prune``): the probe's own row rollup
@@ -2290,7 +2289,7 @@ def iceberg_decimal_bucket_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     # per-probe prune evidence from the plan (inputFiles, driver-side),
     # row values from ONE tagged-union collect instead of one job per
-    # probe (r12 — same scheduling-latency fix as the s_suppkey bucket
+    # probe (the same scheduling-latency fix as the s_suppkey bucket
     # key; answers are identical, five round-trips become one)
     evidence = {}
     probes = []
@@ -2356,7 +2355,7 @@ GROUP BY v.s_bal
 
 
 def iceberg_files_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ``files`` METADATA TABLE surface (r10) — what production
+    """The ``files`` METADATA TABLE surface — what production
     engines expose as ``SELECT * FROM t$files`` (Trino) /
     ``t.files`` (Spark): one row per live data file with its
     partition tuple, record count, and per-column bounds, straight
@@ -2374,7 +2373,7 @@ def iceberg_files_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: this is the table-maintenance query surface — OPTIMIZE
     candidates, small-file audits, skew reports all read the files
     table, which costs O(metadata) regardless of data size (and the
-    r10 pure-Python avro reader keeps the walk ~ms per manifest)."""
+    pure-Python avro reader keeps the walk ~ms per manifest)."""
     prep(spark)
     from ..sources import icebergwriter as IW
     from ..sources import skipping as SK
@@ -2402,7 +2401,7 @@ def iceberg_files_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         f["id"] for f in cur_schema["fields"] if f["name"] == "s_suppkey"
     )
 
-    entries = LF.iceberg_snapshot_entries(spark, meta)
+    entries = LF.iceberg_snapshot_entries(meta)
     agg: dict[int, list] = {}
     for e in entries:
         if e["status"] == 2 or e["content"] != 0:
@@ -2455,8 +2454,8 @@ GROUP BY s_nationkey
 
 
 # ---------------------------------------------------------------- F41-F44
-# The rest of the Iceberg METADATA-TABLE family beside F40's `files`
-# (VERDICT r10 item 2): what production engines expose as
+# The rest of the Iceberg METADATA-TABLE family beside F40's `files`:
+# what production engines expose as
 # `SELECT * FROM t$snapshots / $history / $partitions / $manifests`
 # (Trino) / `t.snapshots` etc. (Spark).  All four are O(metadata) at
 # any data size — the JSON snapshot list plus one manifest-list avro
@@ -2503,12 +2502,12 @@ def _latest_meta(root: Path) -> str:
     )
 
 
-def _mlist_rows_current(spark: SparkSession, meta_path: str) -> list[dict]:
+def _mlist_rows_current(meta_path: str) -> list[dict]:
     """Current snapshot's manifest-list rows (one ~KB avro read)."""
     info = LF.iceberg_snapshot_info(meta_path)
     table_dir = os.path.dirname(os.path.dirname(os.path.abspath(meta_path)))
     return LF._read_avro_records(
-        spark, LF._resolve(info["snapshot"]["manifest-list"], table_dir)
+        LF._resolve(info["snapshot"]["manifest-list"], table_dir)
     )
 
 
@@ -2537,7 +2536,7 @@ def iceberg_snapshots_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = []
     for s in snaps:
         mrows = LF._read_avro_records(
-            spark, LF._resolve(s["manifest-list"], table_dir)
+            LF._resolve(s["manifest-list"], table_dir)
         )
         data_rows = sum(
             int(m["added_rows_count"]) for m in mrows if int(m["content"] or 0) == 0
@@ -2685,7 +2684,7 @@ def iceberg_partitions_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep(spark)
     root = _ice_meta_fixture(spark, sf_dir)
     meta_path = _latest_meta(root)
-    entries = LF.iceberg_snapshot_entries(spark, meta_path)
+    entries = LF.iceberg_snapshot_entries(meta_path)
     agg: dict[int, list] = {}
     del_rows = 0
     for e in entries:
@@ -2747,7 +2746,7 @@ def iceberg_manifests_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _ice_meta_fixture(spark, sf_dir)
     meta_path = _latest_meta(root)
-    mrows = _mlist_rows_current(spark, meta_path)
+    mrows = _mlist_rows_current(meta_path)
     out = []
     for m in sorted(
         mrows, key=lambda m: (int(m["sequence_number"]), int(m["content"] or 0))
@@ -2811,15 +2810,14 @@ SELECT 3, 1, 1, 0, 0, (SELECT rows_ FROM d3), NULL, NULL
 
 
 def iceberg_binary_bucket_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WRITE-side bucket partitioning over a BINARY key (r11, VERDICT
-    r10 item 4): supplier with ``s_key = unhex(md5(s_suppkey))`` — a
-    16-byte uuid-shaped digest key, the shape content-addressed and
-    surrogate-keyed tables actually use — lands under
-    ``bucket(8, s_key)``.  Appendix B hashes the RAW bytes; the
-    executor side runs the same bounded-buffer HOF murmur3 the decimal
-    path uses (functions/icetransforms.murmur3_binary, operand bound
-    once), property-tested bit-for-bit against the pure-Python
-    reference over every tail-length class.
+    """WRITE-side bucket partitioning over a BINARY key: supplier with
+    ``s_key = unhex(md5(s_suppkey))`` — a 16-byte uuid-shaped digest
+    key, the shape content-addressed and surrogate-keyed tables actually
+    use — lands under ``bucket(8, s_key)``.  Appendix B hashes the RAW
+    bytes; the executor side runs the same bounded-buffer HOF murmur3
+    the decimal path uses (functions/icetransforms.murmur3_binary,
+    operand bound once), property-tested bit-for-bit against the
+    pure-Python reference over every tail-length class.
 
     Per probed key (suppkeys 1..5's digests): the probe's own row
     rollup (n_rows + the matching s_suppkey — a wrong bucket placement
@@ -2856,7 +2854,7 @@ def iceberg_binary_bucket_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # per-probe prune evidence from the plan (inputFiles, driver-side),
     # row values from ONE tagged-union collect instead of one job per
-    # probe (r12 — same scheduling-latency fix as F34/F39)
+    # probe (the same scheduling-latency fix as F34/F39)
     probe_keys = [_hl.md5(str(k).encode()).digest() for k in range(1, 6)]
     evidence = {}
     probes = []
@@ -2917,7 +2915,7 @@ GROUP BY p.k
 
 
 def iceberg_refs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ``refs`` metadata table (r11) — production's ``t$refs`` /
+    """The ``refs`` metadata table — production's ``t$refs`` /
     ``t.refs``: one row per named ref (tags and branches, spec v2
     ``refs`` map) plus the implicit ``main`` head, with each ref's
     snapshot ordinal and the ROW COUNT visible through it (the read
@@ -2989,37 +2987,18 @@ FROM (VALUES ('v1', 'tag', 1), ('dev', 'branch', 2), ('main', 'branch', 3))
 
 def _delta_history_rows(table_path: str) -> list[tuple[int, str | None, int]]:
     """(version, commitInfo operation, net live rows) per commit, from
-    the _delta_log alone: cumulative add.stats numRecords minus DV
-    cardinalities, replayed with the protocol's remove-before-add set
-    semantics, one read+parse pass per commit file.  ``add.stats`` is
-    optional in the protocol, but this replay has no other source of
-    row counts, so a stats-less add raises."""
+    the _delta_log alone: each commit replays through the reader's own
+    ``_parse_commit`` / ``_apply_commit``, and a version's rows are the
+    add.stats numRecords minus DV cardinality of the files live at it.
+    ``add.stats`` is optional in the protocol, but this replay has no
+    other source of row counts, so a stats-less add raises."""
     log = Path(table_path) / "_delta_log"
     rows: list[tuple[int, str | None, int]] = []
-    live: dict[str, int] = {}  # path -> net live rows
+    state = LF._DeltaState()
+    live: dict[str, int] = {}  # path -> net rows of its latest add
     for v in LF._log_versions(log)[0]:
-        op = None
-        adds: list[dict] = []
-        removes: list[dict] = []
-        for line in (log / f"{v:020d}.json").read_text().splitlines():
-            if not line.strip():
-                continue
-            a = json.loads(line)
-            if "commitInfo" in a:
-                if op is None:
-                    op = a["commitInfo"].get("operation")
-            elif "add" in a:
-                adds.append(a["add"])
-            elif "remove" in a:
-                removes.append(a["remove"])
-        # protocol set semantics: a DV update is remove(path) +
-        # add(path, dv) in ONE commit — removes apply first and never
-        # evict a re-added path (lakeformats._apply_commit's rule)
-        re_added = {a["path"] for a in adds}
-        for r in removes:
-            if r["path"] not in re_added:
-                live.pop(r["path"], None)
-        for a in adds:
+        parsed = LF._parse_commit(log, v)
+        for a in parsed["adds"]:
             stats = a.get("stats")
             if not stats:
                 raise LF.LakeFormatError(
@@ -3032,7 +3011,9 @@ def _delta_history_rows(table_path: str) -> list[tuple[int, str | None, int]]:
             if dv:
                 n -= int(dv["cardinality"])
             live[a["path"]] = n
-        rows.append((v, op, int(sum(live.values()))))
+        LF._apply_commit(state, parsed)
+        op = (parsed["commit_info"] or {}).get("operation")
+        rows.append((v, op, int(sum(live[p] for p in state.files))))
     return rows
 
 
@@ -3112,7 +3093,7 @@ FROM (VALUES (0, 'WRITE'), (1, 'WRITE'), (2, 'DELETE'),
 
 
 def delta_files_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Delta add-file introspection surface (r11) — F40's twin for
+    """The Delta add-file introspection surface — F40's twin for
     Delta (what DESCRIBE DETAIL / the add-file listing backs): one row
     per partition value with live file count, add.stats record count,
     DV-deleted row count, and the NET live rows — all from the
@@ -3178,8 +3159,8 @@ GROUP BY c_mktsegment
 
 
 def iceberg_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WRITE-AUDIT-PUBLISH on Iceberg branch refs (r12, VERDICT r11
-    item 4) — the production WAP loop end-to-end: supplier slice
+    """WRITE-AUDIT-PUBLISH on Iceberg branch refs — the production WAP
+    loop end-to-end: supplier slice
     %3==0 commits to main; slice %3==1 STAGES on an ``audit`` branch
     (``write_iceberg(..., ref="audit")`` — the refs-map head moves,
     ``current-snapshot-id``/``snapshot-log`` do not); the audit gate

@@ -1,4 +1,4 @@
-"""Native Delta Lake WRITE path (r8): transactional commit authoring
+"""Native Delta Lake WRITE path: transactional commit authoring
 over Spark-written parquet — no delta-spark jars.
 
 The read bridge (``lakeformats.py``) replays ``_delta_log`` JSON into
@@ -145,8 +145,8 @@ def _commit(table_path: str, version: int, actions: list[dict]) -> None:
 def _strip_field_metadata(node) -> None:
     """Recursively drop the ``metadata`` entry from every field dict of
     a schema jsonValue — nested struct fields carry metadata too, and a
-    top-level-only strip left nested comments spuriously failing the
-    logical-shape gate (r8 s3 review)."""
+    top-level-only strip would leave nested comments spuriously
+    failing the logical-shape gate."""
     if isinstance(node, dict):
         if "name" in node and "type" in node:
             node.pop("metadata", None)
@@ -195,8 +195,8 @@ def _gate_unenforced_invariants(schema: T.StructType) -> None:
     """``delta.invariants`` (writer version 2) field metadata is an
     enforcement OBLIGATION this writer does not implement — appending
     unchecked rows would corrupt the table for every engine that
-    trusts the invariant, so the write refuses loudly (r8 s3 review:
-    the metadata-free fingerprint stopped gating this incidentally)."""
+    trusts the invariant, so the write refuses loudly (the
+    metadata-free fingerprint does not gate it on its own)."""
     bad = [
         f.name
         for f in schema.fields
@@ -241,8 +241,7 @@ def _remove_action(f: dict, ts: int, data_change: bool = True) -> dict:
     removed entry's deletionVector descriptor when it has one (the
     protocol keys reconciliation on (path, dvId), and vacuum protects
     the orphaned DV file on the tombstone clock) — ONE definition so
-    every writer path tombstones identically (r8 review: six
-    hand-rolled copies, none carrying the DV)."""
+    every writer path tombstones identically."""
     r = {
         "remove": {
             "path": f["path"],
@@ -256,97 +255,15 @@ def _remove_action(f: dict, ts: int, data_change: bool = True) -> dict:
     return r
 
 
-def _all_txns(table_path: str) -> dict[str, int]:
-    """appId → highest committed ``txn.version`` across the retained
-    JSON commits AND the seeding checkpoint's txn rows — so log
-    cleanup cannot resurrect a replayed batch."""
-    log = Path(table_path) / "_delta_log"
-    out: dict[str, int] = {}
-    if not log.is_dir():
-        return out
-    try:
-        json_versions, ck_version, _latest = LF._log_versions(log)
-    except LF.LakeFormatError:
-        return out
-    if ck_version is not None:
-        import pyarrow.parquet as pq
-
-        parts = json.loads((log / "_last_checkpoint").read_text()).get("parts")
-        if parts:
-            paths = [
-                log
-                / f"{ck_version:020d}.checkpoint.{i + 1:010d}.{parts:010d}.parquet"
-                for i in range(parts)
-            ]
-        else:
-            classic = log / f"{ck_version:020d}.checkpoint.parquet"
-            if classic.exists():
-                paths = [classic]
-            else:
-                # v2 UUID-named manifests carry the txn rows (sidecars
-                # hold only file actions, so one manifest suffices) —
-                # but a MULTIPART checkpoint whose _last_checkpoint
-                # omitted "parts" must scan every part (same rule as
-                # the reader's _read_checkpoint, r9)
-                import re as _re
-
-                cands = sorted(
-                    log.glob(f"{ck_version:020d}.checkpoint.*.parquet")
-                )
-                part_re = _re.compile(
-                    rf"^{ck_version:020d}\.checkpoint\.\d{{10}}\.\d{{10}}\.parquet$"
-                )
-                if any(part_re.match(p.name) for p in cands):
-                    paths = [p for p in cands if part_re.match(p.name)]
-                elif cands:
-                    paths = cands[:1]
-                else:
-                    # JSON-format v2 manifest (r10) — txn rows live in
-                    # the manifest itself, one action object per line
-                    paths = sorted(
-                        log.glob(f"{ck_version:020d}.checkpoint.*.json")
-                    )[:1]
-        for p in paths:
-            if not p.exists():
-                continue
-            if p.suffix == ".json":
-                txn_rows = []
-                with open(p) as f:
-                    for line in f:
-                        if not line.strip():
-                            continue
-                        action = json.loads(line)
-                        if "txn" in action:
-                            txn_rows.append(action["txn"])
-            else:
-                tbl = pq.read_table(str(p))
-                if "txn" not in tbl.column_names:
-                    continue
-                txn_rows = tbl.column("txn").to_pylist()
-            for row in txn_rows:
-                if row and row.get("appId") is not None:
-                    app = str(row["appId"])
-                    v = int(row["version"])
-                    out[app] = max(out.get(app, v), v)
-    for v in json_versions:
-        with open(log / f"{v:020d}.json") as f:
-            for line in f:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                txn = action.get("txn")
-                if txn:
-                    app = str(txn["appId"])
-                    tv = int(txn["version"])
-                    out[app] = max(out.get(app, tv), tv)
-    return out
-
-
 def last_txn_version(table_path: str, app_id: str) -> int | None:
     """Highest ``txn.version`` committed for ``app_id`` — the
     idempotent-append primitive (a streaming sink skips a batch whose
-    txn version it already committed)."""
-    return _all_txns(table_path).get(app_id)
+    txn version it already committed).  The log replay folds in the
+    seeding checkpoint's txn rows, so log cleanup cannot resurrect a
+    replayed batch.  None when the directory holds no Delta log."""
+    if _table_version(table_path) is None:
+        return None
+    return LF._state_as_of(table_path)[0].txns.get(app_id)
 
 
 # ------------------------------------------------------------------
@@ -449,8 +366,8 @@ def footer_column_stats(
             # values wider than 28 digits — min could round up / max
             # down, writing bounds NARROWER than the data into
             # add.stats / manifest bounds, so pruning could skip files
-            # containing matching rows (r11 advisor finding; same bug
-            # class skipping.py fixed in r8).
+            # containing matching rows (the bug class skipping.py's
+            # reader-side rescale also guards).
             from .skipping import _decimal_rescale
 
             return _decimal_rescale(u, dec_scale[name])
@@ -550,8 +467,7 @@ def _stage_and_collect(
         # here, and local sorts alone leave every task's files spanning
         # its full (overlapping) input range — range-partition on the
         # sort keys so files are disjoint GLOBALLY, not just within a
-        # task (r8 review finding: the docstring promised disjoint
-        # min/max; the unpartitioned path silently delivered overlap)
+        # task (a per-task sort alone delivers overlapping min/max)
         out = out.repartitionByRange(*sort_cols)
     if sort_within:
         # clustering layout: rows sort within each task on
@@ -577,9 +493,9 @@ def _stage_and_collect(
     try:
         w.parquet(str(stage))
     except BaseException:
-        # a failed distributed write must not orphan the staging dir
-        # (ADVICE r11); hard kills are covered by vacuum's _staging-*
-        # sweep, this covers the in-process exception path
+        # a failed distributed write must not orphan the staging dir;
+        # hard kills are covered by vacuum's _staging-* sweep, this
+        # covers the in-process exception path
         shutil.rmtree(stage, ignore_errors=True)
         raise
     finally:
@@ -612,7 +528,7 @@ def _stage_and_collect(
         # salt with writer identity + wall clock on top of the content
         # head: two writers racing from the same parent compute the
         # same (version, idx), and a shared 64 KB head would let the
-        # CAS loser overwrite the winner's data bytes (r8 review)
+        # CAS loser overwrite the winner's data bytes
         with open(p, "rb") as f:
             head = f.read(1 << 16)
         tag = hashlib.sha256(
@@ -663,8 +579,8 @@ def _enforce_write_checks(
     op: str,
 ) -> None:
     """CHECK constraints + generated-column equality in ONE aggregate
-    pass (r8 s3 review: separate collects re-executed the merge join
-    once per gate).  SQL CHECK semantics: a row violates a constraint
+    pass (separate collects would re-execute the merge join once per
+    gate).  SQL CHECK semantics: a row violates a constraint
     only when the expression evaluates FALSE — NULL passes; a provided
     generated value violates when it differs null-safely from its
     expression.  Zero cost when the table declares neither; the error
@@ -807,9 +723,9 @@ def _stage_cdc(
     try:
         w.parquet(str(stage))
     except BaseException:
-        # a failed distributed write must not orphan the staging dir
-        # (ADVICE r11); hard kills are covered by vacuum's _staging-*
-        # sweep, this covers the in-process exception path
+        # a failed distributed write must not orphan the staging dir;
+        # hard kills are covered by vacuum's _staging-* sweep, this
+        # covers the in-process exception path
         shutil.rmtree(stage, ignore_errors=True)
         raise
     finally:
@@ -993,8 +909,8 @@ def write_delta(
             if set(df.columns) == set(snap["schema"].fieldNames()):
                 # withColumn appends the computed column LAST; the
                 # logical fingerprint is order-sensitive, so re-project
-                # into table order (r8 s3 review: a generated column
-                # created in a non-terminal position failed every
+                # into table order (a generated column created in a
+                # non-terminal position would fail every
                 # column-omitting append)
                 df = df.select(*snap["schema"].fieldNames())
     schema = df.schema
@@ -1011,7 +927,7 @@ def write_delta(
         # a table BORN with delta.constraints.* must declare the
         # checkConstraints writer feature (version 3) from commit 0 —
         # at version 2 a spec-compliant external writer would append
-        # violating rows without ever checking (r8 s3 review); the
+        # violating rows without ever checking; the
         # legacy ladder is cumulative, so generated columns need 4
         writer_v = 2
         if _table_constraints(configuration):
@@ -1166,7 +1082,7 @@ def _evolve_schema(
         inc = incoming.get(f.name)
         # the TABLE field's metadata rides along — dropping it erased
         # delta.generationExpression from the committed schemaString on
-        # every merge_schema append to a generated table (r8 s3 review)
+        # every merge_schema append to a generated table
         if inc is None:
             fields.append(
                 T.StructField(f.name, f.dataType, True, f.metadata)
@@ -1389,7 +1305,7 @@ def delete_delta(
     if cdf_on:
         # the filtered scan feeds BOTH the bitmap encode and the CDC
         # staging write — pin it so the candidate files are read once,
-        # not once per consumer (r8 review: CDF doubled delete cost)
+        # not once per consumer (CDF would double the delete cost)
         flt = flt.persist()
     matched = flt.select("__fp", "__pos")
 
@@ -1510,8 +1426,8 @@ def delete_delta(
 
     # commit at snapshot_version + 1, NOT a re-read of latest: the
     # hard-link CAS only detects a concurrent commit if we target the
-    # version our plan was derived from (r8 review: a re-read let a
-    # delete silently re-add a file another writer had just compacted)
+    # version our plan was derived from (a re-read would let a delete
+    # silently re-add a file another writer had just compacted)
     version = snap["version"] + 1
     if cdf_on:
         # CHANGE DATA FILES (PROTOCOL.md): with CDF on, the deleted
@@ -1592,7 +1508,7 @@ def merge_delta(
             raise LF.LakeFormatError(f"merge key {k!r} not in table schema")
 
     src = source.select(*schema.fieldNames())
-    # same logical-schema gate as write_delta (r8 review): a name-only
+    # same logical-schema gate as write_delta: a name-only
     # check lets a string-typed source coerce the rewrite output away
     # from the table's schemaString — silent nulls on later reads
     if not _append_compatible(schema, src.schema):
@@ -1671,7 +1587,7 @@ def merge_delta(
             # under CDF the join feeds THREE sinks (merged data write,
             # preimage, postimage) and inserts feed two — pin both so
             # the touched files and the source are scanned once, not
-            # once per consumer (r8 review: CDF tripled merge cost)
+            # once per consumer (CDF would triple the merge cost)
             if joined is not None:
                 joined = joined.persist()
                 pinned.append(joined)
@@ -1756,9 +1672,8 @@ def _zorder_expr(
         # ((v - mn) * 2^bits) runs in BIGINT on the executors: the
         # multiply overflows once (span-1)·2^bits exceeds 2^63-1 — an
         # ANSI throw mid-OPTIMIZE, a silently broken interleave
-        # otherwise (ADVICE r8).  Gate exactly at the formula's true
-        # ceiling (r9 review: the first cut fired a factor of 2 early
-        # while its message claimed the full range).
+        # otherwise.  Gate exactly at the formula's true ceiling, so
+        # the message's claimed range is the range that works.
         if span - 1 > ((2**63 - 1) >> bits):
             raise LF.LakeFormatGatedError(
                 f"zorder column {c!r} spans [{mn}, {mx}] — wider than "
@@ -2017,9 +1932,9 @@ def vacuum_delta(
     ``deletionTimestamp`` when the log has one) — production Delta
     measures tombstone retention from deletionTimestamp, so a
     month-old file tombstoned by OPTIMIZE seconds ago stays protected
-    for the full window (r8 review finding: mtime alone deleted it
-    immediately, breaking readers pinned on the pre-OPTIMIZE
-    snapshot); mtime covers untracked files.  Also sweeps orphaned
+    for the full window (mtime alone would delete it immediately,
+    breaking readers pinned on the pre-OPTIMIZE snapshot); mtime
+    covers untracked files.  Also sweeps orphaned
     ``_staging-*`` dirs past the horizon.  Underscore/dot-prefixed
     entries (``_delta_log``, ``_change_data``, audit markers, hidden
     files) are never touched, matching the production command's
@@ -2083,12 +1998,12 @@ def vacuum_delta(
     # a UniForm-style Iceberg export (delta_to_iceberg) lives under
     # metadata/ — and Iceberg-side maintenance (delete/compact) writes
     # its files under data/.  The Delta log references neither, so an
-    # unaware vacuum would DESTROY the exported table wholesale (r8 s3
-    # review).  When an export exists, both dirs belong to the Iceberg
-    # side: expire_iceberg_snapshots owns their retention.  Vacuuming
-    # old DELTA data files that old Iceberg snapshots referenced stays
-    # allowed — the same "time travel to vacuumed versions fails
-    # loudly" contract, on both logs symmetrically.
+    # unaware vacuum would DESTROY the exported table wholesale.  When
+    # an export exists, both dirs belong to the Iceberg side:
+    # expire_iceberg_snapshots owns their retention.  Vacuuming old
+    # DELTA data files that old Iceberg snapshots referenced stays
+    # allowed — the same "time travel to vacuumed versions fails loudly"
+    # contract, on both logs symmetrically.
     iceberg_export = any((root / "metadata").glob("v*.metadata.json"))
     for p in sorted(root.rglob("*")):
         parts = p.relative_to(root).parts
@@ -2178,7 +2093,7 @@ def restore_delta(spark: SparkSession, table_path: str, version: int) -> dict:
     # a vacuumed target must gate BEFORE the commit (production Delta
     # RESTORE errors on missing files): re-adding entries whose data or
     # DV files are gone would corrupt the CURRENT table, not just the
-    # time-travel read (r8 review finding)
+    # time-travel read
     missing: list[str] = []
     for path, f in sorted(tgt_files.items()):
         if not os.path.exists(os.path.join(table_path, path)):
@@ -2248,7 +2163,7 @@ def write_delta_checkpoint(
     descriptors intact).  Driver-side pyarrow write — checkpoints are
     metadata-cardinality, the same posture as the reader.
 
-    ``v2=True`` writes the V2 form (r9): a UUID-named manifest holding
+    ``v2=True`` writes the V2 form: a UUID-named manifest holding
     protocol/metaData/txn/checkpointMetadata plus ``sidecar`` refs,
     with the add rows split across ``sidecar_files`` parquet files
     under ``_delta_log/_sidecars`` — the layout big production tables
@@ -2257,7 +2172,7 @@ def write_delta_checkpoint(
     feature (readers that predate it would see no checkpoint rows);
     upgrading the protocol is a separate, explicit commit.
 
-    ``manifest_format="json"`` (v2 only, r10 — VERDICT r9 item 5)
+    ``manifest_format="json"`` (v2 only)
     writes the manifest as NDJSON (one action object per line, the
     commit-file shape) instead of parquet; SIDECARS STAY PARQUET (the
     spec allows either format for the manifest but sidecar files are
@@ -2289,15 +2204,10 @@ def write_delta_checkpoint(
                 "would silently ignore the checkpoint's shape)"
             )
 
-    # latest txn per app across the retained log AND any prior
-    # checkpoint — apps whose only marker lives in the old checkpoint
-    # must survive into the new one
-    txns = _all_txns(table_path)
-
     # the protocol and table id come from the REPLAYED STATE (which
     # already folds in any prior checkpoint's rows) — deriving them
-    # from retained JSON commits alone downgraded a DV table to 1/2
-    # after log cleanup and minted a fake table identity (r8 review)
+    # from retained JSON commits alone would downgrade a DV table to
+    # 1/2 after log cleanup and mint a fake table identity
     if state.protocol is None:
         raise LF.LakeFormatError(
             f"no protocol action reachable for {table_path} — refusing "
@@ -2370,7 +2280,9 @@ def write_delta_checkpoint(
     rows.append(
         {"protocol": None, "metaData": meta_row, "txn": None, "add": None}
     )
-    for app, tv in sorted(txns.items()):
+    # the replayed state folds in any prior checkpoint's txn rows, so
+    # apps whose only marker lives there survive into the new one
+    for app, tv in sorted(state.txns.items()):
         rows.append(
             {
                 "protocol": None,

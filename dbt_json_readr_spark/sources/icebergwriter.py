@@ -1,7 +1,7 @@
-"""Native Iceberg WRITE path (r8 session 2): append snapshots authored
-through the real metadata chain — parquet data files (Spark-written,
-distributed), avro manifests + manifest list (the bundled avro-core
-container writer), and ``v{N}.metadata.json`` — readable by
+"""Native Iceberg WRITE path: append snapshots authored through the
+real metadata chain — parquet data files (Spark-written, distributed),
+avro manifests + manifest list (the pure-Python container writer,
+``sources/avrocore.py``), and ``v{N}.metadata.json`` — readable by
 ``lakeformats.read_iceberg_snapshot`` and any spec-conformant reader.
 
 Spec anchors (all public): Iceberg Table Spec format-version 2 —
@@ -142,7 +142,7 @@ def encode_iceberg_bound(type_json: str, v) -> bytes | None:
         if type_json == "binary" or type_json.startswith("fixed["):
             # Appendix D: raw bytes — the exact inverse of the reader
             # branch.  parquet footers DO surface bytes min/max for
-            # binary columns (r11 fifth review), and this function
+            # binary columns, and this function
             # cannot know lower from upper, so values past 16 bytes
             # return None (bound omitted, conservative) rather than
             # embed unbounded blobs in every manifest entry or attempt
@@ -173,7 +173,7 @@ def _manifest_schema(partition_avro_fields: list[dict]) -> str:
         {"name": "file_format", "type": "string"},
         # the spec's REQUIRED partition record is present even when the
         # spec has no fields (empty record) — spec-conformant readers
-        # project it unconditionally (r8 review)
+        # project it unconditionally
         {
             "name": "partition",
             "type": {
@@ -367,7 +367,7 @@ def _normalize_mlist_row(r: dict) -> dict:
     LIST schema (avro readers return exactly the fields the old file
     had; missing keys default) — ONE definition shared by every commit
     path so the metadata the append and delete writers author can
-    never diverge (r8 review: two hand-kept copies)."""
+    never diverge."""
     return {
         "manifest_path": r["manifest_path"],
         "manifest_length": int(r.get("manifest_length") or 0),
@@ -406,7 +406,7 @@ def _append_snapshot_to_meta(
     # — a rollback appends a SECOND entry for an old snapshot-id (made
     # current again, not re-committed); last-wins here would rewrite
     # that snapshot's commit time on the next append and shift AS OF
-    # TIMESTAMP resolution (r11 review finding)
+    # TIMESTAMP resolution
     by_sid: dict = {}
     for e in slog:
         by_sid.setdefault(e["snapshot-id"], e["timestamp-ms"])
@@ -448,7 +448,7 @@ def _fresh_table_metadata(
 ) -> dict:
     """The v1 metadata skeleton for a table created by this writer —
     ONE definition shared by the append path and the Delta export so
-    the two cannot drift (r8 s3 review: a second hand-kept copy)."""
+    the two cannot drift."""
     import uuid as _uuid_mod
 
     return {
@@ -525,7 +525,7 @@ def _encode_part_summaries(
 def _metadata_versions(meta_dir: Path) -> list[Path]:
     """All ``v*.metadata.json`` files, NUMERICALLY sorted — one
     definition so the v10<v9 lexicographic-sort bug class cannot
-    reappear in a hand-kept copy (r8 s3 review: four copies)."""
+    reappear in a hand-kept copy."""
     return sorted(
         meta_dir.glob("v*.metadata.json"),
         key=lambda p: int(p.name.split(".")[0][1:]),
@@ -581,7 +581,7 @@ def _merge_iceberg_schema(
         # Incoming nullability does NOT demote a required column: Spark
         # file reads force every column nullable, so "read the table
         # back, compact/replace it" would otherwise flip required →
-        # optional on every maintenance pass (ADVICE r8 finding).  The
+        # optional on every maintenance pass.  The
         # required invariant is instead ENFORCED against the staged
         # files' footer null counts at commit time (write_iceberg),
         # which checks the DATA rather than trusting the plan's
@@ -616,7 +616,7 @@ _PARTITION_DT_RE = re.compile(
 # superset — decimal buckets, e.g. — via the driver-side Python twin)
 _TRANSFORM_SOURCES = {
     # binary buckets via the same bounded-buffer murmur3 the decimal
-    # path uses (r11; uuid/fixed are read-side types — Spark has no
+    # path uses (uuid/fixed are read-side types — Spark has no
     # uuid carrier to write, and fixed[] only arrives from foreign
     # tables, where skipping.iceberg_bucket_hash prunes them)
     "bucket": {"int", "long", "string", "date", "timestamp", "timestamptz", "binary"},
@@ -794,18 +794,17 @@ def write_iceberg(
     schema-id, so time travel reads the old shape), missing columns
     force optional, and shared-column type changes gate loudly.
 
-    ``ref`` commits the snapshot to a BRANCH head instead of main
-    (r12, VERDICT r11 item 4 — the write half of production
-    write-audit-publish): the new snapshot's parent is the branch's
-    current head, the refs-map entry moves by CAS, and
-    ``current-snapshot-id`` / ``snapshot-log`` stay untouched, so
-    main readers cannot see staged data and AS OF TIMESTAMP cannot
-    resolve to it until ``fast_forward_iceberg`` publishes.  A
-    missing ref is created rooted at the current snapshot (the spec's
+    ``ref`` commits the snapshot to a BRANCH head instead of main (the
+    write half of production write-audit-publish): the new snapshot's
+    parent is the branch's current head, the refs-map entry moves by
+    CAS, and ``current-snapshot-id`` / ``snapshot-log`` stay untouched,
+    so main readers cannot see staged data and AS OF TIMESTAMP cannot
+    resolve to it until ``fast_forward_iceberg`` publishes.  A missing
+    ref is created rooted at the current snapshot (the spec's
     write-to-new-branch behavior); a TAG ref refuses (tags are
-    immutable); creating a brand-new table on a branch refuses (there
-    is no main to protect yet).  Reference frame: the public Iceberg
-    spec's `refs` section; explore.R has no lake layer."""
+    immutable); creating a brand-new table on a branch refuses (there is
+    no main to protect yet).  Reference frame: the public Iceberg spec's
+    `refs` section; explore.R has no lake layer."""
     partition_by = list(partition_by)
     if mode not in ("append", "replace"):
         raise LF.LakeFormatError(f"unsupported write mode {mode!r}")
@@ -820,7 +819,7 @@ def write_iceberg(
     if ref == "main":
         # a "main" branch commit through the refs map would leave
         # current-snapshot-id behind — invisible to every main reader
-        # (r12 review finding); main commits are the default path
+        # main commits are the default path
         raise LF.LakeFormatError(
             "ref='main' is the current snapshot — write without ref="
         )
@@ -908,14 +907,14 @@ def write_iceberg(
         if parent is not None and mode == "append":
             snaps = {s["snapshot-id"]: s for s in meta["snapshots"]}
             mlist = LF._resolve(snaps[parent]["manifest-list"], table_dir)
-            prev_manifests = LF._read_avro_records(spark, mlist)
+            prev_manifests = LF._read_avro_records(mlist)
         if expected_metadata_path is not None:
             # CAS against the version the caller's state was READ from
             # (replace semantics: a stale replace must collide, never
             # silently drop a concurrent commit) — and fail FAST here,
             # before the full-table rewrite burns a complete orphan
-            # copy the final os.link CAS would only then refuse (r8 s3
-            # review); the hard-link CAS still guards the race window
+            # copy the final os.link CAS would only then refuse; the
+            # hard-link CAS still guards the race window
             expected_v = int(
                 os.path.basename(expected_metadata_path).split(".")[0][1:]
             )
@@ -998,9 +997,9 @@ def write_iceberg(
     try:
         w.parquet(str(stage))
     except BaseException:
-        # a failed distributed write must not orphan the staging dir
-        # (ADVICE r11); hard kills are covered by expire's _staging-*
-        # sweep, this covers the in-process exception path
+        # a failed distributed write must not orphan the staging dir;
+        # hard kills are covered by expire's _staging-* sweep, this
+        # covers the in-process exception path
         shutil.rmtree(stage, ignore_errors=True)
         raise
     finally:
@@ -1066,7 +1065,6 @@ def write_iceberg(
         # from the same parent compute the same (seq, idx) — identical
         # names would let the CAS LOSER overwrite the winner's
         # already-committed bytes before its metadata commit fails
-        # (r8 review)
         tag = hashlib.sha256(
             f"{seq}:{idx}:{rel_dir}:{os.getpid()}:{time.time_ns()}".encode()
         ).hexdigest()[:8]
@@ -1136,7 +1134,6 @@ def write_iceberg(
         for pf in part_fields
     ]
     LF.write_avro_records(
-        spark,
         str(meta_dir / m_name),
         _manifest_schema(partition_avro_fields),
         entries,
@@ -1157,7 +1154,7 @@ def write_iceberg(
     )
     norm_rows = [_normalize_mlist_row(r) for r in mlist_rows]
     snap_name = f"snap-{snapshot_id:05d}-{wsalt}.avro"
-    LF.write_avro_records(spark, str(meta_dir / snap_name), _MLIST_SCHEMA, norm_rows)
+    LF.write_avro_records(str(meta_dir / snap_name), _MLIST_SCHEMA, norm_rows)
 
     snapshot = {
         "snapshot-id": snapshot_id,
@@ -1192,7 +1189,7 @@ def write_iceberg(
     # epochs) into table PROPERTIES with high-water-mark semantics.
     # Snapshot summaries vanish when expire_iceberg_snapshots rewrites
     # the snapshot list, so a sink consulting summaries alone would
-    # re-commit a replayed epoch after maintenance (ADVICE r8);
+    # re-commit a replayed epoch after maintenance;
     # properties survive expire and iceberg_last_epoch reads both.
     if summary_extra:
         props = dict(meta.get("properties") or {})
@@ -1255,7 +1252,7 @@ def delete_iceberg(
         predicate, [f.name for f in info["schema"].fields]
     )
 
-    entries = LF.iceberg_snapshot_entries(spark, metadata_path)
+    entries = LF.iceberg_snapshot_entries(metadata_path)
     data_files = sorted(
         {
             e["path"]
@@ -1277,8 +1274,8 @@ def delete_iceberg(
     scan = LF._iceberg_grouped_read(spark, data_files, info, with_meta=True)
     # store file_path TABLE-ROOT-RELATIVE, the same rule the manifests
     # follow — absolute URIs go stale the moment the table directory
-    # moves (r8 session 2: the atomic fixture build rename did exactly
-    # that and every delete silently missed); the reader resolves
+    # moves (the atomic fixture build's rename does exactly that, and
+    # every delete would silently miss); the reader resolves
     # relative stored paths against the root, foreign absolute URIs
     # still work
     prefix = table_dir.rstrip("/") + "/"
@@ -1309,7 +1306,7 @@ def delete_iceberg(
             "overwrite"
         ).parquet(str(stage))
     except BaseException:
-        # failed write → no orphaned staging dir (ADVICE r11)
+        # failed write → no orphaned staging dir
         shutil.rmtree(stage, ignore_errors=True)
         raise
     parts = sorted(stage.rglob("*.parquet"))
@@ -1327,7 +1324,6 @@ def delete_iceberg(
         return {"positions_written": 0, "snapshot_id": None}
 
     dest = _commit_delete_snapshot(
-        spark,
         metadata_path,
         info,
         del_rel=del_rel,
@@ -1346,7 +1342,6 @@ def delete_iceberg(
 
 
 def _commit_delete_snapshot(
-    spark: SparkSession,
     metadata_path: str,
     info: dict,
     *,
@@ -1384,7 +1379,6 @@ def _commit_delete_snapshot(
         )
     m_name = f"dm-{snapshot_id:05d}-{wsalt}.avro"
     LF.write_avro_records(
-        spark,
         str(meta_dir / m_name),
         _manifest_schema(partition_avro_fields),
         [
@@ -1412,7 +1406,7 @@ def _commit_delete_snapshot(
     parent = meta.get("current-snapshot-id")
     snaps = {s["snapshot-id"]: s for s in meta["snapshots"]}
     prev_manifests = LF._read_avro_records(
-        spark, LF._resolve(snaps[parent]["manifest-list"], table_dir)
+        LF._resolve(snaps[parent]["manifest-list"], table_dir)
     )
     mlist_rows = [_normalize_mlist_row(r) for r in prev_manifests]
     mlist_rows.append(
@@ -1434,7 +1428,7 @@ def _commit_delete_snapshot(
         }
     )
     snap_name = f"snap-{snapshot_id:05d}-{wsalt}.avro"
-    LF.write_avro_records(spark, str(meta_dir / snap_name), _MLIST_SCHEMA, mlist_rows)
+    LF.write_avro_records(str(meta_dir / snap_name), _MLIST_SCHEMA, mlist_rows)
 
     now_ms = int(time.time() * 1000)
     snapshot = {
@@ -1461,9 +1455,7 @@ def _commit_delete_snapshot(
     return str(dest)
 
 
-def delete_iceberg_equality(
-    spark: SparkSession, metadata_path: str, keys: DataFrame
-) -> dict:
+def delete_iceberg_equality(metadata_path: str, keys: DataFrame) -> dict:
     """DELETE as v2 EQUALITY deletes — the CDC-friendly delete: the
     distinct KEY TUPLES of ``keys`` land in a delete parquet (NO
     target scan at all — the point vs position deletes, whose write
@@ -1512,7 +1504,7 @@ def delete_iceberg_equality(
             *keys.columns
         ).write.mode("overwrite").parquet(str(stage))
     except BaseException:
-        # failed write → no orphaned staging dir (ADVICE r11)
+        # failed write → no orphaned staging dir
         shutil.rmtree(stage, ignore_errors=True)
         raise
     parts = sorted(stage.rglob("*.parquet"))
@@ -1530,7 +1522,6 @@ def delete_iceberg_equality(
         return {"keys_written": 0, "snapshot_id": None}
 
     dest = _commit_delete_snapshot(
-        spark,
         metadata_path,
         info,
         del_rel=del_rel,
@@ -1555,7 +1546,6 @@ def delete_iceberg_equality(
 
 
 def expire_iceberg_snapshots(
-    spark: SparkSession,
     metadata_path: str,
     keep_last: int,
     dry_run: bool = False,
@@ -1585,12 +1575,11 @@ def expire_iceberg_snapshots(
     }
     # the recency window counts MAIN-ancestor snapshots only: staged
     # branch commits carry the highest sequence numbers, and counting
-    # them would push the (older) current snapshot out of its own
-    # window — turning routine maintenance into a refusal whenever a
-    # WAP branch holds >= keep_last staged commits (r12 review
-    # finding).  Branch heads stay protected via ref_ids; rolled-over
-    # and unpublished-intermediate snapshots stay expirable, as
-    # documented.
+    # them would push the (older) current snapshot out of its own window
+    # — turning routine maintenance into a refusal whenever a WAP branch
+    # holds >= keep_last staged commits.  Branch heads stay protected
+    # via ref_ids; rolled-over and unpublished-intermediate snapshots
+    # stay expirable, as documented.
     anc = ancestor_ids(meta)
     main_chain = [s for s in snaps if s["snapshot-id"] in anc]
     window = {s["snapshot-id"] for s in main_chain[-keep_last:]}
@@ -1601,7 +1590,7 @@ def expire_iceberg_snapshots(
         "files_deleted": 0,
         "metadata_path": metadata_path,
     }
-    # orphaned-staging sweep (ADVICE r11): a writer killed mid-stage
+    # orphaned-staging sweep: a writer killed mid-stage
     # (SIGKILL — the in-process exception path cleans after itself)
     # leaves a `_staging-*` dir behind forever; expire is the
     # Iceberg-side janitor, mirroring Delta vacuum's sweep.  Age-gated
@@ -1628,12 +1617,12 @@ def expire_iceberg_snapshots(
         for s in snapshots:
             mlist = LF._resolve(s["manifest-list"], table_dir)
             out.add(os.path.normpath(mlist))
-            for m in LF._read_avro_records(spark, mlist):
+            for m in LF._read_avro_records(mlist):
                 mp = os.path.normpath(
                     LF._resolve(m["manifest_path"], table_dir)
                 )
                 out.add(mp)
-                for e in LF._read_avro_records(spark, mp):
+                for e in LF._read_avro_records(mp):
                     out.add(
                         os.path.normpath(
                             LF._resolve(e["data_file"]["file_path"], table_dir)
@@ -1668,9 +1657,9 @@ def expire_iceberg_snapshots(
         )
         audit["metadata_path"] = str(dest)
         # file deletion only AFTER the CAS succeeds: a stale expire must
-        # collide having destroyed nothing (r8 s3 review — unlinking
-        # first deleted files a concurrent append still referenced,
-        # then failed the commit)
+        # collide having destroyed nothing (unlinking first would delete
+        # files a concurrent append still references, then fail the
+        # commit)
         for p in sorted(dead):
             try:
                 os.unlink(p)
@@ -1702,8 +1691,8 @@ def delta_to_iceberg(spark: SparkSession, table_path: str) -> dict:
     F9/F11 machinery immediately; partition-column bounds come from
     the partition value itself.
 
-    DELETION VECTORS export as Iceberg POSITION DELETES (r9, VERDICT
-    r8 item 4 — the production-UniForm rule): each live file's DV
+    DELETION VECTORS export as Iceberg POSITION DELETES (the
+    production-UniForm rule): each live file's DV
     positions decode (driver-side under the cap, executor-side above
     it — the snapshot reader's own machinery) into one sorted
     (file_path, pos) delete parquet, committed as a content=1 delete
@@ -1711,7 +1700,7 @@ def delta_to_iceberg(spark: SparkSession, table_path: str) -> dict:
     Iceberg readers hide exactly the rows Delta readers hide while
     both logs keep serving the same data bytes.
 
-    COLUMN-MAPPED tables export too (r9): the Iceberg field ids are
+    COLUMN-MAPPED tables export too: the Iceberg field ids are
     the delta.columnMapping.ids, so the read side's footer-field-id
     resolution finds the physically-named parquet columns under their
     LOGICAL names; stats collect per file under physical names and key
@@ -1761,7 +1750,7 @@ def delta_to_iceberg(spark: SparkSession, table_path: str) -> dict:
     # mapped tables: Iceberg field id = delta.columnMapping.id (column
     # identity carries over, so the grouped read's footer-id resolution
     # finds the physically-named parquet columns, exactly like a
-    # renamed Iceberg column's old files — r9); unmapped: positional
+    # renamed Iceberg column's old files); unmapped: positional
     field_ids = (
         dict(cm_ids)
         if cm_mode != "none"
@@ -1801,7 +1790,7 @@ def delta_to_iceberg(spark: SparkSession, table_path: str) -> dict:
         cur = by_id[meta["current-schema-id"]]
         export_sid = int(meta["current-schema-id"])
         if cur["fields"] != schema_json["fields"]:
-            # Re-export after Delta schema evolution (r9): legal ONLY
+            # Re-export after Delta schema evolution: legal ONLY
             # for column-mapped tables, whose field ids are the STABLE
             # delta.columnMapping.ids — the evolved shape joins as a
             # new schemas[] entry (old snapshots keep their schema-id,
@@ -1979,7 +1968,6 @@ def delta_to_iceberg(spark: SparkSession, table_path: str) -> dict:
         for c in partition_by
     ]
     LF.write_avro_records(
-        spark,
         str(meta_dir / m_name),
         _manifest_schema(partition_avro_fields),
         entries,
@@ -2036,7 +2024,7 @@ def delta_to_iceberg(spark: SparkSession, table_path: str) -> dict:
                 "overwrite"
             ).parquet(str(stage))
         except BaseException:
-            # failed write → no orphaned staging dir (ADVICE r11)
+            # failed write → no orphaned staging dir
             shutil.rmtree(stage, ignore_errors=True)
             raise
         part = sorted(stage.rglob("*.parquet"))[0]
@@ -2047,7 +2035,6 @@ def delta_to_iceberg(spark: SparkSession, table_path: str) -> dict:
         n_dv_positions = int(_pq.ParquetFile(str(del_dest)).metadata.num_rows)
         dm_name = f"dm-{snapshot_id:05d}-{wsalt}.avro"
         LF.write_avro_records(
-            spark,
             str(meta_dir / dm_name),
             _manifest_schema(partition_avro_fields),
             [
@@ -2091,7 +2078,7 @@ def delta_to_iceberg(spark: SparkSession, table_path: str) -> dict:
         )
     snap_name = f"snap-{snapshot_id:05d}-{wsalt}.avro"
     LF.write_avro_records(
-        spark, str(meta_dir / snap_name), _MLIST_SCHEMA, mlist_rows
+        str(meta_dir / snap_name), _MLIST_SCHEMA, mlist_rows
     )
     snapshot = {
         "snapshot-id": snapshot_id,
@@ -2140,7 +2127,7 @@ def iceberg_last_epoch(table_dir: str, key: str) -> int | None:
     mirrors integer summary markers there), then snapshot summaries —
     the properties copy survives expire_iceberg_snapshots rewriting
     the snapshot list, so maintenance cannot reopen a committed epoch
-    to replay (ADVICE r8)."""
+    to replay."""
     meta_dir = Path(table_dir) / "metadata"
     existing = _metadata_versions(meta_dir)
     if not existing:
@@ -2188,7 +2175,7 @@ def compact_iceberg(
     table_dir = os.path.dirname(
         os.path.dirname(os.path.abspath(metadata_path))
     )
-    entries = LF.iceberg_snapshot_entries(spark, metadata_path)
+    entries = LF.iceberg_snapshot_entries(metadata_path)
     files_before = len(
         {e["path"] for e in entries if e["status"] != 2 and e["content"] == 0}
     )
@@ -2251,8 +2238,8 @@ def set_iceberg_ref(
 def ancestor_ids(meta: dict) -> set:
     """Snapshot ids on the CURRENT parent chain — the spec's
     is-current-ancestor set.  ONE definition shared by rollback's
-    ancestor-only rule and the history metadata table (r11 review: two
-    hand-kept copies of this walk could drift)."""
+    ancestor-only rule and the history metadata table, so the two
+    cannot drift."""
     snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
     node = snaps.get(meta.get("current-snapshot-id"))
     out: set = set()
@@ -2335,7 +2322,7 @@ def fast_forward_iceberg(metadata_path: str, branch: str, to_ref: str) -> dict:
         # ALWAYS the table's current snapshot — an explicit refs["main"]
         # entry is not maintained by the main commit path, so trusting
         # it would let a stale ref defeat the non-ancestor guard below
-        # and silently drop main commits (r12 review finding)
+        # and silently drop main commits
         cur = meta.get("current-snapshot-id")
     elif branch in refs:
         if refs[branch].get("type") != "branch":

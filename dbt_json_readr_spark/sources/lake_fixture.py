@@ -1,12 +1,12 @@
 """Deterministic synthetic dbt-invocation LAKE generator.
 
 SURVEY §4's core scale claim is that an artifact lake holds millions of
-``manifest.json`` files (one per dbt invocation) and readers take a glob,
-read ``wholetext`` one row per file in parallel, and parse JVM-side —
-the direct 100× of ``import_manifest_json`` (explore.R:223-259), which
-reads exactly one file.  Until r6 every fixture exercised ONE target/
-dir; this module materializes a 1,200-invocation lake so the multi-file
-path has a gated key (``dbt_manifest_lake``), tests, and a bench row.
+``manifest.json`` files (one per dbt invocation) and readers take a
+glob, read ``wholetext`` one row per file in parallel, and parse
+JVM-side — the direct 100× of ``import_manifest_json``
+(explore.R:223-259), which reads exactly one file.  This module
+materializes a 1,200-invocation lake so the multi-file path has a gated
+key (``dbt_manifest_lake``), tests, and a bench row.
 
 Generation is fully deterministic (index-driven, no RNG, no clock), so
 the Spark reader and the stdlib oracle can both (re)generate it on

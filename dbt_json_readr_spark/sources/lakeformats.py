@@ -1,5 +1,5 @@
 """External table-format READ bridges: Delta Lake ``_delta_log`` and
-Iceberg ``metadata.json`` snapshots (VERDICT r5 item 6).
+Iceberg ``metadata.json`` snapshots.
 
 ``manifest_commit.ManifestTable`` is this engine's homegrown
 write-audit-publish format; a real lake already has tables in Delta or
@@ -10,11 +10,11 @@ recoverable with the stdlib — no format jars — and the files themselves
 are plain parquet Spark reads natively.
 
 Scope is explicit and loud:
-- Delta: checkpoint-parquet state (pyarrow, driver-side — r6) seeds the
+- Delta: checkpoint-parquet state (pyarrow, driver-side) seeds the
   file set when ``_last_checkpoint`` covers the target version, with
   later JSON commits replayed on top; a fully-retained JSON log replays
-  from 0.  Column mapping modes 'name' and 'id' (r7/r8) and DELETION
-  VECTORS (r7) are implemented — mode 'id' resolves parquet columns by
+  from 0.  Column mapping modes 'name' and 'id' and DELETION VECTORS
+  are implemented — mode 'id' resolves parquet columns by
   footer FIELD ID per file (the Iceberg-style identity rule); DV
   positions decode driver-side (sources/roaring.py,
   magic/size/CRC/cardinality all validated) and apply as a distributed
@@ -22,19 +22,19 @@ Scope is explicit and loud:
   retained log gates loudly (that history is vacuumed), as do nested
   mapped columns and any other reader-protocol-3 feature (timestampNtz,
   ...).  Checkpoints seed state in classic single/multipart parquet
-  form AND v2 form (UUID-named manifest + _sidecars file-action
-  parquet, r9); JSON v2 manifests gate.
+  form AND v2 form (UUID-named parquet or NDJSON manifest + _sidecars
+  file-action parquet).  The same replay carries ``txn`` markers, the
+  idempotent-append state the writer reads back.
 - Iceberg: metadata.json parse (snapshot lineage, schema translation to
   Spark types, current-snapshot resolution) is full-fidelity; the DATA
-  path walks the avro manifest list with the avro-core container
-  reader Spark bundles (no spark-avro DataSource needed — manifests
-  are driver-side pointer rows) and APPLIES v2 row-level deletes:
-  position deletes via the _metadata.row_index anti-join, equality
-  deletes via null-safe value anti-joins honoring sequence-number
-  ordering.  ``read_iceberg_snapshot`` gates loudly when avro-core is
-  absent, on delete metadata it cannot apply correctly (missing
-  equality_ids / sequence numbers, nested equality columns), and on
-  malformed delete manifests.
+  path walks the avro manifest list with the pure-Python container
+  reader (``sources/avrocore.py`` — manifests are driver-side pointer
+  rows, no JVM involved) and APPLIES v2 row-level deletes: position
+  deletes via the _metadata.row_index anti-join, equality deletes via
+  null-safe value anti-joins honoring sequence-number ordering.
+  ``read_iceberg_snapshot`` gates loudly on delete metadata it cannot
+  apply correctly (missing equality_ids / sequence numbers, nested
+  equality columns) and on malformed delete manifests.
 
 Driver-side work is O(metadata) — identical posture to ManifestTable:
 the driver parses pointers, executors read parquet.
@@ -56,9 +56,9 @@ class LakeFormatError(RuntimeError):
 
 
 class LakeFormatGatedError(LakeFormatError):
-    """The metadata is valid but reading it needs a component this
-    environment lacks (checkpoint replay, spark-avro).  Message says
-    exactly which."""
+    """The metadata is valid but uses a feature this bridge does not
+    implement (a newer reader protocol, nested column mapping,
+    vacuumed history...).  Message says exactly which."""
 
 
 # ------------------------------------------------------------- Delta
@@ -87,9 +87,9 @@ def _uri_path(path: str) -> str:
     exactly the characters Spark encodes.  EVERY python-side path that
     joins against a ``__fp`` column must pass through this — a raw
     path with a space matches nothing and, but for the loud path-map
-    asserts, would silently resurrect DV-deleted rows (r8: found by
-    the write path's MERGE on the space-bearing o_orderpriority
-    partition values)."""
+    asserts, would silently resurrect DV-deleted rows (MERGE on the
+    space-bearing o_orderpriority partition values is the pinned
+    case)."""
     return "".join(
         ch if (ch in _URI_SAFE or ord(ch) > 127) else f"%{ord(ch):02X}"
         for ch in path
@@ -105,10 +105,9 @@ def _delta_log_dir(table_path: str) -> Path:
 
 # reader protocol-3 table features this bridge actually implements;
 # anything else in readerFeatures gates loudly (timestampNtz...).
-# v2Checkpoint landed in r9 (VERDICT r8 item 6): UUID-named parquet
-# manifests with sidecar file-action parquet under _delta_log/_sidecars
-# replay into the same state classic checkpoints seed; JSON-format v2
-# manifests still gate at read time.
+# v2Checkpoint: UUID-named parquet or NDJSON manifests with sidecar
+# file-action parquet under _delta_log/_sidecars replay into the same
+# state classic checkpoints seed.
 _SUPPORTED_READER_FEATURES = {"columnMapping", "deletionVectors", "v2Checkpoint"}
 
 # deletion-vector positions materialize on the DRIVER up to this total
@@ -116,14 +115,12 @@ _SUPPORTED_READER_FEATURES = {"columnMapping", "deletionVectors", "v2Checkpoint"
 # accounting at the cap: the decoded python int lists (~28 B each,
 # ~0.6 GB), plus the numpy/pandas frame (~8 B each) and its arrow copy
 # — ~0.8 GB peak, safe under the 4-6 GB driver the verify recipe
-# budgets.  BEYOND the cap the decode moves EXECUTOR-side (r8, VERDICT
-# r7 item 5): descriptors ship as metadata rows, each task runs the
-# same roaring decode and emits (file_path, row_index) batches, so a
-# heavily-deleted 100 TB table decodes at DV-file parallelism with no
-# driver ceiling (the per-DV task bound below is the one that remains).  Small snapshots keep the driver path — one
-# decode, no extra stage.  Per-call override via
-# read_delta_snapshot(dv_driver_cap=...), matching the dedup caps'
-# visible-parameter convention.
+# budgets.  BEYOND the cap the decode moves EXECUTOR-side: descriptors
+# ship as metadata rows, each task runs the same roaring decode and
+# emits (file_path, row_index) batches, so a heavily-deleted 100 TB
+# table decodes at DV-file parallelism with no driver ceiling (the
+# per-DV task bound below is the one that remains).  Small snapshots
+# keep the driver path — one decode, no extra stage.
 _DV_DRIVER_CAP = 20_000_000
 
 # executor-side decode bound: ONE deletion vector still decodes as a
@@ -149,11 +146,14 @@ class _DeltaState:
         # resolves parquet columns by this against footer field ids)
         self.field_ids: dict[str, int] = {}
         # the LAST protocol action seen and the table id — a checkpoint
-        # writer must carry both faithfully (r8 review: deriving the
-        # protocol from retained JSON alone downgraded a DV table to
-        # 1/2 after log cleanup; a constant id broke table identity)
+        # writer must carry both faithfully: a protocol derived from
+        # retained JSON alone would downgrade a DV table to 1/2 after
+        # log cleanup, and a constant id would break table identity
         self.protocol: dict | None = None
         self.meta_id: str | None = None
+        # appId -> highest committed txn version (the idempotent-append
+        # marker a streaming sink checks before it commits a batch)
+        self.txns: dict[str, int] = {}
 
     def check_protocol(self, p: dict) -> None:
         self.protocol = {
@@ -174,8 +174,7 @@ class _DeltaState:
         if v > 3:
             # a future reader protocol's requirements are NOT expressed
             # through the readerFeatures list this bridge knows — only
-            # exactly-3 is feature-gated; anything newer gates whole
-            # (r7 close review: `>= 3` silently read protocol-4 tables).
+            # exactly-3 is feature-gated; anything newer gates whole.
             raise LakeFormatGatedError(
                 f"Delta reader protocol {v} is newer than this bridge "
                 "understands (max 3 with columnMapping)"
@@ -265,14 +264,20 @@ class _DeltaState:
             # skipping.delta_file_matches parses it lazily and treats
             # absence/garbage as "keep the file"
             "stats": a.get("stats"),
-            # carried for faithful checkpoint re-emission (r8 review:
-            # zeroing them lied to size-aware external readers)
+            # carried for faithful checkpoint re-emission: zeroing them
+            # would lie to size-aware external readers
             "size": a.get("size"),
             "modificationTime": a.get("modificationTime"),
         }
 
     def remove(self, path: str) -> None:
         self.files.pop(path, None)
+
+    def txn(self, t: dict) -> None:
+        if t.get("appId") is None:
+            return  # checkpoint parquet yields all-None structs
+        app, v = str(t["appId"]), int(t["version"])
+        self.txns[app] = max(self.txns.get(app, v), v)
 
 
 def _read_checkpoint(log: Path, ck_version: int, parts: int | None) -> _DeltaState:
@@ -297,8 +302,7 @@ def _read_checkpoint(log: Path, ck_version: int, parts: int | None) -> _DeltaSta
             # omitted the optional "parts" field from a V2 UUID-named
             # manifest: part names are n.checkpoint.<i:010d>.<N:010d>
             # .parquet — treating one part as a complete v2 manifest
-            # would silently drop every file in the other parts
-            # (r9 review finding).
+            # would silently drop every file in the other parts.
             import re as _re
 
             cands = sorted(log.glob(f"{ck_version:020d}.checkpoint.*.parquet"))
@@ -316,16 +320,15 @@ def _read_checkpoint(log: Path, ck_version: int, parts: int | None) -> _DeltaSta
                     for i in range(total)
                 ]
             elif cands:
-                # V2 CHECKPOINT (r9): UUID-named manifest — any one
+                # V2 CHECKPOINT: UUID-named manifest — any one
                 # manifest for the version is complete by spec; its
                 # sidecar actions point at file-action parquet under
                 # _delta_log/_sidecars
                 paths = [cands[0]]
             else:
-                # JSON-FORMAT v2 manifest (r10, VERDICT r9 item 5):
-                # the spec allows the manifest itself as NDJSON —
-                # same actions, one object per line; sidecars are
-                # still parquet
+                # JSON-FORMAT v2 manifest: the spec allows the manifest
+                # itself as NDJSON — same actions, one object per line;
+                # sidecars are still parquet
                 jcands = sorted(
                     log.glob(f"{ck_version:020d}.checkpoint.*.json")
                 )
@@ -353,6 +356,8 @@ def _read_checkpoint(log: Path, ck_version: int, parts: int | None) -> _DeltaSta
                 state.meta(md)
             if row.get("add"):
                 state.add(dict(row["add"]))
+            if row.get("txn"):
+                state.txn(dict(row["txn"]))
             if row.get("checkpointMetadata"):
                 cm = dict(row["checkpointMetadata"])
                 if int(cm.get("version", ck_version)) != ck_version:
@@ -395,14 +400,26 @@ def _read_checkpoint(log: Path, ck_version: int, parts: int | None) -> _DeltaSta
 
 def _parse_commit(log: Path, v: int) -> dict:
     """One JSON commit parsed into action groups (order-free, per the
-    protocol's set semantics)."""
-    out: dict = {"protocol": [], "meta": [], "adds": [], "removes": [], "cdc": []}
+    protocol's set semantics), plus its first ``commitInfo`` (or
+    None)."""
+    out: dict = {
+        "protocol": [],
+        "meta": [],
+        "adds": [],
+        "removes": [],
+        "cdc": [],
+        "txns": [],
+        "commit_info": None,
+    }
     with open(log / f"{v:020d}.json") as f:
         for line in f:
             if not line.strip():
                 continue
             action = json.loads(line)
-            if "protocol" in action:
+            if "commitInfo" in action:
+                if out["commit_info"] is None:
+                    out["commit_info"] = action["commitInfo"]
+            elif "protocol" in action:
                 out["protocol"].append(action["protocol"])
             elif "metaData" in action:
                 out["meta"].append(action["metaData"])
@@ -412,6 +429,8 @@ def _parse_commit(log: Path, v: int) -> dict:
                 out["removes"].append(action["remove"])
             elif "cdc" in action:
                 out["cdc"].append(action["cdc"])
+            elif "txn" in action:
+                out["txns"].append(action["txn"])
     return out
 
 
@@ -420,19 +439,18 @@ def _apply_commit(state: _DeltaState, parsed: dict) -> None:
     reconciliation keys file actions by (path, dvId) and puts no
     meaning on JSON line order, and a DV update is remove(path) +
     add(path, dv) in ONE commit — replaying add-then-remove
-    line-by-line would drop the file entirely (silent data loss,
-    r7 third-review finding).  Removes apply before adds so the
-    re-add always wins."""
+    line-by-line would drop the file entirely.  Removes apply before
+    adds so the re-add always wins."""
     for pr in parsed["protocol"]:
         state.check_protocol(pr)
     for md in parsed["meta"]:
         state.meta(md)
-    re_added = {a["path"] for a in parsed["adds"]}
     for r in parsed["removes"]:
-        if r["path"] not in re_added:
-            state.remove(r["path"])
+        state.remove(r["path"])
     for a in parsed["adds"]:
         state.add(a)
+    for t in parsed["txns"]:
+        state.txn(t)
 
 
 def _log_versions(log: Path) -> tuple[list[int], int | None, int]:
@@ -456,12 +474,11 @@ def _log_versions(log: Path) -> tuple[list[int], int | None, int]:
 def _state_as_of(table_path: str, version: int | None = None) -> tuple[_DeltaState, int]:
     """Replay the log to the state AS OF ``version`` (default latest).
 
-    Replay strategy (r6: checkpoint support landed, removing the old
-    gate): if ``_last_checkpoint`` points at a checkpoint ≤ the target
-    version, its parquet state seeds the file set and only JSON commits
-    AFTER it replay; otherwise the JSON log replays from 0.  Time
-    travel BEHIND the retained log (target < checkpoint and commit 0
-    vacuumed) gates loudly — that history is physically gone."""
+    Replay strategy: if ``_last_checkpoint`` points at a checkpoint ≤
+    the target version, its parquet state seeds the file set and only
+    JSON commits AFTER it replay; otherwise the JSON log replays from 0.
+    Time travel BEHIND the retained log (target < checkpoint and commit
+    0 vacuumed) gates loudly — that history is physically gone."""
     log = _delta_log_dir(table_path)
     json_versions, ck_version, latest = _log_versions(log)
     ck_parts: int | None = None
@@ -540,8 +557,8 @@ def delta_commit_timestamps(table_path: str) -> dict[int, int]:
                 # violation.  Across the mtime/ICT boundary (feature
                 # enabled mid-history, or a restored log's skewed
                 # mtime preceding an honest ICT) the spec makes no
-                # ordering promise — clamp like any skewed clock
-                # (r8 tenth review: gating there failed valid tables).
+                # ordering promise — clamp like any skewed clock (gating
+                # there would fail valid tables).
                 raise LakeFormatGatedError(
                     f"commit {v}'s inCommitTimestamp {ts} is not after "
                     f"its predecessor's {prev} — corrupt commit clock"
@@ -597,7 +614,7 @@ def iceberg_snapshot_at_timestamp(metadata_path: str, ts) -> int:
     walks ``snapshot-log`` when present — the spec's COMMIT-ORDERED
     history, the structure the reference reader consults — so same-ms
     ties break toward the later COMMIT, not whatever order the
-    ``snapshots`` array was serialized in (r8 tenth review); metadata
+    ``snapshots`` array was serialized in; metadata
     without a snapshot-log falls back to the array with the same
     last-entry-wins rule."""
     ts_ms = _to_epoch_ms(ts)
@@ -683,8 +700,7 @@ def _dv_positions(table_path: str, desc: dict) -> list[int]:
             # Z85 encodes 4-byte groups, so writers zero-pad the blob
             # and sizeInBytes records the TRUE length — decode, check
             # the padding is consistent, then truncate.  Same loud
-            # missing-field contract as the file-backed branch (r8
-            # review: the r7-advice fix only covered 'u'/'p').
+            # missing-field contract as the file-backed branch.
             if desc.get("sizeInBytes") is None:
                 raise LakeFormatError(
                     "deletion-vector descriptor (storageType 'i') is "
@@ -703,7 +719,7 @@ def _dv_positions(table_path: str, desc: dict) -> list[int]:
             fpath = _dv_file_path(table_path, desc)
             # the spec marks offset optional — a descriptor missing it
             # (or sizeInBytes) must fail the module's loud contract,
-            # not a bare KeyError (r7 advice)
+            # not a bare KeyError
             missing = [
                 k for k in ("offset", "sizeInBytes") if desc.get(k) is None
             ]
@@ -737,7 +753,7 @@ def prune_delta_files(snap: dict, predicate: list | None) -> tuple[list[dict], i
     partitionValues evaluation (sources/skipping.py).  Strictly
     conservative: files without stats are kept.  This is the 100 TB
     lever: the pruned list is what reaches ``spark.read``, so a
-    selective predicate stops opening every file (VERDICT r7 item 2)."""
+    selective predicate stops opening every file."""
     from . import skipping
 
     if not predicate:
@@ -768,7 +784,6 @@ def read_delta_snapshot(
     spark: SparkSession,
     table_path: str,
     version: int | None = None,
-    dv_driver_cap: int | None = None,
     predicate: list | None = None,
     timestamp=None,
 ) -> DataFrame:
@@ -778,22 +793,21 @@ def read_delta_snapshot(
     declared types (they are NOT in the data files), mirroring
     ManifestTable.read's partition handling.
 
-    Column mapping mode 'name' (r7, VERDICT r6 item 2): the parquet
-    files store PHYSICAL column names (``col-<uuid>``); the scan
-    schema uses those and a final projection aliases them back to the
-    logical names — a pure metadata remap, so logical renames need no
-    data rewrite.  Per the protocol, with mapping enabled the log
-    tracks partitionValues under the PHYSICAL name; the lookup falls
-    back to the logical name for writers that predate that rule.
+    Column mapping mode 'name': the parquet files store PHYSICAL column
+    names (``col-<uuid>``); the scan schema uses those and a final
+    projection aliases them back to the logical names — a pure metadata
+    remap, so logical renames need no data rewrite.  Per the protocol,
+    with mapping enabled the log tracks partitionValues under the
+    PHYSICAL name; the lookup falls back to the logical name for writers
+    that predate that rule.
 
-    ``predicate`` (r8, VERDICT r7 item 2) is a conjunction of
-    ``(column, op, value)`` terms: files whose ``add.stats`` /
-    partitionValues PROVE no match are dropped from the scan list
-    before ``spark.read`` ever sees them, and the predicate is then
-    ALSO applied row-level — skipping is a pure optimization, never a
-    semantics change.
+    ``predicate`` is a conjunction of ``(column, op, value)`` terms:
+    files whose ``add.stats`` / partitionValues PROVE no match are
+    dropped from the scan list before ``spark.read`` ever sees them, and
+    the predicate is then ALSO applied row-level — skipping is a pure
+    optimization, never a semantics change.
 
-    ``timestamp`` (r8) is AS OF TIMESTAMP time travel: epoch ms or a
+    ``timestamp`` is AS OF TIMESTAMP time travel: epoch ms or a
     datetime (naive = UTC), resolved to the latest commit at-or-before
     it via ``delta_version_at_timestamp`` (inCommitTimestamp when the
     log carries it, else monotonic-adjusted file mtimes)."""
@@ -818,14 +832,12 @@ def read_delta_snapshot(
         row_filter = skipping.predicate_column(predicate)
     if not snap["files"]:
         return spark.createDataFrame([], schema)
-    # deletion vectors (r7/r8): resolve each file's DV to row indexes
+    # deletion vectors: resolve each file's DV to row indexes
     # and anti-join on the scan's hidden (_metadata.file_path,
     # row_index) — the same distributed shape as Iceberg position
     # deletes; the data itself never round-trips.  Below the cap the
     # driver decodes (one pass, no extra stage); above it the decode
-    # runs EXECUTOR-side at DV-file parallelism (VERDICT r7 item 5) —
-    # no driver ceiling.
-    cap = _DV_DRIVER_CAP if dv_driver_cap is None else dv_driver_cap
+    # runs EXECUTOR-side at DV-file parallelism — no driver ceiling.
     dv_total = 0
     dv_files: list[tuple[str, dict]] = []
     all_paths: list[str] = []
@@ -850,14 +862,13 @@ def read_delta_snapshot(
         dv_files.append((_uri_path(ap), dv))
     if not dv_files:
         dels = None
-    elif dv_total > cap:
+    elif dv_total > _DV_DRIVER_CAP:
         worst = max(int(d["cardinality"]) for _, d in dv_files)
         if worst > _DV_TASK_CAP:
             # the distributed path bounds DRIVER memory, but one DV
             # still decodes whole inside its task — a single blob past
             # the per-task budget gates loudly instead of OOMing an
-            # executor (r8 review finding: the moved ceiling must be
-            # declared, not silent)
+            # executor: the moved ceiling is declared, not silent
             raise LakeFormatGatedError(
                 f"a single deletion vector carries {worst:,} positions "
                 f"(per-task cap {_DV_TASK_CAP:,}) — compact the file; "
@@ -988,17 +999,17 @@ def _dv_positions_local(
 def _dv_positions_distributed(
     spark: SparkSession, table_path: str, dv_files: list[tuple[str, dict]]
 ) -> DataFrame:
-    """EXECUTOR-side decode (r8, VERDICT r7 item 5): descriptors ship
-    as metadata rows — one per DV-bearing file — and each task runs the
-    SAME ``_dv_positions`` decode (roaring.py, all magic/CRC/
-    cardinality validation intact; a corrupt DV fails its task loudly)
-    and emits Arrow batches of (file_path, row_index).  Positions never
-    touch the driver, so TOTAL DV cardinality is unbounded (one blob is
-    still bounded by _DV_TASK_CAP, gated loudly before launch);
-    parallelism is the DV-file count, the natural unit (one blob decodes
-    sequentially).  This is the sanctioned-Python pattern the
-    multimodal codec boundary uses: Python only where a byte format
-    needs decoding, Arrow-batched, at metadata cardinality."""
+    """EXECUTOR-side decode: descriptors ship as metadata rows — one per
+    DV-bearing file — and each task runs the SAME ``_dv_positions``
+    decode (roaring.py, all magic/CRC/cardinality validation intact; a
+    corrupt DV fails its task loudly) and emits Arrow batches of
+    (file_path, row_index).  Positions never touch the driver, so TOTAL
+    DV cardinality is unbounded (one blob is still bounded by
+    _DV_TASK_CAP, gated loudly before launch); parallelism is the
+    DV-file count, the natural unit (one blob decodes sequentially).
+    This is the sanctioned-Python pattern the multimodal codec boundary
+    uses: Python only where a byte format needs decoding, Arrow-batched,
+    at metadata cardinality."""
     import pandas as pd
 
     rows = [(ap, json.dumps(desc)) for ap, desc in dv_files]
@@ -1037,12 +1048,12 @@ def _apply_dv(
     small delete sets from measured size and shuffles genuinely large
     ones (same posture as the Iceberg equality-delete join).
 
-    Guard (r7 third review): if Spark's ``_metadata.file_path``
-    rendering ever diverges from the log-derived paths (percent
-    encoding, exotic schemes), the anti-join would match NOTHING and
-    silently resurrect every deleted row — so every data row must
-    first find its file in the broadcast path map (assert_true folded
-    into a used column, same pattern as the Iceberg seq-map join)."""
+    Guard: if Spark's ``_metadata.file_path`` rendering ever diverges
+    from the log-derived paths (percent encoding, exotic schemes), the
+    anti-join would match NOTHING and silently resurrect every deleted
+    row — so every data row must first find its file in the broadcast
+    path map (assert_true folded into a used column, same pattern as the
+    Iceberg seq-map join)."""
     if dels is None:
         return out
     import pandas as pd
@@ -1138,15 +1149,15 @@ def read_delta_changes(
     partitioning must not change PHYSICALLY inside the range (gated
     naming the CHANGING commit; on a mode-'name' column-mapped table a
     metadata-only logical RENAME passes — the cdc/data parquet are
-    untouched and scans run under physical names, r8 VERDICT r7 item
-    4 — while add/drop/type changes still gate; on a mode-'id' table
-    identity keys on FIELD IDS, so a rename passes there too, r9
-    VERDICT r8 item 3), a commit touching deletion vectors without cdc
-    files gates, and vacuumed ranges gate.  Mode-'id' cdc/data scans
-    resolve per file by footer field id (metadata physicalName as the
-    no-ids fallback) and batch per (commit, change_type,
-    partitionValues, resolved-name map); unmapped/mode-'name' scans
-    batch per (commit, change_type, partitionValues)."""
+    untouched and scans run under physical names — while add/drop/type
+    changes still gate; on a mode-'id' table identity keys on FIELD IDS,
+    so a rename passes there too), a commit touching deletion vectors
+    without cdc files gates, and vacuumed ranges gate.  Mode-'id'
+    cdc/data scans resolve per file by footer field id (metadata
+    physicalName as the no-ids fallback) and batch per (commit,
+    change_type, partitionValues, resolved-name map);
+    unmapped/mode-'name' scans batch per (commit, change_type,
+    partitionValues)."""
     log = _delta_log_dir(table_path)
     if start_version < 0:
         raise LakeFormatError(f"invalid CDF start_version {start_version}")
@@ -1217,7 +1228,7 @@ def read_delta_changes(
         if pre_fingerprint is not None and cur_fingerprint != pre_fingerprint:
             # mapped tables compare the PHYSICAL layout, so a
             # metadata-only logical rename mid-range is fine (the cdc
-            # and data parquet are untouched — VERDICT r7 item 4) while
+            # and data parquet are untouched) while
             # add/drop/type/partitioning changes still gate; unmapped
             # tables keep the strict full-schema comparison
             raise LakeFormatGatedError(
@@ -1228,7 +1239,7 @@ def read_delta_changes(
         records.append((v, parsed, prev_files))
     schema: T.StructType = state.schema
     pcols = state.partition_columns
-    # column mapping mode 'name' (r8, VERDICT r7 item 4): cdc and data
+    # column mapping mode 'name': cdc and data
     # parquet store PHYSICAL column names (partitionValues keyed the
     # same way), so scans use the physical schema and the projection
     # aliases back to the END-of-range logical names — the fingerprint
@@ -1238,7 +1249,7 @@ def read_delta_changes(
     pname = lambda c: phys.get(c, c)  # noqa: E731
     data_fields = [f for f in schema.fields if f.name not in pcols]
     if state.column_mapping_mode == "id":
-        # mode 'id' (r9, VERDICT r8 item 3): cdc and data parquet
+        # mode 'id': cdc and data parquet
         # resolve by FOOTER FIELD ID against delta.columnMapping.id —
         # the same cached O(metadata) probe the snapshot reader uses —
         # with the metadata physicalName as the no-footer-ids fallback;
@@ -1552,9 +1563,9 @@ def iceberg_snapshot_info(
         "schema_json": schema_json,
         "partition_spec_fields": spec_fields,
         # per-spec-id fields + evolution flag: transform pruning may
-        # only use a manifest's OWN spec (r8 review finding — default-
-        # spec transforms against old-spec partition tuples pruned
-        # live files); with one spec ever, every manifest shares it
+        # only use a manifest's OWN spec (default-spec transforms
+        # against old-spec partition tuples would prune live files);
+        # with one spec ever, every manifest shares it
         "partition_specs_by_id": specs_by_id,
         "partition_spec_unambiguous": len(specs_by_id) <= 1,
         "default_spec_id": meta.get("default-spec-id"),
@@ -1572,8 +1583,8 @@ def iceberg_snapshot_info(
 
 def _manifest_keep_fn(info: dict, predicate: list | None):
     """ONE manifest-list prune decision shared by the entries walk and
-    the F11 audit (r8 seventh review: two hand-maintained copies let
-    the measured prune drift from the executed one).  Returns
+    the F11 audit, so the measured prune cannot drift from the
+    executed one.  Returns
     keep(mlist_row) — delete manifests always keep."""
     if not predicate:
         return lambda m: True
@@ -1602,8 +1613,8 @@ def _resolve_spec_fields(info: dict, sid) -> list | None:
     """The partition spec a manifest (and its entries) was written
     under, or None when it cannot be determined safely — an explicit
     partition_spec_id wins; otherwise the default spec ONLY when the
-    table has never evolved its spec (r8 review: default-spec
-    transforms against old-spec partition tuples pruned live files).
+    table has never evolved its spec (default-spec transforms against
+    old-spec partition tuples would prune live files).
     None disables transform/summary pruning; bounds pruning is
     unaffected.  ONE definition shared by the manifest walk and the
     data read so the two policies can never diverge."""
@@ -1614,25 +1625,12 @@ def _resolve_spec_fields(info: dict, sid) -> list | None:
     return None
 
 
-def _avro_available(spark: SparkSession) -> bool:
-    """Spark bundles avro-core (org.apache.avro) for its own internals
-    even when the spark-avro DATA SOURCE is absent — and manifest
-    reading only needs the container-file reader, so that is what the
-    gate keys on."""
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.avro.file.DataFileReader")
-        return True
-    except Exception:
-        return False
-
-
 def _resolve(path: str, table_root: str) -> str:
     """Iceberg metadata stores manifest/file locations as URIs; a
     relative path resolves STRICTLY against the table root — never the
     process cwd, which could silently hit another table's files.  A
     non-file URI scheme (s3://, hdfs://...) gates LOUDLY instead of
-    being joined onto the table root as a nonsense local path (r6
-    advice finding)."""
+    being joined onto the table root as a nonsense local path."""
     for scheme in ("file://",):
         if path.startswith(scheme):
             path = path[len(scheme) :]
@@ -1646,191 +1644,53 @@ def _resolve(path: str, table_root: str) -> str:
     return os.path.join(table_root, path)
 
 
-# Manifest cache (r7): Iceberg manifest files are IMMUTABLE once
-# written (a new snapshot writes new manifests; reused ones are listed
-# by path), so a (path, size, mtime)-keyed cache is exact — the same
-# move every production Iceberg reader makes (manifest caching), and
-# here it also amortizes the py4j round-trips: a multi-snapshot audit
-# re-walks the same manifest files once per snapshot otherwise.
-# Bounded FIFO so a long-lived session over many tables cannot grow it
-# without limit.
+# Iceberg manifest files are IMMUTABLE once written (a new snapshot
+# writes new manifests; reused ones are listed by path), so a
+# (path, size, mtime)-keyed cache is exact — the manifest caching every
+# production Iceberg reader does.  A multi-snapshot audit re-walks the
+# same manifest files once per snapshot otherwise.  Bounded FIFO so a
+# long-lived session over many tables cannot grow it without limit.
 _AVRO_CACHE: dict[tuple[str, int, int], list[dict]] = {}
 _AVRO_CACHE_MAX = 4096
 
 
-def _read_avro_records(spark: SparkSession, *paths: str) -> list[dict]:
-    """Driver-side read of avro MANIFEST files via the avro-core
-    container reader Spark already bundles (the spark-avro DataSource
-    is a separate jar this image lacks — and is not needed: manifests
-    are metadata, O(#files) pointer rows, the avro analogue of
-    ManifestTable's ``open(manifest-<v>.json)``, and their content has
-    to reach ``spark.read.parquet`` as driver strings anyway).  Data
-    rows never take this path.  Results are cached per (path, size,
-    mtime) — manifests are immutable, so the key is exact.
-
-    Decode strategy (r10): the pure-Python binary container reader
-    (sources/avrocore.py) decodes null/deflate-codec manifests with
-    ZERO py4j traffic — the r9 jsonEncoder bridge still cost ~0.19 s
-    of JVM object setup PER FILE, which made a thousand-manifest walk
-    O(0.2 s × N); Python binary decode is ~1 ms per small manifest.
-    Files with codecs the Python reader doesn't speak (snappy/zstd)
-    fall back to the r9 bridge: records stream through avro's OWN
-    jsonEncoder JVM-side (2 py4j calls per record) into one buffer,
-    then Python parses the concatenated JSON and UNWRAPS unions/bytes
-    against the file's schema.  A parity test pins the two paths
-    record-for-record."""
+def _read_avro_records(*paths: str) -> list[dict]:
+    """Driver-side read of avro MANIFEST files and manifest lists
+    through the pure-Python container reader (``sources/avrocore.py``,
+    every spec codec).  Manifests are metadata, O(#files) pointer rows,
+    the avro analogue of ManifestTable's ``open(manifest-<v>.json)``;
+    data rows never take this path.  Results are cached per (path,
+    size, mtime_ns) — manifests are immutable, so the key is exact.  A
+    malformed container raises ``LakeFormatError``."""
     from . import avrocore
 
-    jvm = spark._jvm
     out: list[dict] = []
     for path in paths:
         st = os.stat(path)
         # st_mtime_ns, not float st_mtime: a manifest rewritten with
-        # identical size within float-mtime precision (fixture
-        # regeneration in fast test loops) must not serve stale entries
-        # (r7 advice; the footer cache already keys on ns)
+        # identical size within float-mtime precision must not serve a
+        # stale entry
         key = (os.path.abspath(path), st.st_size, st.st_mtime_ns)
-        hit = _AVRO_CACHE.get(key)
-        if hit is not None:
-            out.extend(hit)
-            continue
-        try:
-            recs = avrocore.read_container(path)
-        except avrocore.AvroCodecUnsupported:
-            recs = None  # snappy/zstd etc. — the JVM bridge reads it
-        except avrocore.AvroReadError as e:
-            # malformed container — loud, same contract as the JVM
-            # path's own failures
-            raise LakeFormatError(f"avro manifest decode failed: {e}")
-        if recs is not None:
+        recs = _AVRO_CACHE.get(key)
+        if recs is None:
+            try:
+                recs = avrocore.read_container(path)
+            except avrocore.AvroReadError as e:
+                raise LakeFormatError(f"avro manifest decode failed: {e}")
             if len(_AVRO_CACHE) >= _AVRO_CACHE_MAX:
                 _AVRO_CACHE.pop(next(iter(_AVRO_CACHE)))
             _AVRO_CACHE[key] = recs
-            out.extend(recs)
-            continue
-        reader = jvm.org.apache.avro.file.DataFileReader(
-            jvm.java.io.File(path),
-            jvm.org.apache.avro.generic.GenericDatumReader(),
-        )
-        try:
-            schema = reader.getSchema()
-            parsed_schema = json.loads(schema.toString())
-            buf = jvm.java.io.ByteArrayOutputStream()
-            enc = jvm.org.apache.avro.io.EncoderFactory.get().jsonEncoder(
-                schema, buf
-            )
-            writer = jvm.org.apache.avro.generic.GenericDatumWriter(schema)
-            n = 0
-            while reader.hasNext():
-                writer.write(reader.next(), enc)
-                n += 1
-            enc.flush()
-            text = buf.toString("UTF-8")
-        finally:
-            reader.close()
-        recs: list[dict] = []
-        dec = json.JSONDecoder()
-        idx = 0
-        named: dict[str, dict] = {}
-        _register_avro_names(parsed_schema, named)
-        for _ in range(n):
-            while idx < len(text) and text[idx] in " \t\r\n":
-                idx += 1
-            obj, idx = dec.raw_decode(text, idx)
-            recs.append(_from_avro_json(parsed_schema, obj, named))
-        if len(_AVRO_CACHE) >= _AVRO_CACHE_MAX:
-            _AVRO_CACHE.pop(next(iter(_AVRO_CACHE)))
-        _AVRO_CACHE[key] = recs
         out.extend(recs)
     return out
 
 
-def _register_avro_names(sch, named: dict) -> None:
-    """Collect named-type definitions (record/enum/fixed) so later
-    references by name resolve — ONE definition shared with the binary
-    reader/writer (avrocore) so the JSON and binary paths can never
-    walk names differently (review r10 dedup)."""
-    from . import avrocore
-
-    avrocore._register_names(sch, named)
-
-
-def _from_avro_json(sch, v, named: dict):
-    """Inverse of avro's JSON encoding against the schema: unwrap
-    union {branch: value} envelopes, decode bytes/fixed from latin-1,
-    recurse into records/arrays/maps."""
-    if isinstance(sch, list):  # union
-        if v is None:
-            return None
-        # the encoder ALWAYS wraps a non-null union value as
-        # {"branchName": value}; decode against the branch the label
-        # NAMES — first-non-null guessing mis-decodes legal >2-branch
-        # unions like ["null", "string", "bytes"] (r9 review finding)
-        if not (isinstance(v, dict) and len(v) == 1):
-            raise LakeFormatError(f"malformed avro-JSON union value: {v!r}")
-        label, inner = next(iter(v.items()))
-
-        def _bname(b) -> str:
-            if isinstance(b, str):
-                return b
-            t = b.get("type")
-            return b["name"] if t in ("record", "enum", "fixed") else t
-
-        branch = next((b for b in sch if b != "null" and _bname(b) == label), None)
-        if branch is None:
-            raise LakeFormatError(
-                f"avro-JSON union label {label!r} matches no branch of {sch!r}"
-            )
-        return _from_avro_json(branch, inner, named)
-    if isinstance(sch, str):
-        if sch in named:
-            return _from_avro_json(named[sch], v, named)
-        if sch == "bytes" and isinstance(v, str):
-            return v.encode("latin-1")
-        if sch == "float" and isinstance(v, float):
-            # avro 'float' is IEEE float32; the JSON text round-trips
-            # through Float.toString (shortest decimal), so coerce back
-            # to the exact float32 the binary reader returns — the two
-            # decode paths must agree bit-for-bit (review r10)
-            import struct as _struct
-
-            return _struct.unpack("<f", _struct.pack("<f", v))[0]
-        return v
-    t = sch["type"]
-    if t == "record":
-        return {
-            f["name"]: _from_avro_json(f["type"], (v or {}).get(f["name"]), named)
-            for f in sch["fields"]
-        }
-    if t == "array":
-        return [_from_avro_json(sch["items"], x, named) for x in (v or [])]
-    if t == "map":
-        return {
-            k: _from_avro_json(sch["values"], x, named)
-            for k, x in (v or {}).items()
-        }
-    if t == "fixed" and isinstance(v, str):
-        return v.encode("latin-1")
-    if isinstance(t, (list, dict)):
-        return _from_avro_json(t, v, named)
-    if t in named:
-        return _from_avro_json(named[t], v, named)
-    if isinstance(t, str):
-        # dict-wrapped primitive (logicalType annotation) — decode as
-        # the underlying primitive, same fallthrough as avrocore
-        return _from_avro_json(t, v, named)
-    return v
-
-
-def write_avro_records(
-    spark: SparkSession, dest: str, schema_json: str, records: list[dict]
-) -> None:
+def write_avro_records(dest: str, schema_json: str, records: list[dict]) -> None:
     """Counterpart writer (fixtures / manifest export): spec-true
     container files any Iceberg reader can open, encoded in pure Python
-    (``sources/avrocore.py``, no py4j traffic).  Byte-level
-    compatibility is pinned by test both ways: the JVM DataFileReader
-    reads Python-written files, and a JVM-written file decodes
-    identically through the Python reader."""
+    (``sources/avrocore.py``).  Byte-level compatibility is pinned by
+    test both ways: the JVM DataFileReader reads Python-written files,
+    and JVM-written files decode identically through the Python
+    reader."""
     from . import avrocore
 
     tmp = f"{dest}.tmp-{os.getpid()}"
@@ -1839,7 +1699,6 @@ def write_avro_records(
 
 
 def iceberg_snapshot_entries(
-    spark: SparkSession,
     metadata_path: str,
     snapshot_id: int | None = None,
     predicate: list | None = None,
@@ -1847,31 +1706,25 @@ def iceberg_snapshot_entries(
     """ALL manifest entries a snapshot's manifest list reaches —
     including EXISTING (status 0) and DELETED (status 2) entries and
     delete files — flattened to plain dicts.  This is the raw material
-    for an incremental change feed (r7, VERDICT r6 item 4): an entry's
+    for an incremental change feed: an entry's
     ``status``/``snapshot_id`` say which snapshot added or removed the
-    file, so diffing two snapshots is pure metadata and reading only
-    the referenced files is O(delta).  Driver-side O(metadata), same
-    posture as the data read.
+    file, so diffing two snapshots is pure metadata and reading only the
+    referenced files is O(delta).  Driver-side O(metadata), same posture
+    as the data read.
 
-    ``predicate`` (r8): DATA manifests whose manifest-list partition
-    field summaries PROVE no entry matches are skipped before their
-    avro is ever opened — on a 100 TB table with thousands of
-    manifests the driver walk scales with MATCHING manifests, not all
-    of them.  Delete manifests are never summary-skipped (their
-    targets may survive in kept manifests)."""
+    ``predicate``: DATA manifests whose manifest-list partition field
+    summaries PROVE no entry matches are skipped before their avro is
+    ever opened — on a 100 TB table with thousands of manifests the
+    driver walk scales with MATCHING manifests, not all of them.  Delete
+    manifests are never summary-skipped (their targets may survive in
+    kept manifests)."""
     info = iceberg_snapshot_info(metadata_path, snapshot_id)
     snap = info["snapshot"]
-    if not _avro_available(spark):
-        raise LakeFormatGatedError(
-            "Iceberg manifest walks need avro-core (org.apache.avro) on "
-            "the classpath; snapshot metadata itself resolved fine: "
-            f"{snap['snapshot-id']}"
-        )
     table_root = os.path.dirname(os.path.dirname(os.path.abspath(metadata_path)))
     mlist = _resolve(snap["manifest-list"], table_root)
     keep_manifest = _manifest_keep_fn(info, predicate)
     out = []
-    for m in _read_avro_records(spark, mlist):
+    for m in _read_avro_records(mlist):
         is_delete_manifest = int(m.get("content") or 0) == 1
         if not keep_manifest(m):
             continue
@@ -1882,10 +1735,10 @@ def iceberg_snapshot_entries(
         # list's added_snapshot_id / sequence_number when null.  Real
         # writers rely on this — fast appends never rewrite entries —
         # so without it every entry reads as ownerless and a change
-        # feed comes back silently empty (r7 close review).
+        # feed comes back silently empty.
         inh_sid = m.get("added_snapshot_id")
         inh_seq = m.get("sequence_number")
-        for e in _read_avro_records(spark, _resolve(m["manifest_path"], table_root)):
+        for e in _read_avro_records(_resolve(m["manifest_path"], table_root)):
             d = e["data_file"]
             sid = e.get("snapshot_id")
             if sid is None:
@@ -1930,7 +1783,6 @@ def iceberg_snapshot_entries(
 
 
 def iceberg_manifest_prune_stats(
-    spark: SparkSession,
     metadata_path: str,
     snapshot_id: int | None = None,
     predicate: list | None = None,
@@ -1944,11 +1796,6 @@ def iceberg_manifest_prune_stats(
     from . import skipping as _skipping
 
     info = iceberg_snapshot_info(metadata_path, snapshot_id)
-    if not _avro_available(spark):
-        raise LakeFormatGatedError(
-            "Iceberg manifest walks need avro-core (org.apache.avro) on "
-            "the classpath"
-        )
     if predicate:
         _skipping.validate_predicate(
             predicate, [f.name for f in info["schema"].fields]
@@ -1959,7 +1806,7 @@ def iceberg_manifest_prune_stats(
     )
     mlist = _resolve(info["snapshot"]["manifest-list"], table_root)
     total = matched = deletes = 0
-    for m in _read_avro_records(spark, mlist):
+    for m in _read_avro_records(mlist):
         if int(m.get("content") or 0) == 1:
             deletes += 1
             continue
@@ -2211,7 +2058,7 @@ def read_iceberg_snapshot(
     carry all columns, so no partition reconstruction is needed —
     unlike Delta's Hive-style layout).
 
-    v2 row-level deletes APPLY (r6):
+    v2 row-level deletes APPLY:
     - POSITION deletes (content=1): (file_path, pos) rows anti-join
       against Spark's ``_metadata.file_path`` / ``row_index`` hidden
       columns.
@@ -2221,28 +2068,20 @@ def read_iceberg_snapshot(
       LOWER than the delete file's — the spec's ordering rule, without
       which a delete would wrongly erase rows written after it.
     Fully distributed: delete rows shuffle at delete cardinality,
-    never the data.  Loud gates remain for avro-core absent, equality
-    deletes missing equality_ids/sequence numbers, nested equality
-    columns, and non-parquet files."""
+    never the data.  Loud gates remain for equality deletes missing
+    equality_ids/sequence numbers, nested equality columns, and
+    non-parquet files."""
     info = iceberg_snapshot_info(metadata_path, snapshot_id, ref=ref)
     snap = info["snapshot"]
     # the manifest walk below must see the RESOLVED id — under ref=
     # the original argument is None, which the walk would read as
     # "current" and silently return the latest state
     snapshot_id = int(snap["snapshot-id"])
-    if not _avro_available(spark):
-        raise LakeFormatGatedError(
-            "Iceberg data reads need the avro manifest list; avro-core "
-            "(org.apache.avro, normally bundled in Spark's jars — or add "
-            "org.apache.spark:spark-avro) is not on this classpath. Snapshot "
-            f"metadata itself resolved fine: {snap['snapshot-id']}"
-        )
-    # ONE manifest walk shared with the change feed — the r7 close
-    # review found the data path's duplicate walk skipped the spec's
-    # snapshot_id / sequence-number inheritance, so a fast-append table
-    # (null entry seqs, inherited from the manifest list) wrongly gated
-    # on "data files lack sequence numbers" and position deletes lost
-    # their sequence bound.
+    # ONE manifest walk shared with the change feed, so the data path
+    # gets the spec's snapshot_id / sequence-number inheritance too: a
+    # fast-append table (null entry seqs, inherited from the manifest
+    # list) reads instead of gating on "data files lack sequence
+    # numbers", and position deletes keep their sequence bound.
     row_filter = None
     if predicate:
         from . import skipping
@@ -2272,9 +2111,7 @@ def read_iceberg_snapshot(
     identity_fill: dict[str, dict] = {}  # normpath -> {col: part value}
     pos_delete_files: list[tuple[str, int | None]] = []  # (path, seq)
     eq_deletes: list[tuple[str, int, list[int]]] = []  # (path, seq, field ids)
-    for e in iceberg_snapshot_entries(
-        spark, metadata_path, snapshot_id, predicate=predicate
-    ):
+    for e in iceberg_snapshot_entries(metadata_path, snapshot_id, predicate=predicate):
         if e["status"] == 2:  # DELETED entry
             continue
         content = e["content"]
@@ -2305,7 +2142,7 @@ def read_iceberg_snapshot(
             eq_deletes.append((path, seq, [int(i) for i in eq_ids]))
         else:
             # DATA file: lower/upper bounds + partition-transform
-            # pruning (r8, VERDICT r7 items 2/6) — skipped files never
+            # pruning — skipped files never
             # reach spark.read; delete files are never pruned (their
             # targets may survive).  Conservative: missing stats keep.
             if predicate and not skipping.iceberg_file_matches(
@@ -2353,10 +2190,10 @@ def read_iceberg_snapshot(
     # (delete-file paths; the data side is normalized in the grouped
     # read's __fp projection).  RELATIVE stored paths resolve against
     # the TABLE ROOT — the same rule every manifest path follows
-    # (r8 session 2: absolute delete-file URIs go stale the moment a
-    # table directory moves, which the write path's atomic fixture
-    # builds do by design; the native delete writer therefore stores
-    # root-relative paths, and foreign absolute URIs still work).
+    # (absolute delete-file URIs go stale the moment a table directory
+    # moves, which the write path's atomic fixture builds do by design;
+    # the native delete writer therefore stores root-relative paths,
+    # and foreign absolute URIs still work).
     _del_root = os.path.dirname(
         os.path.dirname(os.path.abspath(metadata_path))
     )
@@ -2367,7 +2204,7 @@ def read_iceberg_snapshot(
             stripped.startswith("/"), stripped
         ).otherwise(F.concat(F.lit(_del_root.rstrip("/") + "/"), stripped))
     # Iceberg v2 scopes a position delete to data files whose sequence
-    # number is <= the delete file's (r6 advice finding); the bound is
+    # number is <= the delete file's; the bound is
     # applied whenever both sides carry sequence numbers.  A v2 table
     # with deletes always sequences its files, so the unbounded branch
     # only covers metadata that omits them — documented global

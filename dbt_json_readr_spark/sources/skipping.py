@@ -1,5 +1,4 @@
-"""Stats-based FILE SKIPPING for the Delta / Iceberg bridges
-(VERDICT r7 items 2 and 6).
+"""Stats-based FILE SKIPPING for the Delta / Iceberg bridges.
 
 Both formats ship per-file column statistics in their commit metadata —
 Delta as the ``add.stats`` JSON string (numRecords / minValues /
@@ -149,14 +148,12 @@ def _coerce(dtype: T.DataType, raw):
                 if isinstance(dtype, T.TimestampNTZType):
                     # an offset-bearing stat on an NTZ column is
                     # foreign-writer ambiguity — keep, never guess
-                    # (r8 fourth review: only the dead datetime branch
-                    # had this guard)
                     return None
                 parsed = parsed.astimezone(_dt.timezone.utc).replace(
                     tzinfo=None
                 )
             elif isinstance(dtype, T.TimestampType):
-                # the MIRROR ambiguity (r8 fifth review): writers have
+                # the MIRROR ambiguity: writers have
                 # historically serialized offset-less timestamp stats /
                 # partitionValues in their own session tz — comparing
                 # them as UTC instants against a normalized literal
@@ -185,7 +182,7 @@ _TS_UNUSABLE = object()  # sentinel: term cannot prune this column
 def _ts_term_value(is_tz: bool, is_ntz: bool, value):
     """Predicate datetime values normalized to the matchers'
     NAIVE-INSTANT convention, or the _TS_UNUSABLE sentinel when the
-    term cannot prune soundly (r8 fourth review): Spark converts a
+    term cannot prune soundly: Spark converts a
     NAIVE literal against a tz-typed column via the session/driver
     timezone, and an AWARE literal against an NTZ column likewise —
     in both cases the skip decision would depend on an environment
@@ -229,8 +226,7 @@ def dtype_map(schema: T.StructType) -> dict:
 def normalize_predicate_delta(
     predicate: list[Term], schema: T.StructType
 ) -> list[Term]:
-    """Predicate values normalized ONCE per scan (r8 fifth review: the
-    per-file matchers re-normalized the constant predicate per file);
+    """Predicate values normalized ONCE per scan, not once per file;
     unusable terms carry _TS_UNUSABLE as their value — the matchers
     then apply only their value-INDEPENDENT checks (null counts)."""
     out = []
@@ -374,7 +370,7 @@ def delta_file_matches(
         predicate = normalize_predicate_delta(predicate, schema)
     if dtypes is None:
         # StructType[str] is a linear scan — bulk callers pass the
-        # per-scan map once (r8 sixth review)
+        # per-scan map once
         dtypes = dtype_map(schema)
     phys = physical_names or {}
     stats = f.get("stats")
@@ -394,8 +390,8 @@ def delta_file_matches(
             if raw is None:
                 # genuine null partition value: no comparison matches,
                 # INDEPENDENT of how an unusable literal's tz would
-                # resolve (r8 fifth review: unusable terms must keep
-                # their value-independent prunes)
+                # resolve (unusable terms keep their value-independent
+                # prunes)
                 if op in _COMPARE_OPS or _exact_excludes(op, value, None):
                     return False
                 continue
@@ -405,8 +401,8 @@ def delta_file_matches(
             if actual is not None and _exact_excludes(op, value, actual):
                 return False
             # actual None = UN-COERCIBLE (unsupported type), NOT
-            # null — conflating the two pruned live files (r8
-            # review finding); keep conservatively
+            # null — conflating the two would prune live files; keep
+            # conservatively
             continue
         if stats is None:
             continue
@@ -462,9 +458,8 @@ def decode_iceberg_bound(type_json, raw: bytes):
             if t == "binary" or t.startswith("fixed["):
                 # Appendix D: binary/fixed serialize as the raw bytes.
                 # Without this branch, manifest-LIST field summaries
-                # over truncate[W]-of-binary partitions decoded to
-                # None and the walk opened every manifest (r11
-                # third-review finding)
+                # over truncate[W]-of-binary partitions would decode to
+                # None and the walk would open every manifest
                 return raw
     except (struct.error, ValueError, UnicodeDecodeError):
         return None
@@ -525,8 +520,7 @@ def murmur3_x86_32(data: bytes, seed: int = 0) -> int:
 
 def _decimal_scale(type_json) -> int | None:
     """Declared scale of an Iceberg decimal type string, else None —
-    ONE parser shared by truncate and bucket hashing (r8 third
-    review)."""
+    ONE parser shared by truncate and bucket hashing."""
     if isinstance(type_json, str) and type_json.startswith("decimal("):
         return int(type_json[len("decimal(") : -1].split(",")[1])
     return None
@@ -537,8 +531,8 @@ def _decimal_unscaled(value: Decimal, type_json) -> int | None:
     scale, or None when it cannot be represented (finer-scaled value,
     non-decimal type).  Computed under a widened local context —
     ``int(value.scaleb(scale))`` silently ROUNDS at the default
-    28-digit precision, which truncated/hashed 38-digit decimals to
-    the wrong partition (r8 third review finding)."""
+    28-digit precision, which would truncate/hash 38-digit decimals
+    to the wrong partition."""
     scale = _decimal_scale(type_json)
     if scale is None:
         return None
@@ -552,7 +546,7 @@ def _decimal_unscaled(value: Decimal, type_json) -> int | None:
 
 def _decimal_rescale(unscaled: int, scale: int) -> Decimal:
     """unscaled·10^-scale, exactly — the widened-context policy lives
-    here once (fourth-review cleanup)."""
+    here once."""
     with _decimal.localcontext() as ctx:
         ctx.prec = 80
         return Decimal(unscaled).scaleb(-scale)
@@ -562,7 +556,7 @@ def _min_twos_complement(v: int) -> bytes:
     """Minimal big-endian two's-complement encoding — the byte layout
     the Iceberg spec mandates for decimal hashing (e.g. -128 is ONE
     byte 0x80, not 0xFF80; a non-minimal encoding hashes to a
-    different bucket — r8 review finding)."""
+    different bucket)."""
     n = max(1, (abs(v).bit_length() + 7) // 8)
     try:
         return v.to_bytes(n, "big", signed=True)
@@ -577,7 +571,7 @@ def iceberg_bucket_hash(type_json, value) -> int | None:
     decimals as MINIMAL big-endian unscaled bytes).  None = cannot
     hash (keep the file) — including any type-mismatched predicate
     value: the conservative-keep contract promises keep, never a raw
-    exception from inside hashing (r8 review finding)."""
+    exception from inside hashing."""
     try:
         t = type_json if isinstance(type_json, str) else None
         if t in ("int", "long"):
@@ -596,11 +590,11 @@ def iceberg_bucket_hash(type_json, value) -> int | None:
                 if t != "timestamptz":
                     # an aware value against an NTZ column: which wall
                     # clock Spark's row filter uses is session-tz
-                    # dependent — keep, never guess (r8 third review)
+                    # dependent — keep, never guess
                     return None
                 # convert, don't drop: naive-ifying an aware timestamp
                 # hashes local wall-time micros and picks the wrong
-                # bucket (r8 review finding; same rule as _coerce)
+                # bucket (same rule as _coerce)
                 value = value.astimezone(_dt.timezone.utc)
             micros = (
                 value.replace(tzinfo=None) - _dt.datetime(1970, 1, 1)
@@ -630,7 +624,7 @@ def iceberg_bucket_hash(type_json, value) -> int | None:
             # the `t is not None` guard matters: a nested-type dict
             # sets t = None, and None.startswith would raise
             # AttributeError — which is NOT in the catch tuple below,
-            # breaking the keep-never-raise contract (r11 review)
+            # breaking the keep-never-raise contract
             if not isinstance(value, (bytes, bytearray)):
                 return None
             h = murmur3_x86_32(bytes(value))
@@ -672,8 +666,8 @@ def _apply_transform_inner(transform: str, type_json, value):
         w = int(transform[len("truncate[") : -1])
         # dispatch on the COLUMN type, not the python type of the
         # predicate value: an int literal against a decimal column
-        # truncates at granularity w instead of w·10^-scale and pruned
-        # live files (r8 third review finding)
+        # truncates at granularity w instead of w·10^-scale and would
+        # prune live files
         t = type_json if isinstance(type_json, str) else None
         if t in ("int", "long"):
             if isinstance(value, bool) or not isinstance(value, int):
@@ -686,8 +680,8 @@ def _apply_transform_inner(transform: str, type_json, value):
         if t is not None and t.startswith("decimal("):
             # the TYPE's declared scale, not the value's own exponent:
             # Decimal('1E+2') == Decimal('100.00') but truncates to a
-            # different result under exponent-derived scale (r8 second
-            # review finding; the bucket branch keys the same way)
+            # different result under exponent-derived scale (the bucket
+            # branch keys the same way)
             if not isinstance(value, Decimal):
                 return None
             scale = _decimal_scale(t)
@@ -698,9 +692,9 @@ def _apply_transform_inner(transform: str, type_json, value):
         if t is not None and (t == "binary" or t.startswith("fixed[")):
             # spec: truncate of binary/fixed = the first W bytes —
             # order-preserving under bytes comparison, so both the
-            # equality and range pruning paths may use it (r11:
-            # read-side only; WRITES of binary-truncate partitions stay
-            # gated with the identity-decimal path-form rationale)
+            # equality and range pruning paths may use it (read-side
+            # only; WRITES of binary-truncate partitions stay gated with
+            # the identity-decimal path-form rationale)
             if not isinstance(value, (bytes, bytearray)):
                 return None
             return bytes(value)[:w]
@@ -710,11 +704,11 @@ def _apply_transform_inner(transform: str, type_json, value):
             if value.tzinfo is not None:
                 if type_json != "timestamptz":
                     # aware value vs NTZ column: session-tz dependent
-                    # wall clock — keep, never guess (r8 third review)
+                    # wall clock — keep, never guess
                     return None
                 # convert, don't drop: the local wall-clock date of an
                 # aware timestamp can differ from its UTC date and
-                # prune the live file (r8 second review finding)
+                # prune the live file
                 value = value.astimezone(_dt.timezone.utc).replace(
                     tzinfo=None
                 )
@@ -730,8 +724,7 @@ def _apply_transform_inner(transform: str, type_json, value):
         if transform == "day":
             return (d - _dt.date(1970, 1, 1)).days
         # floordiv, not int(): int() truncates toward zero, mapping
-        # pre-1970 timestamps to the wrong hour ordinal (r8 second
-        # review finding)
+        # pre-1970 timestamps to the wrong hour ordinal
         return (ts - _dt.datetime(1970, 1, 1)) // _dt.timedelta(hours=1)
     if transform == "void":
         return None
@@ -742,8 +735,8 @@ def make_iceberg_match_context(
     schema_json: dict, field_names_by_id: dict[int, str]
 ) -> dict:
     """Per-SNAPSHOT lookup tables for the matchers below — built once
-    by the caller, not once per data-file entry (r8 review finding:
-    a 1M-file snapshot rebuilt identical dicts a million times)."""
+    by the caller, not once per data-file entry (a 1M-file snapshot
+    would rebuild identical dicts a million times)."""
     return {
         "types_by_id": {f["id"]: f["type"] for f in schema_json["fields"]},
         "ids_by_name": {v: k for k, v in field_names_by_id.items()},
@@ -773,8 +766,8 @@ def iceberg_file_matches(
     or partition-transform values PROVE no row matches.  ``spec_by_src``
     must be THE ENTRY'S OWN partition spec (manifests written under an
     older spec carry that spec's partition tuples — evaluating the
-    default spec's transforms against them pruned live files, r8
-    review finding); pass None when the entry's spec is unknown and
+    default spec's transforms against them would prune live files);
+    pass None when the entry's spec is unknown and
     only bounds pruning applies."""
     if not prenormalized:
         predicate = normalize_predicate_iceberg(predicate, ctx)
@@ -795,7 +788,7 @@ def iceberg_file_matches(
         nrows = value_counts.get(fid, entry.get("record_count"))
         if value is _TS_UNUSABLE:
             # session-tz-dependent term: only its tz-INDEPENDENT
-            # all-null prune stays live (r8 fifth review)
+            # all-null prune stays live
             if _all_null_excludes(op, nulls, nrows):
                 return False
             continue
@@ -896,7 +889,7 @@ def iceberg_manifest_matches(
     monotonic transforms prune ranges.  Missing summaries keep.
     ``spec_fields`` must be THE MANIFEST'S OWN spec (resolved from its
     partition_spec_id — summaries under an evolved spec are ordered
-    and valued differently, r8 review finding); None keeps."""
+    and valued differently); None keeps."""
     summaries = mlist_row.get("partitions")
     if not summaries or not spec_fields:
         return True
@@ -921,8 +914,8 @@ def iceberg_manifest_matches(
         # every Iceberg transform maps null→null (spec §Partition
         # Transforms), so contains_null=False on ANY transform's
         # summary proves no null source values — evaluated before the
-        # bounds gates, which used to make it unreachable whenever
-        # bounds were absent/undecodable (r8 seventh review)
+        # bounds gates, which would make it unreachable whenever
+        # bounds are absent/undecodable
         if transform != "void" and s.get("contains_null") is False:
             if any(op == "is_null" for _, op, _v in terms_by_col[col]):
                 return False

@@ -4,9 +4,7 @@ from __future__ import annotations
 
 
 def snappy_uvarint(n: int) -> bytes:
-    """Base-128 uvarint (the snappy length preamble) — one definition
-    for the snappy tests; three hand-rolled copies drifted in r11
-    (one only correct below 16384)."""
+    """Base-128 uvarint: the length preamble of a raw snappy block."""
     out = bytearray()
     while True:
         b7 = n & 0x7F

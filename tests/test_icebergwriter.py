@@ -86,7 +86,7 @@ def test_null_partition_and_summaries(spark, tmp_path):
     # manifest-list summary records contains_null
     info = LF.iceberg_snapshot_info(meta)
     mlist = LF._read_avro_records(
-        spark, LF._resolve(info["snapshot"]["manifest-list"], tbl)
+        LF._resolve(info["snapshot"]["manifest-list"], tbl)
     )
     assert any(
         (m.get("partitions") or [{}])[0].get("contains_null") for m in mlist
@@ -234,10 +234,10 @@ def test_expire_snapshots(spark, tmp_path):
     meta3 = _latest_meta(tbl)
     exp_rows = LF.read_iceberg_snapshot(spark, meta3).count()
 
-    dry = IW.expire_iceberg_snapshots(spark, meta3, keep_last=1, dry_run=True)
+    dry = IW.expire_iceberg_snapshots(meta3, keep_last=1, dry_run=True)
     assert dry["snapshots_expired"] == 2 and dry["files_deleted"] > 0
 
-    aud = IW.expire_iceberg_snapshots(spark, meta3, keep_last=1)
+    aud = IW.expire_iceberg_snapshots(meta3, keep_last=1)
     assert aud["snapshots_expired"] == 2
     new_meta = aud["metadata_path"]
     # current snapshot fully readable; shared data files untouched
@@ -247,7 +247,7 @@ def test_expire_snapshots(spark, tmp_path):
         LF.read_iceberg_snapshot(spark, new_meta, 1).count()
     # refusing to drop the current snapshot
     with pytest.raises(LF.LakeFormatError, match="keep_last"):
-        IW.expire_iceberg_snapshots(spark, new_meta, keep_last=0)
+        IW.expire_iceberg_snapshots(new_meta, keep_last=0)
 
 
 def test_position_deletes_survive_table_move(spark, tmp_path):
@@ -298,7 +298,7 @@ def test_expire_from_stale_metadata_cas_collides(spark, tmp_path):
     stale = _latest_meta(tbl)
     IW.write_iceberg(spark, df, tbl)                     # v3 (concurrent)
     with pytest.raises(LF.LakeFormatError, match="concurrently"):
-        IW.expire_iceberg_snapshots(spark, stale, keep_last=1)
+        IW.expire_iceberg_snapshots(stale, keep_last=1)
     assert LF.read_iceberg_snapshot(spark, _latest_meta(tbl)).count() == 18
 
 
@@ -353,7 +353,7 @@ def test_equality_delete_write(spark, tmp_path):
     )
     r1 = IW.write_iceberg(spark, df, tbl)
     keys = spark.createDataFrame([(0,), (1,), (1,)], "g long")
-    r2 = IW.delete_iceberg_equality(spark, r1["metadata_path"], keys)
+    r2 = IW.delete_iceberg_equality(r1["metadata_path"], keys)
     assert r2["keys_written"] == 2  # deduped
     back = LF.read_iceberg_snapshot(spark, r2["metadata_path"])
     assert back.count() == 7
@@ -373,18 +373,18 @@ def test_equality_delete_write(spark, tmp_path):
     )
     # empty key set commits nothing
     none = IW.delete_iceberg_equality(
-        spark, r3["metadata_path"], spark.createDataFrame([], "g long")
+        r3["metadata_path"], spark.createDataFrame([], "g long")
     )
     assert none["snapshot_id"] is None
     # type coercion gates (a coerced tuple would delete nothing)
     with pytest.raises(LF.LakeFormatGatedError, match="stores"):
         IW.delete_iceberg_equality(
-            spark, r3["metadata_path"], spark.createDataFrame([(2,)], "g int")
+            r3["metadata_path"], spark.createDataFrame([(2,)], "g int")
         )
     # unknown key column refuses
     with pytest.raises(LF.LakeFormatError, match="not in table schema"):
         IW.delete_iceberg_equality(
-            spark, r3["metadata_path"], spark.createDataFrame([(2,)], "zz long")
+            r3["metadata_path"], spark.createDataFrame([(2,)], "zz long")
         )
 
 
@@ -471,7 +471,7 @@ def test_compact_iceberg(spark, tmp_path):
         )
     r = IW.delete_iceberg(spark, r["metadata_path"], [("id", "<", 100)])
     r = IW.delete_iceberg_equality(
-        spark, r["metadata_path"], spark.createDataFrame([(999,), (998,)], "id long")
+        r["metadata_path"], spark.createDataFrame([(999,), (998,)], "id long")
     )
     before = LF.read_iceberg_snapshot(spark, r["metadata_path"])
     nb, sb = before.count(), before.agg(F.sum("id")).collect()[0][0]
@@ -480,7 +480,7 @@ def test_compact_iceberg(spark, tmp_path):
     after = LF.read_iceberg_snapshot(spark, c["metadata_path"])
     assert (after.count(), after.agg(F.sum("id")).collect()[0][0]) == (nb, sb)
     # the compacted state carries NO delete files forward
-    entries = LF.iceberg_snapshot_entries(spark, c["metadata_path"])
+    entries = LF.iceberg_snapshot_entries(c["metadata_path"])
     live = [e for e in entries if e["status"] != 2]
     assert all(e["content"] == 0 for e in live)
     # pre-compaction snapshot still travels
@@ -511,7 +511,7 @@ def test_refs_tag_read_and_expire_protection(spark, tmp_path):
     assert (
         LF.read_iceberg_snapshot(spark, r3["metadata_path"], ref="v1").count() == 4
     )
-    aud = IW.expire_iceberg_snapshots(spark, r3["metadata_path"], keep_last=1)
+    aud = IW.expire_iceberg_snapshots(r3["metadata_path"], keep_last=1)
     assert aud["snapshots_expired"] == 1  # the middle one; the tag survives
     latest = aud["metadata_path"]
     assert LF.read_iceberg_snapshot(spark, latest, ref="v1").count() == 4
@@ -607,7 +607,7 @@ def test_epoch_ledger_survives_expire(spark, tmp_path):
     assert IW.iceberg_last_epoch(tbl, key) == 2
     # expire everything but the newest snapshot: summaries for epochs
     # 0 and 1 are gone, but the properties high-water mark survives
-    IW.expire_iceberg_snapshots(spark, _latest_meta(tbl), keep_last=1)
+    IW.expire_iceberg_snapshots(_latest_meta(tbl), keep_last=1)
     meta = json.load(open(_latest_meta(tbl)))
     assert len(meta["snapshots"]) == 1
     assert IW.iceberg_last_epoch(tbl, key) == 2
@@ -1121,7 +1121,7 @@ def test_mapped_export_with_live_dvs(spark, tmp_path):
     info = LF.iceberg_snapshot_info(r["metadata_path"])
     ml = list(
         LF._read_avro_records(
-            spark, LF._resolve(info["snapshot"]["manifest-list"], str(t))
+            LF._resolve(info["snapshot"]["manifest-list"], str(t))
         )
     )
     del_manifests = [e for e in ml if int(e.get("content") or 0) == 1]
@@ -1314,9 +1314,9 @@ def test_failed_write_leaves_no_staging_dir_and_expire_sweeps(spark, tmp_path):
     fresh = Path(tbl) / "_staging-999-2-cafebabe"
     fresh.mkdir()
 
-    dry = IW.expire_iceberg_snapshots(spark, _latest_meta(tbl), keep_last=1, dry_run=True)
+    dry = IW.expire_iceberg_snapshots(_latest_meta(tbl), keep_last=1, dry_run=True)
     assert dry["staging_dirs_swept"] == 1 and old.exists()  # dry run counts only
-    aud = IW.expire_iceberg_snapshots(spark, _latest_meta(tbl), keep_last=1)
+    aud = IW.expire_iceberg_snapshots(_latest_meta(tbl), keep_last=1)
     assert aud["staging_dirs_swept"] == 1
     assert not old.exists() and fresh.exists()
 
@@ -1425,7 +1425,7 @@ def test_wap_guard_rails_r12_review(spark, tmp_path):
     IW.write_iceberg(spark, b.limit(2), tbl2, ref="audit")
     IW.write_iceberg(spark, b.limit(1), tbl2, ref="audit")
     m2 = _latest_meta(tbl2)
-    aud = IW.expire_iceberg_snapshots(spark, m2, keep_last=1)
+    aud = IW.expire_iceberg_snapshots(m2, keep_last=1)
     # main's older first snapshot expired; current + ref-protected
     # branch head survive
     assert aud["snapshots_expired"] >= 1

@@ -1064,37 +1064,6 @@ def test_sql_murmur3_uuid_matches_python_reference(spark, ints):
     assert SK.iceberg_bucket_hash("uuid", "not-a-uuid") is None
 
 
-@given(chunks=st.lists(st.binary(min_size=1, max_size=2000), min_size=1, max_size=12))
-@settings(max_examples=25, deadline=None)
-def test_snappy_all_literal_roundtrip(chunks):
-    """Property: any byte string survives the r11 snappy decoder via
-    an all-literal encoding (spec-legal — a compressor may always emit
-    literals), covering the short tag and the 1- and 2-byte
-    extended-length classes across multi-chunk streams (the 3-/4-byte
-    classes need >=64 KiB / >=16 MiB literals — the deterministic
-    64 KiB case lives in test_sources_sinks); the stream is assembled
-    here, independent of the decoder under test."""
-    from dbt_json_readr_spark.sources.avrocore import _snappy_decompress
-
-    from tests.binutils import snappy_uvarint
-
-    data = b"".join(chunks)
-    stream = bytearray(snappy_uvarint(len(data)))
-    # emit literals chunk by chunk, exercising short and extended tags
-    for c in chunks:
-        ln = len(c) - 1
-        if ln < 60:
-            stream.append(ln << 2)
-        elif ln < 1 << 8:
-            stream.append(60 << 2)
-            stream.append(ln)
-        else:
-            stream.append(61 << 2)
-            stream += ln.to_bytes(2, "little")
-        stream += c
-    assert _snappy_decompress(bytes(stream)) == data
-
-
 # ------------------------------------------------------------ lineage
 
 

@@ -326,10 +326,9 @@ def _write_iceberg_bounds_table(spark, tmp_path, n_buckets=4):
             }
         )
     LF.write_avro_records(
-        spark, str(t / "metadata" / "m-7.avro"), _MANIFEST_SCHEMA_BOUNDS, entries
+        str(t / "metadata" / "m-7.avro"), _MANIFEST_SCHEMA_BOUNDS, entries
     )
     LF.write_avro_records(
-        spark,
         str(t / "metadata" / "snap-7.avro"),
         _MLIST_SCHEMA,
         [
@@ -448,10 +447,9 @@ def _write_iceberg_bucket_table(spark, tmp_path, n_buckets=2):
             }
         )
     LF.write_avro_records(
-        spark, str(t / "metadata" / "m-7.avro"), _MANIFEST_SCHEMA_BOUNDS, entries
+        str(t / "metadata" / "m-7.avro"), _MANIFEST_SCHEMA_BOUNDS, entries
     )
     LF.write_avro_records(
-        spark,
         str(t / "metadata" / "snap-7.avro"),
         _MLIST_SCHEMA,
         [
@@ -566,7 +564,6 @@ def test_iceberg_manifest_list_summary_prune(spark, tmp_path, monkeypatch):
         rel = f"data/b{b}.parquet"
         pq.write_table(pa.table({"id": pa.array(ids, pa.int64())}), t / rel)
         LF.write_avro_records(
-            spark,
             str(t / "metadata" / f"m-{b}.avro"),
             _MANIFEST_SCHEMA_BOUNDS,
             [
@@ -609,7 +606,6 @@ def test_iceberg_manifest_list_summary_prune(spark, tmp_path, monkeypatch):
             }
         )
     LF.write_avro_records(
-        spark,
         str(t / "metadata" / "snap-7.avro"),
         _MLIST_SCHEMA,
         mlist_rows,
@@ -658,9 +654,9 @@ def test_iceberg_manifest_list_summary_prune(spark, tmp_path, monkeypatch):
     opened: list[str] = []
     real = LF._read_avro_records
 
-    def spy(spark_, *paths):
+    def spy(*paths):
         opened.extend(str(p).rsplit("/", 1)[-1] for p in paths)
-        return real(spark_, *paths)
+        return real(*paths)
 
     monkeypatch.setattr(LF, "_read_avro_records", spy)
     v = by_bucket[0][len(by_bucket[0]) // 2]
@@ -724,7 +720,7 @@ def test_r8_review_regressions(spark, tmp_path):
     assert not S.delta_file_matches(fnull, schema, ["b"], [("b", "=", b"abc")])
 
 
-def test_dv_descriptor_gates_inline_and_task_cap(spark, tmp_path):
+def test_dv_descriptor_gates_inline_and_task_cap(spark, tmp_path, monkeypatch):
     """Inline DV descriptors missing sizeInBytes fail the loud
     LakeFormatError contract (the r7-advice fix originally covered
     only file-backed DVs), a descriptor without cardinality is
@@ -806,8 +802,9 @@ def test_dv_descriptor_gates_inline_and_task_cap(spark, tmp_path):
             "cardinality": LF._DV_TASK_CAP + 1,
         }
     )
+    monkeypatch.setattr(LF, "_DV_DRIVER_CAP", 1)
     with pytest.raises(LF.LakeFormatGatedError, match="per-task cap"):
-        LF.read_delta_snapshot(spark, str(t), dv_driver_cap=1)
+        LF.read_delta_snapshot(spark, str(t))
 
 
 def test_iceberg_spec_evolution_keeps_transform_pruning_off(spark, tmp_path):
@@ -831,7 +828,6 @@ def test_iceberg_spec_evolution_keeps_transform_pruning_off(spark, tmp_path):
     # (default) new spec is bucket[8] — value 3 lands in a different
     # bucket under the two specs for most probes
     LF.write_avro_records(
-        spark,
         str(t / "metadata" / "m-1.avro"),
         _MANIFEST_SCHEMA_BOUNDS,
         [
@@ -861,7 +857,6 @@ def test_iceberg_spec_evolution_keeps_transform_pruning_off(spark, tmp_path):
         ],
     )
     LF.write_avro_records(
-        spark,
         str(t / "metadata" / "snap-5.avro"),
         _MLIST_SCHEMA,
         [

@@ -1,12 +1,12 @@
-"""Driver-walk scale probe for the avro manifest bridge (r10, VERDICT
-r9 item 6): a synthetic Iceberg table with THOUSANDS of manifests in
-one snapshot's manifest list — the shape a 100 TB table's append
-history actually produces — measured three ways:
+"""Driver-walk scale probe for the Iceberg avro manifest walk: a
+synthetic Iceberg table with THOUSANDS of manifests in one snapshot's
+manifest list — the shape a 100 TB table's append history actually
+produces — measured three ways:
 
   author   — manifests/s + entries/s for WRITING the manifest avro
-             through the batched py4j bridge (the r9 rewrite's cost,
-             anchored at scale instead of the single 400-entry sample)
-  full     — iceberg_manifest_entries with NO predicate: the walk must
+             through the pure-Python container writer
+             (sources/avrocore.py; no JVM involved)
+  full     — iceberg_snapshot_entries with NO predicate: the walk must
              open every manifest; wall seconds + entries/s is the
              worst-case driver cost per snapshot
   pruned   — the same walk with a point predicate: manifest-LIST
@@ -60,7 +60,7 @@ def main() -> None:
     info = LF.iceberg_snapshot_info(meta_path)
     snap = info["snapshot"]
     mlist_path = Path(LF._resolve(snap["manifest-list"], str(tbl)))
-    base_rows = list(LF._read_avro_records(spark, str(mlist_path)))
+    base_rows = list(LF._read_avro_records(str(mlist_path)))
     base_entries = sum(int(r["added_files_count"]) for r in base_rows)
     seq = int(snap["sequence-number"])
     snap_id = int(snap["snapshot-id"])
@@ -92,7 +92,7 @@ def main() -> None:
         ]
         m_name = f"m-syn-{v:06d}.avro"
         LF.write_avro_records(
-            spark, str(meta_dir / m_name), man_schema, entries
+            str(meta_dir / m_name), man_schema, entries
         )
         new_rows.append(
             IW._normalize_mlist_row(
@@ -114,14 +114,14 @@ def main() -> None:
     # splice: rewrite the snapshot's manifest list in place
     all_rows = [IW._normalize_mlist_row(r) for r in base_rows] + new_rows
     tmp = mlist_path.with_suffix(".tmp.avro")
-    LF.write_avro_records(spark, str(tmp), IW._MLIST_SCHEMA, all_rows)
+    LF.write_avro_records(str(tmp), IW._MLIST_SCHEMA, all_rows)
     os.replace(tmp, mlist_path)
 
     # FULL walk: every manifest opens (cold — the per-path cache from
     # authoring/splicing must not flatter the number)
     LF._AVRO_CACHE.clear()
     t0 = time.perf_counter()
-    full = LF.iceberg_snapshot_entries(spark, meta_path)
+    full = LF.iceberg_snapshot_entries(meta_path)
     full_s = time.perf_counter() - t0
     n_full = len(full)
     assert n_full == base_entries + n_manifests * entries_per, (
@@ -135,12 +135,12 @@ def main() -> None:
     LF._AVRO_CACHE.clear()
     t0 = time.perf_counter()
     pruned = LF.iceberg_snapshot_entries(
-        spark, meta_path, predicate=[("p", "=", target)]
+        meta_path, predicate=[("p", "=", target)]
     )
     pruned_s = time.perf_counter() - t0
     assert len(pruned) == entries_per, (len(pruned), entries_per)
     stats = LF.iceberg_manifest_prune_stats(
-        spark, meta_path, predicate=[("p", "=", target)]
+        meta_path, predicate=[("p", "=", target)]
     )
     assert stats["manifests_matched"] == 1, stats
 
@@ -159,7 +159,7 @@ def main() -> None:
         "pruned_over_full_speedup": round(full_s / max(pruned_s, 1e-9), 1),
     }
 
-    # METADATA-TABLE shapes at the same scale (r11, F43/F44): the
+    # METADATA-TABLE shapes at the same scale (F43/F44): the
     # `manifests` table is one manifest-LIST read + per-row summary
     # decode (never opens a manifest), and the `partitions` table is
     # one aggregation pass over the full entry walk — both must stay
@@ -168,7 +168,7 @@ def main() -> None:
 
     LF._AVRO_CACHE.clear()
     t0 = time.perf_counter()
-    mrows = LF._read_avro_records(spark, str(mlist_path))
+    mrows = LF._read_avro_records(str(mlist_path))
     decoded = 0
     for m in mrows:
         parts = m.get("partitions")
