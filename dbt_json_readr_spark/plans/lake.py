@@ -1839,8 +1839,9 @@ def delta_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Change feed BETWEEN Delta versions from metadata alone: for each
     commit step (v→v+1), the file-set diff gives added/removed files,
     and reading ONLY those files gives row-level change counts — the
-    O(delta) incremental-maintenance signal (same contract as
-    ManifestTable.read(added_since=...)), never a full-table rescan.
+    O(delta) incremental-maintenance signal (the metadata-only form of
+    what ``read_delta_changes`` returns as rows), never a full-table
+    rescan.
     The restatement commit must show both an add and a remove in the
     same partition."""
     prep(spark)

@@ -588,7 +588,7 @@ def delta_restore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         DW.write_delta(spark, a, tbl, partition_by=["c_mktsegment"])
         DW.write_delta(spark, b, tbl, partition_by=["c_mktsegment"])
         DW.delete_delta(spark, tbl, [("c_acctbal", "<", 500.0)])
-        aud = DW.restore_delta(spark, tbl, 1)
+        aud = DW.restore_delta(tbl, 1)
         (Path(tbl) / "_RT_RESTORE_AUDIT").write_text(
             f"{aud['files_added']} {aud['files_removed']} {aud['version']}"
         )
@@ -738,7 +738,7 @@ def delta_vacuum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         DW.write_delta(
             spark, sub, tbl, mode="overwrite", partition_by=["c_mktsegment"]
         )
-        aud = DW.vacuum_delta(spark, tbl, retention_ms=0, now_ms=10**15)
+        aud = DW.vacuum_delta(tbl, retention_ms=0, now_ms=10**15)
         (Path(tbl) / "_RT_VACUUM_AUDIT").write_text(
             f"{aud['files_deleted']} {aud['files_live']}"
         )
@@ -944,7 +944,7 @@ def delta_convert_in_place(spark: SparkSession, sf_dir: str) -> DataFrame:
         a = orders.filter(F.col("o_orderkey") % 3 == 0)
         sinks.write_partitioned(a, tbl, ["o_orderpriority"])
         aud = DW.convert_to_delta(
-            spark, tbl, orders.schema, partition_by=["o_orderpriority"]
+            tbl, orders.schema, partition_by=["o_orderpriority"]
         )
         DW.write_delta(
             spark,
@@ -3053,7 +3053,7 @@ def delta_history_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         DW.delete_delta(spark, tbl, [("o_orderkey", "<=", 50)])
         DW.optimize_delta(spark, tbl)
-        DW.restore_delta(spark, tbl, 1)
+        DW.restore_delta(tbl, 1)
 
     tbl = str(_ensure("wrt_delta_history", sf_dir, build))
     rows = _delta_history_rows(tbl)

@@ -97,7 +97,7 @@ ORDER BY l_returnflag, l_linestatus
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective dim filter → 3-way join → agg → top-N.
 
-    Scale posture (VERDICT r4 item 2): only the filtered ``customer``
+    Scale posture: only the filtered ``customer``
     carries a broadcast hint — the orders⋈customer result is
     FACT-derived (the date filter keeps most of orders), so forcing it
     broadcast would OOM executors at 100×.  lineitem⋈orders shuffles on
@@ -148,7 +148,7 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: star join over region→nation→customer/supplier with
     the lineitem fact.
 
-    Scale posture (VERDICT r4 item 2): region/nation/supplier get
+    Scale posture: region/nation/supplier get
     broadcast hints — their size is fixed (region/nation) or small
     relative to the facts (supplier).  The customer-bearing ``dims``
     side is UNHINTED: customer grows linearly with scale factor (tens
@@ -307,7 +307,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: HAVING on a fact aggregate, then join the
     surviving keys back to the dims.  The qualifying-orders set is
     highly selective but still sf-linear, and customer scales with sf —
-    both joins are UNHINTED (VERDICT r4 item 2's class): they shuffle
+    both joins are UNHINTED: they shuffle
     on their keys, and AQE elects a runtime broadcast only when the
     post-HAVING size statistics actually fit."""
     prep(spark)
@@ -344,9 +344,8 @@ def q7_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: supplier-nation × customer-nation trade matrix.
     Both nation hops and supplier broadcast (fixed / small dims); the
     customer join is UNHINTED — customer scales with sf, so it shuffles
-    on custkey unless AQE's runtime stats elect broadcast (VERDICT r4
-    item 2).  The fact shuffles once per fact-fact equi-join
-    (lineitem⋈orders)."""
+    on custkey unless AQE's runtime stats elect broadcast.  The fact
+    shuffles once per fact-fact equi-join (lineitem⋈orders)."""
     prep(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -444,7 +443,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     The selective returnflag filter pushes into the fact scan; nation
     broadcasts (fixed size), customer is UNHINTED — it scales with sf,
     so the join shuffles on custkey with AQE free to elect broadcast
-    from runtime stats (VERDICT r4 item 2)."""
+    from runtime stats."""
     prep(spark)
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     orders = load(spark, sf_dir, "orders")
@@ -547,7 +546,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     to AMERICA-region customers in 1996-1997, the per-year share of
     revenue supplied by NATION_7 suppliers.
 
-    Scale posture (VERDICT r4 item 2): part/supplier/nation/region get
+    Scale posture: part/supplier/nation/region get
     broadcast hints (fixed or fact-relative-small); the
     customer⋈nation⋈region side is UNHINTED — customer scales linearly
     with sf, so orders⋈cust shuffles on custkey and AQE elects
@@ -1805,8 +1804,8 @@ def referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-cardinality, not row-cardinality — at 100 TB the lineitem→part
     check joins ~200M distinct keys, not 600B rows.  Orphan and
     null/distinct stats come out of ONE aggregate over a single LEFT
-    join of the pre-aggregated keys onto the parent key set (ADVICE r4:
-    the previous orph/stats split re-scanned and re-aggregated each
+    join of the pre-aggregated keys onto the parent key set (a separate
+    orph/stats split would re-scan and re-aggregate each
     child once per output column family — lineitem 6× across its 3
     edges).  AQE plans the join from the pre-aggregated size; NULL FKs
     are counted separately, never treated as orphans.
@@ -1867,41 +1866,45 @@ REFERENTIAL_INTEGRITY_SQL = _ri_sql()
 
 
 # ------------------------------------------------------------- B69
-# Incremental view maintenance over manifest commits — the "don't
-# rescan 100 TB to refresh a dashboard" operator.
+# Incremental view maintenance over Delta commits — the "don't rescan
+# 100 TB to refresh a dashboard" operator.
 
 
 def incremental_view_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maintain a grouped aggregate across two manifest commits by
-    re-aggregating ONLY the second commit's files and merging partial
+    """Maintain a grouped aggregate across two Delta commits by
+    re-aggregating ONLY the second commit's rows and merging partial
     states — never rescanning the base.
 
-    lineitem lands in two appends (even / odd orderkeys).  The view
-    state after commit 1 is a per-group partial (decimal sums + count);
-    the refresh reads ``read(added_since=v1)`` — the manifest-diff
-    change feed, file-list metadata only — and merges partials by
-    group.  Sums stay DECIMAL until after the merge, so incremental ==
-    full-recompute bit-for-bit, which is exactly what the batch oracle
-    asserts.
+    lineitem lands in two appends (even / odd orderkeys) to a table
+    created with the change data feed enabled.  The view state after
+    commit 1 is a per-group partial (decimal sums + count) over the
+    version-pinned snapshot; the refresh reads the change feed from the
+    next version on (``read_delta_changes``: the commit's added files,
+    found from the log alone) and merges partials by group.  Sums stay
+    DECIMAL until after the merge, so incremental == full-recompute
+    bit-for-bit, which is exactly what the batch oracle asserts.
 
     Scale posture: refresh cost is O(delta) + O(groups), independent
     of base size; the partial-state merge is the same commutative
-    monoid Spark's own partial aggregation relies on.  An overwrite
-    commit surfaces as all-new paths in the diff — the documented
-    full-refresh fallback signal.
+    monoid Spark's own partial aggregation relies on.  The table is
+    append-only, so every change row is an insert.
     """
     import os
 
-    from ..manifest_commit import ManifestTable
     from ..session import scratch_dir
+    from ..sources import deltawriter as DW
+    from ..sources import lakeformats as LF
 
     prep(spark)
-    root = scratch_dir("ivm")
-    table = ManifestTable(spark, os.path.join(root, "table"))
+    tbl = os.path.join(scratch_dir("ivm"), "table")
     li = load(spark, sf_dir, "lineitem")
-    table.commit(li.filter(F.col("l_orderkey") % 2 == 0), mode="append")
-    v1 = table.current_version()
-    table.commit(li.filter(F.col("l_orderkey") % 2 == 1), mode="append")
+    v1 = DW.write_delta(
+        spark,
+        li.filter(F.col("l_orderkey") % 2 == 0),
+        tbl,
+        configuration={"delta.enableChangeDataFeed": "true"},
+    )["version"]
+    DW.write_delta(spark, li.filter(F.col("l_orderkey") % 2 == 1), tbl)
 
     def partial(df: DataFrame) -> DataFrame:
         return df.groupBy("l_returnflag", "l_linestatus").agg(
@@ -1910,8 +1913,12 @@ def incremental_view_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("p_n"),
         )
 
-    base = partial(table.read(version=v1))
-    delta = partial(table.read(added_since=v1))
+    base = partial(LF.read_delta_snapshot(spark, tbl, version=v1))
+    delta = partial(
+        LF.read_delta_changes(spark, tbl, v1 + 1).drop(
+            "_change_type", "_commit_version"
+        )
+    )
     return (
         base.unionByName(delta)
         .groupBy("l_returnflag", "l_linestatus")
@@ -2159,40 +2166,37 @@ ORDER BY f.c_mktsegment
 
 # ------------------------------------------------------------- B75
 # Optimistic-concurrency commit audit — the two table-format contracts
-# VERDICT r4 item 5 named (commit-conflict CAS + schema evolution on
-# commit), exercised END-TO-END as a gated key rather than only in unit
-# tests.
+# (commit-conflict CAS + schema evolution on commit), exercised
+# END-TO-END as a gated key rather than only in unit tests.
 
 
 def manifest_concurrent_commit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic commit-conflict-and-retry audit over the manifest
+    """Deterministic commit-conflict-and-retry audit over a Delta
     table: three orders slices land as (1) a base commit, (2) an
     interleaved winner that also EVOLVES the schema (adds ``channel``),
-    and (3) a loser whose manifest was built against the stale parent —
-    its version CAS must REJECT (we raise loudly if it wins), after
-    which the same staged files republish on top of the winner, exactly
-    the rebuild commit()'s internal retry loop performs.
+    and (3) a loser that read the table before the winner committed —
+    its commit at the stale version must be REJECTED by the log's
+    put-if-absent (we raise loudly if it wins), after which it retries
+    on top of the winner, as every optimistic writer does.
 
     The returned rollup reads the FINAL snapshot: all three batches
-    present (no lost update — the hazard last-pointer-swap-wins had),
-    evolution null-fills ``channel`` for the two pre-evolution batches,
-    and the version chain is exactly base→winner→retry.  The oracle
+    present (no lost update), evolution null-fills ``channel`` for the
+    two pre-evolution batches, and the log holds exactly three commits
+    (base→winner→retry; ``final_version`` counts them).  The oracle
     recomputes the same counts straight from ``orders``, so a dropped
-    batch, a broken carry-forward, or a wrong null-fill all
-    hash-mismatch.
+    batch, a lost commit or a wrong null-fill all hash-mismatch.
 
     Scale posture: the audit is metadata-size; the data path is three
-    partitioned parquet writes + one manifest-pruned read, same as any
-    manifest commit.
+    parquet writes + one snapshot read, same as any Delta commit.
     """
     import os
 
-    from ..manifest_commit import ManifestTable
     from ..session import scratch_dir
+    from ..sources import deltawriter as DW
+    from ..sources import lakeformats as LF
 
     prep(spark)
-    root = scratch_dir("occ_audit")
-    t = ManifestTable(spark, os.path.join(root, "table"))
+    tbl = os.path.join(scratch_dir("occ_audit"), "table")
     orders = load(spark, sf_dir, "orders")
     mod = F.col("o_orderkey") % 3
     base = orders.filter(mod == 0).select(F.lit("base").alias("tag"), "o_orderkey")
@@ -2202,31 +2206,23 @@ def manifest_concurrent_commit_audit(spark: SparkSession, sf_dir: str) -> DataFr
         "o_orderkey",
         F.col("o_orderpriority").alias("channel"),
     )
-    t.commit(base)  # v1
-    # the loser stages and builds against parent v1 …
-    cid, staged, parts, actual = t.stage_and_audit(w1, None, None)
-    stale = t.build_manifest(
-        version=2, parent=1, commit_id=cid, staged=staged, parts=parts,
-        actual=actual, batch_schema=w1.schema, mode="append", batch_id=None,
-        partition_by=None, replace_partitions=False,
-    )
-    # … while the winner publishes v2 first, evolving the schema
-    if t.commit(w2) != 2:
-        raise RuntimeError("winner did not land at v2")
-    if t.try_publish(2, stale):
-        raise RuntimeError("version CAS accepted a stale manifest")
-    # retry: rebuild the SAME staged files on top of the winner
-    retry = t.build_manifest(
-        version=3, parent=2, commit_id=cid, staged=staged, parts=parts,
-        actual=actual, batch_schema=w1.schema, mode="append", batch_id=None,
-        partition_by=None, replace_partitions=False,
-    )
-    if not t.try_publish(3, retry):
-        raise RuntimeError("retry publish lost an impossible race")
-    final_version = t.current_version()
-    snap = t.read()
+    DW.write_delta(spark, base, tbl)
+    # the loser reads the table: its next version is 1 …
+    stale = DW._table_version(tbl) + 1
+    # … while the winner commits that version first, evolving the schema
+    DW.write_delta(spark, w2, tbl, merge_schema=True)
+    try:
+        DW._commit(tbl, stale, [DW._commit_info("WRITE", {})])
+    except DW.DeltaConcurrentCommitError:
+        pass
+    else:
+        raise RuntimeError("the log accepted a commit at a taken version")
+    # retry on top of the winner
+    DW.write_delta(spark, w1, tbl, merge_schema=True)
+    final_version = DW._table_version(tbl) + 1  # commits in the log
     return (
-        snap.groupBy("tag")
+        LF.read_delta_snapshot(spark, tbl)
+        .groupBy("tag")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum(F.when(F.col("channel").isNull(), 1).otherwise(0)).alias(

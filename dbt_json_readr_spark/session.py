@@ -268,7 +268,7 @@ def scratch_dir(slot: str) -> str:
     directory — no cross-run rmtree races on a fixed path — and keeping
     the previous generation preserves the ADVICE-r4 contract: a lazy
     DataFrame returned by the PRIOR call of the same key (incremental
-    view maintenance, the streaming manifest sinks) stays readable
+    view maintenance, the streaming Delta sinks) stays readable
     after a newer invocation.  Remaining dirs are removed at process
     exit; dirs from a crashed process persist until the host clears
     /tmp — the price of never deleting another live process's files."""

@@ -1818,7 +1818,6 @@ def optimize_delta(
 
 
 def convert_to_delta(
-    spark: SparkSession,
     directory: str,
     schema: T.StructType,
     partition_by: list[str] | tuple[str, ...] = (),
@@ -1920,7 +1919,6 @@ def convert_to_delta(
 
 
 def vacuum_delta(
-    spark: SparkSession,
     table_path: str,
     retention_ms: int = 7 * 24 * 3600 * 1000,
     now_ms: int | None = None,
@@ -2056,7 +2054,7 @@ def vacuum_delta(
 # ------------------------------------------------------------------
 
 
-def restore_delta(spark: SparkSession, table_path: str, version: int) -> dict:
+def restore_delta(table_path: str, version: int) -> dict:
     """RESTORE TABLE TO VERSION AS OF ``version`` — a NEW commit whose
     file actions make the live set equal the target snapshot's (time
     travel that moves the table, not just a read).  History is
@@ -2149,7 +2147,6 @@ def restore_delta(spark: SparkSession, table_path: str, version: int) -> dict:
 
 
 def write_delta_checkpoint(
-    spark: SparkSession,
     table_path: str,
     v2: bool = False,
     sidecar_files: int = 2,

@@ -1,13 +1,13 @@
 """External table-format READ bridges: Delta Lake ``_delta_log`` and
 Iceberg ``metadata.json`` snapshots.
 
-``manifest_commit.ManifestTable`` is this engine's homegrown
-write-audit-publish format; a real lake already has tables in Delta or
-Iceberg.  Both formats keep their commit METADATA as JSON (Delta: one
-JSON-lines action file per commit; Iceberg: a versioned metadata.json
-with snapshot lineage), so a snapshot's schema + active-file list is
-recoverable with the stdlib — no format jars — and the files themselves
-are plain parquet Spark reads natively.
+A real lake already has tables in Delta or Iceberg (this engine writes
+both natively: ``sources/deltawriter.py`` and
+``sources/icebergwriter.py``).  Both formats keep their commit METADATA
+as JSON (Delta: one JSON-lines action file per commit; Iceberg: a
+versioned metadata.json with snapshot lineage), so a snapshot's schema
++ active-file list is recoverable with the stdlib — no format jars —
+and the files themselves are plain parquet Spark reads natively.
 
 Scope is explicit and loud:
 - Delta: checkpoint-parquet state (pyarrow, driver-side) seeds the
@@ -36,8 +36,8 @@ Scope is explicit and loud:
   apply correctly (missing equality_ids / sequence numbers, nested
   equality columns) and on malformed delete manifests.
 
-Driver-side work is O(metadata) — identical posture to ManifestTable:
-the driver parses pointers, executors read parquet.
+Driver-side work is O(metadata): the driver parses pointers,
+executors read parquet.
 """
 
 from __future__ import annotations
@@ -790,8 +790,7 @@ def read_delta_snapshot(
     """The Delta table AS OF ``version`` as a DataFrame — the exact
     file list the snapshot pins, schema from the log (never inferred),
     partition columns reconstructed from partitionValues with their
-    declared types (they are NOT in the data files), mirroring
-    ManifestTable.read's partition handling.
+    declared types (they are NOT in the data files).
 
     Column mapping mode 'name': the parquet files store PHYSICAL column
     names (``col-<uuid>``); the scan schema uses those and a final
@@ -1658,8 +1657,8 @@ def _read_avro_records(*paths: str) -> list[dict]:
     """Driver-side read of avro MANIFEST files and manifest lists
     through the pure-Python container reader (``sources/avrocore.py``,
     every spec codec).  Manifests are metadata, O(#files) pointer rows,
-    the avro analogue of ManifestTable's ``open(manifest-<v>.json)``;
-    data rows never take this path.  Results are cached per (path,
+    the avro analogue of Delta's JSON commit files; data rows never
+    take this path.  Results are cached per (path,
     size, mtime_ns) — manifests are immutable, so the key is exact.  A
     malformed container raises ``LakeFormatError``."""
     from . import avrocore

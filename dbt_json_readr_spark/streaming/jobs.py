@@ -37,14 +37,14 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     parent dir), while a lake layout (and the sf1 soak data) stores a
     table DIRECTORY of part files (→ stream the directory itself; a
     glob for the table name would silently exclude every part file —
-    observed as 0 rows in the r4 sf1 streaming soak)."""
+    a sf1 layout streams 0 rows that way)."""
     return _table_stream(spark, sf_dir, "events")
 
 
 def _table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """ONE layout-robust streaming file source for any testdata table
-    (events_stream's r4 glob-bug workaround, shared so a layout fix
-    can never apply to one table's stream and miss another's)."""
+    (events_stream's layout handling, shared so a layout fix can never
+    apply to one table's stream and miss another's)."""
     import os
 
     path = f"{sf_dir}/{name}.parquet"
@@ -299,9 +299,9 @@ def stateful_counts(ev: DataFrame) -> DataFrame:
         def close(self) -> None:
             pass
 
-    # Arrow-boundary trim (r13, guide §4.2): the processor reads only
-    # `value`; without the projection every event's event_type and
-    # props JSON string crossed the Python boundary per micro-batch
+    # Arrow-boundary trim: the processor reads only `value`; without
+    # the projection every event's event_type and props JSON string
+    # would cross the Python boundary per micro-batch
     return ev.select("user_id", "value").groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=_Counts(),
         outputStructType="user_id long, n_events long, value_micros long",
@@ -360,7 +360,7 @@ def funnel_stages(ev: DataFrame) -> DataFrame:
         def close(self) -> None:
             pass
 
-    # Arrow-boundary trim (r13): only ts + event_type are read
+    # Arrow-boundary trim: only ts + event_type are read
     return ev.select("user_id", "ts", "event_type").groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=_Funnel(),
         outputStructType="user_id long, funnel_stage string",
@@ -415,7 +415,7 @@ def topk_per_type(ev: DataFrame) -> DataFrame:
         def close(self) -> None:
             pass
 
-    # Arrow-boundary trim (r13): only value + event_id are read
+    # Arrow-boundary trim: only value + event_id are read
     return ev.select("event_type", "value", "event_id").groupBy("event_type").transformWithStateInPandas(
         statefulProcessor=_TopK(),
         outputStructType="event_type string, rank integer, event_id long, value double",
@@ -944,46 +944,72 @@ GROUP BY date_trunc('hour', ts)
 
 
 # --------------------------------------------------------------- D15
-# End-to-end exactly-once pipeline: stream → write-audit-publish
-# manifest table → rollup of the COMMITTED snapshot.  The durable-sink
-# keys above stop at the memory sink; this one gates the real sink
-# path (foreachBatch + batch-id replay dedup + atomic publish) as a
-# first-class correctness key instead of only a unit test.
+# End-to-end exactly-once pipeline: stream → Delta table → rollup of
+# the COMMITTED snapshot.  The durable-sink keys above stop at the
+# memory sink; this one gates the real sink path (foreachBatch + txn
+# replay guard + atomic commit) as a first-class correctness key
+# instead of only a unit test.
+
+
+def delta_sink(table_path: str, app: str) -> "Callable[[DataFrame, int], None]":
+    """The exactly-once ``foreachBatch`` sink into a Delta table: each
+    non-empty micro-batch is one ``write_delta`` append carrying the
+    ``txn=(app, epoch)`` marker, and the sink SKIPS any epoch
+    at-or-below the table's committed txn version for ``app`` — the
+    protocol's idempotent-append recipe, so a batch replayed after a
+    restart (the at-least-once window every foreachBatch sink has)
+    cannot double-write."""
+    from ..sources import deltawriter as DW
+
+    def _sink(bdf: DataFrame, epoch_id: int) -> None:
+        # explicit None check: a committed txn version 0 is FALSY, and
+        # `(0 or -1) >= 0` would re-append the whole first batch on an
+        # epoch-0 replay
+        last = DW.last_txn_version(table_path, app)
+        if last is not None and last >= epoch_id:
+            return  # replayed epoch: already committed
+        if bdf.isEmpty():
+            return
+        DW.write_delta(
+            bdf.sparkSession, bdf, table_path, mode="append",
+            txn=(app, epoch_id), colocate=False,
+        )
+
+    return _sink
 
 
 def streaming_manifest_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drain the events stream through ``ManifestTable``'s idempotent
-    foreachBatch writer (each micro-batch = one audited atomic commit),
-    then aggregate what the PUBLISHED manifest exposes.
+    """Drain the events stream through ``delta_sink`` (each micro-batch
+    = one atomic Delta commit, replays refused by the txn marker), then
+    aggregate what the committed snapshot exposes.
 
     The rollup must equal the batch oracle regardless of how the file
     source split the backlog into micro-batches — commit atomicity,
-    replay dedup, and manifest-scoped reads are all load-bearing for
+    replay dedup, and snapshot-scoped reads are all load-bearing for
     that equality.  maxFilesPerTrigger is NOT pinned, so the oracle
     equality holds for any micro-batch planning.
 
-    Scale posture: this is the no-jars table format — at 100 TB the
-    same writer gives readers snapshot isolation while 1000 executors
-    append; the rollup reads only manifest-listed files (no directory
-    listing race with in-flight writers).
+    Scale posture: readers get snapshot isolation while executors
+    append; the rollup reads only the files the log lists (no
+    directory listing race with in-flight writers).
     """
     import os
 
-    from ..manifest_commit import ManifestTable
     from ..session import scratch_dir
+    from ..sources import lakeformats as LF
 
     prep(spark)
     root = scratch_dir("stream_manifest")
-    table = ManifestTable(spark, os.path.join(root, "table"))
+    tbl = os.path.join(root, "table")
     q = (
         events_stream(spark, sf_dir)
-        .writeStream.foreachBatch(table.foreach_batch_writer())
+        .writeStream.foreachBatch(delta_sink(tbl, "djrs-stream-rollup"))
         .option("checkpointLocation", os.path.join(root, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    committed = table.read()
+    committed = LF.read_delta_snapshot(spark, tbl)
     return (
         committed.groupBy("event_type")
         .agg(
@@ -1079,23 +1105,31 @@ FROM sess GROUP BY user_id, event_type, session_id, gap_s
 
 # --------------------------------------------------------------- D17
 # Streaming CDC → durable MERGE sink: D11 materializes latest-state in
-# MEMORY; this key lands it in the manifest table via keyed upsert —
-# the streaming half of what a Delta MERGE pipeline does, with replay
+# MEMORY; this key lands it in a Delta table via keyed upsert — the
+# streaming half of what a Delta MERGE pipeline does, with replay
 # dedup and batch-order-independent conflict resolution.
 
 
-def cdc_merge_writer(table) -> "Callable[[DataFrame, int], None]":
+def cdc_merge_writer(table_path: str) -> "Callable[[DataFrame, int], None]":
     """foreachBatch hook: reduce the micro-batch to one latest-state
     row per user, resolve against the current snapshot by
     MAX(last_ts, last_event_id) — associative + commutative, so ANY
     batch split converges to the same table — accumulate n_updates
-    additively, and MERGE.  Replayed batch ids are dropped.
-    Module-level (not a closure inside the job) so the forced
-    multi-batch test can drive it with its own split stream."""
+    additively, and commit the merged table as ONE atomic overwrite
+    (readers see pre-merge or post-merge, never a mix) carrying the
+    ``txn=(app, batch_id)`` marker; replayed batch ids are dropped by
+    ``last_txn_version``.  Module-level (not a closure inside the job)
+    so the forced multi-batch test can drive it with its own split
+    stream."""
+    from ..sources import deltawriter as DW
+    from ..sources import lakeformats as LF
+
+    app = "djrs-cdc-merge"
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in table.committed_batch_ids():
-            return
+        last = DW.last_txn_version(table_path, app)
+        if last is not None and last >= batch_id:
+            return  # replayed batch: already merged
         b = (
             batch_df.groupBy("user_id")
             .agg(
@@ -1110,8 +1144,9 @@ def cdc_merge_writer(table) -> "Callable[[DataFrame, int], None]":
                 F.col("w.value").alias("last_value"),
             )
         )
-        cur = table.read()
-        if cur.columns:
+        spark = batch_df.sparkSession
+        if last is not None:  # a committed batch created the table
+            cur = LF.read_delta_snapshot(spark, table_path)
             prev = cur.select(
                 "user_id",
                 F.col("n_updates").alias("p_n"),
@@ -1137,14 +1172,21 @@ def cdc_merge_writer(table) -> "Callable[[DataFrame, int], None]":
                 .otherwise(F.col("p_val"))
                 .alias("last_value"),
             )
-        table.merge(b, keys=["user_id"], batch_id=batch_id)
+            b = cur.join(b.select("user_id"), "user_id", "left_anti").unionByName(b)
+        # merge_schema: the carried rows come back from a parquet scan
+        # as nullable, so the first merge relaxes the NOT NULL count
+        # column the first batch created (same types, nothing else)
+        DW.write_delta(
+            spark, b, table_path, mode="overwrite", txn=(app, batch_id),
+            merge_schema=True,
+        )
 
     return _merge
 
 
 def streaming_cdc_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the events stream through per-micro-batch keyed MERGE
-    upserts into a ManifestTable, then read the converged table.
+    upserts into a Delta table, then read the converged table.
 
     Batch-order independence is the load-bearing design point: a
     user's events may straddle micro-batches in any order, so each
@@ -1157,21 +1199,21 @@ def streaming_cdc_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from ..manifest_commit import ManifestTable
     from ..session import scratch_dir
+    from ..sources import lakeformats as LF
 
     prep(spark)
     root = scratch_dir("cdc_merge")
-    table = ManifestTable(spark, os.path.join(root, "table"))
+    tbl = os.path.join(root, "table")
     q = (
         events_stream(spark, sf_dir)
-        .writeStream.foreachBatch(cdc_merge_writer(table))
+        .writeStream.foreachBatch(cdc_merge_writer(tbl))
         .option("checkpointLocation", os.path.join(root, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    return table.read().select(
+    return LF.read_delta_snapshot(spark, tbl).select(
         "user_id", "n_updates", "last_ts", "last_event_id", "last_value"
     ).orderBy("user_id")
 
@@ -1388,7 +1430,7 @@ def session_timeout_sessions(ev: DataFrame) -> DataFrame:
             # within the watermark) sessionize among themselves and
             # close immediately — they cannot re-open a session the
             # timer already emitted, and their last run is > gap away
-            # from `start` by construction (r5 code-review finding)
+            # from `start` by construction
             if start is not None:
                 pre = [u for u in evs if u < start - gap_us]
                 evs = [u for u in evs if u >= start - gap_us]
@@ -1428,8 +1470,8 @@ def session_timeout_sessions(ev: DataFrame) -> DataFrame:
         def close(self) -> None:
             pass
 
-    # Arrow-boundary trim (r13): the processor reads only `ts` — the
-    # props JSON (the fattest column) was crossing Arrow for nothing.
+    # Arrow-boundary trim: the processor reads only `ts` — without it
+    # the props JSON (the fattest column) would cross Arrow for nothing.
     # Projection AFTER withWatermark keeps the watermark (the event-
     # time column survives the select)
     return ev.select("user_id", "ts").groupBy("user_id").transformWithStateInPandas(
@@ -1559,8 +1601,8 @@ ORDER BY r.user_id
 
 
 # ---------------------------------------------------------------- D22
-# State observability (VERDICT r5 item 8): the watermark/state-size
-# evidence a 100× stream needs.  Spark publishes per-operator state
+# State observability: the watermark/state-size evidence a 100×
+# stream needs.  Spark publishes per-operator state
 # metrics (rows held / updated / removed, bytes, RocksDB custom
 # metrics) in every StreamingQueryProgress; this key runs the three
 # core stateful operator SHAPES (window agg / session windows /
@@ -1890,8 +1932,8 @@ def _n_nonempty_parquet(src_dir: str) -> int:
     micro-batches an availableNow drain with maxFilesPerTrigger=1 can
     commit (empty files produce an isEmpty batch the sinks skip).  The
     exactly-once evidence compares committed-epoch count against THIS,
-    not a literal, so the key holds at any scale factor / file layout
-    (ADVICE r8)."""
+    not a literal, so the key holds at any scale factor / file
+    layout."""
     import pathlib
 
     import pyarrow.parquet as pq
@@ -1904,16 +1946,14 @@ def _n_nonempty_parquet(src_dir: str) -> int:
 
 def streaming_delta_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACTLY-ONCE streaming ingestion into a NATIVE-written Delta
-    table (r8 session 2, pairing D24's commit-log reader with the
-    write path): a 3-file events backlog drains through
-    ``foreachBatch`` (maxFilesPerTrigger=1 → three deterministic
-    micro-batches), each batch appended by ``deltawriter.write_delta``
-    with a ``txn`` app marker keyed on the epoch id; the sink SKIPS any
-    epoch at-or-below the table's committed txn version — the
-    protocol's idempotent-append recipe.  After the drain the LAST
-    epoch is deliberately REPLAYED (the at-least-once retry every
-    foreachBatch sink must survive): the txn guard must no-op, so the
-    commit count stays at three and no row duplicates.
+    table (the write-path twin of D24's commit-log reader): a 3-file
+    events backlog drains through ``delta_sink`` (maxFilesPerTrigger=1
+    → three deterministic micro-batches, each one ``write_delta``
+    append with a ``txn`` marker keyed on the epoch id).  After the
+    drain the FIRST and LAST epochs are deliberately REPLAYED with the
+    full source (the at-least-once retry every foreachBatch sink must
+    survive): the txn guard must no-op, so the commit count stays at
+    three and no row duplicates.
 
     Scale shape: each micro-batch is one distributed parquet append +
     one O(#files) driver commit; state is the sink table itself.  The
@@ -1936,20 +1976,7 @@ def streaming_delta_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         # deterministic 3-file backlog (hash(event_id) assignment)
         load(spark, sf_dir, "events").repartition(3, "event_id").write.parquet(src)
 
-        def _sink(bdf: DataFrame, epoch_id: int) -> None:
-            # explicit None check: committed txn version 0 is FALSY,
-            # and `(0 or -1) >= 0` re-appended the whole first batch
-            # on an epoch-0 replay (r8 review)
-            last = DW.last_txn_version(tbl, app)
-            if last is not None and last >= epoch_id:
-                return  # replayed epoch: already committed
-            if bdf.isEmpty():
-                return
-            DW.write_delta(
-                spark, bdf, tbl, mode="append", txn=(app, epoch_id),
-                colocate=False,
-            )
-
+        _sink = delta_sink(tbl, app)
         q = (
             spark.readStream.schema(SCHEMAS["events"])
             .option("maxFilesPerTrigger", "1")
@@ -2263,7 +2290,7 @@ _QUALITY_GATE = 0.5
 
 
 def streaming_corpus_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING corpus-ingest quality gate (r10): documents arrive as
+    """STREAMING corpus-ingest quality gate: documents arrive as
     an unbounded stream, each scores through the SAME deterministic
     quality heuristics the batch C9 key hash-proves (integer-derived
     features, fixed-order float combination — so the >= 0.5 gate
@@ -2313,7 +2340,7 @@ def _streaming_corpus_quality_gate_sql() -> str:
     # compose the C9 oracle as a subquery — ONE definition of the
     # quality formula (plans/llm._quality_sql), same as the other
     # consumers; a drifted copy here would silently break the "stream
-    # gate classifies identically to batch C9" contract (r10 review)
+    # gate classifies identically to batch C9" contract
     from ..plans.llm import _quality_sql
 
     return f"""

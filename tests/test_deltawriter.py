@@ -417,7 +417,7 @@ def test_txn_idempotence_and_checkpoint(spark, tmp_path, customers):
     DW.write_delta(spark, batch, tbl, txn=("app-1", 1))
     assert DW.last_txn_version(tbl, "app-1") == 1
 
-    ck = DW.write_delta_checkpoint(spark, tbl)
+    ck = DW.write_delta_checkpoint(tbl)
     assert ck["version"] == 1
     # drop the pre-checkpoint JSON commits: reads AND txn lookups must
     # survive on the checkpoint alone
@@ -439,7 +439,7 @@ def test_checkpoint_preserves_dvs(spark, tmp_path, customers):
     tbl = str(tmp_path / "t")
     DW.write_delta(spark, customers, tbl, partition_by=["c_mktsegment"])
     DW.delete_delta(spark, tbl, [("c_acctbal", "<", 0.0)])
-    DW.write_delta_checkpoint(spark, tbl)
+    DW.write_delta_checkpoint(tbl)
     tbl2 = str(tmp_path / "t_ck")
     shutil.copytree(tbl, tbl2)
     for p in Path(tbl2, "_delta_log").glob("*.json"):
@@ -464,14 +464,14 @@ def test_checkpoint_after_cleanup_keeps_protocol_and_id(
     DW.write_delta(spark, customers, tbl, partition_by=["c_mktsegment"])
     orig_id = LF.delta_snapshot(tbl)["meta_id"]
     DW.delete_delta(spark, tbl, [("c_acctbal", "<", 0.0)])
-    DW.write_delta_checkpoint(spark, tbl)
+    DW.write_delta_checkpoint(tbl)
     # vacuum the pre-checkpoint JSON commits, then append + re-checkpoint
     for p in Path(tbl, "_delta_log").glob("*.json"):
         p.unlink()
     DW.write_delta(
         spark, customers.limit(7), tbl, partition_by=["c_mktsegment"]
     )
-    DW.write_delta_checkpoint(spark, tbl)
+    DW.write_delta_checkpoint(tbl)
     ck = max(
         Path(tbl, "_delta_log").glob("*.checkpoint.parquet"),
         key=lambda p: int(p.name.split(".")[0]),
@@ -603,7 +603,7 @@ def test_restore_delta(spark, tmp_path, customers):
     DW.write_delta(spark, a, tbl, partition_by=["c_mktsegment"])   # v0
     DW.write_delta(spark, b, tbl, partition_by=["c_mktsegment"])   # v1
     DW.delete_delta(spark, tbl, [("c_acctbal", "<", 500.0)])       # v2
-    aud = DW.restore_delta(spark, tbl, 1)                          # v3
+    aud = DW.restore_delta(tbl, 1)                          # v3
     assert aud["version"] == 3 and aud["restored_to"] == 1
     back = LF.read_delta_snapshot(spark, tbl)
     assert back.count() == customers.count()
@@ -616,7 +616,7 @@ def test_restore_delta(spark, tmp_path, customers):
     exp2 = customers.filter(~(F.col("c_acctbal") < 500.0))
     assert v2.count() == exp2.count()
     # restore to v0 changes partition content back
-    DW.restore_delta(spark, tbl, 0)
+    DW.restore_delta(tbl, 0)
     assert LF.read_delta_snapshot(spark, tbl).count() == a.count()
 
 
@@ -679,23 +679,41 @@ def test_vacuum_delta(spark, tmp_path):
     far = 10**15  # far-future "now"
 
     # live DV files survive vacuum even with zero retention
-    aud0 = DW.vacuum_delta(spark, tbl, retention_ms=0, now_ms=far)
+    aud0 = DW.vacuum_delta(tbl, retention_ms=0, now_ms=far)
     assert aud0["files_deleted"] == 0
     assert all(p.exists() for p in dv_bins)
 
     sub = df.filter(F.col("id") % 3 == 0)
     DW.write_delta(spark, sub, tbl, mode="overwrite", partition_by=["p"])  # v2
     # young files are retained
-    aud1 = DW.vacuum_delta(spark, tbl, retention_ms=10**15, now_ms=far)
+    aud1 = DW.vacuum_delta(tbl, retention_ms=10**15, now_ms=far)
     assert aud1["files_deleted"] == 0 and aud1["files_retained_young"] > 0
     # past the horizon: the v0 data files AND the orphaned DV file go
-    aud2 = DW.vacuum_delta(spark, tbl, retention_ms=0, now_ms=far)
+    aud2 = DW.vacuum_delta(tbl, retention_ms=0, now_ms=far)
     assert aud2["files_deleted"] == n_v0_files + len(dv_bins)
     assert not any(p.exists() for p in dv_bins)
     # latest unaffected; vacuumed history fails LOUDLY at read
     assert LF.read_delta_snapshot(spark, tbl).count() == sub.count()
     with pytest.raises(Exception):
         LF.read_delta_snapshot(spark, tbl, version=0).count()
+
+
+def test_uncommitted_data_files_are_invisible_and_vacuumed(spark, tmp_path):
+    """A writer that dies after staging data files but before its log
+    commit leaves readers exactly at the old version, and vacuum
+    removes exactly the files no commit references."""
+    tbl = str(tmp_path / "t")
+    DW.write_delta(spark, spark.range(10).selectExpr("id", "id * 2 AS v"), tbl)
+    # the crashed writer's data: files under the table root, never committed
+    crashed = str(tmp_path / "crashed")
+    spark.range(100, 200).selectExpr("id", "id * 2 AS v").coalesce(1).write.parquet(crashed)
+    [orphan] = Path(crashed).glob("part-*.parquet")
+    shutil.move(str(orphan), Path(tbl) / "part-crashed.parquet")
+    assert {r.id for r in LF.read_delta_snapshot(spark, tbl).collect()} == set(range(10))
+    aud = DW.vacuum_delta(tbl, retention_ms=0, now_ms=10**15)
+    assert aud["files_deleted"] == 1
+    assert not (Path(tbl) / "part-crashed.parquet").exists()
+    assert {r.id for r in LF.read_delta_snapshot(spark, tbl).collect()} == set(range(10))
 
 
 def test_convert_to_delta_in_place(spark, tmp_path, customers):
@@ -707,7 +725,7 @@ def test_convert_to_delta_in_place(spark, tmp_path, customers):
     sinks.write_partitioned(customers, raw, ["c_mktsegment"])
     schema = customers.schema
     aud = DW.convert_to_delta(
-        spark, raw, schema, partition_by=["c_mktsegment"]
+        raw, schema, partition_by=["c_mktsegment"]
     )
     assert aud["version"] == 0 and aud["rows_cataloged"] == customers.count()
     back = LF.read_delta_snapshot(spark, raw)
@@ -724,7 +742,7 @@ def test_convert_to_delta_in_place(spark, tmp_path, customers):
     assert LF.read_delta_snapshot(spark, raw).count() == customers.count() + 5
     # double-convert refuses
     with pytest.raises(LF.LakeFormatError, match="already"):
-        DW.convert_to_delta(spark, raw, schema, partition_by=["c_mktsegment"])
+        DW.convert_to_delta(raw, schema, partition_by=["c_mktsegment"])
 
 
 def test_schema_evolution_append(spark, tmp_path):
@@ -781,13 +799,13 @@ def test_vacuum_tombstone_clock_protects_recent_removes(spark, tmp_path):
     )                                                                     # v1
     # 7-day retention at the real clock: tombstone is seconds old, so
     # the old-mtime files MUST be retained as young
-    aud = DW.vacuum_delta(spark, tbl)
+    aud = DW.vacuum_delta(tbl)
     assert aud["files_deleted"] == 0
     assert aud["files_retained_young"] == len(snap0["files"])
     assert LF.read_delta_snapshot(spark, tbl, version=0).count() == 10
     # past the tombstone horizon they go
     far = int(_time.time() * 1000) + 8 * 24 * 3600 * 1000
-    aud2 = DW.vacuum_delta(spark, tbl, now_ms=far)
+    aud2 = DW.vacuum_delta(tbl, now_ms=far)
     assert aud2["files_deleted"] == len(snap0["files"])
 
 
@@ -802,7 +820,7 @@ def test_vacuum_spares_hidden_files(spark, tmp_path):
     marker.write_text("{}")
     hidden = Path(tbl) / ".hidden_note"
     hidden.write_text("x")
-    aud = DW.vacuum_delta(spark, tbl, retention_ms=0, now_ms=10**15)
+    aud = DW.vacuum_delta(tbl, retention_ms=0, now_ms=10**15)
     assert marker.exists() and hidden.exists()
     assert aud["files_deleted"] == 0
 
@@ -818,9 +836,9 @@ def test_restore_to_vacuumed_version_gates(spark, tmp_path):
     DW.write_delta(
         spark, df.limit(2), tbl, mode="overwrite", partition_by=["p"]
     )                                                                     # v1
-    DW.vacuum_delta(spark, tbl, retention_ms=0, now_ms=10**15)
+    DW.vacuum_delta(tbl, retention_ms=0, now_ms=10**15)
     with pytest.raises(LF.LakeFormatError, match="no longer exist"):
-        DW.restore_delta(spark, tbl, 0)
+        DW.restore_delta(tbl, 0)
     # the failed restore committed NOTHING: latest still reads clean
     assert LF.delta_snapshot(tbl)["version"] == 1
     assert LF.read_delta_snapshot(spark, tbl).count() == 2
@@ -843,7 +861,7 @@ def test_convert_deeper_partition_layout_gates(spark, tmp_path):
         ]
     )
     with pytest.raises(LF.LakeFormatError, match="deeper than"):
-        DW.convert_to_delta(spark, str(raw), schema, partition_by=["a"])
+        DW.convert_to_delta(str(raw), schema, partition_by=["a"])
 
 
 def test_optimize_sort_unpartitioned_disjoint(spark, tmp_path):
@@ -1002,7 +1020,7 @@ def test_vacuum_spares_iceberg_export(spark, tmp_path):
     r = IW.delta_to_iceberg(spark, tbl)
     r = IW.delete_iceberg(spark, r["metadata_path"], [("id", "<", 5)])
     assert list(Path(tbl, "data").glob("delete-*.parquet"))
-    aud = DW.vacuum_delta(spark, tbl, retention_ms=0, now_ms=10**15)
+    aud = DW.vacuum_delta(tbl, retention_ms=0, now_ms=10**15)
     assert aud["files_deleted"] == 0
     back = LF.read_iceberg_snapshot(spark, r["metadata_path"])
     assert back.count() == 15
@@ -1241,7 +1259,7 @@ def test_v2_checkpoint_write_roundtrip(spark, tmp_path):
     DW.write_delta(spark, df, tbl, max_records_per_file=20, txn=("app", 7))
 
     with pytest.raises(LF.LakeFormatGatedError, match="v2Checkpoint"):
-        DW.write_delta_checkpoint(spark, tbl, v2=True)
+        DW.write_delta_checkpoint(tbl, v2=True)
 
     # explicit protocol upgrade commit, then the v2 checkpoint
     DW._commit(
@@ -1258,7 +1276,7 @@ def test_v2_checkpoint_write_roundtrip(spark, tmp_path):
             }
         ],
     )
-    res = DW.write_delta_checkpoint(spark, tbl, v2=True, sidecar_files=2)
+    res = DW.write_delta_checkpoint(tbl, v2=True, sidecar_files=2)
     assert res["version"] == 1 and res["sidecars"] == 2
     log = Path(tbl) / "_delta_log"
     assert list(log.glob("*.checkpoint.*.parquet"))
@@ -1298,9 +1316,9 @@ def test_v2_checkpoint_json_manifest_roundtrip(spark, tmp_path):
     DW.write_delta(spark, df, tbl, max_records_per_file=20, txn=("app", 7))
 
     with pytest.raises(LF.LakeFormatError, match="v2-checkpoint form"):
-        DW.write_delta_checkpoint(spark, tbl, manifest_format="json")
+        DW.write_delta_checkpoint(tbl, manifest_format="json")
     with pytest.raises(LF.LakeFormatError, match="manifest_format"):
-        DW.write_delta_checkpoint(spark, tbl, v2=True, manifest_format="orc")
+        DW.write_delta_checkpoint(tbl, v2=True, manifest_format="orc")
 
     DW._commit(
         tbl,
@@ -1317,7 +1335,7 @@ def test_v2_checkpoint_json_manifest_roundtrip(spark, tmp_path):
         ],
     )
     res = DW.write_delta_checkpoint(
-        spark, tbl, v2=True, sidecar_files=2, manifest_format="json"
+        tbl, v2=True, sidecar_files=2, manifest_format="json"
     )
     assert res["version"] == 1 and res["sidecars"] == 2
     log = Path(tbl) / "_delta_log"

@@ -1,6 +1,6 @@
 """E-plumbing tests (SURVEY.md §2 E): partitioned writes prune
-directories, the artifact reader scales over many files, the manifest
-commit protocol, the Python data source, and the Delta/Iceberg read
+directories, the artifact reader scales over many files, the
+exactly-once Delta streaming sink, the Python data source, and the Delta/Iceberg read
 bridges."""
 
 from __future__ import annotations
@@ -70,82 +70,19 @@ def test_observed_metrics_ride_along_with_the_action(spark, sf_dir):
     assert got["n_rows"] == n and got["qty"] > 0
 
 
-# ------------------------------------------------- manifest-commit table
+# ------------------------------------------------ exactly-once Delta sink
 
 
-def _mt(spark, tmp_path):
-    from dbt_json_readr_spark.manifest_commit import ManifestTable
-
-    return ManifestTable(spark, str(tmp_path / "mtable"))
-
-
-def test_manifest_commit_publish_and_read(spark, tmp_path):
-    t = _mt(spark, tmp_path)
-    df = spark.range(10).selectExpr("id", "id * 2 AS v")
-    assert t.commit(df, expected_rows=10) == 1
-    assert t.read().count() == 10
-    t.commit(spark.range(10, 15).selectExpr("id", "id * 2 AS v"), expected_rows=5)
-    assert t.read().count() == 15
-    assert t.read(version=1).count() == 10  # time travel to v1
-    t.commit(spark.range(3).selectExpr("id", "id * 2 AS v"), mode="overwrite")
-    assert t.read().count() == 3
-
-
-def test_manifest_commit_crash_between_write_and_publish_is_invisible(spark, tmp_path):
-    """The write-audit-publish guarantee: a writer that dies AFTER
-    staging data files but BEFORE the manifest/pointer swap must leave
-    readers exactly at the old version — no partial files readable."""
-    import os
-
-    t = _mt(spark, tmp_path)
-    t.commit(spark.range(10).selectExpr("id", "id * 2 AS v"))
-    # simulate the crashed second batch: files staged, never published
-    orphan_dir = os.path.join(t._data, "deadbeefcrash")
-    spark.range(100, 200).selectExpr("id", "id * 2 AS v").write.parquet(orphan_dir)
-    assert t.current_version() == 1
-    rows = {r.id for r in t.read().collect()}
-    assert rows == set(range(10)), "orphaned staged files leaked into a read"
-    # vacuum removes exactly the orphan, never referenced data
-    removed = t.vacuum()
-    assert removed == ["deadbeefcrash"]
-    assert {r.id for r in t.read().collect()} == set(range(10))
-
-
-def test_manifest_commit_audit_failure_aborts_publish(spark, tmp_path):
-    import pytest
-
-    from dbt_json_readr_spark.manifest_commit import CommitAuditError
-
-    t = _mt(spark, tmp_path)
-    with pytest.raises(CommitAuditError):
-        t.commit(spark.range(7).selectExpr("id", "id AS v"), expected_rows=99)
-    assert t.current_version() == 0
-    assert t.read().count() == 0
-
-
-def test_manifest_commit_replayed_batch_id_is_idempotent(spark, tmp_path):
-    """foreachBatch replays the last micro-batch after a restart that
-    crashed between sink commit and checkpoint write; the writer must
-    drop the duplicate by batch id."""
-    t = _mt(spark, tmp_path)
-    w = t.foreach_batch_writer()
-    df = spark.range(5).selectExpr("id", "id AS v")
-    w(df, 0)
-    w(df, 0)  # replay
-    w(spark.range(5, 8).selectExpr("id", "id AS v"), 1)
-    assert t.read().count() == 8
-    assert t.committed_batch_ids() == {0, 1}
-
-
-def test_manifest_commit_streaming_restart_exactly_once(spark, tmp_path):
-    """End-to-end: a checkpointed stream drains into the manifest table,
-    the query restarts with more input, and the published table holds
-    every source row exactly once — the no-jars stand-in for a Delta
-    streaming sink."""
+def test_delta_sink_streaming_restart_exactly_once(spark, tmp_path):
+    """End-to-end: a checkpointed stream drains into a Delta table through
+    the shared exactly-once sink, the query restarts with more input, and
+    the committed table holds every source row exactly once."""
     import glob
     import shutil
 
+    from dbt_json_readr_spark.sources import lakeformats as LF
     from dbt_json_readr_spark.sources.tables import load
+    from dbt_json_readr_spark.streaming.jobs import delta_sink
 
     sf = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
     src = tmp_path / "src"
@@ -161,7 +98,7 @@ def test_manifest_commit_streaming_restart_exactly_once(spark, tmp_path):
         shutil.move(f, tmp_path / f"half_{i}.parquet")
         shutil.rmtree(part_dir)
 
-    t = _mt(spark, tmp_path)
+    tbl = str(tmp_path / "table")
     ckpt = str(tmp_path / "ckpt")
 
     def run_once():
@@ -172,7 +109,7 @@ def test_manifest_commit_streaming_restart_exactly_once(spark, tmp_path):
             .select("event_id", "event_type", "value")
         )
         q = (
-            stream.writeStream.foreachBatch(t.foreach_batch_writer())
+            stream.writeStream.foreachBatch(delta_sink(tbl, "restart-test"))
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
@@ -181,72 +118,13 @@ def test_manifest_commit_streaming_restart_exactly_once(spark, tmp_path):
 
     shutil.copy(tmp_path / "half_0.parquet", src / "events_0.parquet")
     run_once()
-    assert {r.event_id for r in t.read().select("event_id").collect()} == halves[0]
+    assert {r.event_id for r in LF.read_delta_snapshot(spark, tbl).collect()} == halves[0]
 
     shutil.copy(tmp_path / "half_1.parquet", src / "events_1.parquet")
     run_once()
-    ids = [r.event_id for r in t.read().select("event_id").collect()]
+    ids = [r.event_id for r in LF.read_delta_snapshot(spark, tbl).collect()]
     assert len(ids) == len(set(ids)), "duplicates after restart"
     assert set(ids) == halves[0] | halves[1]
-
-
-def test_manifest_commit_merge_upserts_by_key(spark, tmp_path):
-    """MERGE contract: matched keys replaced, unmatched carried forward,
-    new keys appended — atomically, with the old version still readable
-    (time travel)."""
-    t = _mt(spark, tmp_path)
-    t.commit(spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "id LONG, v STRING"))
-    v2 = t.merge(
-        spark.createDataFrame([(2, "B2"), (4, "d")], "id LONG, v STRING"), keys=["id"]
-    )
-    rows = {(r.id, r.v) for r in t.read().collect()}
-    assert rows == {(1, "a"), (2, "B2"), (3, "c"), (4, "d")}
-    assert {(r.id, r.v) for r in t.read(version=v2 - 1).collect()} == {
-        (1, "a"), (2, "b"), (3, "c"),
-    }
-
-
-def test_manifest_commit_partitioned_prune_and_replace(spark, tmp_path):
-    """Partition-aware commits: (a) reads prune files from manifest
-    metadata alone and reconstruct the partition column with its type;
-    (b) replace_partitions rewrites ONLY touched partitions — untouched
-    parent files carry forward into the new version (O(touched)
-    upsert, the dynamic-partition-overwrite contract)."""
-    t = _mt(spark, tmp_path)
-    df = spark.createDataFrame(
-        [(1, "2024-01-01", 10.0), (2, "2024-01-01", 20.0), (3, "2024-01-02", 30.0)],
-        "id LONG, day STRING, v DOUBLE",
-    )
-    t.commit(df, partition_by="day")
-    pruned = t.read(partition_values=["2024-01-01"])
-    assert {r.id for r in pruned.collect()} == {1, 2}
-    assert dict(pruned.dtypes)["day"] == "string"
-    # dynamic partition overwrite: replace day 2 only
-    upd = spark.createDataFrame([(9, "2024-01-02", 99.0)], "id LONG, day STRING, v DOUBLE")
-    v2 = t.commit(upd, partition_by="day", replace_partitions=True)
-    rows = {(r.id, r.day) for r in t.read().collect()}
-    assert rows == {(1, "2024-01-01"), (2, "2024-01-01"), (9, "2024-01-02")}
-    # untouched partition's files are the SAME paths as in version 1
-    m1, m2 = t._manifest(1), t._manifest(v2)
-    day1_v1 = {f["path"] for f in m1["files"] if f["partition"] == "2024-01-01"}
-    day1_v2 = {f["path"] for f in m2["files"] if f["partition"] == "2024-01-01"}
-    assert day1_v1 == day1_v2 and day1_v1, "untouched partition was rewritten"
-
-
-def test_manifest_commit_compact_reduces_files_atomically(spark, tmp_path):
-    """OPTIMIZE contract: many small appended files → one compacted
-    file, same rows, old version still readable."""
-    t = _mt(spark, tmp_path)
-    for i in range(4):
-        t.commit(spark.range(i * 10, (i + 1) * 10).selectExpr("id", "id AS v"))
-    v_before = t.current_version()
-    n_files_before = len(t._manifest(v_before)["files"])
-    assert n_files_before >= 4
-    v = t.compact(target_files=1)
-    assert len(t._manifest(v)["files"]) < n_files_before
-    assert t.read().count() == 40
-    assert {r.id for r in t.read().collect()} == set(range(40))
-    assert t.read(version=v_before).count() == 40  # time travel intact
 
 
 def test_pysource_batch_partitions_and_determinism(spark):
@@ -332,163 +210,6 @@ def test_pysource_stream_reader_tiles_batches_completely():
         assert e1 == s2
     # every partition stays executor-memory-bounded
     assert all(p.end - p.start <= 100 for p in parts)
-
-
-def test_manifest_read_added_since_is_the_change_feed(spark, tmp_path):
-    """read(added_since=v) returns exactly the rows whose files were
-    appended after v — the IVM delta — and an overwrite surfaces as
-    all-new files (the full-refresh fallback signal)."""
-    t = _mt(spark, tmp_path)
-    t.commit(spark.range(10).selectExpr("id", "id * 2 AS v"))
-    v1 = t.current_version()
-    t.commit(spark.range(10, 15).selectExpr("id", "id * 2 AS v"))
-    delta = t.read(added_since=v1)
-    assert sorted(r.id for r in delta.collect()) == list(range(10, 15))
-    # nothing new relative to the latest version itself
-    assert t.read(added_since=t.current_version()).count() == 0
-    # overwrite rewrites every path: the whole table shows as "added"
-    t.commit(spark.range(3).selectExpr("id", "id * 2 AS v"), mode="overwrite")
-    assert t.read(added_since=v1).count() == 3
-
-
-# -------------------------------------- manifest-commit: r5 contracts
-
-
-def test_manifest_commit_cas_rejects_stale_parent(spark, tmp_path):
-    """Optimistic concurrency, deterministic interleave: a writer whose
-    manifest was built against a stale parent must LOSE the version CAS
-    (False), and a normal commit() retry must land on top of the winner
-    carrying both file lists — no silently lost update."""
-    import os
-
-    from dbt_json_readr_spark.manifest_commit import ManifestTable
-
-    t = ManifestTable(spark, str(tmp_path / "t"))
-    df1 = spark.range(10).withColumnRenamed("id", "k")
-    t.commit(df1)  # v1
-    # stale writer: stage + build against parent v1 …
-    cid, staged, parts, actual = t.stage_and_audit(
-        spark.range(5).withColumnRenamed("id", "k"), None, None
-    )
-    stale = t.build_manifest(
-        version=2, parent=1, commit_id=cid, staged=staged, parts=parts,
-        actual=actual, batch_schema=df1.schema, mode="append", batch_id=None,
-        partition_by=None, replace_partitions=False,
-    )
-    # … meanwhile a concurrent writer publishes v2 first
-    t.commit(spark.range(3).withColumnRenamed("id", "k"))
-    assert t.current_version() == 2
-    assert t.try_publish(2, stale) is False  # CAS rejects the stale build
-    # the stale writer's commit() path retries cleanly onto v3
-    v = t.commit(spark.range(5, 12).withColumnRenamed("id", "k"))
-    assert v == 3
-    assert t.read().count() == 10 + 3 + 7  # nothing lost
-
-
-def test_manifest_commit_concurrent_writers_lose_nothing(spark, tmp_path):
-    """Two real writer threads interleaving commits on one table: every
-    batch must survive (the last-pointer-swap-wins hazard VERDICT r4
-    called out), versions are a contiguous chain, and one writer losing
-    the CAS shows up as a transparent retry, not an error."""
-    import threading
-
-    from pyspark.sql import functions as F
-
-    from dbt_json_readr_spark.manifest_commit import ManifestTable
-
-    path = str(tmp_path / "t")
-    n_each, errs = 5, []
-    barrier = threading.Barrier(2)
-
-    def writer(tag: int) -> None:
-        try:
-            t = ManifestTable(spark, path)
-            barrier.wait()
-            for i in range(n_each):
-                t.commit(
-                    spark.range(10).select(
-                        F.lit(tag).alias("writer"), F.col("id").alias("k")
-                    )
-                )
-        except Exception as e:  # pragma: no cover - failure detail
-            errs.append(e)
-
-    threads = [threading.Thread(target=writer, args=(w,)) for w in (1, 2)]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join()
-    assert errs == []
-    t = ManifestTable(spark, path)
-    assert t.current_version() == 2 * n_each
-    got = {
-        (r.writer, r.n) for r in
-        t.read().groupBy("writer").agg(F.count("*").alias("n")).collect()
-    }
-    assert got == {(1, n_each * 10), (2, n_each * 10)}
-
-
-def test_manifest_commit_rolls_forward_past_unswapped_pointer(spark, tmp_path):
-    """A writer that crashed AFTER creating manifest-<v+1> but BEFORE
-    swapping _latest must still count as published: the manifest chain
-    is the source of truth and current_version rolls the pointer
-    forward."""
-    import os
-
-    from dbt_json_readr_spark.manifest_commit import ManifestTable
-
-    t = ManifestTable(spark, str(tmp_path / "t"))
-    t.commit(spark.range(4).withColumnRenamed("id", "k"))  # v1
-    cid, staged, parts, actual = t.stage_and_audit(
-        spark.range(6).withColumnRenamed("id", "k"), None, None
-    )
-    m = t.build_manifest(
-        version=2, parent=1, commit_id=cid, staged=staged, parts=parts,
-        actual=actual, batch_schema=t.read().schema, mode="append",
-        batch_id=None, partition_by=None, replace_partitions=False,
-    )
-    assert t.try_publish(2, m) is True
-    # simulate the crash: regress the pointer to v1
-    t._atomic_write(os.path.join(t._manifests, "_latest"), "1")
-    assert t.current_version() == 2  # rolled forward
-    assert t.read().count() == 10
-    assert t.commit(spark.range(2).withColumnRenamed("id", "k")) == 3
-
-
-def test_manifest_commit_schema_evolution_null_fills_old_files(spark, tmp_path):
-    """Appending a batch with an extra column publishes the union
-    schema; files written before the evolution read back with the new
-    column null-filled by the union read schema."""
-    from pyspark.sql import functions as F
-
-    from dbt_json_readr_spark.manifest_commit import ManifestTable
-
-    t = ManifestTable(spark, str(tmp_path / "t"))
-    t.commit(spark.range(3).select(F.col("id").alias("k")))
-    t.commit(
-        spark.range(3, 5).select(
-            F.col("id").alias("k"), (F.col("id") * 10).alias("extra")
-        )
-    )
-    out = t.read()
-    assert out.columns == ["k", "extra"]
-    rows = {r.k: r.extra for r in out.collect()}
-    assert rows == {0: None, 1: None, 2: None, 3: 30, 4: 40}
-
-
-def test_manifest_commit_schema_evolution_rejects_type_change(spark, tmp_path):
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from dbt_json_readr_spark.manifest_commit import (
-        ManifestTable,
-        SchemaEvolutionError,
-    )
-
-    t = ManifestTable(spark, str(tmp_path / "t"))
-    t.commit(spark.range(3).select(F.col("id").alias("k")))
-    with _pytest.raises(SchemaEvolutionError):
-        t.commit(spark.range(2).select(F.col("id").cast("string").alias("k")))
 
 
 # ---------------------------------------------------------------- r6

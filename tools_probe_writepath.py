@@ -120,7 +120,7 @@ def main() -> None:
     assert out["probe_pruned_rows"] == exp_probe
 
     vaud = DW.vacuum_delta(
-        spark, DEST, retention_ms=0, now_ms=10**15, dry_run=True
+        DEST, retention_ms=0, now_ms=10**15, dry_run=True
     )
     out["vacuum_orphans"] = vaud["files_deleted"]
 
@@ -227,7 +227,7 @@ def main() -> None:
 
     # classic checkpoint + a read seeded from it (no JSON replay)
     t0 = time.monotonic()
-    ck = DW.write_delta_checkpoint(spark, DEST)
+    ck = DW.write_delta_checkpoint(DEST)
     out["checkpoint_s"] = round(time.monotonic() - t0, 3)
     out["checkpoint_version"] = ck.get("version")
     t0 = time.monotonic()
