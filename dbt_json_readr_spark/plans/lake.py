@@ -21,6 +21,7 @@ from pyspark.sql import types as T
 
 from ..session import prep
 from ..sources import lakeformats as LF
+from ..sources import staging
 
 FIXTURE_ROOT = Path(__file__).resolve().parents[2] / "tests" / "fixtures" / "lake"
 DELTA_DIR = FIXTURE_ROOT / "delta_sales"
@@ -696,21 +697,11 @@ _ICEBERG_METADATA = {
 def ensure_lake_fixtures(root: Path | str = FIXTURE_ROOT) -> Path:
     """Idempotent, atomic materialization of both fixtures."""
     import os
-    import shutil
-    import tempfile
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    root = Path(root)
-    marker = root / "_VERSION"
-    try:
-        if marker.read_text() == _VERSION:
-            return root
-    except OSError:
-        pass
-    tmp = Path(tempfile.mkdtemp(prefix=".lake-fmt-", dir=str(root.parent)))
-    try:
+    def build(tmp: Path) -> None:
         delta = tmp / DELTA_DIR.name
         for rel, (_, rows) in _DELTA_FILES.items():
             dest = delta / rel
@@ -1093,18 +1084,8 @@ def ensure_lake_fixtures(root: Path | str = FIXTURE_ROOT) -> Path:
         (ib / "metadata" / ICEBERG_BUCKET_META.name).write_text(
             json.dumps(_ICEBERG_BUCKET_METADATA, sort_keys=True, indent=1)
         )
-        (tmp / "_VERSION").write_text(_VERSION)
-        if root.exists():
-            old = root.with_name(root.name + f".old-{os.getpid()}")
-            os.replace(root, old)
-            os.replace(tmp, root)
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            root.parent.mkdir(parents=True, exist_ok=True)
-            os.replace(tmp, root)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return root
+
+    return staging.publish_dir(Path(root), "_VERSION", _VERSION, build)
 
 
 # ------------------------------------------------------- E1 key

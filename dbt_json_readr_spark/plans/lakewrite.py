@@ -22,7 +22,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,10 +30,11 @@ from pyspark.sql import functions as F
 from ..session import prep
 from ..sources import deltawriter as DW
 from ..sources import lakeformats as LF
+from ..sources import staging
 from ..sources.tables import load
 
 RT_ROOT = Path(__file__).resolve().parents[2] / "tests" / "fixtures" / "lake" / "_rt"
-_WVERSION = "4"  # bump to rebuild the _rt tables after writer changes
+_WVERSION = "5"  # bump to rebuild the _rt tables after writer changes
 
 # money convention (plans/tpch.py docstring): decimal-exact sums,
 # rendered double through a string round-trip on the DuckDB side
@@ -53,34 +53,15 @@ def _rt_dir(name: str, sf_dir: str) -> Path:
 
 
 def _ensure(name: str, sf_dir: str, build) -> Path:
-    """Idempotent atomic build: ``build(tmp_table_dir)`` authors the
-    table; a marker pins (writer version, sf_dir) so a stale or
-    foreign-sf build is replaced wholesale."""
-    root = _rt_dir(name, sf_dir)
-    marker = root / "_RT_READY"
-    want = f"{_WVERSION}\n{os.path.abspath(sf_dir)}"
-    try:
-        if marker.read_text() == want:
-            return root
-    except OSError:
-        pass
-    RT_ROOT.mkdir(parents=True, exist_ok=True)
-    tmp = root.with_name(f".{root.name}.tmp-{os.getpid()}")
-    shutil.rmtree(tmp, ignore_errors=True)
-    tmp.mkdir(parents=True)
-    try:
-        build(str(tmp))
-        (tmp / "_RT_READY").write_text(want)
-        if root.exists():
-            old = root.with_name(root.name + f".old-{os.getpid()}")
-            os.replace(root, old)
-            os.replace(tmp, root)
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.replace(tmp, root)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return root
+    """``build(table_dir)`` authors the table once; the marker pins
+    (writer version, sf_dir) so a stale or foreign-sf build is
+    replaced wholesale."""
+    return staging.publish_dir(
+        _rt_dir(name, sf_dir),
+        "_RT_READY",
+        f"{_WVERSION}\n{os.path.abspath(sf_dir)}",
+        lambda tmp: build(str(tmp)),
+    )
 
 
 # ---------------------------------------------------------------- F13
@@ -2097,24 +2078,17 @@ def delta_uniform_mapped_export(spark: SparkSession, sf_dir: str) -> DataFrame:
                         for c in sup.columns
                     ]
                 )
-                stage = os.path.join(root, f"_stage{i}")
                 # one file per residue slice: bounded by slice size, and
                 # the layout closed form the oracle recomputes needs it
-                sl.coalesce(1).write.mode("overwrite").parquet(stage)
-                part = next(
-                    p
-                    for p in sorted(Path(stage).rglob("*.parquet"))
-                    if p.stat().st_size > 0
+                (f,) = staging.land_parquet(
+                    spark, sl.coalesce(1), root, prefix="p", version=i
                 )
-                rel = f"p{i}.parquet"
-                os.replace(part, os.path.join(root, rel))
-                shutil.rmtree(stage, ignore_errors=True)
                 adds.append(
                     {
                         "add": {
-                            "path": rel,
+                            "path": f.path,
                             "partitionValues": {},
-                            "size": os.path.getsize(os.path.join(root, rel)),
+                            "size": f.size,
                             "modificationTime": 0,
                             "dataChange": True,
                         }

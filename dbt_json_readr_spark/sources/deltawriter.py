@@ -10,10 +10,11 @@ reader).  Every byte of table state this module emits is consumed by
 ``lakeformats.read_delta_snapshot`` / ``skipping.delta_file_matches``
 and by any spec-conformant Delta reader:
 
-- commits are hard-link-exclusive (PUT-if-absent, the protocol's
-  requirement for the log store) so two concurrent writers cannot both
-  win a version — the loser raises ``DeltaConcurrentCommitError`` and
-  its staged files are orphans (vacuum-able), never corruption;
+- data files land and commits publish through ``staging.py`` (the
+  one place both native writers stage, name and commit files): a
+  commit is put-if-absent, so two concurrent writers cannot both win a
+  version — the loser raises ``DeltaConcurrentCommitError`` and its
+  landed files are orphans (vacuum-able), never corruption;
 - every ``add`` carries ``stats`` JSON (numRecords / minValues /
   maxValues / nullCount) read from the parquet FOOTERS pyarrow already
   has open — so tables written here are file-skippable from day one;
@@ -34,7 +35,7 @@ artifact JSON; this module is the artifact-WRITING half an engine
 needs once it owns the table format end to end.
 
 Scale notes (100 TB posture): data never round-trips the driver — the
-staging write is a plain distributed ``df.write.parquet``; stats come
+staged write is one distributed ``df.write.parquet``; stats come
 from footer reads (O(#files) random reads of ~KB footers, the same
 cost every Delta writer pays); DV encode is distributed with the
 driver seeing only encoded blobs; MERGE's touched-file discovery is a
@@ -47,7 +48,6 @@ import datetime as _dt
 import hashlib
 import json
 import os
-import shutil
 import time
 import uuid as _uuid
 from decimal import Decimal
@@ -58,7 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import lakeformats as LF
-from . import roaring
+from . import roaring, staging
 
 __all__ = [
     "DeltaConcurrentCommitError",
@@ -95,8 +95,6 @@ _PATH_SAFE = set(
     "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789-_. "
 )
 
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-
 
 def _now_ms() -> int:
     return int(time.time() * 1000)
@@ -120,26 +118,21 @@ def _table_version(table_path: str) -> int | None:
 
 
 def _commit(table_path: str, version: int, actions: list[dict]) -> None:
-    """PUT-if-absent commit: the JSON file is staged then HARD-LINKED
-    to its final name — ``link`` fails with EEXIST when another writer
-    already owns the version, which is the protocol's required
-    put-if-absent primitive on a POSIX filesystem."""
+    """Publish ``actions`` as commit ``version``, put-if-absent (the
+    protocol's log-store requirement)."""
     log = Path(table_path) / "_delta_log"
     log.mkdir(parents=True, exist_ok=True)
-    final = log / f"{version:020d}.json"
-    tmp = log / f".{version:020d}.json.tmp-{os.getpid()}-{id(actions)}"
-    tmp.write_text(
-        "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
-    )
     try:
-        os.link(tmp, final)
+        staging.put_if_absent(
+            log / f"{version:020d}.json",
+            "\n".join(json.dumps(a, separators=(",", ":")) for a in actions)
+            + "\n",
+        )
     except FileExistsError:
         raise DeltaConcurrentCommitError(
             f"version {version} of {table_path} was committed concurrently "
             "— re-read the snapshot and retry"
         ) from None
-    finally:
-        tmp.unlink(missing_ok=True)
 
 
 def _strip_field_metadata(node) -> None:
@@ -267,26 +260,8 @@ def last_txn_version(table_path: str, app_id: str) -> int | None:
 
 
 # ------------------------------------------------------------------
-# staging write + footer stats
+# staged write + footer stats
 # ------------------------------------------------------------------
-
-
-def _unescape_hive(s: str) -> str:
-    """Spark's ``escapePathName`` inverse: %XX char escapes."""
-    out: list[str] = []
-    i = 0
-    while i < len(s):
-        c = s[i]
-        if c == "%" and i + 3 <= len(s):
-            try:
-                out.append(chr(int(s[i + 1 : i + 3], 16)))
-                i += 3
-                continue
-            except ValueError:
-                pass
-        out.append(c)
-        i += 1
-    return "".join(out)
 
 
 def _stat_json_value(v):
@@ -447,15 +422,13 @@ def _stage_and_collect(
     colocate: bool,
     sort_within: list | None = None,
 ) -> tuple[list[dict], int]:
-    """Spark-write ``df`` into a staging dir, move the parquet files to
-    their final names under the table root, and return (add actions,
-    total rows).  ``colocate`` repartitions by the partition columns so
-    every partition value lands in exactly ONE task → one file per
-    value per ``max_records_per_file`` window (deterministic layout,
-    the property the audit oracles count on).  A caller that already
-    partitioned its DataFrame passes colocate=False and keeps its own
-    layout."""
-    stage = Path(table_path) / f"_staging-{os.getpid()}-{version}-{_uuid.uuid4().hex[:8]}"
+    """Land ``df`` as data files under the table root and return (add
+    actions, total rows).  ``colocate`` repartitions by the partition
+    columns so every partition value lands in exactly ONE task → one
+    file per value per ``max_records_per_file`` window (deterministic
+    layout, the property the audit oracles count on).  A caller that
+    already partitioned its DataFrame passes colocate=False and keeps
+    its own layout."""
     out = df
     sort_cols = [
         c if not isinstance(c, str) else F.col(c) for c in (sort_within or [])
@@ -479,77 +452,35 @@ def _stage_and_collect(
         out = out.sortWithinPartitions(
             *[F.col(c) for c in partition_by], *sort_cols
         )
-    w = out.write.mode("overwrite")
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", str(max_records_per_file))
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    # Spark's default INT96 timestamps are a deprecated parquet type
-    # with no trustworthy footer statistics — written tables would lose
-    # timestamp file-skipping entirely; Delta writes TIMESTAMP_MICROS
-    ts_key = "spark.sql.parquet.outputTimestampType"
-    prev_ts = spark.conf.get(ts_key, None)
-    spark.conf.set(ts_key, "TIMESTAMP_MICROS")
-    try:
-        w.parquet(str(stage))
-    except BaseException:
-        # a failed distributed write must not orphan the staging dir;
-        # hard kills are covered by vacuum's _staging-* sweep, this
-        # covers the in-process exception path
-        shutil.rmtree(stage, ignore_errors=True)
-        raise
-    finally:
-        if prev_ts is None:
-            spark.conf.unset(ts_key)
-        else:
-            spark.conf.set(ts_key, prev_ts)
-
     data_cols = [c for c in df.columns if c not in partition_by]
     adds: list[dict] = []
     total_rows = 0
-    staged: list[tuple[str, Path]] = []  # (rel partition dir, file)
-    for p in sorted(stage.rglob("*.parquet")):
-        rel_dir = p.parent.relative_to(stage).as_posix()
-        staged.append(("" if rel_dir == "." else rel_dir, p))
-    staged.sort(key=lambda t: (t[0], t[1].name))
-    for idx, (rel_dir, p) in enumerate(staged):
-        pv: dict[str, str | None] = {}
-        if rel_dir:
-            for seg in rel_dir.split("/"):
-                col, _, raw = seg.partition("=")
-                pv[col] = None if raw == _HIVE_NULL else _unescape_hive(raw)
-        missing = [c for c in partition_by if c not in pv]
+    for f in staging.land_parquet(
+        spark,
+        out,
+        table_path,
+        prefix="part",
+        version=version,
+        partition_by=partition_by,
+        max_records_per_file=max_records_per_file,
+    ):
+        missing = [c for c in partition_by if c not in f.partition]
         if missing:
             raise LF.LakeFormatError(
-                f"staged file {p} lacks partition dirs for {missing}"
+                f"landed file {f.path} lacks partition dirs for {missing}"
             )
-        stats, nrows = _footer_stats(str(p), data_cols)
+        stats, nrows = _footer_stats(f.abspath, data_cols)
         total_rows += nrows
-        # salt with writer identity + wall clock on top of the content
-        # head: two writers racing from the same parent compute the
-        # same (version, idx), and a shared 64 KB head would let the
-        # CAS loser overwrite the winner's data bytes
-        with open(p, "rb") as f:
-            head = f.read(1 << 16)
-        tag = hashlib.sha256(
-            head + f"{version}:{idx}:{os.getpid()}:{time.time_ns()}".encode()
-        ).hexdigest()[:8]
-        fname = f"part-{version:05d}-{idx:04d}-{tag}.parquet"
-        rel_path = f"{rel_dir}/{fname}" if rel_dir else fname
-        dest = Path(table_path) / rel_path
-        dest.parent.mkdir(parents=True, exist_ok=True)
-        os.replace(p, dest)
         adds.append(
             {
-                "path": rel_path,
-                "partitionValues": pv,
-                "size": dest.stat().st_size,
-                "modificationTime": dest.stat().st_mtime_ns // 1_000_000,
+                "path": f.path,
+                "partitionValues": f.partition,
+                "size": f.size,
+                "modificationTime": f.mtime_ms,
                 "dataChange": True,
                 "stats": stats,
             }
         )
-    shutil.rmtree(stage, ignore_errors=True)
     return adds, total_rows
 
 
@@ -708,74 +639,29 @@ def _stage_cdc(
     under ``_change_data/`` carrying the table's data columns plus a
     physical ``_change_type`` string; partition values live in the
     ``cdc`` action, not the file) and return the cdc actions.  The
-    write is the same distributed staging pass as the data files —
+    write is the same distributed staged write as the data files —
     change rows are data-scale, never driver-side."""
-    stage = Path(table_path) / f"_staging-cdc-{os.getpid()}-{version}-{_uuid.uuid4().hex[:8]}"
-    out = rows
     if partition_by:
-        out = out.repartition(*[F.col(c) for c in partition_by])
-    w = out.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    ts_key = "spark.sql.parquet.outputTimestampType"
-    prev_ts = spark.conf.get(ts_key, None)
-    spark.conf.set(ts_key, "TIMESTAMP_MICROS")
-    try:
-        w.parquet(str(stage))
-    except BaseException:
-        # a failed distributed write must not orphan the staging dir;
-        # hard kills are covered by vacuum's _staging-* sweep, this
-        # covers the in-process exception path
-        shutil.rmtree(stage, ignore_errors=True)
-        raise
-    finally:
-        if prev_ts is None:
-            spark.conf.unset(ts_key)
-        else:
-            spark.conf.set(ts_key, prev_ts)
-    actions: list[dict] = []
-    staged = sorted(
-        (
-            (
-                ""
-                if p.parent == stage
-                else p.parent.relative_to(stage).as_posix(),
-                p,
-            )
-            for p in stage.rglob("*.parquet")
-        ),
-        key=lambda t: (t[0], t[1].name),
-    )
-    for idx, (rel_dir, p) in enumerate(staged):
-        pv: dict[str, str | None] = {}
-        if rel_dir:
-            for seg in rel_dir.split("/"):
-                col, _, raw = seg.partition("=")
-                pv[col] = None if raw == _HIVE_NULL else _unescape_hive(raw)
-        tag = hashlib.sha256(
-            f"cdc:{version}:{idx}:{os.getpid()}:{time.time_ns()}".encode()
-        ).hexdigest()[:8]
-        fname = f"cdc-{version:05d}-{idx:04d}-{tag}.parquet"
-        rel_path = (
-            f"_change_data/{rel_dir}/{fname}"
-            if rel_dir
-            else f"_change_data/{fname}"
-        )
-        dest = Path(table_path) / rel_path
-        dest.parent.mkdir(parents=True, exist_ok=True)
-        os.replace(p, dest)
-        actions.append(
-            {
-                "cdc": {
-                    "path": rel_path,
-                    "partitionValues": pv,
-                    "size": dest.stat().st_size,
-                    "dataChange": False,
-                }
+        rows = rows.repartition(*[F.col(c) for c in partition_by])
+    return [
+        {
+            "cdc": {
+                "path": f.path,
+                "partitionValues": f.partition,
+                "size": f.size,
+                "dataChange": False,
             }
+        }
+        for f in staging.land_parquet(
+            spark,
+            rows,
+            table_path,
+            prefix="cdc",
+            version=version,
+            subdir="_change_data",
+            partition_by=partition_by,
         )
-    shutil.rmtree(stage, ignore_errors=True)
-    return actions
+    ]
 
 
 def _validate_partition_types(schema: T.StructType, partition_by: list[str]):
@@ -939,6 +825,10 @@ def write_delta(
         )
         schema_json = schema.jsonValue()
         for fj in schema_json.get("fields", []):
+            # a created table's columns are nullable, as Delta's own
+            # DataFrame writers store them: the table's rows read back
+            # nullable, and must overwrite the table they came from
+            fj["nullable"] = True
             if generated and fj["name"] in generated:
                 fj.setdefault("metadata", {})
                 fj["metadata"]["delta.generationExpression"] = generated[
@@ -1425,7 +1315,7 @@ def delete_delta(
         audit["files_rewritten_dv"] += 1
 
     # commit at snapshot_version + 1, NOT a re-read of latest: the
-    # hard-link CAS only detects a concurrent commit if we target the
+    # put-if-absent CAS only detects a concurrent commit if we target the
     # version our plan was derived from (a re-read would let a delete
     # silently re-add a file another writer had just compacted)
     version = snap["version"] + 1
@@ -1576,9 +1466,9 @@ def merge_delta(
 
         version = snap["version"] + 1
         # constraints + generated-column checks in ONE pass BEFORE any
-        # staging — _stage_cdc os.replaces change-data files into
-        # _change_data/ with final names, so a post-staging refusal
-        # would leak a full distributed CDC write per refused MERGE
+        # staging — _stage_cdc lands change-data files in _change_data/
+        # under final names, so a post-staging refusal would leak a
+        # full distributed CDC write per refused MERGE
         _enforce_write_checks(
             new_rows, snap["configuration"], _generation_exprs(schema), "MERGE"
         )
@@ -1836,8 +1726,9 @@ def convert_to_delta(
     _validate_partition_types(schema, partition_by)
     root = Path(directory)
     log = root / "_delta_log"
+    # hidden entries are a crashed writer's put-if-absent temp files
     if log.exists() and any(
-        not p.name.endswith(".tmp") for p in log.iterdir()
+        not p.name.startswith(".") for p in log.iterdir()
     ):
         raise LF.LakeFormatError(
             f"{log} already contains Delta log artifacts — refusing to "
@@ -1850,23 +1741,19 @@ def convert_to_delta(
         rel = p.relative_to(root).as_posix()
         if rel.startswith(("_", ".")):
             continue
-        pv: dict[str, str | None] = {}
-        for seg in rel.split("/")[:-1]:
-            col, eq, raw = seg.partition("=")
-            if not eq:
-                continue
-            if col not in partition_by:
-                # silently cataloging a=1/b=2 files under partition_by
-                # =['a'] would make column b read NULL everywhere — the
-                # directory is partitioned DEEPER than declared: gate,
-                # never null-fill
-                raise LF.LakeFormatError(
-                    f"{rel} carries partition directory {seg!r} for a "
-                    f"column not in partition_by={partition_by} — the "
-                    "directory layout is partitioned deeper than "
-                    "declared; list every col=value level"
-                )
-            pv[col] = None if raw == _HIVE_NULL else _unescape_hive(raw)
+        pv = staging.hive_partition(p.parent.relative_to(root).as_posix())
+        extra = [c for c in pv if c not in partition_by]
+        if extra:
+            # silently cataloging a=1/b=2 files under partition_by
+            # =['a'] would make column b read NULL everywhere — the
+            # directory is partitioned DEEPER than declared: gate,
+            # never null-fill
+            raise LF.LakeFormatError(
+                f"{rel} carries partition directories for {extra}, "
+                f"columns not in partition_by={partition_by} — the "
+                "directory layout is partitioned deeper than "
+                "declared; list every col=value level"
+            )
         missing = [c for c in partition_by if c not in pv]
         if missing:
             raise LF.LakeFormatError(
@@ -1932,8 +1819,8 @@ def vacuum_delta(
     month-old file tombstoned by OPTIMIZE seconds ago stays protected
     for the full window (mtime alone would delete it immediately,
     breaking readers pinned on the pre-OPTIMIZE snapshot); mtime
-    covers untracked files.  Also sweeps orphaned
-    ``_staging-*`` dirs past the horizon.  Underscore/dot-prefixed
+    covers untracked files.  Also sweeps orphaned staging dirs past
+    the horizon (``staging.sweep_staging``).  Underscore/dot-prefixed
     entries (``_delta_log``, ``_change_data``, audit markers, hidden
     files) are never touched, matching the production command's
     hidden-file rule.  DESTRUCTIVE by contract: time travel to
@@ -2024,10 +1911,7 @@ def vacuum_delta(
         deleted_bytes += p.stat().st_size
         if not dry_run:
             p.unlink()
-    for d in sorted(root.glob("_staging*")):
-        if d.is_dir() and d.stat().st_mtime_ns // 1_000_000 < horizon:
-            if not dry_run:
-                shutil.rmtree(d, ignore_errors=True)
+    staging.sweep_staging(table_path, horizon, dry_run)
     if not dry_run:
         # prune now-empty partition directories (cosmetic, like the
         # production command)

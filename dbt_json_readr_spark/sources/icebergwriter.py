@@ -16,7 +16,10 @@ lean on).
 Scale posture mirrors the Delta writer: data moves in ONE distributed
 ``df.write.parquet``; the driver authors O(#files) metadata rows and
 reads only parquet FOOTERS for the entry bounds — so tables written
-here are manifest- and file-prunable from the first snapshot.
+here are manifest- and file-prunable from the first snapshot.  Data
+and delete files land, and metadata versions commit put-if-absent,
+through ``staging.py``, the one place both native writers stage, name
+and commit files.
 
 Identity partitioning only (the overwhelmingly common layout; bucket/
 truncate WRITE support would need the transform applied at write
@@ -36,10 +39,8 @@ import hashlib
 import json
 import os
 import re
-import shutil
 import struct
 import time
-import uuid as _uuid_mod
 from decimal import Decimal
 from pathlib import Path
 
@@ -48,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import lakeformats as LF
+from . import staging
 from .deltawriter import footer_column_stats
 
 __all__ = [
@@ -482,7 +484,8 @@ def _mlist_data_row(
     part_summaries: list | None,
 ) -> dict:
     """A manifest-list row for a freshly written DATA manifest —
-    shared by the append path and the Delta export."""
+    shared by the append path, the Delta export and (with content
+    set to 1) the delete manifests."""
     return {
         "manifest_path": f"metadata/{m_name}",
         "manifest_length": (meta_dir / m_name).stat().st_size,
@@ -533,22 +536,17 @@ def _metadata_versions(meta_dir: Path) -> list[Path]:
 
 
 def _commit_metadata(meta_dir: Path, version: int, text: str) -> Path:
-    """PUT-if-absent metadata commit — same hard-link CAS as the Delta
-    writer: two writers racing from the same parent both target
-    ``v{version}``; exactly one link succeeds, the loser re-reads and
-    retries (the spec's atomic-swap requirement, expressed on POSIX)."""
+    """Publish ``v{version}.metadata.json`` put-if-absent: two writers
+    racing from the same parent both target it; exactly one wins, the
+    loser re-reads and retries (the spec's atomic-swap requirement)."""
     dest = meta_dir / f"v{version}.metadata.json"
-    tmp = meta_dir / f".{dest.name}.tmp-{os.getpid()}"
-    tmp.write_text(text)
     try:
-        os.link(tmp, dest)
+        staging.put_if_absent(dest, text)
     except FileExistsError:
         raise LF.LakeFormatError(
             f"metadata version v{version} was committed concurrently — "
             "re-read the table and retry"
         ) from None
-    finally:
-        tmp.unlink(missing_ok=True)
     return dest
 
 
@@ -913,8 +911,8 @@ def write_iceberg(
             # (replace semantics: a stale replace must collide, never
             # silently drop a concurrent commit) — and fail FAST here,
             # before the full-table rewrite burns a complete orphan
-            # copy the final os.link CAS would only then refuse; the
-            # hard-link CAS still guards the race window
+            # copy the final put-if-absent CAS would only then refuse;
+            # that CAS still guards the race window
             expected_v = int(
                 os.path.basename(expected_metadata_path).split(".")[0][1:]
             )
@@ -963,7 +961,6 @@ def write_iceberg(
 
     # ---- data: staged distributed write; partitionBy runs on a
     # DUPLICATED column so the real one stays IN the data files
-    stage = Path(table_dir) / f"_staging-{os.getpid()}-{seq}-{_uuid_mod.uuid4().hex[:8]}"
     out = df
     dup_cols = []
     for pf in part_fields:
@@ -986,35 +983,16 @@ def write_iceberg(
         dup_cols.append(dup)
     if part_fields and colocate:
         out = out.repartition(*[F.col(c) for c in dup_cols])
-    w = out.write.mode("overwrite")
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", str(max_records_per_file))
-    if dup_cols:
-        w = w.partitionBy(*dup_cols)
-    ts_key = "spark.sql.parquet.outputTimestampType"
-    prev_ts = spark.conf.get(ts_key, None)
-    spark.conf.set(ts_key, "TIMESTAMP_MICROS")
-    try:
-        w.parquet(str(stage))
-    except BaseException:
-        # a failed distributed write must not orphan the staging dir;
-        # hard kills are covered by expire's _staging-* sweep, this
-        # covers the in-process exception path
-        shutil.rmtree(stage, ignore_errors=True)
-        raise
-    finally:
-        if prev_ts is None:
-            spark.conf.unset(ts_key)
-        else:
-            spark.conf.set(ts_key, prev_ts)
-
-    from .deltawriter import _unescape_hive
-
-    staged: list[tuple[str, Path]] = []
-    for p in sorted(stage.rglob("*.parquet")):
-        rel_dir = p.parent.relative_to(stage).as_posix()
-        staged.append(("" if rel_dir == "." else rel_dir, p))
-    staged.sort(key=lambda t: (t[0], t[1].name))
+    landed = staging.land_parquet(
+        spark,
+        out,
+        table_dir,
+        prefix="f",
+        version=seq,
+        subdir="data",
+        partition_by=dup_cols,
+        max_records_per_file=max_records_per_file,
+    )
 
     entries: list[dict] = []
     rows_total = 0
@@ -1022,29 +1000,22 @@ def write_iceberg(
     summaries = [
         {"contains_null": False, "lo": None, "hi": None} for _ in partition_by
     ]
-    # required-column enforcement happens against the staged footers
+    # required-column enforcement happens against the landed footers
     # (not the incoming plan's nullability, which Spark reads force to
     # nullable) — see _merge_iceberg_schema.
     required_names = {f["name"] for f in schema_json["fields"] if f["required"]}
-    moved: list[Path] = []
-    for idx, (rel_dir, p) in enumerate(staged):
+    data_cols = [f.name for f in schema.fields]
+    for lf in landed:
         pv: dict[str, object] = {}
-        if rel_dir:
-            for seg in rel_dir.split("/"):
-                col, _, raw = seg.partition("=")
-                col = col[len("__part_"):]
-                if raw == "__HIVE_DEFAULT_PARTITION__":
-                    pv[col] = None
-                else:
-                    v = _unescape_hive(raw)
-                    pv[col] = int(v) if pf_by_name[col]["int_result"] else v
-        data_cols = [f.name for f in schema.fields]
-        nrows, bounds, nulls, value_counts = footer_column_stats(str(p), data_cols)
+        for dup, raw in lf.partition.items():
+            name = dup[len("__part_"):]
+            int_result = pf_by_name[name]["int_result"]
+            pv[name] = int(raw) if raw is not None and int_result else raw
+        nrows, bounds, nulls, value_counts = footer_column_stats(lf.abspath, data_cols)
         violated = {n: nulls.get(n, 0) for n in required_names if nulls.get(n, 0)}
         if violated:
-            for d in moved:
-                d.unlink(missing_ok=True)
-            shutil.rmtree(stage, ignore_errors=True)
+            for g in landed:
+                os.unlink(g.abspath)
             raise LF.LakeFormatGatedError(
                 f"required column(s) received null values {violated} — "
                 "committing would violate the table's required "
@@ -1061,20 +1032,6 @@ def write_iceberg(
             if blo is not None and bhi is not None:
                 lower[fid] = blo
                 upper[fid] = bhi
-        # salt with writer identity + wall clock: two writers racing
-        # from the same parent compute the same (seq, idx) — identical
-        # names would let the CAS LOSER overwrite the winner's
-        # already-committed bytes before its metadata commit fails
-        tag = hashlib.sha256(
-            f"{seq}:{idx}:{rel_dir}:{os.getpid()}:{time.time_ns()}".encode()
-        ).hexdigest()[:8]
-        rel_path = f"data/{rel_dir}/f-{seq:05d}-{idx:04d}-{tag}.parquet".replace(
-            "//", "/"
-        )
-        dest = Path(table_dir) / rel_path
-        dest.parent.mkdir(parents=True, exist_ok=True)
-        os.replace(p, dest)
-        moved.append(dest)
         # manifest-list partition field summaries over the TRANSFORMED
         # values, Appendix-D encoded in the transform's result type
         for i, pf in enumerate(part_fields):
@@ -1093,22 +1050,11 @@ def write_iceberg(
                 "sequence_number": seq,
                 "data_file": {
                     "content": 0,
-                    "file_path": rel_path,
+                    "file_path": lf.path,
                     "file_format": "PARQUET",
                     "record_count": nrows,
-                    "file_size_in_bytes": dest.stat().st_size,
-                    "partition": {
-                        pf["name"]: (
-                            None
-                            if pv.get(pf["name"]) is None
-                            else (
-                                int(pv[pf["name"]])
-                                if pf["int_result"]
-                                else str(pv[pf["name"]])
-                            )
-                        )
-                        for pf in part_fields
-                    },
+                    "file_size_in_bytes": lf.size,
+                    "partition": {pf["name"]: pv.get(pf["name"]) for pf in part_fields},
                     "value_counts": _kv(
                         {field_ids[n]: v for n, v in value_counts.items()}
                     ),
@@ -1121,13 +1067,10 @@ def write_iceberg(
                 },
             }
         )
-    shutil.rmtree(stage, ignore_errors=True)
 
     # ---- metadata: manifest avro, manifest list, vN.metadata.json
     meta_dir.mkdir(parents=True, exist_ok=True)
-    wsalt = hashlib.sha256(
-        f"{os.getpid()}:{time.time_ns()}".encode()
-    ).hexdigest()[:8]
+    wsalt = staging.salt()
     m_name = f"m-{snapshot_id:05d}-{wsalt}.avro"
     partition_avro_fields = [
         {"name": pf["name"], "avro": "long" if pf["int_result"] else "string"}
@@ -1225,6 +1168,38 @@ def write_iceberg(
 # ------------------------------------------------------------------
 
 
+def _land_delete_file(
+    spark: SparkSession,
+    rows: DataFrame,
+    sort_cols: list[str],
+    table_dir: str,
+    seq: int,
+    prefix: str,
+) -> tuple[staging.Landed, int] | None:
+    """``rows`` as ONE delete parquet under ``data/``, sorted on
+    ``sort_cols`` (coalesce(1) is bounded by delete cardinality, not
+    table size); returns (file, row count), or None when no row
+    matched."""
+    import pyarrow.parquet as pq
+
+    landed = staging.land_parquet(
+        spark,
+        rows.coalesce(1).sortWithinPartitions(*sort_cols),
+        table_dir,
+        prefix=prefix,
+        version=seq,
+        subdir="data",
+    )
+    if not landed:
+        return None
+    (f,) = landed
+    n = pq.ParquetFile(f.abspath).metadata.num_rows
+    if n == 0:
+        os.unlink(f.abspath)
+        return None
+    return f, n
+
+
 def delete_iceberg(
     spark: SparkSession, metadata_path: str, predicate: list
 ) -> dict:
@@ -1291,63 +1266,80 @@ def delete_iceberg(
 
     seq = int(meta.get("last-sequence-number", 0)) + 1
     snapshot_id = seq
-    wsalt = hashlib.sha256(
-        f"{os.getpid()}:{time.time_ns()}:del".encode()
-    ).hexdigest()[:8]
-    del_rel = f"data/delete-{seq:05d}-{wsalt}.parquet"
-    del_dest = Path(table_dir) / del_rel
-    del_dest.parent.mkdir(parents=True, exist_ok=True)
-    stage = Path(table_dir) / f"_staging-del-{os.getpid()}-{seq}-{_uuid_mod.uuid4().hex[:8]}"
-    # one sorted file: delete parquet must sort by (file, pos) per the
-    # spec's recommendation; coalesce(1) is bounded by delete
-    # cardinality, not table size
-    try:
-        matched.coalesce(1).sortWithinPartitions("file_path", "pos").write.mode(
-            "overwrite"
-        ).parquet(str(stage))
-    except BaseException:
-        # failed write → no orphaned staging dir
-        shutil.rmtree(stage, ignore_errors=True)
-        raise
-    parts = sorted(stage.rglob("*.parquet"))
-    if not parts:
-        shutil.rmtree(stage, ignore_errors=True)
+    # delete parquet sorts by (file, pos), the spec's recommendation
+    written = _land_delete_file(
+        spark, matched, ["file_path", "pos"], table_dir, seq, "delete"
+    )
+    if written is None:
         return {"positions_written": 0, "snapshot_id": None}
-    os.replace(parts[0], del_dest)
-    shutil.rmtree(stage, ignore_errors=True)
-
-    import pyarrow.parquet as pq
-
-    n_positions = pq.ParquetFile(str(del_dest)).metadata.num_rows
-    if n_positions == 0:
-        del_dest.unlink()
-        return {"positions_written": 0, "snapshot_id": None}
-
+    del_file, n_positions = written
     dest = _commit_delete_snapshot(
         metadata_path,
         info,
-        del_rel=del_rel,
-        n_rows=int(n_positions),
-        wsalt=wsalt,
+        del_file=del_file,
+        n_rows=n_positions,
         seq=seq,
         snapshot_id=snapshot_id,
         content=1,
     )
     return {
-        "positions_written": int(n_positions),
+        "positions_written": n_positions,
         "snapshot_id": snapshot_id,
         "metadata_path": dest,
-        "delete_file": del_rel,
+        "delete_file": del_file.path,
     }
+
+
+def _write_delete_manifest(
+    meta_dir: Path,
+    partition_avro_fields: list[dict],
+    del_file: staging.Landed,
+    n_rows: int,
+    *,
+    seq: int,
+    snapshot_id: int,
+    wsalt: str,
+    content: int,
+    equality_ids: list[int] | None = None,
+) -> dict:
+    """One delete file as its own delete manifest (position content=1 /
+    equality content=2); returns the manifest-list row for it."""
+    m_name = f"dm-{snapshot_id:05d}-{wsalt}.avro"
+    LF.write_avro_records(
+        str(meta_dir / m_name),
+        _manifest_schema(partition_avro_fields),
+        [
+            {
+                "status": 1,
+                "snapshot_id": snapshot_id,
+                "sequence_number": seq,
+                "data_file": {
+                    "content": content,
+                    "file_path": del_file.path,
+                    "file_format": "PARQUET",
+                    "record_count": n_rows,
+                    "file_size_in_bytes": del_file.size,
+                    "partition": {f["name"]: None for f in partition_avro_fields},
+                    "value_counts": None,
+                    "null_value_counts": None,
+                    "lower_bounds": None,
+                    "upper_bounds": None,
+                    "equality_ids": equality_ids,
+                },
+            }
+        ],
+    )
+    row = _mlist_data_row(m_name, meta_dir, seq, snapshot_id, 1, n_rows, None)
+    row["content"] = 1
+    return row
 
 
 def _commit_delete_snapshot(
     metadata_path: str,
     info: dict,
     *,
-    del_rel: str,
+    del_file: staging.Landed,
     n_rows: int,
-    wsalt: str,
     seq: int,
     snapshot_id: int,
     content: int,
@@ -1361,7 +1353,7 @@ def _commit_delete_snapshot(
     meta = info["metadata"]
     table_dir = os.path.dirname(os.path.dirname(os.path.abspath(metadata_path)))
     meta_dir = Path(table_dir) / "metadata"
-    del_dest = Path(table_dir) / del_rel
+    wsalt = staging.salt()
     spec_fields = info["partition_spec_fields"]
     partition_avro_fields = []
     schema_json = info["schema_json"]
@@ -1377,32 +1369,6 @@ def _commit_delete_snapshot(
         partition_avro_fields.append(
             {"name": sf["name"], "avro": "long" if t in ("int", "long") else "string"}
         )
-    m_name = f"dm-{snapshot_id:05d}-{wsalt}.avro"
-    LF.write_avro_records(
-        str(meta_dir / m_name),
-        _manifest_schema(partition_avro_fields),
-        [
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "sequence_number": seq,
-                "data_file": {
-                    "content": content,
-                    "file_path": del_rel,
-                    "file_format": "PARQUET",
-                    "record_count": n_rows,
-                    "file_size_in_bytes": del_dest.stat().st_size,
-                    "partition": {f["name"]: None for f in partition_avro_fields},
-                    "value_counts": None,
-                    "null_value_counts": None,
-                    "lower_bounds": None,
-                    "upper_bounds": None,
-                    "equality_ids": equality_ids,
-                },
-            }
-        ],
-    )
-
     parent = meta.get("current-snapshot-id")
     snaps = {s["snapshot-id"]: s for s in meta["snapshots"]}
     prev_manifests = LF._read_avro_records(
@@ -1410,22 +1376,17 @@ def _commit_delete_snapshot(
     )
     mlist_rows = [_normalize_mlist_row(r) for r in prev_manifests]
     mlist_rows.append(
-        {
-            "manifest_path": f"metadata/{m_name}",
-            "manifest_length": (meta_dir / m_name).stat().st_size,
-            "partition_spec_id": 0,
-            "content": 1,
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": 1,
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": n_rows,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-            "partitions": None,
-        }
+        _write_delete_manifest(
+            meta_dir,
+            partition_avro_fields,
+            del_file,
+            n_rows,
+            seq=seq,
+            snapshot_id=snapshot_id,
+            wsalt=wsalt,
+            content=content,
+            equality_ids=equality_ids,
+        )
     )
     snap_name = f"snap-{snapshot_id:05d}-{wsalt}.avro"
     LF.write_avro_records(str(meta_dir / snap_name), _MLIST_SCHEMA, mlist_rows)
@@ -1490,53 +1451,33 @@ def delete_iceberg_equality(metadata_path: str, keys: DataFrame) -> dict:
 
     seq = int(meta.get("last-sequence-number", 0)) + 1
     snapshot_id = seq
-    wsalt = hashlib.sha256(
-        f"{os.getpid()}:{time.time_ns()}:eqdel".encode()
-    ).hexdigest()[:8]
-    del_rel = f"data/eq-delete-{seq:05d}-{wsalt}.parquet"
-    del_dest = Path(table_dir) / del_rel
-    del_dest.parent.mkdir(parents=True, exist_ok=True)
-    stage = Path(table_dir) / f"_staging-eqdel-{os.getpid()}-{seq}-{_uuid_mod.uuid4().hex[:8]}"
-    # distinct + one sorted file: dedup keeps the delete idempotent and
-    # small; coalesce(1) is bounded by key cardinality, not table size
-    try:
-        keys.dropDuplicates(list(keys.columns)).coalesce(1).sortWithinPartitions(
-            *keys.columns
-        ).write.mode("overwrite").parquet(str(stage))
-    except BaseException:
-        # failed write → no orphaned staging dir
-        shutil.rmtree(stage, ignore_errors=True)
-        raise
-    parts = sorted(stage.rglob("*.parquet"))
-    if not parts:
-        shutil.rmtree(stage, ignore_errors=True)
+    # distinct keys keep the delete idempotent and small
+    written = _land_delete_file(
+        keys.sparkSession,
+        keys.dropDuplicates(list(keys.columns)),
+        list(keys.columns),
+        table_dir,
+        seq,
+        "eq-delete",
+    )
+    if written is None:
         return {"keys_written": 0, "snapshot_id": None}
-    os.replace(parts[0], del_dest)
-    shutil.rmtree(stage, ignore_errors=True)
-
-    import pyarrow.parquet as pq
-
-    n_keys = pq.ParquetFile(str(del_dest)).metadata.num_rows
-    if n_keys == 0:
-        del_dest.unlink()
-        return {"keys_written": 0, "snapshot_id": None}
-
+    del_file, n_keys = written
     dest = _commit_delete_snapshot(
         metadata_path,
         info,
-        del_rel=del_rel,
-        n_rows=int(n_keys),
-        wsalt=wsalt,
+        del_file=del_file,
+        n_rows=n_keys,
         seq=seq,
         snapshot_id=snapshot_id,
         content=2,
         equality_ids=[int(fid_by_name[c]) for c in keys.columns],
     )
     return {
-        "keys_written": int(n_keys),
+        "keys_written": n_keys,
         "snapshot_id": snapshot_id,
         "metadata_path": dest,
-        "delete_file": del_rel,
+        "delete_file": del_file.path,
     }
 
 
@@ -1590,19 +1531,11 @@ def expire_iceberg_snapshots(
         "files_deleted": 0,
         "metadata_path": metadata_path,
     }
-    # orphaned-staging sweep: a writer killed mid-stage
-    # (SIGKILL — the in-process exception path cleans after itself)
-    # leaves a `_staging-*` dir behind forever; expire is the
-    # Iceberg-side janitor, mirroring Delta vacuum's sweep.  Age-gated
-    # so a LIVE concurrent writer's staging dir is never touched.
-    swept = 0
-    stale_ns = time.time_ns() - staging_retention_ms * 1_000_000
-    for d in sorted(Path(table_dir).glob("_staging*")):
-        if d.is_dir() and d.stat().st_mtime_ns < stale_ns:
-            if not dry_run:
-                shutil.rmtree(d, ignore_errors=True)
-            swept += 1
-    audit["staging_dirs_swept"] = swept
+    # a writer killed mid-stage leaves its staging dir behind; expire
+    # is the Iceberg-side janitor, as vacuum is on the Delta side
+    audit["staging_dirs_swept"] = staging.sweep_staging(
+        table_dir, int(time.time() * 1000) - staging_retention_ms, dry_run
+    )
     if not drop:
         return audit
     keep_ids = {s["snapshot-id"] for s in keep}
@@ -1954,9 +1887,7 @@ def delta_to_iceberg(spark: SparkSession, table_path: str) -> dict:
         )
 
     meta_dir.mkdir(parents=True, exist_ok=True)
-    wsalt = hashlib.sha256(
-        f"{os.getpid()}:{time.time_ns()}:uniform".encode()
-    ).hexdigest()[:8]
+    wsalt = staging.salt()
     m_name = f"m-{snapshot_id:05d}-{wsalt}.avro"
     partition_avro_fields = [
         {
@@ -2013,69 +1944,28 @@ def delta_to_iceberg(spark: SparkSession, table_path: str) -> dict:
             F.col("__fp").startswith(prefix),
             F.expr(f"substring(__fp, {len(prefix) + 1})"),
         ).otherwise(F.concat(F.lit("file://"), F.col("__fp")))
-        del_rel = f"data/delete-{seq:05d}-{wsalt}.parquet"
-        del_dest = Path(table_dir) / del_rel
-        del_dest.parent.mkdir(parents=True, exist_ok=True)
-        stage = Path(table_dir) / f"_staging-dvdel-{os.getpid()}-{seq}-{_uuid_mod.uuid4().hex[:8]}"
-        try:
-            pos_df.select(
-                rel_fp.alias("file_path"), F.col("__pos").alias("pos")
-            ).coalesce(1).sortWithinPartitions("file_path", "pos").write.mode(
-                "overwrite"
-            ).parquet(str(stage))
-        except BaseException:
-            # failed write → no orphaned staging dir
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        part = sorted(stage.rglob("*.parquet"))[0]
-        os.replace(part, del_dest)
-        shutil.rmtree(stage, ignore_errors=True)
-        import pyarrow.parquet as _pq
-
-        n_dv_positions = int(_pq.ParquetFile(str(del_dest)).metadata.num_rows)
-        dm_name = f"dm-{snapshot_id:05d}-{wsalt}.avro"
-        LF.write_avro_records(
-            str(meta_dir / dm_name),
-            _manifest_schema(partition_avro_fields),
-            [
-                {
-                    "status": 1,
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": seq,
-                    "data_file": {
-                        "content": 1,
-                        "file_path": del_rel,
-                        "file_format": "PARQUET",
-                        "record_count": n_dv_positions,
-                        "file_size_in_bytes": del_dest.stat().st_size,
-                        "partition": {c: None for c in partition_by},
-                        "value_counts": None,
-                        "null_value_counts": None,
-                        "lower_bounds": None,
-                        "upper_bounds": None,
-                        "equality_ids": None,
-                    },
-                }
-            ],
+        written = _land_delete_file(
+            spark,
+            pos_df.select(rel_fp.alias("file_path"), F.col("__pos").alias("pos")),
+            ["file_path", "pos"],
+            table_dir,
+            seq,
+            "delete",
         )
-        mlist_rows.append(
-            {
-                "manifest_path": f"metadata/{dm_name}",
-                "manifest_length": (meta_dir / dm_name).stat().st_size,
-                "partition_spec_id": 0,
-                "content": 1,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": 1,
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": n_dv_positions,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": None,
-            }
-        )
+        if written is not None:
+            del_file, n_dv_positions = written
+            mlist_rows.append(
+                _write_delete_manifest(
+                    meta_dir,
+                    partition_avro_fields,
+                    del_file,
+                    n_dv_positions,
+                    seq=seq,
+                    snapshot_id=snapshot_id,
+                    wsalt=wsalt,
+                    content=1,
+                )
+            )
     snap_name = f"snap-{snapshot_id:05d}-{wsalt}.avro"
     LF.write_avro_records(
         str(meta_dir / snap_name), _MLIST_SCHEMA, mlist_rows

@@ -11,7 +11,7 @@ key (``dbt_manifest_lake``), tests, and a bench row.
 Generation is fully deterministic (index-driven, no RNG, no clock), so
 the Spark reader and the stdlib oracle can both (re)generate it on
 demand — a fresh checkout needs no committed blob.  Writes are atomic
-(tmp dir + ``os.replace``) so concurrent first-callers cannot observe a
+(``staging.publish_dir``) so concurrent first-callers cannot observe a
 half-written lake.
 
 Per-run variation models real fleets:
@@ -31,10 +31,9 @@ from __future__ import annotations
 
 import hashlib
 import json
-import os
-import shutil
-import tempfile
 from pathlib import Path
+
+from . import staging
 
 LAKE_DIR = Path(__file__).resolve().parents[2] / "tests" / "fixtures" / "dbt" / "lake"
 LAKE_VERSION = "1"
@@ -112,33 +111,18 @@ def _run_manifest(i: int) -> dict:
 
 def ensure_lake(root: Path | str = LAKE_DIR, n_runs: int = N_RUNS) -> Path:
     """Idempotently materialize the lake; cheap (one stat) when present."""
-    root = Path(root)
-    marker = root / "_LAKE_VERSION"
-    want = f"{LAKE_VERSION}:{n_runs}"
-    try:
-        if marker.read_text() == want:
-            return root
-    except OSError:
-        pass
-    tmp = Path(tempfile.mkdtemp(prefix=".lake-build-", dir=str(root.parent)))
-    try:
+
+    def build(tmp: Path) -> None:
         for i in range(n_runs):
             d = tmp / f"run_{i:05d}"
             d.mkdir()
             (d / "manifest.json").write_text(
                 json.dumps(_run_manifest(i), sort_keys=True, separators=(",", ":"))
             )
-        (tmp / "_LAKE_VERSION").write_text(want)
-        if root.exists():
-            old = root.with_name(root.name + f".old-{os.getpid()}")
-            os.replace(root, old)
-            os.replace(tmp, root)
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.replace(tmp, root)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return root
+
+    return staging.publish_dir(
+        Path(root), "_LAKE_VERSION", f"{LAKE_VERSION}:{n_runs}", build
+    )
 
 
 def lake_rollup_rows(root: Path | str = LAKE_DIR) -> list[tuple]:

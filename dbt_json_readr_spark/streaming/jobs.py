@@ -1173,12 +1173,8 @@ def cdc_merge_writer(table_path: str) -> "Callable[[DataFrame, int], None]":
                 .alias("last_value"),
             )
             b = cur.join(b.select("user_id"), "user_id", "left_anti").unionByName(b)
-        # merge_schema: the carried rows come back from a parquet scan
-        # as nullable, so the first merge relaxes the NOT NULL count
-        # column the first batch created (same types, nothing else)
         DW.write_delta(
-            spark, b, table_path, mode="overwrite", txn=(app, batch_id),
-            merge_schema=True,
+            spark, b, table_path, mode="overwrite", txn=(app, batch_id)
         )
 
     return _merge

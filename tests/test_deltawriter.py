@@ -184,6 +184,30 @@ def test_concurrent_commit_cas(spark, tmp_path, customers):
         DW._commit(tbl, 1, actions)
 
 
+def test_created_table_overwrites_with_its_own_rows(spark, tmp_path):
+    """A table created from a frame with a NOT NULL column stores it
+    nullable, as Delta's own DataFrame writers do, so overwriting the
+    table with its read-back rows needs no schema evolution."""
+    from pyspark.sql import types as TT
+
+    tbl = str(tmp_path / "t")
+    schema = TT.StructType(
+        [
+            TT.StructField("user_id", TT.LongType(), True),
+            TT.StructField("count", TT.LongType(), False),
+        ]
+    )
+    DW.write_delta(spark, spark.createDataFrame([(1, 2), (3, 4)], schema), tbl)
+    assert LF.delta_snapshot(tbl)["schema"]["count"].nullable
+    back = LF.read_delta_snapshot(spark, tbl)
+    res = DW.write_delta(
+        spark, back.withColumn("count", F.col("count") + 1), tbl, mode="overwrite"
+    )
+    assert res["version"] == 1
+    got = LF.read_delta_snapshot(spark, tbl).collect()
+    assert sorted((r.user_id, r["count"]) for r in got) == [(1, 3), (3, 5)]
+
+
 def test_null_partition_round_trip(spark, tmp_path):
     tbl = str(tmp_path / "t")
     df = spark.createDataFrame(
@@ -844,6 +868,28 @@ def test_restore_to_vacuumed_version_gates(spark, tmp_path):
     assert LF.read_delta_snapshot(spark, tbl).count() == 2
 
 
+def test_convert_ignores_a_crashed_commit_temp_file(tmp_path):
+    """A writer killed between writing its commit's temp file and
+    linking it leaves only that hidden file in ``_delta_log``; the
+    directory holds no commit, so converting it is allowed."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    raw = tmp_path / "raw"
+    (raw / "_delta_log").mkdir(parents=True)
+    pq.write_table(pa.table({"id": pa.array([1, 2], pa.int64())}), raw / "a.parquet")
+    (raw / "_delta_log" / ".00000000000000000000.json.tmp-1-deadbeef").write_text("{}")
+    res = DW.convert_to_delta(
+        str(raw), T.StructType([T.StructField("id", T.LongType())])
+    )
+    assert res == {"version": 0, "files_added": 1, "rows_cataloged": 2}
+    # a real commit still refuses
+    with pytest.raises(LF.LakeFormatError, match="already contains"):
+        DW.convert_to_delta(
+            str(raw), T.StructType([T.StructField("id", T.LongType())])
+        )
+
+
 def test_convert_deeper_partition_layout_gates(spark, tmp_path):
     """convert_to_delta on a directory partitioned DEEPER than
     partition_by declares must gate, not catalog files whose
@@ -1469,6 +1515,50 @@ def test_failed_write_leaves_no_staging_dir(spark, tmp_path, customers):
     assert list(Path(tbl).glob("_staging*")) == []
     # the table is untouched: still one commit, 5 rows
     assert LF.read_delta_snapshot(spark, tbl).count() == 5
+
+
+def test_concurrent_staged_writes_all_store_int64_micros(spark, tmp_path):
+    """Writer threads outnumbering the cores stage timestamp frames
+    through one session at once: every landed file holds INT64 micros
+    (one write's restore of the session-wide timestamp setting must not
+    turn another's files INT96), and the caller's setting comes back."""
+    import datetime as dt
+    import os
+    import threading
+
+    import pyarrow.parquet as pq
+
+    from dbt_json_readr_spark.sources import staging
+
+    key = "spark.sql.parquet.outputTimestampType"
+    before = spark.conf.get(key, None)
+    df = spark.createDataFrame(
+        [(i, dt.datetime(2024, 1, 1, 0, 0, i)) for i in range(8)],
+        "id long, ts timestamp",
+    ).coalesce(1)
+    types, errs = [], []
+
+    def writer(t: int) -> None:
+        try:
+            for i in range(3):
+                for f in staging.land_parquet(
+                    spark, df, str(tmp_path / f"t{t}"), prefix="p", version=i
+                ):
+                    schema = pq.ParquetFile(f.abspath).schema
+                    types.append(schema.column(schema.names.index("ts")).physical_type)
+        except Exception as e:  # pragma: no cover - failure detail
+            errs.append(e)
+
+    n = (os.cpu_count() or 1) + 1
+    threads = [threading.Thread(target=writer, args=(t,)) for t in range(n)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=300)
+    assert not any(th.is_alive() for th in threads)
+    assert errs == []
+    assert types == ["INT64"] * (3 * n)
+    assert spark.conf.get(key, None) == before
 
 
 def test_delta_history_table_is_log_only(spark, monkeypatch):

@@ -343,6 +343,32 @@ def test_schema_evolution_append(spark, tmp_path):
     assert LF.read_iceberg_snapshot(spark, r3["metadata_path"]).count() == 5
 
 
+def test_equality_delete_on_timestamp_key_stores_int64_micros(spark, tmp_path):
+    """An equality delete keyed on a timestamp column lands its delete
+    file with INT64 micros, as the table's data files and the spec
+    have it (a plain Spark write would store INT96), and the read-back
+    drops exactly the keyed row."""
+    import pyarrow.parquet as pq
+
+    tbl = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(i, dt.datetime(2024, 1, 1, 0, 0, i)) for i in range(5)],
+        "id long, ts timestamp",
+    )
+    r1 = IW.write_iceberg(spark, df, tbl)
+    keys = df.filter(F.col("id") == 3).select("ts")
+    r2 = IW.delete_iceberg_equality(r1["metadata_path"], keys)
+    assert r2["keys_written"] == 1
+    files = [Path(tbl, r2["delete_file"]), *Path(tbl, "data").glob("f-*.parquet")]
+    assert len(files) > 1
+    for path in files:
+        schema = pq.ParquetFile(path).schema
+        col = schema.column(schema.names.index("ts"))
+        assert col.physical_type == "INT64", (path.name, col.physical_type)
+    back = LF.read_iceberg_snapshot(spark, r2["metadata_path"])
+    assert sorted(r["id"] for r in back.collect()) == [0, 1, 2, 4]
+
+
 def test_equality_delete_write(spark, tmp_path):
     """Equality deletes: distinct key tuples in a content=2 delete
     file, typed equality_ids, STRICT sequence scoping (a re-append of
