@@ -2,10 +2,12 @@
 
 Every primitive exists twice: a Spark ``Column`` builder (JVM-side,
 codegen-friendly — no Python UDFs) and a DuckDB SQL-text builder used by
-the oracles.  Both are anchored on md5, which is bit-identical
-everywhere, so every sketch (minhash, simhash, fingerprints, LSH bands)
-is reproducible across engines and across cluster topologies — a salted
-md5-derived 60-bit integer instead of engine-private hash functions.
+the oracles (the LSH band key has a third, plain-Python form, for a
+sketch collected to the driver).  All are anchored on md5, which is
+bit-identical everywhere, so every sketch (minhash, simhash,
+fingerprints, LSH bands) is reproducible across engines and across
+cluster topologies — a salted md5-derived 60-bit integer instead of
+engine-private hash functions.
 
 Scale note: md5 is ~3× slower than xxhash but still >1 GB/s/core
 JVM-side; determinism across engines is worth it for an auditable
@@ -13,6 +15,8 @@ dedup pipeline (reruns and backfills produce identical sketches).
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -129,6 +133,13 @@ def band_key_flat(lane_cols: list[Column], band: int) -> Column:
     per band), codegen-friendly (no array HOF)."""
     joined = F.concat_ws(",", *[c.cast("string") for c in lane_cols])
     return hash64(joined, f"band{band}")
+
+
+def band_key_of(lanes: list[int], band: int) -> int:
+    """``band_key_flat`` of one row's lane values, computed in Python
+    for a sketch already collected to the driver."""
+    joined = ",".join(map(str, lanes))
+    return int(hashlib.md5(f"band{band}:{joined}".encode()).hexdigest()[:15], 16)
 
 
 def sql_band_key(mh_expr: str, band: int, rows_per_band: int) -> str:

@@ -1,6 +1,6 @@
 """Deduplication operator family (SURVEY.md §2 C1-C5) for LLM-scale
-corpus curation, all expressed as DataFrame ops (no Python in the row
-path).
+corpus curation, expressed as DataFrame ops (no Python UDF in any
+plan); only the LSH tail below the broadcast bound runs on the driver.
 
 Scale design: every variant turns the O(n²) pair space into a
 bucket-local join —
@@ -21,10 +21,23 @@ with the intersect evaluated once per pair; ``jaccard`` and
 the candidate count and the per-doc set bytes and picks set-broadcast,
 candidate-broadcast or the narrow all-shuffle shape; ``set_overlap``
 runs the chosen shape.
+
+``minhash_lsh_pairs`` has a second shape in front of the gate.  While
+its cached per-doc sketch and its candidate pairs both fit the
+session's broadcast bound (``session.fits_broadcast``, the rule the
+lineage keys relax their graphs under), the sketch is collected and
+the band keys, bucket cap, cross-band pair dedup and jaccard verify
+run on the driver in one pass, returning a local relation.  The
+set-broadcast shape would collect the same sets to the driver to
+build its broadcast, so the driver holds nothing more; what it saves
+is the banding, pair-dedup and verify jobs, which at a few hundred
+candidate rows are nearly all scheduling.  Above the bound, or with
+the threshold at -1, the Spark shapes run.
 """
 
 from __future__ import annotations
 
+from itertools import combinations
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window as W
@@ -32,7 +45,7 @@ from pyspark.sql import functions as F
 
 from ..functions import hashing as H
 from ..functions import vectors as V
-from ..session import evict_cached, rotate_cached, spread
+from ..session import evict_cached, fits_broadcast, local_frame, observed, rotate_cached, spread
 
 DEFAULT_BUCKET_CAP = 2000
 # Per-doc candidate degree cap: the bucket cap bounds any ONE bucket,
@@ -368,6 +381,61 @@ def set_overlap(
     )
 
 
+def _lsh_in_memory(
+    per_doc: DataFrame, n_hashes: int, bands: int, threshold: float, bucket_cap: int
+) -> DataFrame | None:
+    """``minhash_lsh_pairs``' banding and verify over the cached sketch
+    ``per_doc``, collected to the driver, as a local relation; None when
+    the sketch or its candidates do not fit the broadcast bound.
+
+    One job sizes the sketch: a row per doc of ``n_hashes`` 8-byte
+    lanes plus 8 bytes per shingle.  Only when that fits is the sketch
+    collected.  The candidates are bounded before any pair is formed,
+    by Σ C(|bucket|, 2) over the kept buckets at 16 bytes a pair, so a
+    degenerate corpus falls back to the Spark shapes over the same
+    cached sketch.  The rows are the Spark shapes' bit for bit: the
+    same band keys (``band_key_of``), the same ``2 ≤ |bucket| ≤
+    bucket_cap`` filter (null ids dropped, as ``collect_list`` drops
+    them), (least, greatest) pairs deduped across bands, and the same
+    double division for the jaccard."""
+    spark = per_doc.sparkSession
+    if not fits_broadcast(spark, 0):  # threshold -1: no sizing job either
+        return None
+    # observed rather than aggregated: a global aggregate is a shuffle,
+    # and AQE runs its map stage as a job of its own
+    sized, size = observed(
+        per_doc, "sketch_footprint", F.count(F.lit(1)).alias("docs"),
+        F.coalesce(F.sum(F.size("sh")), F.lit(0)).alias("sh"),
+    )
+    sized.write.format("noop").mode("overwrite").save()
+    docs, shingles = size.get["docs"], size.get["sh"]
+    if not fits_broadcast(spark, 8 * (n_hashes * docs + shingles), docs):
+        return None
+    sketch = per_doc.toArrow()
+    ids = sketch.column("doc_id").to_pylist()
+    lanes = list(zip(*(sketch.column(f"mh{i}").to_pylist() for i in range(n_hashes))))
+    r = n_hashes // bands
+    buckets: dict[tuple[int, int], list] = {}
+    for doc, mh in zip(ids, lanes):
+        if doc is not None:
+            for b in range(bands):
+                buckets.setdefault((b, H.band_key_of(mh[b * r : (b + 1) * r], b)), []).append(doc)
+    kept = [m for m in buckets.values() if 2 <= len(m) <= bucket_cap]
+    if not fits_broadcast(spark, 16 * sum(len(m) * (len(m) - 1) // 2 for m in kept)):
+        return None
+    pairs = {(min(a, b), max(a, b)) for m in kept for a, b in combinations(m, 2)}
+    paired = {d for p in pairs for d in p}
+    sets = {d: set(sh) for d, sh in zip(ids, sketch.column("sh").to_pylist()) if d in paired}
+    out = []
+    for a, b in pairs:
+        inter = len(sets[a] & sets[b])
+        j = float(inter) / float(len(sets[a]) + len(sets[b]) - inter)
+        if j >= threshold:
+            out.append((a, b, j))
+    t = per_doc.schema["doc_id"].dataType.simpleString()
+    return local_frame(spark, out, f"doc_a {t} NOT NULL, doc_b {t} NOT NULL, jaccard double")
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     k: int = 5,
@@ -378,28 +446,39 @@ def minhash_lsh_pairs(
     broadcast_cand_cap: int = DEFAULT_BROADCAST_CAND_CAP,
 ) -> DataFrame:
     """Near-dup candidate pairs via minhash LSH, verified with exact
-    shingle jaccard.  rows/band = n_hashes//bands; P(candidate) ≈
-    1-(1-j^r)^b.  ``threshold`` must sit in that curve's high-recall
-    region or the verified output is an arbitrary sample of the sub-τ
-    candidate tail — plans/llm.py dedup_lsh_recall measures exactly
-    this, and re-anchored the default from 0.25 (1.6% recall) to 0.8.
+    shingle jaccard: (doc_a, doc_b, jaccard) with doc_a < doc_b and
+    jaccard ≥ ``threshold``.  rows/band = n_hashes//bands;
+    P(candidate) ≈ 1-(1-j^r)^b.  ``threshold`` must sit in that curve's
+    high-recall region or the verified output is an arbitrary sample of
+    the sub-τ candidate tail (plans/llm.py dedup_lsh_recall measures
+    exactly this).
 
-    Scale shape (ONE cached corpus pass, codegen'd, no fat buckets):
-    1. fused sketch pass — exploded shingle rows → flat 32-bit minhash
-       lanes (functions/hashing.py) → a single groupBy(doc_id)
-       computing the lane MINs AND collect_set(sh) together, persisted
-       (latest-wins rotation, ≤1 pinned frame) so the band stage and
-       the verify stage share one scan+agg.
-    2. band buckets collect ONLY doc_ids (≤ bucket_cap × 8 bytes per
-       bucket — a degenerate bucket buffers kilobytes, not the
-       shingle-array megabytes of a struct-collecting formulation),
-       pairs are deduped across bands BEFORE verification, persisted.
-    3. ``verify_gate`` counts the candidates and sizes the sets in one
-       job; ``set_overlap`` then runs the chosen shape (set broadcast,
-       candidate broadcast, or — over ``broadcast_cand_cap`` — the
-       narrow all-shuffle shape) and ``jaccard`` scores each pair."""
+    1. Fused sketch pass: exploded shingle rows → flat 32-bit minhash
+       lanes (functions/hashing.py) → one groupBy(doc_id) computing the
+       lane MINs and collect_set(sh) together, persisted in the
+       latest-wins ``minhash_sketch`` slot, which the other sketch
+       consumers of a session share.
+    2. The tail runs in one of two shapes.
+       - **Driver** (``_lsh_in_memory``), while the sketch and the
+         candidates fit the session's broadcast bound: the sketch is
+         collected and banded, capped, paired and verified in one
+         pass.  The result is a local relation, and the previous
+         call's ``minhash_cand`` cache is released.
+       - **Spark**, above the bound or with the threshold at -1: band
+         buckets collect only doc_ids (≤ bucket_cap × 8 bytes a
+         bucket), pairs are deduped across bands before verification
+         and persisted in ``minhash_cand``; ``verify_gate`` counts
+         them and sizes the sets in one job, ``set_overlap`` runs the
+         chosen shape (set broadcast, candidate broadcast, or over
+         ``broadcast_cand_cap`` the narrow all-shuffle shape) and
+         ``jaccard`` scores each pair.
+    Both shapes return the same rows."""
     rows = _shingle_rows(docs, k)
     per_doc = _per_doc_sketch(rows, n_hashes)
+    local = _lsh_in_memory(per_doc, n_hashes, bands, threshold, bucket_cap)
+    if local is not None:
+        rotate_cached("minhash_cand", [])
+        return local
     cand = _cand_from_mins(per_doc.drop("sh"), n_hashes, bands, bucket_cap).persist()
     rotate_cached("minhash_cand", [cand])
     shape = verify_gate(per_doc, cand, broadcast_cand_cap)

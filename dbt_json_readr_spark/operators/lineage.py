@@ -33,20 +33,21 @@ in two shapes:
     sides.  AQE would switch to a broadcast only after running those
     shuffles, a job each.  So the checkpoints also observe the row
     count and string bytes of the frame they hold (``_footprint``),
-    and the hint is applied only while that size ``_fits`` under the
-    session's ``spark.sql.autoBroadcastJoinThreshold``.  Above it, or
+    and the hint is applied only while that size fits under the
+    session's ``spark.sql.autoBroadcastJoinThreshold``
+    (``session.fits_broadcast``).  Above it, or
     with the threshold at -1, the join is left to the planner.
 - **In memory** (``critical_path_local``, ``pagerank_local``): pure
   functions over collected rows that repeat the Spark rounds exactly:
   the same caps, exits and integer arithmetic, and the same handling
   of ghost parents, non-node children, duplicate edges and duplicate
   node rows, so the two shapes agree on any graph, cyclic ones
-  included.  ``local_frame`` returns their rows as a local relation,
-  whose collect runs no job.
+  included.  ``session.local_frame`` returns their rows as a local
+  relation, whose collect runs no job.
 
 The critical path and PageRank keys pick the shape.  They materialize
 the graph once, with a checkpoint that observes its ``_footprint``.
-While that ``_fits`` the same bound, a broadcast of the graph would
+While that fits the same bound, a broadcast of the graph would
 have collected it to the driver anyway, so they collect it and relax
 it in memory: at dbt scale a round is mostly job overhead, and the
 in-memory loop runs no job at all.  Above the bound, or with the
@@ -59,16 +60,10 @@ from __future__ import annotations
 from collections import Counter
 from typing import Iterable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
-from ..session import observed, release_iter_handle
-
-
-# bytes a broadcast row costs besides its strings: the row's null bitset
-# and fixed-width fields plus the hashed relation's entry for it
-_ROW_BYTES = 64
+from ..session import fits_broadcast, observed, release_iter_handle
 
 
 def _footprint(*strings: str | Column, rows: Column | None = None):
@@ -82,30 +77,12 @@ def _footprint(*strings: str | Column, rows: Column | None = None):
     )
 
 
-def _fits(spark: SparkSession, bound) -> bool:
-    """Whether a frame of observed ``_footprint`` ``bound`` fits under
-    the session's autoBroadcastJoinThreshold (never at -1)."""
-    cap = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    return 0 <= bound["rows"] * _ROW_BYTES + bound["string_bytes"] <= cap
-
-
 def _broadcast_if_fits(df: DataFrame, bound) -> DataFrame:
     """``df`` hinted for broadcast when ``bound`` fits; ``df`` unchanged
     otherwise.  ``bound`` is the observed ``_footprint`` of ``df`` or of
     a frame with at least as many rows and string bytes."""
-    return F.broadcast(df) if _fits(df.sparkSession, bound) else df
-
-
-def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
-    """``rows`` of DDL ``schema`` as a frame over a local relation,
-    built from an Arrow table: collecting it runs no Spark job.  A list
-    of tuples would be parallelized instead, and read back through a
-    Python worker."""
-    import pyarrow as pa
-
-    struct = StructType.fromDDL(schema)
-    cols = list(zip(*rows)) or [()] * len(struct.names)
-    return spark.createDataFrame(pa.table(dict(zip(struct.names, cols))), struct)
+    fits = fits_broadcast(df.sparkSession, bound["string_bytes"], bound["rows"])
+    return F.broadcast(df) if fits else df
 
 
 def transitive_closure(edges: DataFrame, max_iters: int = 30) -> DataFrame:

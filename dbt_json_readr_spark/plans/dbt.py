@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import lineage
-from ..session import observed, prep, release_iter_handle
+from ..session import fits_broadcast, local_frame, observed, prep, release_iter_handle
 from ..sources import artifacts as A
 
 FIXTURE_TARGET = str(Path(__file__).resolve().parents[2] / "tests" / "fixtures" / "dbt" / "target")
@@ -173,9 +173,9 @@ def _relax(graph: DataFrame, schema: str, in_memory, rounds) -> DataFrame:
     is released on return, so ``rounds`` must not read it lazily."""
     graph, size = observed(graph, "graph_footprint", *_graph_footprint())
     graph = graph.localCheckpoint()
-    spark = graph.sparkSession
-    if lineage._fits(spark, size.get):
-        out = lineage.local_frame(spark, in_memory(graph.collect()), schema)
+    spark, bound = graph.sparkSession, size.get
+    if fits_broadcast(spark, bound["string_bytes"], bound["rows"]):
+        out = local_frame(spark, in_memory(graph.collect()), schema)
     else:
         out = rounds(graph)
     release_iter_handle(graph)

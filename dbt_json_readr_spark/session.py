@@ -8,7 +8,7 @@ from __future__ import annotations
 import os
 import sys
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _ensure_vendored_protobuf() -> None:
@@ -233,6 +233,36 @@ def release_iter_handle(df) -> None:
             RuntimeWarning,
             stacklevel=2,
         )
+
+
+# bytes a broadcast row costs besides its variable-width payload: the
+# row's null bitset and fixed-width fields plus the hashed relation's
+# entry for it
+ROW_BYTES = 64
+
+
+def fits_broadcast(spark: SparkSession, payload_bytes: int, rows: int = 0) -> bool:
+    """Whether ``rows`` rows carrying ``payload_bytes`` of variable-width
+    data fit under the session's ``spark.sql.autoBroadcastJoinThreshold``
+    (never at -1).  The one bound for every shape that hints a broadcast
+    of a data-sized side or collects one to the driver: such a side is
+    held whole on the driver either way.  ``fits_broadcast(spark, 0)``
+    is False only when the threshold is -1."""
+    cap = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return 0 <= rows * ROW_BYTES + payload_bytes <= cap
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """``rows`` of DDL ``schema`` as a frame over a local relation,
+    built from an Arrow table: collecting it runs no Spark job.  A list
+    of tuples would be parallelized instead, and read back through a
+    Python worker."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    cols = list(zip(*rows)) or [()] * len(struct.names)
+    return spark.createDataFrame(pa.table(dict(zip(struct.names, cols))), struct)
 
 
 def observed(df, name: str, *metrics):

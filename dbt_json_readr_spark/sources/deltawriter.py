@@ -2207,14 +2207,8 @@ def write_delta_checkpoint(
             chunk = add_rows[i::n_side]
             name = f"{_uuid.uuid4()}.parquet"
             sp = sidecars_dir / name
-            tmp = sidecars_dir / f".{name}.tmp-{os.getpid()}"
-            pq.write_table(
-                pa.Table.from_pylist(
-                    [{"add": r["add"]} for r in chunk], schema=side_schema
-                ),
-                str(tmp),
-            )
-            os.replace(tmp, sp)
+            table = pa.Table.from_pylist([{"add": r["add"]} for r in chunk], schema=side_schema)
+            staging.publish_file(sp, lambda tmp: pq.write_table(table, tmp))
             sidecar_refs.append(
                 {"path": name, "sizeInBytes": sp.stat().st_size}
             )
@@ -2254,8 +2248,8 @@ def write_delta_checkpoint(
                         v["configuration"] = dict(v["configuration"])
                     lines.append(json.dumps({k: v}, separators=(",", ":")))
             dest = log / f"{version:020d}.checkpoint.{_uuid.uuid4()}.json"
-            tmp = log / f".{dest.name}.tmp-{os.getpid()}"
-            tmp.write_text("\n".join(lines) + "\n")
+            text = "\n".join(lines) + "\n"
+            staging.publish_file(dest, lambda tmp: Path(tmp).write_text(text))
         else:
             schema_pa = pa.schema(
                 [
@@ -2267,14 +2261,9 @@ def write_delta_checkpoint(
                 ]
             )
             dest = log / f"{version:020d}.checkpoint.{_uuid.uuid4()}.parquet"
-            tmp = log / f".{dest.name}.tmp-{os.getpid()}"
-            pq.write_table(
-                pa.Table.from_pylist(man_rows, schema=schema_pa), str(tmp)
-            )
-        os.replace(tmp, dest)
-        lc_tmp = log / f"._last_checkpoint.tmp-{os.getpid()}"
-        lc_tmp.write_text(json.dumps({"version": version, "size": len(rows)}))
-        os.replace(lc_tmp, log / "_last_checkpoint")
+            table = pa.Table.from_pylist(man_rows, schema=schema_pa)
+            staging.publish_file(dest, lambda tmp: pq.write_table(table, tmp))
+        _publish_last_checkpoint(log, version, len(rows))
         return {
             "version": version,
             "actions": len(rows),
@@ -2291,10 +2280,12 @@ def write_delta_checkpoint(
     )
     table = pa.Table.from_pylist(rows, schema=schema_pa)
     dest = log / f"{version:020d}.checkpoint.parquet"
-    tmp = log / f".{dest.name}.tmp-{os.getpid()}"
-    pq.write_table(table, str(tmp))
-    os.replace(tmp, dest)
-    lc_tmp = log / f"._last_checkpoint.tmp-{os.getpid()}"
-    lc_tmp.write_text(json.dumps({"version": version, "size": len(rows)}))
-    os.replace(lc_tmp, log / "_last_checkpoint")
+    staging.publish_file(dest, lambda tmp: pq.write_table(table, tmp))
+    _publish_last_checkpoint(log, version, len(rows))
     return {"version": version, "actions": len(rows)}
+
+
+def _publish_last_checkpoint(log: Path, version: int, size: int) -> None:
+    """Point ``_last_checkpoint`` at the checkpoint just published."""
+    text = json.dumps({"version": version, "size": size})
+    staging.publish_file(log / "_last_checkpoint", lambda tmp: Path(tmp).write_text(text))

@@ -1168,6 +1168,21 @@ def write_iceberg(
 # ------------------------------------------------------------------
 
 
+def _table_relative(table_dir: str) -> F.Column:
+    """A position delete's ``file_path`` from the absolute ``__fp`` of
+    the row it deletes, stored by the rule the manifests follow:
+    relative to the table root when under it, else a ``file://`` URI.
+    Absolute paths go stale the moment the table directory moves (the
+    atomic fixture build's rename does exactly that, and every delete
+    would silently miss); the reader resolves relative paths against
+    the root, and foreign absolute URIs still work."""
+    prefix = table_dir.rstrip("/") + "/"
+    fp = F.col("__fp")
+    return F.when(
+        fp.startswith(prefix), F.expr(f"substring(__fp, {len(prefix) + 1})")
+    ).otherwise(F.concat(F.lit("file://"), fp))
+
+
 def _land_delete_file(
     spark: SparkSession,
     rows: DataFrame,
@@ -1247,21 +1262,8 @@ def delete_iceberg(
         return {"positions_written": 0, "snapshot_id": None}
 
     scan = LF._iceberg_grouped_read(spark, data_files, info, with_meta=True)
-    # store file_path TABLE-ROOT-RELATIVE, the same rule the manifests
-    # follow — absolute URIs go stale the moment the table directory
-    # moves (the atomic fixture build's rename does exactly that, and
-    # every delete would silently miss); the reader resolves
-    # relative stored paths against the root, foreign absolute URIs
-    # still work
-    prefix = table_dir.rstrip("/") + "/"
-    fp = F.col("__fp")
     matched = scan.filter(skipping.predicate_column(predicate)).select(
-        F.when(
-            fp.startswith(prefix), F.expr(f"substring(__fp, {len(prefix) + 1})")
-        )
-        .otherwise(F.concat(F.lit("file://"), fp))
-        .alias("file_path"),
-        F.col("__pos").alias("pos"),
+        _table_relative(table_dir).alias("file_path"), F.col("__pos").alias("pos")
     )
 
     seq = int(meta.get("last-sequence-number", 0)) + 1
@@ -1939,14 +1941,9 @@ def delta_to_iceberg(spark: SparkSession, table_path: str) -> dict:
             else LF._dv_positions_distributed
         )
         pos_df = decode(spark, table_dir, dv_pairs)
-        prefix = table_dir.rstrip("/") + "/"
-        rel_fp = F.when(
-            F.col("__fp").startswith(prefix),
-            F.expr(f"substring(__fp, {len(prefix) + 1})"),
-        ).otherwise(F.concat(F.lit("file://"), F.col("__fp")))
         written = _land_delete_file(
             spark,
-            pos_df.select(rel_fp.alias("file_path"), F.col("__pos").alias("pos")),
+            pos_df.select(_table_relative(table_dir).alias("file_path"), F.col("__pos").alias("pos")),
             ["file_path", "pos"],
             table_dir,
             seq,

@@ -1691,10 +1691,9 @@ def write_avro_records(dest: str, schema_json: str, records: list[dict]) -> None
     and JVM-written files decode identically through the Python
     reader."""
     from . import avrocore
+    from .staging import publish_file
 
-    tmp = f"{dest}.tmp-{os.getpid()}"
-    avrocore.write_container(tmp, schema_json, records)
-    os.replace(tmp, dest)
+    publish_file(dest, lambda tmp: avrocore.write_container(tmp, schema_json, records))
 
 
 def iceberg_snapshot_entries(

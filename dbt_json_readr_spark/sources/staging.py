@@ -19,6 +19,10 @@ but not in how the file gets into the table.  That is decided here:
   hidden temporary file and hard-linked to its final name; ``link``
   fails with EEXIST when another writer already owns the name — the
   put-if-absent both logs require, expressed on POSIX.
+- ``publish_file``: a file that is replaced rather than created once
+  (a checkpoint, ``_last_checkpoint``, an Avro manifest) is written to
+  a temporary sibling unique to the call and renamed over its final
+  name.
 - ``sweep_staging``: a hard-killed writer's ``_staging-*`` directory is
   removed once it is older than a horizon, so a live concurrent
   writer's directory is never touched.
@@ -139,13 +143,32 @@ def land_parquet(
         shutil.rmtree(stage, ignore_errors=True)
 
 
+def _tmp_sibling(dest: Path) -> Path:
+    """A hidden name next to ``dest`` that no other writer, thread or
+    process, computes."""
+    return dest.with_name(f".{dest.name}.tmp-{os.getpid()}-{salt()}")
+
+
 def put_if_absent(dest: Path, text: str) -> None:
     """Create ``dest`` holding ``text`` atomically, or raise
     ``FileExistsError`` when it already exists."""
-    tmp = dest.with_name(f".{dest.name}.tmp-{os.getpid()}-{salt()}")
+    tmp = _tmp_sibling(dest)
     tmp.write_text(text)
     try:
         os.link(tmp, dest)
+    finally:
+        tmp.unlink(missing_ok=True)
+
+
+def publish_file(dest: str | Path, write: Callable[[str], None]) -> None:
+    """Put ``dest`` in place atomically, replacing any file there:
+    ``write(tmp)`` fills a temporary sibling, which is then renamed
+    over ``dest``, so a reader sees the old file or the whole new one.
+    The temporary file is removed when ``write`` fails."""
+    tmp = _tmp_sibling(Path(dest))
+    try:
+        write(str(tmp))
+        os.replace(tmp, dest)
     finally:
         tmp.unlink(missing_ok=True)
 

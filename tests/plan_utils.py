@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import re
 from collections import Counter
+from contextlib import contextmanager
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -233,3 +234,17 @@ def live_cached(slot: str, session) -> list:
     """The frames ``rotate_cached`` currently pins for (session, slot),
     for the ≤N-live-handles contracts."""
     return list(_session._CACHE_SLOTS.get(session, {}).get(slot, []))
+
+
+@contextmanager
+def broadcast_threshold(spark: SparkSession, value: int):
+    """Run the block with ``spark.sql.autoBroadcastJoinThreshold`` at
+    ``value``: -1 keeps every shape gated on the broadcast bound off
+    the driver."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(value))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, saved)

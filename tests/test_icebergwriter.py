@@ -253,22 +253,32 @@ def test_expire_snapshots(spark, tmp_path):
 def test_position_deletes_survive_table_move(spark, tmp_path):
     """Delete files store table-root-RELATIVE paths (the manifests'
     rule): a table directory moved after the delete still applies it
-    (r8 session 2 — absolute URIs in the staged fixture build went
-    stale on the atomic rename and every delete silently missed)."""
+    (absolute URIs in the staged fixture build went stale on the
+    atomic rename and every delete silently missed).  Both writers of
+    position deletes are covered: ``delete_iceberg``, and the export
+    of a Delta table's deletion vectors by ``delta_to_iceberg``."""
     import shutil as _sh
 
+    from dbt_json_readr_spark.sources import deltawriter as DW
+
+    rows = spark.createDataFrame([(i, float(i)) for i in range(10)], "id long, v double")
     t1 = str(tmp_path / "orig")
-    IW.write_iceberg(
-        spark,
-        spark.createDataFrame([(i, float(i)) for i in range(10)], "id long, v double"),
-        t1,
-    )
+    IW.write_iceberg(spark, rows, t1)
     IW.delete_iceberg(spark, _latest_meta(t1), [("id", "<", 4)])
-    t2 = str(tmp_path / "moved")
-    _sh.move(t1, t2)
-    back = LF.read_iceberg_snapshot(spark, _latest_meta(t2))
-    assert back.count() == 6
-    assert back.filter(F.col("id") < 4).count() == 0
+    d1 = str(tmp_path / "delta_orig")
+    # one data file, so the delete is a deletion vector, not a removal
+    DW.write_delta(spark, rows.coalesce(1), d1)
+    DW.delete_delta(spark, d1, [("id", "<", 4)])
+    export = IW.delta_to_iceberg(spark, d1)
+    assert export["dv_positions_exported"] == 4
+    exported = export["metadata_path"]
+    for src, meta in ((t1, None), (d1, exported)):
+        dest = src + "_moved"
+        _sh.move(src, dest)
+        meta = _latest_meta(dest) if meta is None else meta.replace(src, dest)
+        back = LF.read_iceberg_snapshot(spark, meta)
+        assert back.count() == 6, src
+        assert back.filter(F.col("id") < 4).count() == 0, src
 
 
 def test_delete_from_stale_metadata_cas_collides(spark, tmp_path):

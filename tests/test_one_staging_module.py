@@ -5,7 +5,8 @@ commits put-if-absent is one decision.  Copies of it drift: an
 Iceberg delete file written without the staging module's timestamp
 setting stored INT96 where the table's data files held INT64 micros.
 The check walks the AST with no import and no SparkSession, and fails
-if any other library module hard-links a file (``os.link``), sets
+if any other library module hard-links a file (``os.link``), renames
+one over another (``os.replace``), sets
 ``spark.sql.parquet.outputTimestampType``, or builds a ``_staging``
 path.  Docstrings and comments may name them; code may not.  The
 vendored protobuf runtime is third-party code and is not checked.
@@ -14,7 +15,13 @@ vendored protobuf runtime is third-party code and is not checked.
 from __future__ import annotations
 
 import ast
+import json
+import threading
 from pathlib import Path
+
+import pytest
+
+from dbt_json_readr_spark.sources import staging
 
 PKG = Path(__file__).resolve().parents[1] / "dbt_json_readr_spark"
 OWNER = PKG / "sources" / "staging.py"
@@ -32,20 +39,25 @@ def _docstrings(tree: ast.AST) -> set[int]:
     return out
 
 
+# a hard link is the put-if-absent commit, a replace the atomic publish
+_OS_CALLS = ("link", "replace")
+
+
 def _violations(tree: ast.AST) -> list[tuple[int, str]]:
     docs = _docstrings(tree)
     out = []
     for n in ast.walk(tree):
         if (
             isinstance(n, ast.Attribute)
-            and n.attr == "link"
+            and n.attr in _OS_CALLS
             and isinstance(n.value, ast.Name)
             and n.value.id == "os"
         ):
-            out.append((n.lineno, "os.link"))
+            out.append((n.lineno, f"os.{n.attr}"))
         elif isinstance(n, ast.ImportFrom) and n.module == "os":
-            if any(a.name == "link" for a in n.names):
-                out.append((n.lineno, "from os import link"))
+            for a in n.names:
+                if a.name in _OS_CALLS:
+                    out.append((n.lineno, f"from os import {a.name}"))
         elif (
             isinstance(n, ast.Constant)
             and isinstance(n.value, str)
@@ -62,8 +74,9 @@ def test_pin_flags_each_concern():
     src = '''
 """Docstrings may mention os.link and _staging-* dirs."""
 import os
-from os import link
+from os import link, replace
 os.link("a", "b")
+os.replace("a.tmp", "a")
 spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
 stage = root / f"_staging-{os.getpid()}"
 '''
@@ -71,7 +84,9 @@ stage = root / f"_staging-{os.getpid()}"
     assert found == [
         "builds a _staging path",
         "from os import link",
+        "from os import replace",
         "os.link",
+        "os.replace",
         "sets outputTimestampType",
     ]
 
@@ -84,3 +99,46 @@ def test_only_the_staging_module_lands_files():
         for ln, kind in _violations(ast.parse(path.read_text())):
             found.append(f"{path.relative_to(PKG.parent)}:{ln} {kind}")
     assert not found, "file landing outside sources/staging.py:\n" + "\n".join(found)
+
+
+def test_two_threads_publish_one_file(tmp_path):
+    """Two threads of one process publishing the same ``_last_checkpoint``
+    each write their own temporary file, so both publishes succeed, the
+    file holds one whole version, and no temporary file is left."""
+    dest = tmp_path / "_last_checkpoint"
+    both_writing = threading.Barrier(2)
+    errors = []
+
+    def publish(version):
+        def write(tmp):
+            Path(tmp).write_text(json.dumps({"version": version}))
+            both_writing.wait(timeout=30)
+
+        try:
+            staging.publish_file(dest, write)
+        except Exception as e:  # noqa: BLE001 — reported by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=publish, args=(v,)) for v in (1, 2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors
+    assert json.loads(dest.read_text())["version"] in (1, 2)
+    assert list(tmp_path.iterdir()) == [dest]
+
+
+def test_failed_publish_leaves_the_old_file_and_no_temporary(tmp_path):
+    dest = tmp_path / "_last_checkpoint"
+    dest.write_text("old")
+
+    def write(tmp):
+        Path(tmp).write_text("half")
+        raise OSError("disk full")
+
+    with pytest.raises(OSError, match="disk full"):
+        staging.publish_file(dest, write)
+    assert dest.read_text() == "old"
+    assert list(tmp_path.iterdir()) == [dest]

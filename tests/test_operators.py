@@ -15,6 +15,7 @@ from dbt_json_readr_spark.operators import multimodal as M
 from dbt_json_readr_spark.operators.asof import asof_join
 from dbt_json_readr_spark.operators.sessionize import sessionize
 from dbt_json_readr_spark.operators import textops as X
+from tests.plan_utils import broadcast_threshold
 
 
 def docs(spark, rows):
@@ -90,19 +91,22 @@ def test_minhash_degenerate_bucket_stress(spark):
 
 
 def test_minhash_verify_paths_agree(spark):
-    """The default verify (set broadcast at this size) and the narrow
-    all-shuffle verify (forced with broadcast_cand_cap=0) must be
-    value-equal: inter/(na+nb-inter) on narrow rows is the same jaccard
-    as |∩|/|∪| on collected sets.  set_overlap's third shape, candidate
-    broadcast, must give the same (na, nb, inter) as the other two."""
+    """The driver tail (the default at this size), the Spark set
+    broadcast verify and the narrow all-shuffle verify (forced with
+    broadcast_cand_cap=0) must be value-equal: inter/(na+nb-inter) on
+    narrow rows is the same jaccard as |∩|/|∪| on collected sets.
+    set_overlap's third shape, candidate broadcast, must give the same
+    (na, nb, inter) as the other two."""
     base = "the quick brown fox jumps over the lazy dog and runs far away " * 4
     rows = [(1, base, "en"), (2, base.replace("lazy", "very lazy", 1), "en"),
             (3, base + " tail", "en"), (4, "totally unrelated text here", "en")]
-    a = D.minhash_lsh_pairs(docs(spark, rows))
-    b = D.minhash_lsh_pairs(docs(spark, rows), broadcast_cand_cap=0)
-    sa = {(r.doc_a, r.doc_b, r.jaccard) for r in a.collect()}
-    sb = {(r.doc_a, r.doc_b, r.jaccard) for r in b.collect()}
-    assert sa == sb and sa
+    local = {(r.doc_a, r.doc_b, r.jaccard) for r in D.minhash_lsh_pairs(docs(spark, rows)).collect()}
+    with broadcast_threshold(spark, -1):
+        a = D.minhash_lsh_pairs(docs(spark, rows))
+        b = D.minhash_lsh_pairs(docs(spark, rows), broadcast_cand_cap=0)
+        sa = {(r.doc_a, r.doc_b, r.jaccard) for r in a.collect()}
+        sb = {(r.doc_a, r.doc_b, r.jaccard) for r in b.collect()}
+    assert sa == sb == local and sa
 
     shingles = D._shingle_rows(docs(spark, rows), 5)
     per_doc = D._per_doc_sketch(shingles, 16)
@@ -125,16 +129,36 @@ def test_minhash_auto_gate_picks_shuffle_over_cand_cap(spark):
     and must still produce the exact pair set."""
     base = "the quick brown fox jumps over the lazy dog and runs far away " * 4
     rows = [(i, base + f" tail {i % 2}", "en") for i in range(1, 31)]
-    over = D.minhash_lsh_pairs(docs(spark, rows), broadcast_cand_cap=10)
-    # all 30 docs near-dup → C(30,2)=435 candidates > 10 → shuffle shape:
-    # the broadcast shapes carry an explicit broadcast hint; the
-    # shuffle shape must not.
-    assert "ResolvedHint" not in over._jdf.queryExecution().analyzed().toString()
-    under = D.minhash_lsh_pairs(docs(spark, rows), broadcast_cand_cap=5_000_000)
-    assert "ResolvedHint" in under._jdf.queryExecution().analyzed().toString()
-    so = {(r.doc_a, r.doc_b, r.jaccard) for r in over.collect()}
-    su = {(r.doc_a, r.doc_b, r.jaccard) for r in under.collect()}
+    # the Spark shapes: under the broadcast bound the tail runs on the
+    # driver and never reaches the gate
+    with broadcast_threshold(spark, -1):
+        over = D.minhash_lsh_pairs(docs(spark, rows), broadcast_cand_cap=10)
+        # all 30 docs near-dup → C(30,2)=435 candidates > 10 → shuffle
+        # shape: the broadcast shapes carry an explicit broadcast hint;
+        # the shuffle shape must not.
+        assert "ResolvedHint" not in over._jdf.queryExecution().analyzed().toString()
+        under = D.minhash_lsh_pairs(docs(spark, rows), broadcast_cand_cap=5_000_000)
+        assert "ResolvedHint" in under._jdf.queryExecution().analyzed().toString()
+        so = {(r.doc_a, r.doc_b, r.jaccard) for r in over.collect()}
+        su = {(r.doc_a, r.doc_b, r.jaccard) for r in under.collect()}
     assert so == su and len(so) == 435
+
+
+def test_minhash_candidate_bound_falls_back_to_spark_shapes(spark):
+    """A sketch that fits the broadcast bound whose candidates do not
+    runs the Spark shapes over the same cached sketch.  40 one-shingle
+    docs in one bucket per band: the sketch is 40 × (64 + 8·16 + 8) =
+    8000 bytes, the candidate bound 4 bands × C(40, 2) × 16 = 49920."""
+    rows = [(i, "dup", "en") for i in range(40)]
+    local = D.minhash_lsh_pairs(docs(spark, rows))
+    assert local._jdf.queryExecution().executedPlan().nodeName() == "LocalTableScan"
+    with broadcast_threshold(spark, 20_000):
+        spark_shapes = D.minhash_lsh_pairs(docs(spark, rows))
+        plan = spark_shapes._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan and "LocalTableScan" not in plan
+        got = sorted(map(tuple, spark_shapes.collect()))
+    assert got == sorted(map(tuple, local.collect()))
+    assert len(got) == 40 * 39 // 2
 
 
 def test_minhash_incremental_excludes_base_base_pairs(spark):

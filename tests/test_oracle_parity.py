@@ -33,3 +33,14 @@ def test_rows_only_queries_run(spark, sf_dir):
         if key not in oracles:
             df = fn(spark, sf_dir)
             assert df.count() >= 0, key
+
+
+def test_minhash_lsh_spark_shapes_match_oracle(spark, sf_dir, con):
+    """``dedup_minhash_lsh`` runs its driver tail at this scale; with the
+    threshold at -1 it runs the Spark shapes, which must match too."""
+    from tests.plan_utils import broadcast_threshold
+
+    with broadcast_threshold(spark, -1):
+        df = registry.queries()["dedup_minhash_lsh"](spark, sf_dir)
+        assert df._jdf.queryExecution().executedPlan().nodeName() != "LocalTableScan"
+        compare(df, con, registry.oracle_sql()["dedup_minhash_lsh"])

@@ -4,6 +4,8 @@ refactor that keeps results but regresses the 100 TB plan."""
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 import pytest
 
 from dbt_json_readr_spark import registry
@@ -555,8 +557,11 @@ def test_lineage_key_job_counts_pinned(spark, key):
 
 # Spark jobs each corpus key runs at the fixture, warm, collect included,
 # with more than one shuffle partition and with one (AQE then runs fewer
-# stages as jobs of their own)
-_CORPUS_JOBS = {"dedup_minhash_lsh": (7, 5), "ann_bruteforce_topk": (4, 3)}
+# stages as jobs of their own).  Under the broadcast bound the LSH key's
+# jobs are the sketch's sizing job and its collect; _LSH_SPARK_JOBS
+# pins its Spark shapes, at threshold -1.
+_CORPUS_JOBS = {"dedup_minhash_lsh": (2, 2), "ann_bruteforce_topk": (4, 3)}
+_LSH_SPARK_JOBS = (6, 4)
 
 
 @pytest.mark.parametrize("key", sorted(_CORPUS_JOBS))
@@ -573,6 +578,39 @@ def test_corpus_key_job_counts_pinned(spark, key):
     assert len(jobs) == _CORPUS_JOBS[key][single], f"{key}: {len(jobs)} jobs"
 
 
+def test_minhash_lsh_spark_shapes_job_count_pinned(spark):
+    """With the threshold at -1 the LSH key runs its Spark shapes, in the
+    pinned number of jobs, and runs no sizing job for a driver tail it
+    cannot take."""
+    from dbt_json_readr_spark.plans import llm
+
+    with plan_utils.broadcast_threshold(spark, -1):
+        llm.dedup_minhash_lsh(spark, SF).collect()
+        _, jobs, _ = _jobs_and_executions(
+            spark, "lsh_spark_shapes", lambda: llm.dedup_minhash_lsh(spark, SF).collect()
+        )
+    single = int(spark.conf.get("spark.sql.shuffle.partitions")) == 1
+    assert len(jobs) == _LSH_SPARK_JOBS[single], f"{len(jobs)} jobs"
+
+
+def test_minhash_lsh_driver_tail_is_a_local_relation(spark):
+    """Under the broadcast bound the LSH key returns a local relation:
+    its collect runs no Spark job, and the previous call's candidate
+    cache is released while the shared sketch stays pinned."""
+    from dbt_json_readr_spark.plans import llm
+    from tests.plan_utils import live_cached
+
+    with plan_utils.broadcast_threshold(spark, -1):
+        llm.dedup_minhash_lsh(spark, SF).collect()
+    assert live_cached("minhash_cand", spark)
+    df = llm.dedup_minhash_lsh(spark, SF)
+    assert df._jdf.queryExecution().executedPlan().nodeName() == "LocalTableScan"
+    assert not live_cached("minhash_cand", spark)
+    assert live_cached("minhash_sketch", spark)
+    rows, jobs, _ = _jobs_and_executions(spark, "lsh_driver_tail", df.collect)
+    assert rows and not jobs, f"collect ran jobs {sorted(jobs)}"
+
+
 @pytest.mark.parametrize("key", ["dbt_critical_path", "dbt_lineage_depth", "dbt_pagerank"])
 def test_lineage_rounds_broadcast_without_shuffling_first(spark, key):
     """Every round checkpoint of the iterative operators runs at most 4
@@ -583,22 +621,16 @@ def test_lineage_rounds_broadcast_without_shuffling_first(spark, key):
     causes without the hint.  The threshold sits just under the whole
     graph's footprint: the keys that relax a graph under the bound in
     memory run their Spark rounds, whose node and edge sides still fit."""
-    from dbt_json_readr_spark.operators.lineage import _ROW_BYTES
     from dbt_json_readr_spark.plans import dbt
+    from dbt_json_readr_spark.session import ROW_BYTES
     from dbt_json_readr_spark.sources.artifacts import manifest_graph
 
     graph = manifest_graph(spark, dbt._manifest(dbt.FIXTURE_TARGET))
     size = graph.agg(*dbt._graph_footprint()).first()
-    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set(
-        "spark.sql.autoBroadcastJoinThreshold", str(size["rows"] * _ROW_BYTES + size["string_bytes"] - 1)
-    )
-    try:
+    with plan_utils.broadcast_threshold(spark, size["rows"] * ROW_BYTES + size["string_bytes"] - 1):
         _, _, ran = _jobs_and_executions(
             spark, f"lineage_rounds_{key}", lambda: getattr(dbt, key)(spark, SF).collect()
         )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
     rounds = [e for e in ran if e.description.startswith("localCheckpoint")]
     assert len(rounds) > 1, f"{key}: no rounds ran"
     for e in rounds:
@@ -684,9 +716,7 @@ def test_lineage_rounds_fall_back_to_the_planner_without_a_threshold(spark):
     }
     for key, run in keys.items():
         hinted[key] = run()
-    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with plan_utils.broadcast_threshold(spark, -1):
         for name, run in {**runs, **keys}.items():
             got, jobs, ran = _jobs_and_executions(spark, f"lineage_fallback_{name}", run)
             assert got == hinted[name], name
@@ -695,8 +725,6 @@ def test_lineage_rounds_fall_back_to_the_planner_without_a_threshold(spark):
             if name in keys:
                 assert len(jobs) == _ROUNDS_JOBS[name], f"{name}: {len(jobs)} jobs"
                 assert sum(e.description.startswith("localCheckpoint") for e in ran) > 2, name
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
 
 
 def test_rotate_cached_empty_frames_release_the_slot(spark):
@@ -753,11 +781,14 @@ def test_dedup_verify_plan_and_build_jobs_pinned(spark, key):
 
     n_intersect, n_side_pairs, n_jobs = _VERIFY_PINS[key]
     fn = getattr(llm, key)
-    fn(spark, SF)
-    mark = plan_utils.sql_execution_mark(spark)
-    df = fn(spark, SF)
-    ran = plan_utils.sql_executions_since(spark, mark)
-    plan = plan_utils.formatted_plan(df)
+    # the LSH key verifies on the driver under the broadcast bound; its
+    # Spark verify is pinned at threshold -1
+    with plan_utils.broadcast_threshold(spark, -1) if key == "dedup_minhash_lsh" else nullcontext():
+        fn(spark, SF)
+        mark = plan_utils.sql_execution_mark(spark)
+        df = fn(spark, SF)
+        ran = plan_utils.sql_executions_since(spark, mark)
+        plan = plan_utils.formatted_plan(df)
     assert plan.count("array_intersect") == n_intersect
     sides = [s for s in _broadcast_inputs(plan) if s in _SET_SIDES]
     assert len(sides) == 2 * n_side_pairs, f"{key}: broadcast sides {sides}"

@@ -11,6 +11,7 @@ from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from dbt_json_readr_spark.operators.asof import asof_join
 from dbt_json_readr_spark.operators.sessionize import sessionize
+from tests.plan_utils import broadcast_threshold
 
 BASE = dt.datetime(2024, 1, 1)
 
@@ -1176,12 +1177,8 @@ def test_lineage_operators_match_stdlib_on_random_dags(spark, dag):
     want_cp = _naive_critical_path(nodes, edges)
     got_cp = {r.unique_id: (r.wt_fp, r.critical_cost_fp) for r in critical_path(ndf, edf).collect()}
     assert got_cp == want_cp
-    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with broadcast_threshold(spark, -1):
         got_cp = {r.unique_id: (r.wt_fp, r.critical_cost_fp) for r in critical_path(ndf, edf).collect()}
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
     assert got_cp == want_cp
     got_depth = {r.unique_id: r.depth for r in lineage_depth(ndf, edf).collect()}
     assert got_depth == _naive_depth(nodes, edges)
@@ -1266,3 +1263,43 @@ def test_lineage_shapes_agree_on_random_graphs(spark, graph):
     assert dict(got_pr) == _naive_pagerank(nodes, edges, iters=cap)
     if _acyclic(nodes, edges) and cap > len(nodes):
         assert {v: (w, c) for v, w, c in got_cp} == _naive_critical_path(nodes, edges)
+
+
+@st.composite
+def corpora(draw):
+    """A small corpus with exact duplicates, one-character near
+    duplicates and texts shorter than the shingle size, plus the
+    id type and a bucket cap that may drop the fuller buckets."""
+    texts = draw(st.lists(st.one_of(st.none(), st.text("ab c", max_size=14)), min_size=2, max_size=8))
+    texts += draw(st.lists(st.sampled_from(texts), max_size=3))
+    for t in draw(st.lists(st.sampled_from(texts), max_size=3)):
+        if t:
+            i = draw(st.integers(0, len(t) - 1))
+            texts.append(t[:i] + "d" + t[i + 1 :])
+    id_type = draw(st.sampled_from(["bigint", "string"]))
+    ids = draw(st.permutations(range(len(texts))))
+    rows = [(i if id_type == "bigint" else f"d{i:02d}", t) for i, t in zip(ids, texts)]
+    return rows, id_type, draw(st.sampled_from([2, 3, 2000])), draw(st.sampled_from([0.0, 0.5, 0.8]))
+
+
+@settings(**{**SETTINGS, "max_examples": 8})
+@given(corpus=corpora())
+# a bucket of three identical docs over a cap of two, and a text shorter than k
+@example(corpus=([(0, "abab"), (1, "abab"), (2, "abab"), (3, "a"), (4, "a")], "bigint", 2, 0.0))
+def test_minhash_lsh_shapes_agree_on_random_corpora(spark, corpus):
+    """``minhash_lsh_pairs`` returns the same rows, of the same schema,
+    from its driver tail (under the broadcast bound) and from its Spark
+    shapes (threshold -1): the same band keys, bucket cap, pair dedup
+    and jaccard, bit for bit."""
+    from dbt_json_readr_spark.operators import dedup as D
+
+    rows, id_type, cap, tau = corpus
+    docs = spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+    kw = dict(k=3, n_hashes=8, bands=4, threshold=tau, bucket_cap=cap)
+    local = D.minhash_lsh_pairs(docs, **kw)
+    assert local._jdf.queryExecution().executedPlan().nodeName() == "LocalTableScan"
+    with broadcast_threshold(spark, -1):
+        shapes = D.minhash_lsh_pairs(docs, **kw)
+        want = sorted(map(tuple, shapes.collect()))
+    assert local.schema == shapes.schema
+    assert sorted(map(tuple, local.collect())) == want
