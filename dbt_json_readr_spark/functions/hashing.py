@@ -1,7 +1,8 @@
 """Cross-engine deterministic hashing & sketch primitives.
 
-Every primitive exists twice: a Spark ``Column`` builder (JVM-side,
-codegen-friendly — no Python UDFs) and a DuckDB SQL-text builder used by
+Every primitive exists twice: a Spark builder (a ``Column``, or for the
+per-doc minhash a grouped frame; JVM-side, codegen-friendly — no Python
+UDFs) and a DuckDB SQL-text builder used by
 the oracles (the LSH band key has a third, plain-Python form, for a
 sketch collected to the driver).  All are anchored on md5, which is
 bit-identical everywhere, so every sketch (minhash, simhash,
@@ -18,7 +19,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # ------------------------------------------------------------ hash64
@@ -39,24 +40,30 @@ def sql_hash64(expr: str, salt: str = "") -> str:
 
 
 def char_shingles(col: Column, k: int) -> Column:
-    """Distinct char k-grams; texts shorter than k yield [text]."""
-    return F.when(F.length(col) < k, F.array(col)).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.length(col) - k + 1),
-                lambda i: col.substr(i, F.lit(k)),
-            )
-        )
-    )
+    """Distinct char k-grams, in first-occurrence order; texts shorter
+    than k yield [text].  Characters are code points, as ``length`` and
+    ``substr`` count them.
+
+    The k-grams are group 1 of ``(?s)(?=(.{k})).``: the look-ahead
+    captures the k characters at each position and the trailing ``.``
+    consumes one, so a match starts at every character in turn.  The
+    consuming ``.`` matters: Java's regex steps over a surrogate pair as
+    one character when a match consumes it, but after an empty match it
+    advances one UTF-16 unit, so the zero-width pattern alone would also
+    start a k-gram on the low half of every non-BMP character (an
+    emoji, a math letter).  ``(?s)`` makes CR, LF and the other line
+    breaks characters like any other.  ``regexp_extract_all`` runs in
+    whole-stage codegen; a ``transform`` over a position ``sequence``
+    is a higher-order function, which Spark evaluates on the
+    interpreted path."""
+    return F.array_distinct(char_shingles_ordered(col, k))
 
 
 def char_shingles_ordered(col: Column, k: int) -> Column:
-    """Positional (non-distinct) char k-grams, for rolling-hash schemes."""
+    """Positional (non-distinct) char k-grams, one per start position,
+    for rolling-hash schemes; ``char_shingles`` explains the regex."""
     return F.when(F.length(col) < k, F.array(col)).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.length(col) - k + 1),
-            lambda i: col.substr(i, F.lit(k)),
-        )
+        F.regexp_extract_all(col, F.lit(f"(?s)(?=(.{{{k}}}))."), 1)
     )
 
 
@@ -80,20 +87,27 @@ def sql_tokens(expr: str) -> str:
 # ------------------------------------------------------------ minhash
 
 
-def minhash_lane_cols(sh: Column, n_hashes: int, prefix: str = "mh") -> list[Column]:
-    """n independent minhash lanes as FLAT columns over one exploded
-    shingle row, four per md5 call: an md5 digest is 128 bits = four
+def minhash_lanes(rows: DataFrame, n_hashes: int, *aggs: Column) -> DataFrame:
+    """Per-doc minhash of ``(doc_id, sh)`` shingle-hash rows: ``doc_id``,
+    the lanes ``mh0``… ``mh{n_hashes-1}`` as bigints, then ``aggs``,
+    which run in the same aggregation (the fused sketch adds its
+    ``collect_set``).  ``sql_minhash_array``'s lanes bit for bit.
+
+    Four lanes per md5 call: an md5 digest is 128 bits = four
     independent 32-bit hash functions (hex chars 1-8, 9-16, 17-24,
     25-32), so n//4 salted digests give n lanes at a quarter of the
     digest cost of one-per-call.  32-bit lanes are plenty for a min
     statistic (ties need a within-doc 2⁻³² collision).
 
-    Flat columns instead of an array-HOF pipeline on purpose: Spark's
-    higher-order functions (transform/aggregate) are CodegenFallback —
-    every md5+conv inside them runs on the interpreted expression path.
-    Exploding shingles to rows keeps the whole hash in whole-stage
-    codegen, and groupBy(doc).min(lane) gets map-side partial
-    aggregation for free (measured ~2× end-to-end on the LSH operator).
+    The minimum is taken over the 8-character hex slices and converted
+    to a number once per doc, after the aggregation: fixed-width
+    lowercase hex sorts as its number does, so ``min`` picks the same
+    lane, and ``conv`` runs ``n_hashes`` times per doc instead of per
+    shingle row.  The lanes are flat columns over exploded shingle rows
+    rather than an array pipeline because Spark's higher-order
+    functions evaluate on the interpreted path; flat columns keep the
+    md5 in whole-stage codegen and the min gets map-side partial
+    aggregation.
 
     Measured dead end (keep it dead): deriving the n hashes as affine
     permutations (a_i·h+b_i mod 2³¹-1) of ONE base md5 halves the hash
@@ -102,16 +116,15 @@ def minhash_lane_cols(sh: Column, n_hashes: int, prefix: str = "mh") -> list[Col
     (60k vs 32.5k) and end-to-end the operator got SLOWER.  Distinct
     output bits of one cryptographic digest carry no such coupling."""
     assert n_hashes % 4 == 0
-    out = []
+    hexes = {}
     for p in range(n_hashes // 4):
-        d = F.md5(F.concat(F.lit(f"mhp{p}:"), sh.cast("string")))
+        d = F.md5(F.concat(F.lit(f"mhp{p}:"), F.col("sh").cast("string")))
         for lane in range(4):
-            out.append(
-                F.conv(F.substring(d, 1 + 8 * lane, 8), 16, 10)
-                .cast("long")
-                .alias(f"{prefix}{4 * p + lane}")
-            )
-    return out
+            hexes[f"mh{4 * p + lane}"] = F.substring(d, 1 + 8 * lane, 8)
+    mins = rows.withColumns(hexes).groupBy("doc_id").agg(
+        *[F.min(c).alias(c) for c in hexes], *aggs
+    )
+    return mins.withColumns({c: F.conv(c, 16, 10).cast("long") for c in hexes})
 
 
 def sql_minhash_array(shingles_expr: str, n_hashes: int) -> str:

@@ -120,9 +120,9 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
 
 def _shingle_rows(docs: DataFrame, k: int) -> DataFrame:
     """(doc_id, sh) rows: distinct char-k-gram 60-bit hashes, one row
-    per shingle.  The explode keeps the md5+conv hashing in whole-stage
-    codegen (higher-order functions are CodegenFallback — interpreted);
-    only the cheap substr shingling stays inside the HOF."""
+    per shingle.  Shingling, explode and hashing all run in whole-stage
+    codegen: ``char_shingles`` is a regex extract, not a higher-order
+    function, and the md5+conv hash is applied to the exploded rows."""
     return (
         spread(docs)
         .select("doc_id", F.explode(H.char_shingles(F.col("text"), k)).alias("s"))
@@ -141,13 +141,9 @@ def _per_doc_sketch(rows: DataFrame, n_hashes: int, rotate: bool = True) -> Data
     reads only (doc_id, sh) rows."""
     from pyspark import StorageLevel
 
-    lanes = rows.select(
-        "doc_id", "sh", *H.minhash_lane_cols(F.col("sh"), n_hashes)
+    per_doc = H.minhash_lanes(rows, n_hashes, F.collect_set("sh").alias("sh")).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    per_doc = lanes.groupBy("doc_id").agg(
-        *[F.min(f"mh{i}").alias(f"mh{i}") for i in range(n_hashes)],
-        F.collect_set("sh").alias("sh"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
     # latest-wins rotation keyed per SparkSession (session.rotate_cached):
     # repeated invocations pin at most ONE cached frame per session —
     # same discipline as operators/kmeans.py, regression-tested in
@@ -232,12 +228,7 @@ def minhash_candidate_pairs(
     the LSH recall/cost tradeoff (see plans/llm.py dedup_lsh_recall):
     flat lane mins → band keys → doc_id-only buckets → in-bucket pair
     explode → cross-band dedup."""
-    lanes = _shingle_rows(docs, k).select(
-        "doc_id", *H.minhash_lane_cols(F.col("sh"), n_hashes)
-    )
-    mins = lanes.groupBy("doc_id").agg(
-        *[F.min(f"mh{i}").alias(f"mh{i}") for i in range(n_hashes)]
-    )
+    mins = H.minhash_lanes(_shingle_rows(docs, k), n_hashes)
     return _cand_from_mins(mins, n_hashes, bands, bucket_cap)
 
 
@@ -309,8 +300,11 @@ def _gated_join(
 ) -> DataFrame:
     """``cand ⋈ side_a ⋈ side_b`` on ``keys`` with the broadcast side
     the gate picked: the two per-item sides under SET_BROADCAST, else
-    the candidates."""
+    the candidates.  A session whose broadcast threshold is -1 gets no
+    hint at all, and the planner picks every join."""
     ka, kb = keys
+    if not fits_broadcast(cand.sparkSession, 0):
+        return cand.join(side_a, ka).join(side_b, kb)
     if shape.shape == SET_BROADCAST:
         return cand.join(F.broadcast(side_a), ka).join(F.broadcast(side_b), kb)
     return F.broadcast(cand).join(side_a, ka).join(side_b, kb)
@@ -454,8 +448,9 @@ def minhash_lsh_pairs(
     exactly this).
 
     1. Fused sketch pass: exploded shingle rows → flat 32-bit minhash
-       lanes (functions/hashing.py) → one groupBy(doc_id) computing the
-       lane MINs and collect_set(sh) together, persisted in the
+       lanes → one groupBy(doc_id) computing the lane MINs and
+       collect_set(sh) together (``hashing.minhash_lanes``, which takes
+       the MINs over hex and converts them per doc), persisted in the
        latest-wins ``minhash_sketch`` slot, which the other sketch
        consumers of a session share.
     2. The tail runs in one of two shapes.

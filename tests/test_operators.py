@@ -130,8 +130,9 @@ def test_minhash_auto_gate_picks_shuffle_over_cand_cap(spark):
     base = "the quick brown fox jumps over the lazy dog and runs far away " * 4
     rows = [(i, base + f" tail {i % 2}", "en") for i in range(1, 31)]
     # the Spark shapes: under the broadcast bound the tail runs on the
-    # driver and never reaches the gate
-    with broadcast_threshold(spark, -1):
+    # driver and never reaches the gate, and at -1 no shape is hinted.
+    # One byte refuses the driver tail and leaves the hints on.
+    with broadcast_threshold(spark, 1):
         over = D.minhash_lsh_pairs(docs(spark, rows), broadcast_cand_cap=10)
         # all 30 docs near-dup → C(30,2)=435 candidates > 10 → shuffle
         # shape: the broadcast shapes carry an explicit broadcast hint;

@@ -593,6 +593,33 @@ def test_minhash_lsh_spark_shapes_job_count_pinned(spark):
     assert len(jobs) == _LSH_SPARK_JOBS[single], f"{len(jobs)} jobs"
 
 
+def test_minhash_sketch_plan_hashes_in_codegen_and_converts_lanes_per_doc(spark):
+    """The cached minhash sketch's plan, as it ran: below the partial
+    aggregate the only ``conv`` is the shingle hash, so the lanes are
+    aggregated as hex and converted per doc, not per shingle row; and
+    the shingle ``Generate`` holds no lambda, so shingling runs in
+    codegen rather than as an interpreted higher-order function."""
+    from dbt_json_readr_spark.operators import dedup as D
+
+    docs = spark.createDataFrame(
+        [(i, f"document {i} of the sketch plan pin") for i in range(8)], "doc_id bigint, text string"
+    )
+    per_doc = D._per_doc_sketch(D._shingle_rows(docs, 5), 16, rotate=False)
+    try:
+        per_doc.count()
+        scan = per_doc._jdf.queryExecution().executedPlan().executedPlan()
+        lines = scan.relation().cachedPlan().executedPlan().treeString().splitlines()
+    finally:
+        per_doc.unpersist()
+    partial = max(i for i, line in enumerate(lines) if "Aggregate(" in line)
+    assert "partial_min(mh15" in lines[partial], lines[partial]
+    below = lines[partial + 1 :]
+    assert sum(line.count("conv(") for line in below) == 1, "\n".join(below)
+    generates = [line for line in below if "Generate " in line]
+    assert len(generates) == 1 and "lambdafunction" not in generates[0], generates
+    assert all(f.dataType.simpleString() == "bigint" for f in per_doc.schema if f.name.startswith("mh"))
+
+
 def test_minhash_lsh_driver_tail_is_a_local_relation(spark):
     """Under the broadcast bound the LSH key returns a local relation:
     its collect runs no Spark job, and the previous call's candidate
@@ -745,8 +772,10 @@ def test_rotate_cached_empty_frames_release_the_slot(spark):
 # dedup keys: (array_intersect in the plan, broadcast set-side pairs, SQL
 # executions building the frame runs).  The gate is the only build-time
 # job — one per verify; the other keys gate on cached probes or not at all.
+# _PIN_THRESHOLDS runs a pin at its own broadcast threshold.
 _VERIFY_PINS = {
-    "dedup_minhash_lsh": (1, 1, 1),
+    "dedup_minhash_lsh": (1, 0, 1),
+    "dedup_minhash_lsh@1": (1, 1, 2),
     "dedup_containment_lsh": (1, 1, 1),
     "dedup_incremental": (1, 1, 1),
     "dedup_band_utility": (1, 1, 1),
@@ -755,6 +784,7 @@ _VERIFY_PINS = {
     "dedup_ngram_jaccard": (1, 0, 0),
     "dedup_containment": (1, 0, 0),
 }
+_PIN_THRESHOLDS = {"dedup_minhash_lsh": -1, "dedup_minhash_lsh@1": 1}
 _SET_SIDES = [("doc_a", "sh_a"), ("doc_b", "sh_b"), ("vec_a", "va", "na"), ("vec_b", "vb", "nb")]
 
 
@@ -776,20 +806,27 @@ def test_dedup_verify_plan_and_build_jobs_pinned(spark, key):
     sf0.001 the gate picks set broadcast, so both per-doc set sides (or
     both vector sides) are BroadcastExchanges.  Building the frame — the
     second build, once the probe caches are warm — runs only the gate's
-    job per verify."""
+    job per verify.
+
+    The LSH key verifies on the driver under the broadcast bound, so its
+    Spark verify is pinned at two thresholds: at -1 the session turns
+    broadcasts off and the verify hints none, and at 1 byte the sketch's
+    sizing job refuses the driver tail and the gate hints both set
+    sides."""
     from dbt_json_readr_spark.plans import llm
 
     n_intersect, n_side_pairs, n_jobs = _VERIFY_PINS[key]
-    fn = getattr(llm, key)
-    # the LSH key verifies on the driver under the broadcast bound; its
-    # Spark verify is pinned at threshold -1
-    with plan_utils.broadcast_threshold(spark, -1) if key == "dedup_minhash_lsh" else nullcontext():
+    fn = getattr(llm, key.split("@")[0])
+    threshold = _PIN_THRESHOLDS.get(key)
+    with nullcontext() if threshold is None else plan_utils.broadcast_threshold(spark, threshold):
         fn(spark, SF)
         mark = plan_utils.sql_execution_mark(spark)
         df = fn(spark, SF)
         ran = plan_utils.sql_executions_since(spark, mark)
         plan = plan_utils.formatted_plan(df)
     assert plan.count("array_intersect") == n_intersect
+    if threshold == -1:
+        assert "BroadcastExchange" not in plan, f"{key}: a broadcast at threshold -1"
     sides = [s for s in _broadcast_inputs(plan) if s in _SET_SIDES]
     assert len(sides) == 2 * n_side_pairs, f"{key}: broadcast sides {sides}"
     assert len(ran) == n_jobs, f"{key}: build ran {[e.description for e in ran]}"

@@ -1303,3 +1303,99 @@ def test_minhash_lsh_shapes_agree_on_random_corpora(spark, corpus):
         want = sorted(map(tuple, shapes.collect()))
     assert local.schema == shapes.schema
     assert sorted(map(tuple, local.collect())) == want
+
+
+def _hof_shingles(col, k: int, distinct: bool):
+    """The char k-gram kernel as a higher-order function: ``substr`` at
+    every start position of a ``sequence``, mapped by ``transform``.
+    It counts characters as ``length`` and ``substr`` do, so it is the
+    reference for ``hashing.char_shingles`` and ``char_shingles_ordered``."""
+    from pyspark.sql import functions as F
+
+    grams = F.transform(F.sequence(F.lit(1), F.length(col) - k + 1), lambda i: col.substr(i, F.lit(k)))
+    return F.when(F.length(col) < k, F.array(col)).otherwise(F.array_distinct(grams) if distinct else grams)
+
+
+# letters, a combining acute and diaeresis, non-BMP letters and emoji
+# (surrogate pairs in Java), a tab and four kinds of line break
+_SHINGLE_CHARS = ["a", "b", " ", "é", "\u0301", "\u0308", "😀", "🎉", "𝔸", "𝟘", "\r", "\n", "\u0085", "\u2028", "\t"]
+_SHINGLE_KS = (1, 2, 3, 5, 8, 9)
+
+
+@settings(**SETTINGS)
+@given(
+    texts=st.lists(
+        st.one_of(
+            st.none(),
+            st.text(alphabet=_SHINGLE_CHARS, max_size=16),
+            st.text(alphabet=["😀", "🎉", "𝔸"], max_size=10),
+        ),
+        min_size=1,
+        max_size=10,
+    )
+)
+@example(
+    texts=[
+        "", None, "😀", "😀😀😀😀😀😀😀😀😀😀", "𝔸𝔹ℂ𝔻𝔼𝔽𝔾", "line one\r\nline two\r\n",
+        "e\u0301e\u0301e\u0301e\u0308", "ab", "12345678",
+    ]
+)
+def test_char_shingles_match_the_higher_order_form(spark, texts):
+    """The regex shingle kernel gives the higher-order form's k-grams, in
+    its order, for any text and k: non-BMP characters, newlines and
+    combining marks included, and texts that are empty, None or
+    shorter than k."""
+    from pyspark.sql import functions as F
+
+    from dbt_json_readr_spark.functions import hashing as H
+
+    t = F.col("text")
+    cols = [
+        c
+        for k in _SHINGLE_KS
+        for c in (
+            _hof_shingles(t, k, True), H.char_shingles(t, k),
+            _hof_shingles(t, k, False), H.char_shingles_ordered(t, k),
+        )
+    ]
+    df = spark.createDataFrame([(x,) for x in texts], "text string")
+    for text, row in zip(texts, df.select(*cols).collect()):
+        for i, k in enumerate(_SHINGLE_KS):
+            want, got, want_ordered, got_ordered = row[4 * i : 4 * i + 4]
+            assert got == want, (text, k)
+            assert got_ordered == want_ordered, (text, k)
+
+
+def _per_row_lane_mins(rows, n_hashes: int):
+    """Minhash lanes converted to numbers on every shingle row and then
+    minimised: the reference for ``hashing.minhash_lanes``."""
+    from pyspark.sql import functions as F
+
+    lanes = []
+    for p in range(n_hashes // 4):
+        d = F.md5(F.concat(F.lit(f"mhp{p}:"), F.col("sh").cast("string")))
+        lanes += [F.conv(F.substring(d, 1 + 8 * i, 8), 16, 10).cast("long") for i in range(4)]
+    return rows.groupBy("doc_id").agg(*[F.min(c).alias(f"mh{i}") for i, c in enumerate(lanes)])
+
+
+@settings(**{**SETTINGS, "max_examples": 8})
+@given(corpus=corpora())
+def test_hex_minhash_lanes_equal_per_row_conversion(spark, corpus):
+    """The lanes the fused sketch and ``minhash_candidate_pairs`` take
+    as hex minima equal the minima of the lanes converted per row, so
+    the sketch and the candidate pairs are those of the per-row form."""
+    from dbt_json_readr_spark.operators import dedup as D
+
+    rows_, id_type, cap, _ = corpus
+    docs = spark.createDataFrame(rows_, f"doc_id {id_type}, text string")
+    rows = D._shingle_rows(docs, 3)
+    ref = _per_row_lane_mins(rows, 8)
+    sketch = D._per_doc_sketch(rows, 8, rotate=False)
+    try:
+        got = sorted(tuple(r)[:-1] for r in sketch.collect())
+    finally:
+        sketch.unpersist()
+    assert got == sorted(map(tuple, ref.collect()))
+    cand = D.minhash_candidate_pairs(docs, k=3, n_hashes=8, bands=4, bucket_cap=cap)
+    want = D._cand_from_mins(ref, 8, 4, cap)
+    assert sorted(map(tuple, cand.collect())) == sorted(map(tuple, want.collect()))

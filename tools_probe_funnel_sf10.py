@@ -72,10 +72,7 @@ def main() -> None:
     from dbt_json_readr_spark.functions import hashing as H
 
     rows = D._shingle_rows(admitted, _MH_K)
-    lanes = rows.select("doc_id", *H.minhash_lane_cols(F.col("sh"), _MH_N))
-    mins = lanes.groupBy("doc_id").agg(
-        *[F.min(f"mh{i}").alias(f"mh{i}") for i in range(_MH_N)]
-    )
+    mins = H.minhash_lanes(rows, _MH_N)
     r = _MH_N // _MH_BANDS
     banded = mins.select(
         "doc_id",

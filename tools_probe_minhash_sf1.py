@@ -58,9 +58,9 @@ def main():
 
     k, n_hashes, bands = 5, 12, 3
 
-    # stage 1: shingle rows (scan + HOF shingling + explode + hash64)
+    # stage 1: shingle rows (scan + regex shingling + explode + hash64)
     rows = D._shingle_rows(docs, k)
-    timed(spark, "1 shingle_rows (HOF distinct + md5)", rows)
+    timed(spark, "1 shingle_rows (regex distinct + md5)", rows)
 
     # stage 1b: raw positions variant, codegen, NON-distinct
     t = F.col("text")
@@ -86,21 +86,11 @@ def main():
     timed(spark, "1b positions codegen non-distinct + md5", pos)
 
     # stage 2: full per-doc sketch (lanes min + collect_set)
-    per_doc = rows.select(
-        "doc_id", "sh", *H.minhash_lane_cols(F.col("sh"), n_hashes)
-    ).groupBy("doc_id").agg(
-        *[F.min(f"mh{i}").alias(f"mh{i}") for i in range(n_hashes)],
-        F.collect_set("sh").alias("sh"),
-    )
+    per_doc = H.minhash_lanes(rows, n_hashes, F.collect_set("sh").alias("sh"))
     timed(spark, "2 per_doc sketch (lanes+set, uncached)", per_doc)
 
     # 2b: same sketch over the non-distinct codegen rows
-    per_doc_nd = pos.select(
-        "doc_id", "sh", *H.minhash_lane_cols(F.col("sh"), n_hashes)
-    ).groupBy("doc_id").agg(
-        *[F.min(f"mh{i}").alias(f"mh{i}") for i in range(n_hashes)],
-        F.collect_set("sh").alias("sh"),
-    )
+    per_doc_nd = H.minhash_lanes(pos, n_hashes, F.collect_set("sh").alias("sh"))
     timed(spark, "2b per_doc sketch over non-distinct rows", per_doc_nd)
 
     # stage 3: candidates (bands from cached sketch) — count action as in prod

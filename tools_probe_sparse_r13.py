@@ -1,7 +1,8 @@
 """Decompose doc_sparse_cosine_topk + shingle-build variants (r13).
 
-Times each stage with the noop sink; compares the interpreted-HOF
-char_shingles explode against a positional codegen explode variant.
+Times each stage with the noop sink; compares the library's
+char_shingles explode (a regex extract) against a positional explode
+variant.
 Ad-hoc probe, not part of the bench contract.
 
 Usage: python tools_probe_sparse_r13.py [sf_dir]
@@ -47,7 +48,7 @@ def timed(spark, label, df, runs=2):
     spark.sparkContext.setJobDescription(None)
 
 
-def posting_hof(docs):
+def posting_shingles(docs):
     return docs.select(
         "doc_id", F.explode(H.char_shingles(F.col("text"), K)).alias("term")
     )
@@ -123,14 +124,14 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
     docs = spread(load(spark, sf_dir, "documents"))
 
-    timed(spark, "posting HOF (current)", posting_hof(docs))
+    timed(spark, "posting char_shingles (current)", posting_shingles(docs))
     timed(spark, "posting codegen+dedup", posting_codegen(docs))
 
     # df-table build from each
     timed(
         spark,
-        "df_t from HOF posting",
-        posting_hof(docs).groupBy("term").agg(F.count(F.lit(1)).alias("df")),
+        "df_t from char_shingles posting",
+        posting_shingles(docs).groupBy("term").agg(F.count(F.lit(1)).alias("df")),
     )
     timed(
         spark,
@@ -139,7 +140,7 @@ def main():
     )
 
     # full operator both ways (cleanup persists between)
-    for name, fn in [("full sparse HOF", posting_hof), ("full sparse codegen", posting_codegen)]:
+    for name, fn in [("full sparse char_shingles", posting_shingles), ("full sparse codegen", posting_codegen)]:
         for r in range(2):
             c0 = _jvm_cpu(spark)
             t0 = time.perf_counter()
