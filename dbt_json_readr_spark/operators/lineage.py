@@ -2,12 +2,13 @@
 
 The reference exposes the raw edge list (parse_depends_on,
 explore.R:98-128); the queries you run on it are closure, depth,
-PageRank and critical-path ones.  All four are round loops: a round
-reads the previous round's result and the edges, and the loop stops at
-a cap or at the first round whose result no later round would change.
-The inputs are decoded once: the dbt keys (plans/dbt.py) read the
-manifest through one narrow ``manifest_graph`` scan.  The loop comes
-in two shapes:
+PageRank and critical-path ones.  Closure, PageRank and the critical
+path are round loops: a round reads the previous round's result and
+the edges, and the loop stops at a cap or at the first round whose
+result no later round would change.  Depth has no loop of its own: it
+is the critical path with 0/1 weights (below).  The inputs are decoded
+once: the dbt keys (plans/dbt.py) read the manifest through one narrow
+``manifest_graph`` scan.  The loop comes in two shapes:
 
 - **Spark rounds** (``transitive_closure``, ``pagerank``,
   ``critical_path``): iterative self-joins.
@@ -37,22 +38,38 @@ in two shapes:
     session's ``spark.sql.autoBroadcastJoinThreshold``
     (``session.fits_broadcast``).  Above it, or
     with the threshold at -1, the join is left to the planner.
-- **In memory** (``critical_path_local``, ``pagerank_local``): pure
-  functions over collected rows that repeat the Spark rounds exactly:
-  the same caps, exits and integer arithmetic, and the same handling
-  of ghost parents, non-node children, duplicate edges and duplicate
-  node rows, so the two shapes agree on any graph, cyclic ones
-  included.  ``session.local_frame`` returns their rows as a local
-  relation, whose collect runs no job.
+- **In memory** (``critical_path_local``, ``pagerank_local``,
+  ``lineage_depth_local``): pure functions over collected rows that
+  repeat the Spark rounds exactly: the same caps, exits and integer
+  arithmetic, and the same handling of ghost parents, non-node
+  children, duplicate edges and duplicate node rows, so the two shapes
+  agree on any graph, cyclic ones included.  ``session.local_frame``
+  returns their rows as a local relation, whose collect runs no job.
 
-The critical path and PageRank keys pick the shape.  They materialize
-the graph once, with a checkpoint that observes its ``_footprint``.
-While that fits the same bound, a broadcast of the graph would
-have collected it to the driver anyway, so they collect it and relax
-it in memory: at dbt scale a round is mostly job overhead, and the
-in-memory loop runs no job at all.  Above the bound, or with the
-threshold at -1, the Spark rounds run.  Closure and depth stay on Spark
-rounds: their output can grow with the square of the node count.
+The critical path, depth and PageRank keys pick the shape.  They
+materialize the graph once, with a checkpoint that observes its
+``_footprint``.  While that fits the same bound, a broadcast of the
+graph would have collected it to the driver anyway, so they collect it
+and relax it in memory: at dbt scale a round is mostly job overhead,
+and the in-memory loop runs no job at all.  Above the bound, or with
+the threshold at -1, the Spark rounds run.  The closure stays on Spark
+rounds: its output can grow with the square of the node count.
+
+**Depth is the critical path with 0/1 weights** (``lineage_depth``,
+``lineage_depth_local``).  A node's depth is its longest dependency
+path, counting a last edge into a parent that is not a node (a macro,
+or an id the manifest does not list), and 0 for a node with no
+parents.  Give every vertex weight 1 when it has at least one parent
+entry and 0 otherwise.  Along a walk v0 → … → vk every vertex after v0
+has a parent, so the walk costs k + [v0 has a parent]: exactly the
+longest path, its last edge included.  A vertex of weight 0 has no
+parents, so its cost stays 0 and it offers what a ghost parent offers:
+the vertices are the children of the edges, which takes in every macro
+with parents of its own.  A path that runs through a macro's parents
+counts only because the macro is a vertex; only node rows are
+returned.  On a cyclic graph, ``max_iters`` rounds give the longest
+walk of at most ``max_iters + 1`` edges, which is
+``transitive_closure``'s cap.
 """
 
 from __future__ import annotations
@@ -363,6 +380,32 @@ def critical_path_local(
     return [(n, w, cost[n]) for n, w in wt.items()]
 
 
+DEPTH_SCHEMA = "unique_id string, depth int"
+
+
+def lineage_depth(all_nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """Topological depth per row of ``all_nodes``: its longest path to
+    any ancestor, 0 for roots and for a NULL id.  This is dbt's
+    scheduling level, the ``critical_path`` with weight 1 on every child
+    of ``edges`` (module docstring).  The result joins ``all_nodes``
+    lazily."""
+    ones = edges.select(F.col("child_unique_id").alias("unique_id"), F.lit(1).cast("long").alias("wt_fp"))
+    cost = critical_path(ones, edges).select(F.col("unique_id").alias("d"), "critical_cost_fp")
+    return all_nodes.join(cost, all_nodes.unique_id == cost.d, "left").select(
+        "unique_id", F.coalesce("critical_cost_fp", F.lit(0)).cast("int").alias("depth")
+    )
+
+
+def lineage_depth_local(
+    nodes: Iterable[str], edges: Iterable[tuple[str, str]], max_iters: int = 30
+) -> list[tuple]:
+    """``lineage_depth`` on the driver, over the node ids and the
+    (child, parent) edges: [(unique_id, depth)], a row per id."""
+    edges = list(edges)
+    ones = [(c, 1) for c, _ in edges if c is not None]
+    cost = {n: c for n, _, c in critical_path_local(ones, edges, max_iters)}
+    return [(n, cost.get(n, 0)) for n in nodes]
+
 
 def lineage_closure(edges: DataFrame) -> DataFrame:
     """(descendant, ancestor, min path length) — 'does A depend on B, how
@@ -371,18 +414,4 @@ def lineage_closure(edges: DataFrame) -> DataFrame:
         transitive_closure(edges)
         .groupBy("descendant", "ancestor")
         .agg(F.min("depth").cast("int").alias("depth"))
-    )
-
-
-def lineage_depth(all_nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Topological depth per node: longest path to any ancestor, 0 for
-    roots.  This is dbt's scheduling level."""
-    depths = (
-        transitive_closure(edges)
-        .groupBy("descendant")
-        .agg(F.max("depth").cast("int").alias("depth"))
-    )
-    return (
-        all_nodes.join(depths, all_nodes.unique_id == depths.descendant, "left")
-        .select("unique_id", F.coalesce("depth", F.lit(0)).cast("int").alias("depth"))
     )

@@ -165,12 +165,15 @@ def _graph_footprint():
 
 def _relax(graph: DataFrame, schema: str, in_memory, rounds) -> DataFrame:
     """The lineage result of ``graph`` (manifest_graph rows, maybe with
-    weights) in the shape its size picks.  The graph is materialized
-    once, by a checkpoint that observes its ``_graph_footprint``.  While
-    that fits the broadcast bound the rows are collected, and
-    ``in_memory(rows)`` gives the result's rows, of ``schema``;
-    otherwise ``rounds(graph)`` runs the Spark rounds.  The checkpoint
-    is released on return, so ``rounds`` must not read it lazily."""
+    weights) in the shape its size picks: the one relaxation switch of
+    the critical path, depth and PageRank keys.  The graph is
+    materialized once, by a checkpoint that observes its
+    ``_graph_footprint``.  While that fits the broadcast bound the rows
+    are collected, and ``in_memory(rows)`` gives the result's rows, of
+    ``schema``; otherwise ``rounds(graph)`` runs the Spark rounds.  The
+    checkpoint is released on return, so ``rounds`` must not read it
+    lazily: what its result reads after the rounds it materializes
+    itself."""
     graph, size = observed(graph, "graph_footprint", *_graph_footprint())
     graph = graph.localCheckpoint()
     spark, bound = graph.sparkSession, size.get
@@ -242,11 +245,19 @@ def dbt_lineage_closure_rcte(
 
 
 def dbt_lineage_depth(spark: SparkSession, sf_dir: str, target: str = FIXTURE_TARGET) -> DataFrame:
+    """dbt's scheduling level: per node row, its longest dependency path,
+    counting a last edge into a macro or a missing parent; 0 for a node
+    with no parents.  It is the critical path with 0/1 weights, macros
+    included as vertices (operators/lineage.py has why), so it relaxes
+    in the shape ``_relax`` picks."""
     prep(spark)
-    # the closure reads the edges, and the result joins the node ids
-    # lazily, so the graph stays materialized for the result
-    graph = A.manifest_graph(spark, _manifest(target)).localCheckpoint()
-    return lineage.lineage_depth(_nodes(graph), _edges(graph))
+    return _relax(
+        A.manifest_graph(spark, _manifest(target)).select("unique_id", "manifest_group", "parents"),
+        lineage.DEPTH_SCHEMA,
+        lambda rows: lineage.lineage_depth_local([r.unique_id for r in _node_rows(rows)], _edge_rows(rows)),
+        # the result joins the node ids after ``_relax`` releases the graph
+        lambda graph: lineage.lineage_depth(_nodes(graph).localCheckpoint(), _edges(graph)),
+    )
 
 
 def dbt_pagerank(spark: SparkSession, sf_dir: str, target: str = FIXTURE_TARGET) -> DataFrame:

@@ -16,7 +16,13 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 
 from dbt_json_readr_spark import session as _session
-from dbt_json_readr_spark.plans.explain import formatted_plan
+
+
+def formatted_plan(df: DataFrame) -> str:
+    """The physical plan of ``df`` as ``EXPLAIN FORMATTED`` prints it."""
+    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
+        df._jdf.queryExecution(), "formatted"
+    )
 
 
 def has_pushed_filters(df: DataFrame) -> bool:

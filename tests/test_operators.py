@@ -649,6 +649,46 @@ def test_critical_path_takes_max_branch(spark):
     assert out["sink"] == 107  # longest branch, not the sum of branches
 
 
+def test_lineage_depth_counts_paths_through_macros(spark, tmp_path):
+    """The depth key, in both shapes, counts a path that runs through a
+    macro's own parents and ends in a parent the manifest does not
+    list, and returns node and source rows only, one per row:
+    b → macro.m → macro.n → gone is 3 edges, one more for c above b.
+    An id listed twice gets its longest path on both rows; a row
+    without an id gets 0, as the closure's equi-join gave it."""
+    import json
+
+    from dbt_json_readr_spark.plans import dbt
+
+    def entry(uid, parents=None):
+        return {"unique_id": uid, "depends_on": {"nodes": parents or []}}
+
+    manifest = {
+        "nodes": {
+            "model.a": entry("model.a"),
+            "model.b": entry("model.b", ["macro.m"]),
+            "model.c": entry("model.c", ["model.b"]),
+            "model.c_again": entry("model.c", ["model.a"]),
+            "model.no_id": {"depends_on": {"nodes": ["model.c"]}},
+        },
+        "sources": {"source.s": entry("source.s")},
+        "macros": {
+            "macro.m": entry("macro.m", ["model.a", "macro.n"]),
+            "macro.n": entry("macro.n", ["model.gone"]),
+        },
+    }
+    (tmp_path / "manifest.json").write_text(json.dumps(manifest))
+    want = [(None, 0), ("model.a", 0), ("model.b", 3), ("model.c", 4), ("model.c", 4), ("source.s", 0)]
+
+    def rows():
+        got = dbt.dbt_lineage_depth(spark, "", str(tmp_path)).collect()
+        return sorted(map(tuple, got), key=lambda r: (r[0] or "", r[1]))
+
+    assert rows() == want
+    with broadcast_threshold(spark, -1):
+        assert rows() == want
+
+
 # ------------------------------------------------------------ PCA
 
 

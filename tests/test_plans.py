@@ -90,7 +90,6 @@ def test_new_llm_ops_scan_and_bucket_contracts(spark):
     import re
 
     from dbt_json_readr_spark.plans import llm
-    from dbt_json_readr_spark.plans.explain import formatted_plan
 
     budgets = {
         # (max parquet scans, rationale)
@@ -101,7 +100,7 @@ def test_new_llm_ops_scan_and_bucket_contracts(spark):
         "dedup_embedding_cosine": 3, # band pass + verify join sides
     }
     for key, max_scans in budgets.items():
-        plan = formatted_plan(getattr(llm, key)(spark, SF))
+        plan = plan_utils.formatted_plan(getattr(llm, key)(spark, SF))
         n = len(re.findall(r"^\(\d+\) Scan parquet", plan, flags=re.M))
         assert n <= max_scans, f"{key}: {n} scans > budget {max_scans}"
         assert not re.search(r"collect_list\(\s*struct", plan), (
@@ -121,13 +120,12 @@ def test_minhash_dedup_two_pass_no_fat_buckets(spark):
     no collect_list of shingle-carrying structs anywhere — buckets
     collect bare doc_ids, so a degenerate bucket buffers
     bucket_cap × 8 bytes, not megabytes of shingle arrays."""
-    from dbt_json_readr_spark.plans.explain import formatted_plan
     from dbt_json_readr_spark.plans.llm import dedup_minhash_lsh
 
     import re
 
     df = dedup_minhash_lsh(spark, "/root/testdata/sf0.001")
-    plan = formatted_plan(df)
+    plan = plan_utils.formatted_plan(df)
     # each scan node appears once in the tree ("+- Scan parquet (1)") and
     # once as a detail header ("(1) Scan parquet") — count the headers
     n_scans = len(re.findall(r"^\(\d+\) Scan parquet", plan, flags=re.M))
@@ -142,12 +140,11 @@ def test_topk_windows_get_partial_group_limit(spark):
     BEFORE the exchange — Catalyst's map-side rank pruning means only
     ≤k rows per group per map partition cross the shuffle.  Without it
     a 100 TB corpus funnels entirely through one reducer per query."""
-    from dbt_json_readr_spark.plans.explain import formatted_plan
     from dbt_json_readr_spark.plans.events import top_customers_per_nation
     from dbt_json_readr_spark.plans.llm import ann_bruteforce_topk
 
     for fn in (ann_bruteforce_topk, top_customers_per_nation):
-        plan = formatted_plan(fn(spark, "/root/testdata/sf0.001"))
+        plan = plan_utils.formatted_plan(fn(spark, "/root/testdata/sf0.001"))
         assert "WindowGroupLimit" in plan, f"{fn.__name__}: rank pruning missing"
         assert "Partial" in plan.split("WindowGroupLimit")[-1] or plan.count("WindowGroupLimit") >= 2, (
             f"{fn.__name__}: no partial (map-side) group limit"
@@ -223,10 +220,9 @@ def test_zone_map_and_skew_audits_are_single_scan(spark):
     import re
 
     from dbt_json_readr_spark.plans import events, tpch
-    from dbt_json_readr_spark.plans.explain import formatted_plan
 
     for fn, expected in ((tpch.lineitem_zorder_layout, 1), (events.events_skew_audit, 1)):
-        plan = formatted_plan(fn(spark, SF))
+        plan = plan_utils.formatted_plan(fn(spark, SF))
         n = len(re.findall(r"^\(\d+\) Scan parquet", plan, flags=re.M))
         assert n <= expected, f"{fn.__name__}: {n} scans"
 
@@ -396,9 +392,8 @@ def test_r13_ann_sweep_plan_stays_truncated(spark):
     it to ~3.3k lines.  A cheap length pin catches the exponential tree
     returning (VERDICT r12 item 8)."""
     from dbt_json_readr_spark.plans import llm
-    from dbt_json_readr_spark.plans.explain import formatted_plan
 
-    plan = formatted_plan(llm.ann_sweep_eval(spark, SF))
+    plan = plan_utils.formatted_plan(llm.ann_sweep_eval(spark, SF))
     n_lines = plan.count("\n")
     assert n_lines < 50_000, f"sweep plan exploded again: {n_lines} lines"
 
@@ -410,9 +405,8 @@ def test_r13_lsh_recall_truth_keeps_parallelism(spark):
     session's parallelism is exempt from AQE coalescing — pin that the
     exchange is still in the plan (VERDICT r12 item 8)."""
     from dbt_json_readr_spark.plans import llm
-    from dbt_json_readr_spark.plans.explain import formatted_plan
 
-    plan = formatted_plan(llm.dedup_lsh_recall(spark, SF))
+    plan = plan_utils.formatted_plan(llm.dedup_lsh_recall(spark, SF))
     par = spark.sparkContext.defaultParallelism
     assert f"RoundRobinPartitioning({par}" in plan, (
         "dedup_lsh_recall lost its explicit repartition — the exact "
@@ -427,9 +421,8 @@ def test_r13_containment_verify_shape_pinned(spark):
     unhinted set join sorted 4.1M pair rows carrying ~2 KB shingle
     arrays through an exchange (307 CPU·s vs 107)."""
     from dbt_json_readr_spark.plans import llm
-    from dbt_json_readr_spark.plans.explain import formatted_plan
 
-    plan = formatted_plan(llm.dedup_containment_lsh(spark, SF))
+    plan = plan_utils.formatted_plan(llm.dedup_containment_lsh(spark, SF))
     assert "SortMergeJoin" not in plan, (
         "containment verify fell off the broadcast path at gate scale"
     )
@@ -502,23 +495,24 @@ def test_lineage_key_decodes_each_artifact_once(spark, key):
     ) - Counter(), f"{key}: text scans {dict(scans)}"
 
 
-# Spark jobs each lineage key runs at the fixture, warm.  Critical path
-# and PageRank relax their graph in memory: its checkpoint and collect,
-# plus the run_results broadcast for the critical path.  The other
-# keys' rounds broadcast their node-sized side, so a round costs at
+# Spark jobs each lineage key runs at the fixture, warm.  Critical path,
+# depth and PageRank relax their graph in memory: its checkpoint and
+# collect, plus the run_results broadcast for the critical path.  The
+# closure's rounds broadcast their node-sized side, so a round costs at
 # most 4 jobs
 _LINEAGE_JOBS = {
     "dbt_lineage_closure": 13,
     "dbt_lineage_closure_rcte": 22,
-    "dbt_lineage_depth": 18,
+    "dbt_lineage_depth": 2,
     "dbt_pagerank": 2,
     "dbt_critical_path": 3,
     "dbt_model_fanout": 4,
 }
-# ... and the two in-memory keys' Spark rounds, under
+# ... and the in-memory keys' Spark rounds, under
 # autoBroadcastJoinThreshold=-1; PageRank exits on its first round that
-# moves no rank, the critical path after DAG-depth rounds
-_ROUNDS_JOBS = {"dbt_critical_path": 14, "dbt_pagerank": 32}
+# moves no rank, the critical path and depth after DAG-depth rounds, and
+# depth also checkpoints the node ids its result joins
+_ROUNDS_JOBS = {"dbt_critical_path": 14, "dbt_lineage_depth": 16, "dbt_pagerank": 32}
 # plan-graph nodes that only wrap others
 _WRAPPERS = ("WholeStageCodegen", "InputAdapter")
 
@@ -673,17 +667,24 @@ def test_lineage_rounds_broadcast_without_shuffling_first(spark, key):
 
 @pytest.mark.parametrize("key", sorted(_ROUNDS_JOBS))
 def test_lineage_in_memory_result_is_a_local_relation(spark, key):
-    """Under the broadcast bound, the critical path and PageRank keys
-    return a local relation: collecting it runs no Spark job, so no task
-    and no Python worker.  Rows handed to createDataFrame as a list
-    would be parallelized and read back through a Python worker."""
+    """Under the broadcast bound, the critical path, depth and PageRank
+    keys return a local relation: collecting it runs no Spark job, so no
+    task and no Python worker.  Rows handed to createDataFrame as a list
+    would be parallelized and read back through a Python worker.  A warm
+    call leaves no persisted RDD behind: the graph checkpoint is
+    released once its rows are collected."""
     from dbt_json_readr_spark.plans import dbt
 
-    df = getattr(dbt, key)(spark, SF)
+    fn = getattr(dbt, key)
+    fn(spark, SF).collect()
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().keySet
+    before = set(persisted())
+    df = fn(spark, SF)
     assert df._jdf.queryExecution().executedPlan().nodeName() == "LocalTableScan"
     rows, jobs, ran = _jobs_and_executions(spark, f"lineage_local_{key}", df.collect)
     assert rows and not jobs, f"{key}: collect ran jobs {sorted(jobs)}"
     assert [_op_names(e) for e in ran] == [["LocalTableScan"]]
+    assert not set(persisted()) - before, f"{key}: a call left persisted RDDs"
 
 
 def test_critical_path_runs_one_checkpoint_per_round(spark):
@@ -715,9 +716,9 @@ def test_lineage_rounds_fall_back_to_the_planner_without_a_threshold(spark):
     """With spark.sql.autoBroadcastJoinThreshold=-1 no observed size fits,
     so no lineage round carries a broadcast hint (and the planner adds
     none): every join is left to the planner, and the results are the
-    same as with the broadcasts.  The critical path and PageRank keys
-    then run their Spark rounds, in the pinned number of jobs, and give
-    the rows they relax in memory under the default threshold."""
+    same as with the broadcasts.  The critical path, depth and PageRank
+    keys then run their Spark rounds, in the pinned number of jobs, and
+    give the rows they relax in memory under the default threshold."""
     from dbt_json_readr_spark.operators import lineage as L
     from dbt_json_readr_spark.plans import dbt
 

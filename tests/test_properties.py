@@ -1157,16 +1157,17 @@ def _naive_pagerank(nodes, edges, iters=10):
 @example(dag=([("a", 1), ("b", 1), ("c", 1)], [("b", "a"), ("c", "b"), ("c", "ghost")]))
 # duplicate edges
 @example(dag=([("a", 3), ("b", 1), ("c", 2)], [("b", "a"), ("b", "a"), ("c", "b"), ("c", "b"), ("c", "a")]))
+# a node id listed twice: depth returns a row for each listing
+@example(dag=([("a", 1), ("a", 2), ("b", 0)], [("b", "a"), ("a", "ghost")]))
 def test_lineage_operators_match_stdlib_on_random_dags(spark, dag):
-    """critical_path, lineage_depth and pagerank, and the in-memory
-    critical path and PageRank, equal stdlib recomputations; the
-    observed early exits stop at the fixed point, with the rounds
-    broadcast and, under autoBroadcastJoinThreshold=-1, left to the
-    planner."""
+    """critical_path and pagerank, and the in-memory critical path, depth
+    and PageRank, equal stdlib recomputations; the observed early exits
+    stop at the fixed point, with the rounds broadcast and, under
+    autoBroadcastJoinThreshold=-1, left to the planner."""
     from dbt_json_readr_spark.operators.lineage import (
         critical_path,
         critical_path_local,
-        lineage_depth,
+        lineage_depth_local,
         pagerank,
         pagerank_local,
     )
@@ -1180,8 +1181,9 @@ def test_lineage_operators_match_stdlib_on_random_dags(spark, dag):
     with broadcast_threshold(spark, -1):
         got_cp = {r.unique_id: (r.wt_fp, r.critical_cost_fp) for r in critical_path(ndf, edf).collect()}
     assert got_cp == want_cp
-    got_depth = {r.unique_id: r.depth for r in lineage_depth(ndf, edf).collect()}
-    assert got_depth == _naive_depth(nodes, edges)
+    want_depth = _naive_depth(nodes, edges)
+    got_depth = sorted(lineage_depth_local([v for v, _ in nodes], edges))
+    assert got_depth == sorted((v, want_depth[v]) for v, _ in nodes)
     got_pr = {r.unique_id: r.rank_fp for r in pagerank(ndf, edf).collect()}
     assert got_pr == _naive_pagerank(nodes, edges)
     assert {v: (w, c) for v, w, c in critical_path_local(nodes, edges)} == want_cp
@@ -1241,16 +1243,28 @@ def _acyclic(nodes, edges) -> bool:
 @example(graph=([("a", 0), ("b", 0), ("s", 1)], [("a", "b"), ("b", "a"), ("s", "s")], 3))
 # duplicate node rows with other weights, duplicate edges, a ghost parent
 @example(graph=([("a", 1), ("a", 3), ("b", 0), ("b", 2)], [("b", "a"), ("b", "a"), ("b", "ghost")], 5))
+# a macro with parents of its own feeding a node: depth counts the path
+# through it, so the macro must be a weighted vertex
+@example(graph=([("a", 1), ("b", 0)], [("b", "macro"), ("macro", "a"), ("a", "ghost")], 3))
 def test_lineage_shapes_agree_on_random_graphs(spark, graph):
     """On any graph, cyclic or not, the in-memory critical path and
-    PageRank return the rows their Spark-rounds operators return, to
-    the same round cap; on acyclic graphs both also equal the stdlib
+    PageRank return the rows their Spark rounds return, to the same
+    round cap.  In-memory depth at cap c equals the closure's
+    definition: the longest path ``transitive_closure(max_iters=c)``
+    holds per node, 0 if none, a row per node row.  On acyclic graphs,
+    where the rounds stop early, ``lineage_depth`` returns the in-memory
+    depth rows, and the critical path and PageRank equal the stdlib
     recomputations."""
+    from pyspark.sql import functions as F
+
     from dbt_json_readr_spark.operators.lineage import (
         critical_path,
         critical_path_local,
+        lineage_depth,
+        lineage_depth_local,
         pagerank,
         pagerank_local,
+        transitive_closure,
     )
 
     nodes, edges, cap = graph
@@ -1261,6 +1275,14 @@ def test_lineage_shapes_agree_on_random_graphs(spark, graph):
     got_pr = sorted(pagerank_local([v for v, _ in nodes], edges, iters=cap))
     assert got_pr == sorted(map(tuple, pagerank(ndf, edf, iters=cap).collect()))
     assert dict(got_pr) == _naive_pagerank(nodes, edges, iters=cap)
+    ids = [v for v, _ in nodes]
+    got_depth = sorted(lineage_depth_local(ids, edges, max_iters=cap))
+    closure = transitive_closure(edf, max_iters=cap).groupBy("descendant").agg(F.max("depth"))
+    longest = dict(map(tuple, closure.collect()))
+    assert got_depth == sorted((v, longest.get(v, 0)) for v in ids)
+    if _acyclic(nodes, edges):
+        got = sorted(map(tuple, lineage_depth(ndf, edf).collect()))
+        assert got == sorted(lineage_depth_local(ids, edges))
     if _acyclic(nodes, edges) and cap > len(nodes):
         assert {v: (w, c) for v, w, c in got_cp} == _naive_critical_path(nodes, edges)
 

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dbt_json_readr_spark import sinks
-from dbt_json_readr_spark.plans.explain import formatted_plan
+from tests.plan_utils import formatted_plan
 
 
 def test_write_partitioned_lays_out_pruneable_dirs(spark, tmp_path):
