@@ -24,7 +24,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from dbt_json_readr_spark import registry  # noqa: E402
-from dbt_json_readr_spark.session import get_spark  # noqa: E402
+from dbt_json_readr_spark.session import cpus, get_spark  # noqa: E402
 
 # The 8 queries benched since r2 — their subtotal is the stable
 # round-over-round comparison line (VERDICT r5 item 5: the r5 additions
@@ -194,7 +194,7 @@ def main() -> None:
         # 4.0-era); cross-round comparisons are only meaningful within
         # the same runtime version
         "pyspark": __import__("pyspark").__version__,
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": cpus(),
     }
     if cpu:
         # steal-robust CPU seconds (JVM utime+stime delta across all

@@ -167,6 +167,28 @@ def _cand_from_mins(
     )
 
 
+def band_keys(mins: DataFrame, n_hashes: int, bands: int, *carry: str) -> DataFrame:
+    """(doc_id, *carry, band, bkey): a row per doc and band of the flat
+    minhash lanes ``mins``, keyed by ``H.band_key_flat`` of the band's
+    ``n_hashes // bands`` lanes.  ``carry`` names columns of ``mins``
+    kept on every row."""
+    r = n_hashes // bands
+    keyed = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    H.band_key_flat([F.col(f"mh{i}") for i in range(b * r, (b + 1) * r)], b).alias("bkey"),
+                )
+                for b in range(bands)
+            ]
+        )
+    ).alias("bb")
+    return mins.select("doc_id", *carry, keyed).select(
+        "doc_id", *carry, F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey")
+    )
+
+
 def _band_pairs(
     mins: DataFrame, n_hashes: int, bands: int, bucket_cap: int
 ) -> DataFrame:
@@ -174,28 +196,9 @@ def _band_pairs(
     pre-dedup view _cand_from_mins collapses; kept separate so the
     band-utility evidence key can attribute each pair to the earliest
     band that surfaced it."""
-    r = n_hashes // bands
-    banded = (
-        mins.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            H.band_key_flat(
-                                [F.col(f"mh{i}") for i in range(b * r, (b + 1) * r)], b
-                            ).alias("bkey"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bb"),
-        )
-        .select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
-    )
     members = (
-        banded.groupBy("band", "bkey")
+        band_keys(mins, n_hashes, bands)
+        .groupBy("band", "bkey")
         .agg(F.collect_list("doc_id").alias("ms"))
         .filter((F.size("ms") >= 2) & (F.size("ms") <= bucket_cap))
     )
@@ -521,29 +524,9 @@ def minhash_incremental_pairs(
     per_doc = _per_doc_sketch(rows, n_hashes, rotate=False)
     rotate_cached("minhash_sketch_inc", [per_doc])
     mins = per_doc.drop("sh").join(flags, "doc_id")
-    r = n_hashes // bands
-    banded = (
-        mins.select(
-            "doc_id",
-            "is_inc",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            H.band_key_flat(
-                                [F.col(f"mh{i}") for i in range(b * r, (b + 1) * r)], b
-                            ).alias("bkey"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bb"),
-        )
-        .select("doc_id", "is_inc", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
-    )
     members = (
-        banded.groupBy("band", "bkey")
+        band_keys(mins, n_hashes, bands, "is_inc")
+        .groupBy("band", "bkey")
         .agg(F.collect_list(F.struct("doc_id", "is_inc")).alias("ms"))
         .filter((F.size("ms") >= 2) & (F.size("ms") <= bucket_cap))
     )

@@ -80,7 +80,7 @@ from typing import Iterable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import fits_broadcast, observed, release_iter_handle
+from ..session import fits_broadcast, observed, release_iter_handle, rotate_cached
 
 
 def _footprint(*strings: str | Column, rows: Column | None = None):
@@ -248,7 +248,13 @@ def pagerank_local(
 CRITICAL_PATH_SCHEMA = "unique_id string, wt_fp bigint, critical_cost_fp bigint"
 
 
-def critical_path(nodes_w: DataFrame, edges: DataFrame, max_iters: int = 30) -> DataFrame:
+def critical_path(
+    nodes_w: DataFrame,
+    edges: DataFrame,
+    max_iters: int = 30,
+    slot: str | None = None,
+    keep: Iterable[DataFrame] = (),
+) -> DataFrame:
     """nodes_w(unique_id, wt_fp), one row per node, + edges(child_unique_id,
     parent_unique_id) → (unique_id, wt_fp, critical_cost_fp): the
     longest node-weighted dependency chain ending at each node
@@ -276,7 +282,13 @@ def critical_path(nodes_w: DataFrame, edges: DataFrame, max_iters: int = 30) -> 
     children (depth at most D - 1) stop moving after round D - 1, and
     round D is the last one: there is no confirming round.  The fixed
     point is unique on a DAG, so the early exit cannot change the
-    result.  All integer arithmetic — byte-stable across engines."""
+    result.  All integer arithmetic — byte-stable across engines.
+
+    The result reads the last round's checkpoint.  With ``slot``, that
+    checkpoint and the frames in ``keep`` (checkpoints the caller's
+    result reads besides) are pinned latest-wins in that
+    ``rotate_cached`` slot: the next call with the same slot releases
+    them."""
     e, e_size = observed(
         edges.groupBy(F.col("parent_unique_id").alias("p")).agg(
             F.collect_set("child_unique_id").alias("cs")
@@ -346,6 +358,8 @@ def critical_path(nodes_w: DataFrame, edges: DataFrame, max_iters: int = 30) -> 
         if not cost_size["changed"]:
             break
     release_iter_handle(e)
+    if slot is not None:
+        rotate_cached(slot, [*keep, cost])
     return cost.select("unique_id", "wt_fp", "critical_cost_fp")
 
 
@@ -383,14 +397,16 @@ def critical_path_local(
 DEPTH_SCHEMA = "unique_id string, depth int"
 
 
-def lineage_depth(all_nodes: DataFrame, edges: DataFrame) -> DataFrame:
+def lineage_depth(all_nodes: DataFrame, edges: DataFrame, slot: str | None = None) -> DataFrame:
     """Topological depth per row of ``all_nodes``: its longest path to
     any ancestor, 0 for roots and for a NULL id.  This is dbt's
     scheduling level, the ``critical_path`` with weight 1 on every child
     of ``edges`` (module docstring).  The result joins ``all_nodes``
-    lazily."""
+    lazily; with ``slot``, it is pinned there with the critical path's
+    last round."""
     ones = edges.select(F.col("child_unique_id").alias("unique_id"), F.lit(1).cast("long").alias("wt_fp"))
-    cost = critical_path(ones, edges).select(F.col("unique_id").alias("d"), "critical_cost_fp")
+    cost = critical_path(ones, edges, slot=slot, keep=[all_nodes])
+    cost = cost.select(F.col("unique_id").alias("d"), "critical_cost_fp")
     return all_nodes.join(cost, all_nodes.unique_id == cost.d, "left").select(
         "unique_id", F.coalesce("critical_cost_fp", F.lit(0)).cast("int").alias("depth")
     )

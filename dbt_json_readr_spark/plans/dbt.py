@@ -173,7 +173,7 @@ def _relax(graph: DataFrame, schema: str, in_memory, rounds) -> DataFrame:
     ``schema``; otherwise ``rounds(graph)`` runs the Spark rounds.  The
     checkpoint is released on return, so ``rounds`` must not read it
     lazily: what its result reads after the rounds it materializes
-    itself."""
+    itself, and pin in its key's ``rotate_cached`` slot."""
     graph, size = observed(graph, "graph_footprint", *_graph_footprint())
     graph = graph.localCheckpoint()
     spark, bound = graph.sparkSession, size.get
@@ -256,7 +256,9 @@ def dbt_lineage_depth(spark: SparkSession, sf_dir: str, target: str = FIXTURE_TA
         lineage.DEPTH_SCHEMA,
         lambda rows: lineage.lineage_depth_local([r.unique_id for r in _node_rows(rows)], _edge_rows(rows)),
         # the result joins the node ids after ``_relax`` releases the graph
-        lambda graph: lineage.lineage_depth(_nodes(graph).localCheckpoint(), _edges(graph)),
+        lambda graph: lineage.lineage_depth(
+            _nodes(graph).localCheckpoint(), _edges(graph), slot="dbt_lineage_depth"
+        ),
     )
 
 
@@ -309,7 +311,9 @@ def dbt_critical_path(spark: SparkSession, sf_dir: str, target: str = FIXTURE_TA
         lambda rows: lineage.critical_path_local(
             [(r.unique_id, r.wt_fp) for r in _node_rows(rows)], _edge_rows(rows)
         ),
-        lambda graph: lineage.critical_path(_nodes(graph, "wt_fp"), _edges(graph)),
+        lambda graph: lineage.critical_path(
+            _nodes(graph, "wt_fp"), _edges(graph), slot="dbt_critical_path"
+        ),
     )
 
 

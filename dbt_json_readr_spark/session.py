@@ -39,12 +39,19 @@ def _ensure_vendored_protobuf() -> None:
 _ensure_vendored_protobuf()
 
 
+def cpus() -> str:
+    """The cores a session runs on and the shuffle partitions it sizes:
+    ``SPARK_GRAFT_CPUS``, or the CPUs this process may run on (what
+    ``nproc`` counts)."""
+    return os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+
+
 def get_spark(app_name: str = "dbt_json_readr_spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    n = cpus()
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(cpus))
+        .config("spark.sql.shuffle.partitions", n)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -116,8 +123,7 @@ def prep(spark: SparkSession) -> SparkSession:
     # distributed job takes over — which is the right shape for a
     # millions-of-manifests object-store lake.
     spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", cpus())
     # RocksDB-backed streaming state (OSS provider, ships in Spark ≥3.2):
     # keyed state spills to local disk instead of growing the JVM heap —
     # the provider a 1000-executor stateful job runs with.  Batch-only

@@ -11,7 +11,6 @@ from __future__ import annotations
 import re
 from collections import Counter
 from contextlib import contextmanager
-from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -165,74 +164,22 @@ def live_parquet_scan_count(df: DataFrame) -> int:
     return walk(df._jdf.queryExecution().executedPlan())  # type: ignore[attr-defined]
 
 
-# ------------------------------------------------------------ executions
-# What a call actually ran, read back from the session's SQL status store
-# (filled with or without the UI): one entry per action, with its jobs
-# and its final (post-AQE) plan graph.
-
-
-class SqlExecution(NamedTuple):
-    id: int
-    description: str
-    job_ids: frozenset
-    nodes: tuple  # (name, desc) per plan-graph node
-
-
-def _sql_store(spark: SparkSession):
-    return spark._jsparkSession.sharedState().statusStore()  # type: ignore[attr-defined]
-
-
-def sql_execution_mark(spark: SparkSession) -> int:
-    """The id of the newest SQL execution so far (-1 if none): pass it to
-    ``sql_executions_since`` to get the executions started after it."""
-    execs = _sql_store(spark).executionsList()
-    return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
-
-
-def sql_executions_since(spark: SparkSession, mark: int) -> list[SqlExecution]:
-    """The SQL executions started after ``mark``, oldest first.  Waits for
-    the listener bus first, so executions that already ran are in the
-    store."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()  # type: ignore[union-attr]
-    store = _sql_store(spark)
-    execs = store.executionsList()
-    out = []
-    for i in reversed(range(execs.size())):
-        e = execs.apply(i)
-        if e.executionId() <= mark:
-            break
-        graph = store.planGraph(e.executionId()).allNodes()
-        nodes = tuple(
-            (graph.apply(j).name(), graph.apply(j).desc()) for j in range(graph.size())
-        )
-        jobs = e.jobs().keySet().toSeq()
-        out.append(
-            SqlExecution(
-                e.executionId(),
-                e.description(),
-                frozenset(jobs.apply(j) for j in range(jobs.size())),
-                nodes,
-            )
-        )
-    return out[::-1]
-
-
 _LOCATION = re.compile(r"Location: \w+\(\d+ paths\)\[([^\]]*)\]")
 
 
-def file_scans(executions: list[SqlExecution], fmt: str = "text") -> Counter:
-    """Scans of ``fmt`` files across ``executions``: location → number of
-    ``Scan <fmt>`` plan nodes that read it.  A checkpointed input shows
-    no scan, so this counts the file reads made.  A cached relation's
-    build plan stays in the graph, so its scan counts even when the
-    cache is already loaded: ``live_parquet_scan_count`` tells those
-    apart."""
+def file_scans(executions: list, fmt: str = "text") -> Counter:
+    """Scans of ``fmt`` files across ``executions`` (a ``profile.run``
+    record's): location → number of ``Scan <fmt>`` plan nodes that read
+    it.  A checkpointed input shows no scan, so this counts the file
+    reads made.  A cached relation's build plan stays in the graph, so
+    its scan counts even when the cache is already loaded:
+    ``live_parquet_scan_count`` tells those apart."""
     out: Counter = Counter()
     for e in executions:
-        for name, desc in e.nodes:
-            if name.strip() == f"Scan {fmt}":
-                m = _LOCATION.search(desc)
-                out[m.group(1) if m else desc] += 1
+        for node in e.nodes:
+            if node.name.strip() == f"Scan {fmt}":
+                m = _LOCATION.search(node.desc)
+                out[m.group(1) if m else node.desc] += 1
     return out
 
 

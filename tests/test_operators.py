@@ -1229,14 +1229,13 @@ def test_probe_count_keys_on_the_frame_not_its_files(spark, sf_dir):
     vector-broadcast byte gate in embedding_cosine_pairs reads it), and
     a second probe of the same raw table, loaded again, runs no SQL
     execution."""
+    from dbt_json_readr_spark import profile
     from dbt_json_readr_spark.functions import vectors as V
     from dbt_json_readr_spark.sources.tables import load
-    from tests import plan_utils
 
     embs = load(spark, sf_dir, "embeddings")
     n = V.probe_count(embs)
     some = embs.filter(F.col("vec_id") % 2 == 0)
     assert V.probe_count(some) == some.count() < n
-    mark = plan_utils.sql_execution_mark(spark)
-    assert V.probe_count(load(spark, sf_dir, "embeddings")) == n
-    assert plan_utils.sql_executions_since(spark, mark) == []
+    again = profile.run(spark, lambda: V.probe_count(load(spark, sf_dir, "embeddings")), "probe_again")
+    assert again.result == n and again.executions == []

@@ -51,3 +51,23 @@ def test_lineage_rows_do_not_depend_on_parallelism(spark, monkeypatch, key):
     assert first, f"{key}: no rows"
     for run, rows in runs.items():
         assert rows == first, f"{key}: rows at {run} differ from ('1', None)"
+
+
+def test_prep_sizes_shuffle_partitions_for_the_host(spark, monkeypatch):
+    """Without ``SPARK_GRAFT_CPUS``, ``prep()`` sets one shuffle partition
+    per CPU the process may run on, the count ``nproc`` prints."""
+    import os
+    import subprocess
+
+    from dbt_json_readr_spark.session import prep
+
+    env = {k: v for k, v in os.environ.items() if k != "OMP_NUM_THREADS"}
+    nproc = subprocess.run(["nproc"], env=env, capture_output=True, text=True, check=True).stdout.strip()
+    conf = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(conf)
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    try:
+        prep(spark)
+        assert spark.conf.get(conf) == nproc
+    finally:
+        spark.conf.set(conf, saved)

@@ -8,7 +8,7 @@ from contextlib import nullcontext
 
 import pytest
 
-from dbt_json_readr_spark import registry
+from dbt_json_readr_spark import profile, registry
 from dbt_json_readr_spark.plans.tpch import q5_region_revenue, q6_forecast_revenue
 from tests import plan_utils
 
@@ -484,9 +484,8 @@ def test_lineage_key_decodes_each_artifact_once(spark, key):
 
     from dbt_json_readr_spark.plans import dbt
 
-    mark = plan_utils.sql_execution_mark(spark)
-    getattr(dbt, key)(spark, SF).collect()
-    scans = plan_utils.file_scans(plan_utils.sql_executions_since(spark, mark))
+    ran = profile.run(spark, lambda: getattr(dbt, key)(spark, SF).collect(), f"lineage_scans_{key}")
+    scans = plan_utils.file_scans(ran.executions)
     by_file: Counter = Counter()
     for location, n in scans.items():
         by_file[PurePosixPath(location).name] += n
@@ -517,23 +516,8 @@ _ROUNDS_JOBS = {"dbt_critical_path": 14, "dbt_lineage_depth": 16, "dbt_pagerank"
 _WRAPPERS = ("WholeStageCodegen", "InputAdapter")
 
 
-def _jobs_and_executions(spark, group: str, fn):
-    """Run ``fn`` under job group ``group``: (its result, the ids of the
-    jobs it ran, the SQL executions it started).  The group alone: a job
-    description would replace the executions' call-site descriptions."""
-    sc = spark.sparkContext
-    mark = plan_utils.sql_execution_mark(spark)
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
-    return out, jobs, plan_utils.sql_executions_since(spark, mark)
-
-
 def _op_names(execution) -> list:
-    return [n.strip() for n, _ in execution.nodes if not n.strip().startswith(_WRAPPERS)]
+    return [n.name.strip() for n in execution.nodes if not n.name.strip().startswith(_WRAPPERS)]
 
 
 @pytest.mark.parametrize("key", sorted(_LINEAGE_JOBS))
@@ -545,7 +529,7 @@ def test_lineage_key_job_counts_pinned(spark, key):
 
     fn = getattr(dbt, key)
     fn(spark, SF).collect()
-    _, jobs, _ = _jobs_and_executions(spark, f"lineage_jobs_{key}", lambda: fn(spark, SF).collect())
+    jobs = profile.run(spark, lambda: fn(spark, SF).collect(), f"lineage_jobs_{key}").jobs
     assert len(jobs) == _LINEAGE_JOBS[key], f"{key}: {len(jobs)} jobs"
 
 
@@ -567,7 +551,7 @@ def test_corpus_key_job_counts_pinned(spark, key):
 
     fn = getattr(llm, key)
     fn(spark, SF).collect()
-    _, jobs, _ = _jobs_and_executions(spark, f"corpus_jobs_{key}", lambda: fn(spark, SF).collect())
+    jobs = profile.run(spark, lambda: fn(spark, SF).collect(), f"corpus_jobs_{key}").jobs
     single = int(spark.conf.get("spark.sql.shuffle.partitions")) == 1
     assert len(jobs) == _CORPUS_JOBS[key][single], f"{key}: {len(jobs)} jobs"
 
@@ -580,9 +564,9 @@ def test_minhash_lsh_spark_shapes_job_count_pinned(spark):
 
     with plan_utils.broadcast_threshold(spark, -1):
         llm.dedup_minhash_lsh(spark, SF).collect()
-        _, jobs, _ = _jobs_and_executions(
-            spark, "lsh_spark_shapes", lambda: llm.dedup_minhash_lsh(spark, SF).collect()
-        )
+        jobs = profile.run(
+            spark, lambda: llm.dedup_minhash_lsh(spark, SF).collect(), "lsh_spark_shapes"
+        ).jobs
     single = int(spark.conf.get("spark.sql.shuffle.partitions")) == 1
     assert len(jobs) == _LSH_SPARK_JOBS[single], f"{len(jobs)} jobs"
 
@@ -628,8 +612,8 @@ def test_minhash_lsh_driver_tail_is_a_local_relation(spark):
     assert df._jdf.queryExecution().executedPlan().nodeName() == "LocalTableScan"
     assert not live_cached("minhash_cand", spark)
     assert live_cached("minhash_sketch", spark)
-    rows, jobs, _ = _jobs_and_executions(spark, "lsh_driver_tail", df.collect)
-    assert rows and not jobs, f"collect ran jobs {sorted(jobs)}"
+    ran = profile.run(spark, df.collect, "lsh_driver_tail")
+    assert ran.result and not ran.jobs, f"collect ran jobs {ran.jobs}"
 
 
 @pytest.mark.parametrize("key", ["dbt_critical_path", "dbt_lineage_depth", "dbt_pagerank"])
@@ -649,10 +633,10 @@ def test_lineage_rounds_broadcast_without_shuffling_first(spark, key):
     graph = manifest_graph(spark, dbt._manifest(dbt.FIXTURE_TARGET))
     size = graph.agg(*dbt._graph_footprint()).first()
     with plan_utils.broadcast_threshold(spark, size["rows"] * ROW_BYTES + size["string_bytes"] - 1):
-        _, _, ran = _jobs_and_executions(
-            spark, f"lineage_rounds_{key}", lambda: getattr(dbt, key)(spark, SF).collect()
+        ran = profile.run(
+            spark, lambda: getattr(dbt, key)(spark, SF).collect(), f"lineage_rounds_{key}"
         )
-    rounds = [e for e in ran if e.description.startswith("localCheckpoint")]
+    rounds = [e for e in ran.executions if e.description.startswith("localCheckpoint")]
     assert len(rounds) > 1, f"{key}: no rounds ran"
     for e in rounds:
         ops = _op_names(e)
@@ -681,10 +665,31 @@ def test_lineage_in_memory_result_is_a_local_relation(spark, key):
     before = set(persisted())
     df = fn(spark, SF)
     assert df._jdf.queryExecution().executedPlan().nodeName() == "LocalTableScan"
-    rows, jobs, ran = _jobs_and_executions(spark, f"lineage_local_{key}", df.collect)
-    assert rows and not jobs, f"{key}: collect ran jobs {sorted(jobs)}"
-    assert [_op_names(e) for e in ran] == [["LocalTableScan"]]
+    ran = profile.run(spark, df.collect, f"lineage_local_{key}")
+    assert ran.result and not ran.jobs, f"{key}: collect ran jobs {ran.jobs}"
+    assert [_op_names(e) for e in ran.executions] == [["LocalTableScan"]]
     assert not set(persisted()) - before, f"{key}: a call left persisted RDDs"
+
+
+@pytest.mark.parametrize("key", ["dbt_critical_path", "dbt_lineage_depth"])
+def test_lineage_rounds_pin_their_checkpoints_latest_wins(spark, key):
+    """At threshold -1 the result of the Spark rounds reads checkpoints,
+    which stay pinned in the key's ``rotate_cached`` slot until its next
+    call releases them: three more calls leave no more persisted RDDs
+    than one, though the caller still holds every result frame (garbage
+    collection cannot free them)."""
+    from dbt_json_readr_spark.plans import dbt
+
+    fn = getattr(dbt, key)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    with plan_utils.broadcast_threshold(spark, -1):
+        held = [fn(spark, SF)]
+        rows = sorted(held[0].collect())
+        one = persisted().size()
+        for _ in range(3):
+            held.append(fn(spark, SF))
+            assert sorted(held[-1].collect()) == rows
+        assert persisted().size() <= one, f"{key}: {persisted().size() - one} more persisted RDDs"
 
 
 def test_critical_path_runs_one_checkpoint_per_round(spark):
@@ -701,15 +706,14 @@ def test_critical_path_runs_one_checkpoint_per_round(spark):
     edges = spark.createDataFrame(
         [("b", "a"), ("c", "b"), ("d", "c")], "child_unique_id string, parent_unique_id string"
     )
-    out, jobs, ran = _jobs_and_executions(
-        spark, "critical_path_round_pin", lambda: critical_path(nodes, edges)
-    )
-    ran = [e for e in ran if e.job_ids & jobs]
-    assert {r.unique_id: r.critical_cost_fp for r in out.collect()} == {
+    ran = profile.run(spark, lambda: critical_path(nodes, edges), "critical_path_round_pin")
+    jobs = set(ran.jobs)
+    execs = [e for e in ran.executions if jobs.intersection(e.job_ids)]
+    assert {r.unique_id: r.critical_cost_fp for r in ran.result.collect()} == {
         "a": 1, "b": 3, "c": 6, "d": 10, "e": 0,
     }
-    assert [e.description.split(" at ")[0] for e in ran] == ["localCheckpoint"] * (1 + 3)
-    assert jobs == set().union(*(e.job_ids for e in ran)), "a job ran outside the checkpoints"
+    assert [e.description.split(" at ")[0] for e in execs] == ["localCheckpoint"] * (1 + 3)
+    assert jobs == set().union(*(e.job_ids for e in execs)), "a job ran outside the checkpoints"
 
 
 def test_lineage_rounds_fall_back_to_the_planner_without_a_threshold(spark):
@@ -736,8 +740,9 @@ def test_lineage_rounds_fall_back_to_the_planner_without_a_threshold(spark):
     }
     hinted = {}
     for name, run in runs.items():
-        hinted[name], _, ran = _jobs_and_executions(spark, f"lineage_hinted_{name}", run)
-        assert any("BroadcastExchange" in _op_names(e) for e in ran), name
+        ran = profile.run(spark, run, f"lineage_hinted_{name}")
+        hinted[name] = ran.result
+        assert any("BroadcastExchange" in _op_names(e) for e in ran.executions), name
     keys = {
         key: lambda key=key: sorted(map(tuple, getattr(dbt, key)(spark, SF).collect()))
         for key in _ROUNDS_JOBS
@@ -746,13 +751,14 @@ def test_lineage_rounds_fall_back_to_the_planner_without_a_threshold(spark):
         hinted[key] = run()
     with plan_utils.broadcast_threshold(spark, -1):
         for name, run in {**runs, **keys}.items():
-            got, jobs, ran = _jobs_and_executions(spark, f"lineage_fallback_{name}", run)
-            assert got == hinted[name], name
-            for e in ran:
+            ran = profile.run(spark, run, f"lineage_fallback_{name}")
+            assert ran.result == hinted[name], name
+            for e in ran.executions:
                 assert "BroadcastExchange" not in _op_names(e), f"{name}: {_op_names(e)}"
             if name in keys:
-                assert len(jobs) == _ROUNDS_JOBS[name], f"{name}: {len(jobs)} jobs"
-                assert sum(e.description.startswith("localCheckpoint") for e in ran) > 2, name
+                assert len(ran.jobs) == _ROUNDS_JOBS[name], f"{name}: {len(ran.jobs)} jobs"
+                checkpoints = [e for e in ran.executions if e.description.startswith("localCheckpoint")]
+                assert len(checkpoints) > 2, name
 
 
 def test_rotate_cached_empty_frames_release_the_slot(spark):
@@ -821,13 +827,11 @@ def test_dedup_verify_plan_and_build_jobs_pinned(spark, key):
     threshold = _PIN_THRESHOLDS.get(key)
     with nullcontext() if threshold is None else plan_utils.broadcast_threshold(spark, threshold):
         fn(spark, SF)
-        mark = plan_utils.sql_execution_mark(spark)
-        df = fn(spark, SF)
-        ran = plan_utils.sql_executions_since(spark, mark)
-        plan = plan_utils.formatted_plan(df)
+        ran = profile.run(spark, lambda: fn(spark, SF), f"verify_build_{key}")
+        plan = plan_utils.formatted_plan(ran.result)
     assert plan.count("array_intersect") == n_intersect
     if threshold == -1:
         assert "BroadcastExchange" not in plan, f"{key}: a broadcast at threshold -1"
     sides = [s for s in _broadcast_inputs(plan) if s in _SET_SIDES]
     assert len(sides) == 2 * n_side_pairs, f"{key}: broadcast sides {sides}"
-    assert len(ran) == n_jobs, f"{key}: build ran {[e.description for e in ran]}"
+    assert len(ran.executions) == n_jobs, f"{key}: build ran {[e.description for e in ran.executions]}"
